@@ -4,12 +4,13 @@
 Local-mode python workers inherit the driver's PYTHONPATH only when the
 driver happens to run from the repo; ``ensure_package_shipped`` makes the
 engine location-independent by zipping ``igtdetect_spark`` once per
-process and ``addPyFile``-ing it — workers then import from the shipped
-archive on any cluster manager.
+source content and ``addPyFile``-ing it — workers then import from the
+shipped archive on any cluster manager.
 """
 
 from __future__ import annotations
 
+import hashlib
 import os
 import zipfile
 
@@ -18,29 +19,38 @@ from pyspark.sql import SparkSession
 _shipped: dict[int, str] = {}
 
 
-def package_zip_path() -> str:
-    """Build (once) a zip of the igtdetect_spark package in /tmp."""
-    import igtdetect_spark
+def package_zip_path(pkg_dir: str | None = None, out_dir: str = "/tmp") -> str:
+    """Build (once per source content) a zip of the igtdetect_spark package.
 
-    pkg_dir = os.path.dirname(os.path.abspath(igtdetect_spark.__file__))
-    out = os.path.join("/tmp", "igtdetect_spark_pyfiles.zip")
-    if not os.path.exists(out) or os.path.getmtime(out) < max(
-        os.path.getmtime(os.path.join(r, f))
-        for r, _, fs in os.walk(pkg_dir)
-        for f in fs
+    The archive is named by a hash of the package sources, so two
+    checkouts with different code never share one, whatever their file
+    times (py-files go ahead of PYTHONPATH on the workers).
+    """
+    if pkg_dir is None:
+        import igtdetect_spark
+
+        pkg_dir = os.path.dirname(os.path.abspath(igtdetect_spark.__file__))
+    sources = sorted(
+        os.path.relpath(os.path.join(root, f), pkg_dir)
+        for root, _, files in os.walk(pkg_dir)
+        for f in files
         if f.endswith(".py")
-    ):
-        tmp = out + ".tmp"
+    )
+    h = hashlib.sha256()
+    for rel in sources:
+        with open(os.path.join(pkg_dir, rel), "rb") as f:
+            h.update(rel.encode() + b"\0" + f.read() + b"\0")
+    out = os.path.join(
+        out_dir, f"igtdetect_spark_pyfiles-{h.hexdigest()[:16]}.zip"
+    )
+    if not os.path.exists(out):
+        tmp = f"{out}.{os.getpid()}.tmp"
         with zipfile.ZipFile(tmp, "w", zipfile.ZIP_DEFLATED) as z:
-            for root, _, files in os.walk(pkg_dir):
-                for f in files:
-                    if not f.endswith(".py"):
-                        continue
-                    full = os.path.join(root, f)
-                    rel = os.path.join(
-                        "igtdetect_spark", os.path.relpath(full, pkg_dir)
-                    )
-                    z.write(full, rel)
+            for rel in sources:
+                z.write(
+                    os.path.join(pkg_dir, rel),
+                    os.path.join("igtdetect_spark", rel),
+                )
         os.replace(tmp, out)
     return out
 
