@@ -38,8 +38,8 @@ def get_lexicons():
 def _train_flagship() -> ModelWeights:
     # Trained WITHOUT the prev_tag feature (like the reference pretrained
     # nobio model): scoring then takes the fully-vectorized batch path
-    # everywhere, and the salted chunked-halo skew path is exactly valid
-    # (the sequential greedy decode cannot cross chunk boundaries).
+    # everywhere, and the chunked skew path is exactly valid (the
+    # sequential greedy decode cannot cross chunk boundaries).
     cfg = DEFAULT_CONFIG.with_(prev_tag=False)
     lex = get_lexicons()
     fds, labels = [], []

@@ -8,18 +8,15 @@ non-relational piece of the reference (SURVEY.md §2.4) and is cleanly
 quarantined here.
 
 For the flagship zero-shuffle path (pages → spans with no grouping at
-all), see ``plans/pipeline.py``.
+all), see ``plans/pipeline.py``; for mega-documents split across tasks,
+see ``plans/chunked.py``.
 """
 
 from __future__ import annotations
 
-from typing import Iterator
-
-import numpy as np
 import pandas as pd
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from ..config import DEFAULT_CONFIG, PipelineConfig
 from .schema import SCORED_SCHEMA
@@ -73,93 +70,3 @@ def score_lines(
         .applyInPandas(decode, schema=SCORED_SCHEMA)
     )
 
-
-def score_lines_salted(
-    lines: DataFrame,
-    model_bc,
-    lex_bc,
-    cfg: PipelineConfig = DEFAULT_CONFIG,
-    chunk_lines: int = 20_000,
-) -> DataFrame:
-    """Skew-safe scoring: mega-documents are split into ``chunk_lines``
-    salted chunks with a ±2-line halo, so no single task owns a whole
-     10⁵-line document (SURVEY.md §4 "salted windows with halo recompute";
-    north_rule skew requirement).
-
-    Context features reach lines n−2…n+1 (prev_prev/prev/next copies), so
-    replicating two predecessor lines and one successor line into the
-    neighboring chunk makes chunked batch scoring bit-identical to
-    whole-document scoring. Halo rows are scored but not emitted.
-
-    Only valid for batch-mode scoring (no ``prev_tag_*`` in the model
-    vocabulary, or cfg.prev_tag off — true for the reference pretrained
-    models and the flagship model); the sequential greedy decode is
-    inherently whole-document and cannot cross chunk boundaries, so this
-    operator refuses it — use ``score_lines``.
-    """
-    from ..refmodel import ModelWeights
-
-    if cfg.prev_tag:
-        probe = ModelWeights.from_broadcastable(model_bc.value)
-        if any(k.startswith("prev_tag_") for k in probe.base_index):
-            raise ValueError(
-                "score_lines_salted cannot chunk a sequential (prev_tag) "
-                "model — decode state does not cross chunk boundaries; "
-                "use score_lines (whole-document groups)"
-            )
-
-    K = chunk_lines
-    base = lines.select(*_SCORE_INPUT_COLS)
-    pos = F.col("line_no") - 1  # 0-based
-    chunk = F.floor(pos / K).cast("int")
-
-    def _t(c, halo):
-        return F.struct(
-            c.cast("int").alias("chunk"), F.lit(halo).alias("is_halo")
-        )
-
-    # one pass: each line explodes into its own chunk, plus (when on a
-    # boundary) halo membership in a neighbor chunk — the last two lines
-    # of a chunk feed the next chunk's prev/prev_prev context, the first
-    # line feeds the previous chunk's next-line context. A single explode
-    # avoids the 3-branch union that re-ran segmentation three times.
-    targets = F.concat(
-        F.array(_t(chunk, False)),
-        F.when((pos % K) >= K - 2, F.array(_t(chunk + 1, True)))
-        .otherwise(F.array().cast("array<struct<chunk:int,is_halo:boolean>>")),
-        F.when(((pos % K) == 0) & (pos >= K), F.array(_t(chunk - 1, True)))
-        .otherwise(F.array().cast("array<struct<chunk:int,is_halo:boolean>>")),
-    )
-    chunked = base.select(
-        F.explode(targets).alias("_t"), "*"
-    ).select(
-        F.col("_t.chunk").alias("chunk"),
-        F.col("_t.is_halo").alias("is_halo"),
-        *_SCORE_INPUT_COLS,
-    )
-
-    def decode(pdf: pd.DataFrame) -> pd.DataFrame:
-        model = ModelWeights.from_broadcastable(model_bc.value)
-        lex = lex_bc.value
-        pdf = pdf.sort_values("line_no", kind="mergesort").reset_index(drop=True)
-        X = base_feature_matrix(pdf, lex, cfg, model)
-        labels, _ = score_matrix(X, model, cfg, want_probs=False)
-        keep = ~pdf["is_halo"].to_numpy()
-        # block_id/text ride along so downstream span assembly needs no
-        # join back to the (twice-recomputed) segmentation
-        return pd.DataFrame(
-            {
-                "url": pdf["url"][keep],
-                "line_no": pdf["line_no"][keep],
-                "block_id": pdf["block_id"][keep],
-                "text": pdf["text"][keep],
-                "pred": np.asarray(labels, dtype=object)[keep],
-            }
-        )
-
-    out_schema = (
-        "url string, line_no int, block_id string, text string, pred string"
-    )
-    return chunked.groupBy("url", "chunk").applyInPandas(
-        decode, schema=out_schema
-    )

@@ -139,47 +139,6 @@ def detected_span_text(
     return spans
 
 
-def detected_span_text_grouped(
-    scored_lines: DataFrame,
-    cfg: PipelineConfig = DEFAULT_CONFIG,
-) -> DataFrame:
-    """Detected-span assembly as ONE grouped-map pass per document (same
-    semantics as ``detected_span_text`` — parity-tested): a single shuffle
-    on url, then the fused pipeline's span kernel runs over each doc.
-    Preferred when the input is already per-line scored rows (e.g. the
-    salted mega-doc path): the window-operator chain costs two extra
-    wide stages for the same answer.
-
-    Input needs: url, line_no, block_id, text, pred.
-    """
-    import pandas as pd
-
-    from .schema import SPANS_SCHEMA
-    from .vectorized import spans_from_labels
-
-    span_cols = [f.name for f in SPANS_SCHEMA.fields]
-
-    def assemble(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("line_no", kind="mergesort").reset_index(drop=True)
-        url = pdf["url"].iloc[0]
-        rows = spans_from_labels(
-            pdf["url"].tolist(),
-            pdf["line_no"].tolist(),
-            pdf["block_id"].tolist(),
-            pdf["text"].tolist(),
-            list(pdf["pred"]),
-            [(url, 0, len(pdf))],
-            cfg,
-        )
-        return pd.DataFrame(rows, columns=span_cols)
-
-    return (
-        scored_lines.select("url", "line_no", "block_id", "text", "pred")
-        .groupBy("url")
-        .applyInPandas(assemble, schema=SPANS_SCHEMA)
-    )
-
-
 def detected_text_per_url(spans: DataFrame) -> DataFrame:
     """Per-url concatenated detected text — the byte-parity unit."""
     return (

@@ -480,6 +480,26 @@ def score_matrix(
     return labels, probs
 
 
+def label_documents(
+    lines: pd.DataFrame,
+    doc_slices: list[tuple[str, int, int]],
+    lex: Lexicons,
+    cfg: PipelineConfig,
+    model: ModelWeights,
+) -> list[str]:
+    """Featurize a batch of whole documents once, then score each
+    document's row range — the kernel step every flagship path shares.
+
+    ``doc_slices`` = [(url, start, stop)] row ranges per document; scoring
+    per document keeps the sequential decode's state from crossing
+    documents."""
+    X = base_feature_matrix(lines, lex, cfg, model)
+    labels: list[str] = []
+    for _, a, b in doc_slices:
+        labels.extend(score_matrix(X[a:b], model, cfg)[0])
+    return labels
+
+
 def spans_from_labels(
     urls: np.ndarray,
     line_nos: np.ndarray,

@@ -1,9 +1,8 @@
 """Chunked mega-document detection: the scalable skew path.
 
-``detect_spans_salted`` (line-level chunk scoring + windowed assembly)
-pays two full-data shuffles and a doc-serial span-assembly task. This
-strategy keeps everything *narrow* except one balance repartition of text
-chunks:
+Every stage stays *narrow* except one balance repartition of text chunks
+(hashed on url plus the chunk number, the salt), so no single task owns a
+whole mega-document and no per-line rows are shuffled:
 
 1. **split** (mapInPandas, narrow): segment each mega page once
    (columnar), cut at block boundaries near every ``chunk_lines`` mark
@@ -23,13 +22,13 @@ chunks:
    merge spans adjacent across chunk boundaries, renumber, re-apply the
    reference EOF quirk doc-globally.
 
-Batch-mode models only (sequential decode cannot cross chunks — refused,
-like the salted path); ``cfg.word_overlap`` is refused too (the 2-line
-halo cannot reproduce unbounded backward overlap context). Mega documents
-containing form-feed page breaks fall back to the fused whole-document
-path (the chunk frame hardcodes page=1; web text has no \\f, so the
-fallback is cold). Bit-parity with the fused path is tested with forced
-multi-chunk documents.
+Batch-mode models only (sequential decode cannot cross chunks — refused);
+``cfg.word_overlap`` is refused too (the 2-line halo cannot reproduce
+unbounded backward overlap context). Mega documents containing form-feed
+page breaks fall back to the fused whole-document path (the chunk frame
+hardcodes page=1; web text has no \\f, so the fallback is cold).
+Bit-parity with the fused path is tested with forced multi-chunk
+documents.
 """
 
 from __future__ import annotations
@@ -51,11 +50,7 @@ from pyspark.sql.types import (
 
 from ..operators.schema import SPANS_SCHEMA
 from ..operators.segment import _plain_frame
-from ..operators.vectorized import (
-    base_feature_matrix,
-    score_matrix,
-    spans_from_labels,
-)
+from ..operators.vectorized import label_documents, spans_from_labels
 from ..refmodel import ModelWeights
 from ..segmentation import extract_page_text, segment_text_columns
 from .pipeline import DetectContext, detect_spans_fused
@@ -208,7 +203,6 @@ def detect_spans_chunked(
     ctx: DetectContext,
     chunk_lines: int = 20_000,
     mega_doc_chars: int = 1_000_000,
-    chunk_waves: int = 4,
 ) -> DataFrame:
     """Skew-safe pages → spans with chunk-parallel everything (see module
     docstring). Small docs keep the zero-shuffle fused path."""
@@ -258,8 +252,8 @@ def detect_spans_chunked(
         pages.filter(is_chunkable).coalesce(max(2, par)),
         chunk_lines,
         cfg.html_main_content,
-    ).repartition(chunk_waves * par, "url", "chunk_no")
-    # ^ hash balance with OVERDECOMPOSITION (default 4 waves/core): a mega doc
+    ).repartition(4 * par, "url", "chunk_no")
+    # ^ hash balance with OVERDECOMPOSITION (4 waves/core): a mega doc
     # yields few chunks relative to cores (e.g. 20 chunks at 8 cores),
     # and hash placement is balls-into-bins — at 2 bins/core the
     # expected max bin holds ~3 chunks (score stage runs at ~2/3
@@ -341,8 +335,9 @@ def detect_spans_chunked(
                         "doc_llx_mode": [r.doc_llx_mode] * n,
                     }
                 )
-                X = base_feature_matrix(frame, lex, cfg, model)
-                labels, _ = score_matrix(X, model, cfg)
+                labels = label_documents(
+                    frame, [(r.url, 0, n)], lex, cfg, model
+                )
                 body = slice(n_halo, n_halo + n_body)
                 rows = spans_from_labels(
                     [r.url] * n_body,
@@ -462,7 +457,6 @@ def choose_detect_path(
     total_chars: int,
     cores: int,
     overhead_chars: int = AUTO_OVERHEAD_CHARS,
-    fairshare_factor: float = AUTO_FAIRSHARE_FACTOR,
 ) -> str:
     """'fused' or 'chunked' from corpus shape (pure function — unit
     tested). Chunk iff the biggest document exceeds a core's fair share
@@ -470,7 +464,7 @@ def choose_detect_path(
     if cores < 2:
         return "fused"
     fair = total_chars / cores
-    if max_chars > fairshare_factor * fair + overhead_chars:
+    if max_chars > AUTO_FAIRSHARE_FACTOR * fair + overhead_chars:
         return "chunked"
     return "fused"
 

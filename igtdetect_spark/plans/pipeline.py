@@ -19,25 +19,22 @@ Model + lexicons travel as broadcast variables (~2 MB).
 
 from __future__ import annotations
 
-from typing import Iterator, Optional
+from typing import Iterator
 
 import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegerType, StringType, StructField, StructType
 
 from ..config import DEFAULT_CONFIG, PipelineConfig
 from ..featurespec import Lexicons
 from ..refmodel import ModelWeights
-from ..operators.schema import LINES_SCHEMA, SPANS_SCHEMA
+from ..operators.schema import SPANS_SCHEMA
 from ..operators.segment import _plain_frame, batch_to_columns, segment_pages
 from ..operators.score import score_lines
 from ..operators.spans import assign_spans_df, detected_span_text
-from ..operators.vectorized import (
-    base_feature_matrix,
-    score_matrix,
-    spans_from_labels,
-)
+from ..operators.vectorized import label_documents, spans_from_labels
 
 
 class DetectContext:
@@ -65,14 +62,26 @@ class DetectContext:
         )
 
 
-_LINE_COLS = [f.name for f in LINES_SCHEMA.fields]
 _SPAN_COLS = [f.name for f in SPANS_SCHEMA.fields]
+_CLASSIFIED_SCHEMA = StructType([
+    StructField("url", StringType(), False),
+    StructField("line_no", IntegerType(), False),
+    StructField("page", IntegerType(), True),
+    StructField("block_id", StringType(), True),
+    StructField("text", StringType(), True),
+    StructField("pred", StringType(), True),
+])
+_CLASSIFIED_COLS = [f.name for f in _CLASSIFIED_SCHEMA.fields]
 
 
-def detect_spans_fused(pages: DataFrame, ctx: DetectContext) -> DataFrame:
-    """pages → spans, one narrow stage (no shuffle)."""
+def _fused_map(pages: DataFrame, ctx: DetectContext, spans: bool) -> DataFrame:
+    """The flagship kernel as one narrow ``mapInPandas`` stage: segment,
+    featurize and score each Arrow batch of whole documents, then emit
+    span rows (``spans``) or the line columns plus ``pred``."""
     cfg = ctx.cfg
     model_bc, lex_bc = ctx.model_bc, ctx.lex_bc
+    schema = SPANS_SCHEMA if spans else _CLASSIFIED_SCHEMA
+    out_cols = _SPAN_COLS if spans else _CLASSIFIED_COLS
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         model = ModelWeights.from_broadcastable(model_bc.value)
@@ -82,73 +91,35 @@ def detect_spans_fused(pages: DataFrame, ctx: DetectContext) -> DataFrame:
                 pdf["url"], pdf["html"], pdf["text"], cfg.html_main_content
             )
             if not slices:
-                yield pd.DataFrame(columns=_SPAN_COLS)
+                yield pd.DataFrame(columns=out_cols)
                 continue
             lines = _plain_frame(cols)
-            X = base_feature_matrix(lines, lex, cfg, model)
-            labels: list[str] = []
-            for url, a, b in slices:
-                lab, _ = score_matrix(X[a:b], model, cfg)
-                labels.extend(lab)
-            span_rows = spans_from_labels(
-                cols["url"],
-                cols["line_no"],
-                cols["block_id"],
-                cols["text"],
-                labels,
-                slices,
-                cfg,
-            )
-            yield pd.DataFrame(span_rows, columns=_SPAN_COLS)
+            labels = label_documents(lines, slices, lex, cfg, model)
+            if spans:
+                yield pd.DataFrame(
+                    spans_from_labels(
+                        cols["url"], cols["line_no"], cols["block_id"],
+                        cols["text"], labels, slices, cfg,
+                    ),
+                    columns=out_cols,
+                )
+            else:
+                out = lines[out_cols[:-1]].copy()
+                out["pred"] = labels
+                yield out
 
-    return pages.select("url", "html", "text").mapInPandas(
-        gen, schema=SPANS_SCHEMA
-    )
+    return pages.select("url", "html", "text").mapInPandas(gen, schema=schema)
+
+
+def detect_spans_fused(pages: DataFrame, ctx: DetectContext) -> DataFrame:
+    """pages → spans, one narrow stage (no shuffle)."""
+    return _fused_map(pages, ctx, spans=True)
 
 
 def classify_lines_fused(pages: DataFrame, ctx: DetectContext) -> DataFrame:
     """pages → per-line predictions (url, line_no, page, block_id, text,
     pred) in one narrow stage — the flagship classified-lines sink."""
-    from pyspark.sql.types import (
-        IntegerType, StringType, StructField, StructType,
-    )
-
-    cfg = ctx.cfg
-    model_bc, lex_bc = ctx.model_bc, ctx.lex_bc
-    out_schema = StructType([
-        StructField("url", StringType(), False),
-        StructField("line_no", IntegerType(), False),
-        StructField("page", IntegerType(), True),
-        StructField("block_id", StringType(), True),
-        StructField("text", StringType(), True),
-        StructField("pred", StringType(), True),
-    ])
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        model = ModelWeights.from_broadcastable(model_bc.value)
-        lex = lex_bc.value
-        for pdf in batches:
-            cols, slices = batch_to_columns(
-                pdf["url"], pdf["html"], pdf["text"], cfg.html_main_content
-            )
-            if not slices:
-                yield pd.DataFrame(
-                    columns=[f.name for f in out_schema.fields]
-                )
-                continue
-            lines = _plain_frame(cols)
-            X = base_feature_matrix(lines, lex, cfg, model)
-            labels: list[str] = []
-            for url, a, b in slices:
-                lab, _ = score_matrix(X[a:b], model, cfg)
-                labels.extend(lab)
-            out = lines[["url", "line_no", "page", "block_id", "text"]].copy()
-            out["pred"] = labels
-            yield out
-
-    return pages.select("url", "html", "text").mapInPandas(
-        gen, schema=out_schema
-    )
+    return _fused_map(pages, ctx, spans=False)
 
 
 def detect_spans_staged(pages: DataFrame, ctx: DetectContext) -> DataFrame:
@@ -160,40 +131,6 @@ def detect_spans_staged(pages: DataFrame, ctx: DetectContext) -> DataFrame:
     ).join(scored.select("url", "line_no", "pred"), ["url", "line_no"])
     with_ids = assign_spans_df(joined, tag_col="pred")
     return detected_span_text(with_ids, ctx.cfg)
-
-
-def detect_spans_salted(
-    pages: DataFrame,
-    ctx: DetectContext,
-    chunk_lines: int = 20_000,
-    mega_doc_chars: int = 1_000_000,
-) -> DataFrame:
-    """Skew-safe pages → spans: documents under ``mega_doc_chars`` take the
-    zero-shuffle fused path; mega-documents are segmented, salt-chunked
-    with halo for scoring, and span-assembled with window operators —
-    results identical to the fused path (parity-tested), wall-clock no
-    longer bounded by the largest document.
-
-    The split predicate is a native ``length(text)`` filter — both sides
-    prune at the scan."""
-    from ..operators.score import score_lines_salted
-
-    is_mega = (F.length(F.coalesce(F.col("text"), F.lit(""))) >= mega_doc_chars) | (
-        F.length(F.coalesce(F.col("html"), F.lit(b""))) >= mega_doc_chars
-    )
-    small = pages.filter(~is_mega)
-    mega = pages.filter(is_mega)
-
-    small_spans = detect_spans_fused(small, ctx)
-
-    from ..operators.spans import detected_span_text_grouped
-
-    lines = segment_pages(mega, ctx.cfg.html_main_content)
-    scored = score_lines_salted(
-        lines, ctx.model_bc, ctx.lex_bc, ctx.cfg, chunk_lines=chunk_lines
-    )
-    mega_spans = detected_span_text_grouped(scored, ctx.cfg)
-    return small_spans.unionByName(mega_spans)
 
 
 def detect_with_metrics(pages: DataFrame, ctx: DetectContext):

@@ -12,3 +12,14 @@ def spark():
     )
     yield s
     s.stop()
+
+
+@pytest.fixture(scope="session")
+def lexicons():
+    """Hermetic flagship lexicons: the benchmark's seeded builder (corpus
+    language names plus pseudo-names, gram lists from the corpus glosses),
+    so parity tests run without the reference data directory. Parity holds
+    for any lexicon because the oracle and Spark read the same one."""
+    from perfbench.inputs import build_lexicons
+
+    return build_lexicons(0)

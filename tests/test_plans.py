@@ -4,7 +4,7 @@ change cannot silently reintroduce a shuffle/scan anti-pattern."""
 
 import pytest
 
-from igtdetect_spark.flagship import get_lexicons, get_synthetic_model
+from igtdetect_spark.flagship import get_synthetic_model
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -27,21 +27,25 @@ def _n_planner_shuffles(plan: str) -> int:
 
 
 @pytest.fixture(scope="module")
-def ctx(spark):
+def ctx(spark, lexicons):
     from igtdetect_spark.plans.pipeline import DetectContext
 
-    return DetectContext(spark, get_synthetic_model(), get_lexicons())
+    return DetectContext(spark, get_synthetic_model(), lexicons)
 
 
 def test_fused_detect_plan_has_zero_exchanges(spark, ctx):
-    """Flagship plan: Scan → Project → MapInPandas, no shuffle, and the
-    scan reads only (url, html, text)."""
-    from igtdetect_spark.plans.pipeline import detect_spans_fused
+    """Flagship plan, for both sinks (spans and classified lines):
+    Scan → Project → one MapInPandas, no shuffle."""
+    from igtdetect_spark.plans.pipeline import (
+        classify_lines_fused,
+        detect_spans_fused,
+    )
     from igtdetect_spark.sources.pages import pages_from_documents
 
-    plan = _plan(detect_spans_fused(pages_from_documents(spark, SF_DIR), ctx))
-    assert "Exchange" not in plan
-    assert "MapInPandas" in plan
+    for sink in (detect_spans_fused, classify_lines_fused):
+        plan = _plan(sink(pages_from_documents(spark, SF_DIR), ctx))
+        assert "Exchange" not in plan, sink.__name__
+        assert plan.count("MapInPandas") == 1, sink.__name__
 
 
 from contextlib import contextmanager

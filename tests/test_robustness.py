@@ -6,7 +6,7 @@ import datetime
 
 import pytest
 
-from igtdetect_spark.flagship import get_lexicons, get_synthetic_model
+from igtdetect_spark.flagship import get_synthetic_model
 from igtdetect_spark.sources.pages import PAGES_SCHEMA
 
 TS = datetime.datetime(2024, 1, 1)
@@ -31,10 +31,10 @@ def hostile(spark):
 
 
 @pytest.fixture(scope="module")
-def ctx(spark):
+def ctx(spark, lexicons):
     from igtdetect_spark.plans.pipeline import DetectContext
 
-    return DetectContext(spark, get_synthetic_model(), get_lexicons())
+    return DetectContext(spark, get_synthetic_model(), lexicons)
 
 
 def test_fused_survives_hostile_pages(spark, hostile, ctx):

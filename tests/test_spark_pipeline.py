@@ -32,10 +32,10 @@ N_DOCS = 30
 
 
 @pytest.fixture(scope="module")
-def ctx_synth(spark):
+def ctx_synth(spark, lexicons):
     from igtdetect_spark.plans.pipeline import DetectContext
 
-    return DetectContext(spark, get_synthetic_model(), get_lexicons())
+    return DetectContext(spark, get_synthetic_model(), lexicons)
 
 
 @pytest.fixture(scope="module")
@@ -46,17 +46,16 @@ def pages(spark):
 
 
 @pytest.fixture(scope="module")
-def oracle_detected():
+def oracle_detected(lexicons):
     """url → detected text per the oracle, synthetic corpus + trained model."""
     model = get_synthetic_model()
-    lex = get_lexicons()
     out = {}
     for d in make_corpus(N_DOCS):
         from igtdetect_spark.segmentation import extract_page_text
 
         content = extract_page_text(d.html, d.text)
         doc = doc_from_text(d.url, content)
-        inst = extract_doc_features(doc, lex)
+        inst = extract_doc_features(doc, lexicons)
         labels, _ = score_doc(inst, model)
         txt = detected_text(detect_spans(doc, labels))
         if txt:
@@ -111,7 +110,7 @@ class TestSyntheticParity:
         assert f == c
         assert len(f) > 300
 
-    def test_chunked_guards(self, spark, ctx_synth):
+    def test_chunked_guards(self, spark, ctx_synth, lexicons):
         """Unsupported configs are refused; form-feed mega docs silently
         fall back to the fused path with identical results."""
         import dataclasses
@@ -128,7 +127,7 @@ class TestSyntheticParity:
         # word_overlap → refuse (halo can't reproduce unbounded context)
         cfg_wo = dataclasses.replace(ctx_synth.cfg, word_overlap=True)
         ctx_wo = DetectContext(
-            spark, get_synthetic_model(), get_lexicons(), cfg=cfg_wo
+            spark, get_synthetic_model(), lexicons, cfg=cfg_wo
         )
         pages = synthetic_pages(spark, 4).cache()
         with _pytest.raises(ValueError, match="word_overlap"):
@@ -156,7 +155,7 @@ class TestSyntheticParity:
         )
         assert f == c
 
-    def test_auto_path_selection(self, spark, ctx_synth):
+    def test_auto_path_selection(self, spark, ctx_synth, lexicons):
         """detect_spans_auto: the cost-model gate picks fused for uniform
         corpora and chunked for straggler-dominated ones, output is
         bit-identical either way, and unsupported configs fall back to
@@ -200,32 +199,11 @@ class TestSyntheticParity:
         # word_overlap: auto silently uses fused (chunked would raise)
         cfg_wo = dataclasses.replace(ctx_synth.cfg, word_overlap=True)
         ctx_wo = DetectContext(
-            spark, get_synthetic_model(), get_lexicons(), cfg=cfg_wo
+            spark, get_synthetic_model(), lexicons, cfg=cfg_wo
         )
         assert detect_spans_auto(
             pages, ctx_wo, overhead_chars=1_000
         ).count() == len(f)
-
-    def test_salted_matches_fused(self, spark, ctx_synth):
-        """Skew path: chunked halo scoring must be bit-identical to the
-        whole-document path — small chunk size forces multi-chunk docs."""
-        from igtdetect_spark.plans.pipeline import (
-            detect_spans_fused,
-            detect_spans_salted,
-        )
-        from igtdetect_spark.sources.pages import synthetic_pages
-
-        pages = synthetic_pages(
-            spark, 12, mega_doc_every=5, mega_doc_lines=3000
-        ).cache()
-        ft = _collect_detected(detect_spans_fused(pages, ctx_synth))
-        st = _collect_detected(
-            detect_spans_salted(
-                pages, ctx_synth, chunk_lines=500, mega_doc_chars=50_000
-            )
-        )
-        assert ft == st
-        assert len(ft) >= 8
 
     def test_span_schema_and_ordering(self, spark, ctx_synth, pages):
         from igtdetect_spark.plans.pipeline import detect_spans_fused

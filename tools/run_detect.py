@@ -10,7 +10,6 @@ Args:
   --n-docs N           synthetic corpus size when no --pages (default 2000)
   --out DIR            output directory (required)
   --buckets N          url-hash buckets for checkpoint/resume (default 16)
-  --chunk-lines N      salted chunk size for mega-docs (default 20000)
   --main-content       enable HTML main-content extraction
 """
 
@@ -28,7 +27,6 @@ def main():
     ap.add_argument("--n-docs", type=int, default=2000)
     ap.add_argument("--out", required=True)
     ap.add_argument("--buckets", type=int, default=16)
-    ap.add_argument("--chunk-lines", type=int, default=20_000)
     ap.add_argument("--main-content", action="store_true")
     args = ap.parse_args()
 
