@@ -1,11 +1,12 @@
 """Per-line feature semantics — the executable specification.
 
 Pure-Python reimplementation of the reference's per-line feature functions
-(``igtdetect/igtdetect.py:136-855``), shared by the single-node oracle and
-by the Spark Arrow UDFs (same Python ``re`` engine on both sides ⇒ no
-Java-vs-Python regex divergence; SURVEY.md §7 risk 1). Golden fixture tests
-pin these semantics against hand-verified expectations from the reference
-sample docs.
+(``igtdetect/igtdetect.py:136-855``), used by the single-node oracle. The
+Spark Arrow kernels (``operators/vectorized.py``) evaluate the same
+patterns with RE2, from the RE2 spelling kept beside each Python pattern
+below; tests pin the two engines equal over every code point. Golden
+fixture tests pin these semantics against hand-verified expectations from
+the reference sample docs.
 
 Parity quirks deliberately replicated (SURVEY.md §2.2):
 
@@ -25,6 +26,7 @@ from __future__ import annotations
 import re
 from typing import Iterable, Optional, Sequence
 
+from . import unicode_classes
 from .config import (
     DEFAULT_CONFIG,
     PipelineConfig,
@@ -68,34 +70,68 @@ from .config import (
 # ---------------------------------------------------------------------------
 
 _WORD_RE = re.compile(r"\w+", re.UNICODE)
+# RE2 spelling of the separators between _WORD_RE's tokens ({W} is
+# Python's \w class, filled in by re2()).
+RE2_NON_WORD = r"[^{W}]+"
 
 YEAR_STR = "(?:1[8-9][0-9][0-9]|20[0-1][0-9])"  # igtdetect.py:617
 
-# Precompiled feature regexes (reference compiles per call; semantics equal)
+# Precompiled feature regexes (reference compiles per call; semantics equal),
+# each followed by its RE2 spelling for the Arrow kernel
+# (operators/vectorized.py).  RE2's \s is ASCII-only, so the RE2 spellings
+# write Python's \s class as the placeholder ``{S}`` (``[{S}]`` for \s,
+# ``[^{S}]`` for \S), which ``re2()`` fills with explicit code points.
+# Python and RE2 agree on everything else used here: ``.`` excludes only
+# \n, negated classes include \n, ``^`` anchors at the start of the text,
+# and the script classes are plain code-point ranges.  Where the two
+# spellings are the same, the RE2 one is the Python pattern's own text.
 _RE_PARENTHETICAL = re.compile(r"\(.*\)")
+RE2_PARENTHETICAL = _RE_PARENTHETICAL.pattern
 _RE_CITATION = re.compile(r"\([^,]+, " + YEAR_STR + r"\)")
+RE2_CITATION = _RE_CITATION.pattern
 _RE_YEAR = re.compile(YEAR_STR)
+RE2_YEAR = _RE_YEAR.pattern
 _RE_BRACKETING = re.compile(r"\[.*\]")
+RE2_BRACKETING = _RE_BRACKETING.pattern
 _RE_NUMBERING = re.compile(r"^\s*\(?[0-9a-z]+[\)\.]")
+RE2_NUMBERING = r"^[{S}]*\(?[0-9a-z]+[\)\.]"
 _RE_LEADING_WS = re.compile(r"^\s+")
+RE2_LEADING_WS = r"^[{S}]+"
 _RE_QUOTATION = re.compile(r"['\"‘`“]\S+\s+.+['\"’”]")
+RE2_QUOTATION = r"['\"‘`“][^{S}]+[{S}]+.+['\"’”]"
 _RE_CYR = re.compile("[Ѐ-ӿ]", re.UNICODE)
+RE2_CYR = _RE_CYR.pattern
 # NB: first class is [̀ EN-DASH ͯ] — three literal chars, matching
 # the reference byte-for-byte (igtdetect.py:693).
 _RE_DIA_BUGGY = re.compile(
     "[̀–ͯ]|[᪰-᫿]|[᷀-᷿]|[⃐-⃿]|[︠-︯]",
     re.UNICODE,
 )
+RE2_DIA_BUGGY = _RE_DIA_BUGGY.pattern
 _RE_DIA_FIXED = re.compile(
     "[̀-ͯ]|[᪰-᫿]|[᷀-᷿]|[⃐-⃿]|[︠-︯]",
     re.UNICODE,
 )
+RE2_DIA_FIXED = _RE_DIA_FIXED.pattern
 _RE_GRK = re.compile("[Ͱ-Ͽ]|[ἀ-῿]", re.UNICODE)
+RE2_GRK = _RE_GRK.pattern
 _RE_KANJI = re.compile("[一-龿]", re.UNICODE)
+RE2_KANJI = _RE_KANJI.pattern
 _RE_HIRAGANA = re.compile("[぀-ゟ]", re.UNICODE)
+RE2_HIRAGANA = _RE_HIRAGANA.pattern
 _RE_KATAKANA = re.compile("[゠-ヿ]", re.UNICODE)
+RE2_KATAKANA = _RE_KATAKANA.pattern
 _RE_ACC_LAT = re.compile("[À-ÿ]", re.UNICODE)
+RE2_ACC_LAT = _RE_ACC_LAT.pattern
 _RE_KOR = re.compile("[가-힣]", re.UNICODE)
+RE2_KOR = _RE_KOR.pattern
+
+
+def re2(spelling: str) -> str:
+    """An RE2 spelling above with Python's \\s / \\w classes filled in."""
+    return spelling.replace("{S}", unicode_classes.space_set()).replace(
+        "{W}", unicode_classes.word_set()
+    )
 
 
 def split_words(sent: str) -> list[str]:
@@ -113,6 +149,25 @@ def compile_gram_re(gram_list: Iterable[str], case_insensitive: bool):
     if not grams:
         return None
     return re.compile("|".join(grams), re.I if case_insensitive else 0)
+
+
+_REGEX_SYNTAX = frozenset("\\^$*+?{}[]|()")
+
+
+def gram_re2(gram_list: Sequence[str], case_insensitive: bool) -> Optional[str]:
+    """RE2 spelling of ``compile_gram_re``'s pattern, or None when the
+    list is empty or a gram uses regex syntax other than ``.`` (those
+    lists stay on Python ``re``).  Under ``re.I`` each cased letter
+    becomes the class of code points Python folds to it."""
+    if not gram_list or any(c in _REGEX_SYNTAX for g in gram_list for c in g):
+        return None
+    return "|".join(
+        "".join(
+            "." if c == "." else unicode_classes.re2_literal(c, case_insensitive)
+            for c in g
+        )
+        for g in gram_list
+    )
 
 
 class Lexicons:
@@ -135,6 +190,29 @@ class Lexicons:
         self.met_words = met_words
         self.gram_re = compile_gram_re(gram_list, case_insensitive=True)
         self.gram_cased_re = compile_gram_re(gram_list_cased, case_insensitive=False)
+
+    def __getstate__(self):
+        state = self.__dict__.copy()
+        state.pop("_cache", None)
+        return state
+
+    def cached(self, key: str, make):
+        """``make()``, computed once per Lexicons object.  Not pickled:
+        a worker derives it with its own interpreter's tables."""
+        cache = self.__dict__.setdefault("_cache", {})
+        if key not in cache:
+            cache[key] = make()
+        return cache[key]
+
+    @property
+    def gram_re2(self) -> Optional[str]:
+        return self.cached("gram_re2", lambda: gram_re2(self.gram_list, True))
+
+    @property
+    def gram_cased_re2(self) -> Optional[str]:
+        return self.cached(
+            "gram_cased_re2", lambda: gram_re2(self.gram_list_cased, False)
+        )
 
 
 EMPTY_LEXICONS = Lexicons()

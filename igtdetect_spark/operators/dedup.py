@@ -285,7 +285,11 @@ def release_plan_caches(df: DataFrame) -> int:
     """Unpersist every cache handle attached to ``df`` (no-op for plans
     without one). Call after the consuming action — a long-lived session
     (bench loops, notebooks, services) otherwise accumulates dead
-    MEMORY_AND_DISK entries, one per invocation. Returns the number of
+    MEMORY_AND_DISK entries, one per invocation. A handle may be a
+    persisted DataFrame or a ``localCheckpoint``; the checkpoint's blocks
+    belong to the RDD under its plan's ``LogicalRDD`` leaf, which
+    ``DataFrame.unpersist()`` does not touch, so that RDD is unpersisted
+    too (the released plan cannot run again). Returns the number of
     handles released."""
     handles = getattr(df, "_plan_cache_handles", None) or []
     for h in handles:
@@ -295,6 +299,9 @@ def release_plan_caches(df: DataFrame) -> int:
         # timed query of a bench loop — release deterministically,
         # outside any timed window by contract.
         h.unpersist(blocking=True)
+        plan = h._jdf.queryExecution().analyzed()
+        if plan.getClass().getSimpleName() == "LogicalRDD":
+            plan.rdd().unpersist(True)
     if handles:
         df._plan_cache_handles = []
     return len(handles)

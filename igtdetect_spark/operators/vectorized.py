@@ -1,10 +1,16 @@
 """Vectorized (Arrow-batch) feature extraction + scoring kernels.
 
-These run inside ``mapInPandas``/``applyInPandas`` on executors. All regex
-features are evaluated with pandas ``str.contains`` over the whole batch —
-the same Python ``re`` engine as the oracle (``featurespec``), so parity is
-by construction, while the loop is C-level. Only token-membership features
-(word_*, has_langname) walk rows in Python, over precomputed token lists.
+These run inside ``mapInPandas``/``applyInPandas`` on executors.  The
+text features are whole-batch ``pyarrow.compute`` kernels: each regex
+feature is one RE2 ``match_substring_regex`` call over the batch's text
+array, using the RE2 spelling kept beside the oracle's Python pattern in
+``featurespec`` (Python's Unicode ``\\s`` / ``\\w`` classes and ``re.I``
+case folding written out as explicit code points, ``unicode_classes``).
+Tokens are ``utf8_lower`` plus an RE2 split into one flat token array
+with row ids; ``has_langname`` and the word features are ``is_in`` /
+``index_in`` lookups on it.  ``tests/test_arrow_kernel.py`` pins each
+RE2 spelling and the tokenizer to Python ``re`` over every code point and
+fuzzes the whole kernel against the per-line oracle.
 
 The scoring kernel materializes the per-document boolean base-feature
 matrix and applies the context-decomposed weights (``refmodel``) as numpy
@@ -13,11 +19,12 @@ matmuls — no per-line Python in the hot path.
 
 from __future__ import annotations
 
-import re
-from typing import Iterable, Optional
+from itertools import chain
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 
 from ..config import (
     PipelineConfig,
@@ -56,65 +63,119 @@ from ..config import (
     T_MED_OOV_RATE,
 )
 from ..featurespec import (
+    RE2_ACC_LAT,
+    RE2_BRACKETING,
+    RE2_CITATION,
+    RE2_CYR,
+    RE2_DIA_BUGGY,
+    RE2_DIA_FIXED,
+    RE2_GRK,
+    RE2_HIRAGANA,
+    RE2_KANJI,
+    RE2_KATAKANA,
+    RE2_KOR,
+    RE2_LEADING_WS,
+    RE2_NON_WORD,
+    RE2_NUMBERING,
+    RE2_PARENTHETICAL,
+    RE2_QUOTATION,
+    RE2_YEAR,
     Lexicons,
-    _RE_ACC_LAT,
-    _RE_BRACKETING,
-    _RE_CITATION,
-    _RE_CYR,
-    _RE_DIA_BUGGY,
-    _RE_DIA_FIXED,
-    _RE_GRK,
-    _RE_HIRAGANA,
-    _RE_KANJI,
-    _RE_KATAKANA,
-    _RE_KOR,
-    _RE_LEADING_WS,
-    _RE_NUMBERING,
-    _RE_PARENTHETICAL,
-    _RE_QUOTATION,
-    _RE_YEAR,
     _WORD_RE,
+    re2,
 )
 from ..labels import prev_label_feat
 from ..refmodel import ModelWeights
 
+# Rows the Arrow tokenizer hands to Python: utf8_lower maps U+0130 'İ' to
+# 'i' where str.lower gives 'i' + U+0307 (a non-word code point that moves
+# the \w boundaries), and str.lower picks 'ς' or 'σ' for 'Σ' from the
+# surrounding letters, which the reference decides per token.  Every other
+# code point lowercases identically and keeps its \w-ness (pinned over
+# all of Unicode in the tests).
+_ROUTED = "[\u0130\u03a3]"
+
+
+class TokenBatch:
+    """A batch's text as one Arrow array plus its ``split_words`` tokens,
+    flattened: ``words[k]`` belongs to row ``rows[k]`` (ascending).
+
+    NULL CONTRACT: null/NaN text is the empty string (no tokens), so every
+    row has a token list and downstream kernels never branch on NaN.
+    Callers that must tell missing from empty text test for null BEFORE
+    tokenizing (the pipeline pre-fills text)."""
+
+    def __init__(self, texts: pd.Series):
+        self.n = len(texts)
+        self.text = pa.array(texts.fillna("").tolist(), type=pa.string())
+        parts = pc.split_pattern_regex(
+            pc.utf8_lower(self.text), re2(RE2_NON_WORD)
+        )
+        words = pc.list_flatten(parts)
+        rows = pc.list_parent_indices(parts).to_numpy()
+        keep = pc.greater(pc.binary_length(words), 0)
+        words, rows = words.filter(keep), rows[keep.to_numpy(zero_copy_only=False)]
+        routed = np.flatnonzero(
+            pc.match_substring_regex(self.text, _ROUTED).to_numpy(
+                zero_copy_only=False
+            )
+        )
+        if routed.size:
+            # The reference order: find the \w+ runs first, then lowercase
+            # each token by itself.
+            py = [
+                [w.lower() for w in _WORD_RE.findall(self.text[i].as_py())]
+                for i in routed.tolist()
+            ]
+            mine = ~np.isin(rows, routed)
+            rows = np.concatenate(
+                [rows[mine], np.repeat(routed, [len(t) for t in py])]
+            )
+            words = pa.concat_arrays([
+                words.filter(pa.array(mine)),
+                pa.array(list(chain.from_iterable(py)), type=pa.string()),
+            ])
+            order = np.argsort(rows, kind="stable")
+            words, rows = words.take(order), rows[order]
+        self.words: pa.Array = words
+        self.rows: np.ndarray = rows
+
+    def rows_where(self, hit: pa.Array) -> np.ndarray:
+        """Per-row OR of a per-token boolean array."""
+        out = np.zeros(self.n, dtype=bool)
+        out[self.rows[hit.to_numpy(zero_copy_only=False)]] = True
+        return out
+
+    def lists(self) -> list[list[str]]:
+        """Per-row token lists (the ``split_words`` contract)."""
+        bounds = np.searchsorted(self.rows, np.arange(self.n + 1))
+        words = self.words.to_pylist()
+        return [words[a:b] for a, b in zip(bounds[:-1], bounds[1:])]
+
 
 def tokenize_series(texts: pd.Series) -> pd.Series:
-    """split_words over a batch: \\w+ findall on the ORIGINAL text, then
-    per-token lowercase (reference igtdetect.py:1428-1433; the ':'/'#'
-    strip is a no-op on \\w+ tokens).
+    """split_words over a batch: lists of lowercased \\w+ tokens, one per
+    row (reference igtdetect.py:1428-1433; the ':'/'#' strip is a no-op
+    on \\w+ tokens).  Null text yields ``[]`` (see ``TokenBatch``)."""
+    return pd.Series(TokenBatch(texts).lists(), index=texts.index, dtype=object)
 
-    NULL CONTRACT: null/NaN text maps to ``[]`` (the ``fillna("")``
-    below), the same tokens an empty line yields — deliberate, so
-    every output cell is a list and downstream kernels never branch on
-    NaN. Callers that must distinguish missing from empty text should
-    test for null BEFORE tokenizing (the pipeline pre-fills text, so
-    in-engine callers never see the difference).
 
-    Order matters: lowercasing the whole line first can change \\w
-    boundaries — 'İ' (U+0130) lowercases to 'i' + U+0307 COMBINING DOT,
-    a non-word codepoint, so lower-then-findall splits 'İstanbul' into
-    ['i', 'stanbul'] while the reference yields ['i̇stanbul']. U+0130 is
-    the ONLY such codepoint in Unicode (exhaustively scanned, pinned in
-    tests: every other case mapping is 1:1 with \\w-ness preserved, and
-    the other multi-char expansions stay inside \\w), so only rows
-    containing it take the token-at-a-time lowercase; everything else
-    keeps the fully vectorized lower-then-findall fast path.
-    """
-    # Direct C calls per line (one lower + one findall) — the earlier
-    # pandas form paid _str_map dispatch twice per line plus a third
-    # pass for the risky-row check; same values, ~2× faster on mega docs.
-    fa = _WORD_RE.findall
-    out = [
-        [w.lower() for w in fa(t)] if "İ" in t else fa(t.lower())
-        for t in texts.fillna("").tolist()
-    ]
-    return pd.Series(out, index=texts.index, dtype=object)
+def _matches(text: pa.Array, spelling: str) -> np.ndarray:
+    return pc.match_substring_regex(text, spelling).to_numpy(zero_copy_only=False)
+
+
+def _value_set(lex: Lexicons, name: str) -> pa.Array:
+    """One of the Lexicons' word sets as an Arrow value set (built once
+    per Lexicons object)."""
+    return lex.cached(
+        "arrow_" + name,
+        lambda: pa.array(sorted(getattr(lex, name)), type=pa.string()),
+    )
 
 
 def static_feature_columns(
     pdf: pd.DataFrame,
-    tokens: pd.Series,
+    tokens: TokenBatch,
     lex: Lexicons,
     cfg: PipelineConfig,
 ) -> dict[str, np.ndarray]:
@@ -122,127 +183,115 @@ def static_feature_columns(
 
     ``pdf`` needs: text, page, llx, doc_llx_mode, block_id, prev_block_id,
     next_block_id, fonts, def_font_id, def_font_size, iscore.
+    ``tokens`` is ``TokenBatch(pdf["text"])``.
     """
     out: dict[str, np.ndarray] = {}
-    s = pdf["text"].fillna("")
-    # Plain-list + direct ``pattern.search`` beats pandas ``str.contains``
-    # ~3× on the regex features (profiled on a 100k-line mega: 0.87 s of
-    # the 1.28 s regex cost was pandas ``_str_map`` per-call overhead, not
-    # the C regex engine). Per-LINE semantics are unchanged — each search
-    # still runs against one line's string.
-    texts_list: list[str] = s.tolist()
+    text = tokens.text
     n = len(pdf)
     te = cfg.enabled_text_feats
     fe = cfg.enabled_freki_feats
 
-    def contains(pat) -> np.ndarray:
-        f = (pat if hasattr(pat, "search") else re.compile(pat)).search
-        return np.fromiter(
-            (m is not None for m in map(f, texts_list)), dtype=bool, count=n
-        )
-
-    # Every unicode-script class matches only non-ASCII codepoints, and most
-    # web-text lines are pure ASCII — evaluate the 9 script regexes on the
-    # non-ASCII subset only (bitwise parity, big constant-factor win).
-    # str.isascii() is a C flag check — far cheaper than the regex scan it
-    # replaced (bitwise-identical: isascii() ⟺ no [^\x00-\x7f] match).
-    _non_ascii_mask: np.ndarray | None = None
-    _non_ascii_texts: list[str] | None = None
-
-    def contains_nonascii(pat) -> np.ndarray:
-        nonlocal _non_ascii_mask, _non_ascii_texts
-        if _non_ascii_mask is None:
-            _non_ascii_mask = np.fromiter(
-                (not t.isascii() for t in texts_list), dtype=bool, count=n
-            )
-            _non_ascii_texts = [t for t in texts_list if not t.isascii()]
-        res = np.zeros(n, dtype=bool)
-        if _non_ascii_texts:
-            f = (pat if hasattr(pat, "search") else re.compile(pat)).search
-            res[_non_ascii_mask] = np.fromiter(
-                (m is not None for m in map(f, _non_ascii_texts)),
-                dtype=bool, count=len(_non_ascii_texts),
-            )
-        return res
+    def contains(spelling: str) -> np.ndarray:
+        return _matches(text, re2(spelling))
 
     if cfg.text_feats_enabled:
         if T_HAS_LANGNAME in te:
-            ln = lex.langnames
-            # set.isdisjoint short-circuits in C — same truth value as
-            # any(w in ln for w in tk) without the per-token bytecode
-            disj = ln.isdisjoint
-            out[T_HAS_LANGNAME] = np.fromiter(
-                (not disj(tk) for tk in tokens), dtype=bool, count=n,
+            out[T_HAS_LANGNAME] = tokens.rows_where(
+                pc.is_in(tokens.words, value_set=_value_set(lex, "langnames"))
             )
         if T_HAS_GRAMS in te:
             v = np.zeros(n, dtype=bool)
-            if lex.gram_re is not None:
-                v |= contains(lex.gram_re)
-            if lex.gram_cased_re is not None:
-                v |= contains(lex.gram_cased_re)
+            for py_re, spelling in ((lex.gram_re, lex.gram_re2),
+                                    (lex.gram_cased_re, lex.gram_cased_re2)):
+                if py_re is None:
+                    continue
+                if spelling is not None:
+                    v |= _matches(text, spelling)
+                else:  # the gram list uses regex syntax RE2 is not given
+                    f = py_re.search
+                    v |= np.fromiter(
+                        (f(t) is not None for t in text.to_pylist()),
+                        dtype=bool, count=n,
+                    )
             out[T_HAS_GRAMS] = v
         if T_HAS_PARENTHETICAL in te:
-            out[T_HAS_PARENTHETICAL] = contains(_RE_PARENTHETICAL)
+            out[T_HAS_PARENTHETICAL] = contains(RE2_PARENTHETICAL)
         if T_HAS_CITATION in te:
-            out[T_HAS_CITATION] = contains(_RE_CITATION)
+            out[T_HAS_CITATION] = contains(RE2_CITATION)
         if T_HAS_ASTERISK in te:
-            out[T_HAS_ASTERISK] = np.fromiter(
-                ("*" in t for t in texts_list), dtype=bool, count=n
+            out[T_HAS_ASTERISK] = pc.match_substring(text, "*").to_numpy(
+                zero_copy_only=False
             )
         if T_HAS_UNDERSCORE in te:
-            out[T_HAS_UNDERSCORE] = np.fromiter(
-                ("_" in t for t in texts_list), dtype=bool, count=n
+            out[T_HAS_UNDERSCORE] = pc.match_substring(text, "_").to_numpy(
+                zero_copy_only=False
             )
         if T_HAS_BRACKETING in te:
-            out[T_HAS_BRACKETING] = contains(_RE_BRACKETING)
+            out[T_HAS_BRACKETING] = contains(RE2_BRACKETING)
         if T_HAS_QUOTATION in te:
-            out[T_HAS_QUOTATION] = contains(_RE_QUOTATION)
+            out[T_HAS_QUOTATION] = contains(RE2_QUOTATION)
         if T_HAS_NUMBERING in te:
-            out[T_HAS_NUMBERING] = contains(_RE_NUMBERING)
+            out[T_HAS_NUMBERING] = contains(RE2_NUMBERING)
         if T_HAS_LEADING_WHITESPACE in te:
-            out[T_HAS_LEADING_WHITESPACE] = contains(_RE_LEADING_WS)
+            out[T_HAS_LEADING_WHITESPACE] = contains(RE2_LEADING_WS)
 
         if cfg.real_oov_features:
+            # tokens per row, and tokens absent from each wordlist per row:
+            # rate = absent / count (0.0 for a row without tokens), the
+            # same int / int division as the per-line spec.
+            count = np.bincount(tokens.rows, minlength=n)
             rates = {}
-            for key, ws in (("en", lex.en_words), ("gls", lex.gls_words),
-                            ("met", lex.met_words)):
-                rates[key] = np.fromiter(
-                    (
-                        (sum(1 for w in tk if w not in ws) / len(tk)) if tk else 0.0
-                        for tk in tokens
-                    ),
-                    dtype=np.float64, count=n,
+            for key in ("en_words", "gls_words", "met_words"):
+                absent = pc.invert(
+                    pc.is_in(tokens.words, value_set=_value_set(lex, key))
+                ).to_numpy(zero_copy_only=False)
+                oov = np.bincount(tokens.rows[absent], minlength=n)
+                rates[key] = np.divide(
+                    oov, count, out=np.zeros(n, dtype=np.float64),
+                    where=count > 0,
                 )
+            en = rates["en_words"]
             if T_HIGH_OOV_RATE in te:
-                out[T_HIGH_OOV_RATE] = rates["en"] >= cfg.high_oov
+                out[T_HIGH_OOV_RATE] = en >= cfg.high_oov
             if T_MED_OOV_RATE in te:
-                out[T_MED_OOV_RATE] = (rates["en"] > cfg.med_oov) & (rates["en"] < cfg.high_oov)
+                out[T_MED_OOV_RATE] = (en > cfg.med_oov) & (en < cfg.high_oov)
             if T_HIGH_GLS_OOV_RATE in te:
-                out[T_HIGH_GLS_OOV_RATE] = rates["gls"] > cfg.high_oov
+                out[T_HIGH_GLS_OOV_RATE] = rates["gls_words"] > cfg.high_oov
             if T_HIGH_MET_OOV_RATE in te:
-                out[T_HIGH_MET_OOV_RATE] = rates["met"] > cfg.high_oov
+                out[T_HIGH_MET_OOV_RATE] = rates["met_words"] > cfg.high_oov
         # dead-by-default OOV features are always False → never fire →
         # contribute nothing to X nor to fired-name lists; omit entirely.
+
+        # The script classes match only non-ASCII code points, and most
+        # web lines are pure ASCII: search just the non-ASCII rows.
+        non_ascii = pc.invert(pc.string_is_ascii(text))
+        non_ascii_rows = non_ascii.to_numpy(zero_copy_only=False)
+        non_ascii_text = text.filter(non_ascii)
+
+        def contains_non_ascii(spelling: str) -> np.ndarray:
+            res = np.zeros(n, dtype=bool)
+            res[non_ascii_rows] = _matches(non_ascii_text, spelling)
+            return res
 
         hj = hg = hk = hc = ha = hd = None
         need_uni = T_HAS_UNI in te
         if T_HAS_JPN in te or need_uni:
             hj = (
-                contains_nonascii(_RE_KANJI)
-                | contains_nonascii(_RE_HIRAGANA)
-                | contains_nonascii(_RE_KATAKANA)
+                contains_non_ascii(RE2_KANJI)
+                | contains_non_ascii(RE2_HIRAGANA)
+                | contains_non_ascii(RE2_KATAKANA)
             )
         if T_HAS_GRK in te or need_uni:
-            hg = contains_nonascii(_RE_GRK)
+            hg = contains_non_ascii(RE2_GRK)
         if T_HAS_KOR in te or need_uni:
-            hk = contains_nonascii(_RE_KOR)
+            hk = contains_non_ascii(RE2_KOR)
         if T_HAS_CYR in te or need_uni:
-            hc = contains_nonascii(_RE_CYR)
+            hc = contains_non_ascii(RE2_CYR)
         if T_HAS_ACC in te or need_uni:
-            ha = contains_nonascii(_RE_ACC_LAT)
+            ha = contains_non_ascii(RE2_ACC_LAT)
         if T_HAS_DIA in te or need_uni:
-            hd = contains_nonascii(
-                _RE_DIA_BUGGY if cfg.buggy_diacritic_class else _RE_DIA_FIXED
+            hd = contains_non_ascii(
+                RE2_DIA_BUGGY if cfg.buggy_diacritic_class else RE2_DIA_FIXED
             )
         if T_HAS_JPN in te:
             out[T_HAS_JPN] = hj
@@ -259,7 +308,7 @@ def static_feature_columns(
         if need_uni:
             out[T_HAS_UNI] = hc | hd | hg | hj | ha | hk
         if T_HAS_YEAR in te:
-            out[T_HAS_YEAR] = contains(_RE_YEAR)
+            out[T_HAS_YEAR] = contains(RE2_YEAR)
 
     if cfg.freki_feats_enabled:
         if F_IS_INDENTED in fe:
@@ -373,45 +422,37 @@ def base_feature_matrix(
     """
     n = len(pdf)
     X = np.zeros((n, model.n_base), dtype=np.float64)
-    tokens = tokenize_series(pdf["text"].fillna(""))
+    tokens = TokenBatch(pdf["text"])
     cols = static_feature_columns(pdf, tokens, lex, cfg)
     if cfg.word_overlap and cfg.text_feats_enabled:
-        cols.update(overlap_feature_columns(pdf, tokens, cfg))
+        cols.update(_overlap_columns(pdf, tokens, cfg))
     idx = model.base_index
     for name, arr in cols.items():
         j = idx.get(name)
         if j is not None:
             X[:, j] = arr
     if cfg.text_feats_enabled and T_BASIC in cfg.enabled_text_feats:
-        # Vectorized word-feature scatter: flatten all tokens once
-        # (C-level chain), map token → column through a prebuilt
-        # token-keyed dict (cached on the model — avoids 600k "word_"+w
-        # string concats per mega-doc), and set the hits with ONE fancy-
-        # index assignment instead of per-token X[i, j] = 1.0 scalar
-        # stores. Same cells set (duplicates are idempotent).
-        widx = getattr(model, "_word_col_cache", None)
-        if widx is None:
-            widx = {k[5:]: j for k, j in idx.items() if k.startswith("word_")}
-            try:
-                model._word_col_cache = widx
-            except Exception:
-                pass
-        if widx:
-            from itertools import chain
-
-            tk_arr = tokens.to_numpy(dtype=object)
-            lens = np.fromiter(
-                (len(t) for t in tk_arr), dtype=np.int64, count=n
+        # Word features: look every token up in the model's word
+        # vocabulary at once and set the hits with one fancy-index
+        # assignment (duplicates are idempotent).
+        vocab = getattr(model, "_word_vocab", None)
+        if vocab is None:
+            words = [k for k in model.base_names if k.startswith("word_")]
+            vocab = model._word_vocab = (
+                pa.array([k[5:] for k in words], type=pa.string()),
+                np.array([idx[k] for k in words], dtype=np.int64),
             )
-            flat = list(chain.from_iterable(tk_arr))
-            if flat:
-                rows = np.repeat(np.arange(n), lens)
-                cols_s = pd.Series(flat, dtype=object).map(widx)
-                valid = cols_s.notna().to_numpy()
-                if valid.any():
-                    X[rows[valid],
-                      cols_s.to_numpy()[valid].astype(np.int64)] = 1.0
+        pos = pc.index_in(tokens.words, value_set=vocab[0])
+        hit = pos.is_valid()
+        X[tokens.rows[hit.to_numpy(zero_copy_only=False)],
+          vocab[1][pos.filter(hit).to_numpy()]] = 1.0
     return X
+
+
+def _overlap_columns(pdf, tokens: TokenBatch, cfg) -> dict[str, np.ndarray]:
+    return overlap_feature_columns(
+        pdf, pd.Series(tokens.lists(), index=pdf.index, dtype=object), cfg
+    )
 
 
 def fired_name_lists(
@@ -422,19 +463,18 @@ def fired_name_lists(
     """Sorted fired base-feature names per line (checkpoint/parity path —
     svmlight invariant: only-true, sorted)."""
     n = len(pdf)
-    tokens = tokenize_series(pdf["text"].fillna(""))
+    tokens = TokenBatch(pdf["text"])
     cols = static_feature_columns(pdf, tokens, lex, cfg)
     if cfg.word_overlap and cfg.text_feats_enabled:
-        cols.update(overlap_feature_columns(pdf, tokens, cfg))
+        cols.update(_overlap_columns(pdf, tokens, cfg))
     names = list(cols.keys())
     mat = np.column_stack([cols[c] for c in names]) if names else np.zeros((n, 0), bool)
-    tk_arr = tokens.to_numpy(dtype=object)
     use_words = cfg.text_feats_enabled and T_BASIC in cfg.enabled_text_feats
+    words = tokens.lists() if use_words else [[]] * n
     out: list[list[str]] = []
     for i in range(n):
         f = [names[j] for j in np.nonzero(mat[i])[0]]
-        if use_words:
-            f.extend("word_" + w for w in tk_arr[i] if w)
+        f.extend("word_" + w for w in words[i])
         out.append(sorted(set(f)))
     return out
 

@@ -844,8 +844,8 @@ def _bfs_depths(
     """Shared frontier-BFS kernel (the hop loop of :func:`crawl_depth`,
     reused by :func:`bowtie_classes` on both edge directions).
     ``edges`` is (src_id, dst_id), ``seeds`` is (id).  Returns the
-    visited (id, depth) relation plus an (empty) handle list — kept for
-    caller compatibility.
+    visited (id, depth) relation plus the per-hop checkpoints, for the
+    caller to attach as ``release_plan_caches`` handles.
 
     Round 6: each hop's frontier is an EAGER ``localCheckpoint``, not a
     lazy persist.  A persisted frontier caches DATA but not PLAN: hop
@@ -877,7 +877,7 @@ def _bfs_depths(
         )
         frontiers.append(nxt)
         visited = visited.unionByName(nxt)
-    return visited, []
+    return visited, frontiers
 
 
 def bowtie_classes(
@@ -1141,7 +1141,7 @@ def _bfs_depths_multi(
         )
         frontiers.append(nxt)
         visited = visited.unionByName(nxt)
-    return visited, []
+    return visited, frontiers
 
 
 #: Fixed landmark page ids for :func:`landmark_closeness` — a

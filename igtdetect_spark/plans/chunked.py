@@ -1,8 +1,8 @@
 """Chunked mega-document detection: the scalable skew path.
 
-Every stage stays *narrow* except one balance repartition of text chunks
-(hashed on url plus the chunk number, the salt), so no single task owns a
-whole mega-document and no per-line rows are shuffled:
+Every stage stays *narrow* except one placement repartition of text
+chunks, so no single task owns a whole mega-document and no per-line rows
+are shuffled:
 
 1. **split** (mapInPandas, narrow): segment each mega page once
    (columnar), cut at block boundaries near every ``chunk_lines`` mark
@@ -10,8 +10,10 @@ whole mega-document and no per-line rows are shuffled:
    slice, a ≤2-line feature halo with its ORIGINAL block identity/llx
    (so the first real lines' adjacency/layout context is exact), and the
    document-global line/block offsets.
-2. **repartition** the chunk rows (the only full-data shuffle) so one
-   document's chunks spread across the cluster.
+2. **place** the chunk rows (the only full-data shuffle): chunk ``k`` of
+   a document goes to partition ``hash(url) + k`` (mod ``2 × cores``), so
+   one document's chunks take consecutive partitions, one chunk each
+   until they wrap (``place_chunks``).
 3. **fused kernel per chunk** (narrow): re-segmentation of the slice +
    offsets reproduces document-global line numbers and block ids
    (blocks are chunk-contained, so per-block llx matches the original);
@@ -173,6 +175,20 @@ def split_mega_pages(
     )
 
 
+def place_chunks(chunks: DataFrame, n: int) -> DataFrame:
+    """Spread chunk rows over ``n`` partitions by placement, not hashing:
+    chunk ``k`` of a document goes to partition ``(hash(url) + k) mod n``.
+    A document's chunks take consecutive partitions, so no partition
+    holds two chunks of one document until it has more than ``n`` chunks,
+    and then at most ⌈chunks / n⌉.  Hashing (url, chunk_no) into bins
+    instead can stack two chunks in one task while other tasks stay
+    empty."""
+    slot = F.pmod(
+        F.hash("url").cast("long") + F.col("chunk_no"), F.lit(n)
+    ).cast("int")
+    return chunks.repartitionById(n, slot)
+
+
 def chunking_refusal(ctx: DetectContext) -> str | None:
     """Why this model/config cannot be chunked (None = chunkable).
     Shared by detect_spans_chunked (raises) and detect_spans_auto
@@ -252,17 +268,8 @@ def detect_spans_chunked(
         pages.filter(is_chunkable).coalesce(max(2, par)),
         chunk_lines,
         cfg.html_main_content,
-    ).repartition(4 * par, "url", "chunk_no")
-    # ^ hash balance with OVERDECOMPOSITION (4 waves/core): a mega doc
-    # yields few chunks relative to cores (e.g. 20 chunks at 8 cores),
-    # and hash placement is balls-into-bins — at 2 bins/core the
-    # expected max bin holds ~3 chunks (score stage runs at ~2/3
-    # parallelism); at 4 bins/core bins hold ≤2 and the scheduler
-    # load-balances the tail dynamically. The two non-hash balancers
-    # were MEASURED WORSE and rejected: round-robin repartition pays
-    # Spark's determinism sort comparing whole rows (megabyte text
-    # columns included), and repartitionByRange pays a sampling pass
-    # that re-executes the split mapInPandas a second time.
+    )
+    chunks = place_chunks(chunks, max(2, 2 * par))
 
     def score_chunk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         model = ModelWeights.from_broadcastable(model_bc.value)

@@ -110,6 +110,28 @@ class TestSyntheticParity:
         assert f == c
         assert len(f) > 300
 
+    def test_chunks_of_one_document_get_their_own_partitions(self, spark):
+        """A document cut into 2 × cores chunks puts every chunk in its
+        own partition; a longer one wraps evenly (⌈chunks / n⌉ each)."""
+        from pyspark.sql import functions as F
+
+        from igtdetect_spark.plans.chunked import place_chunks
+
+        n = 2 * spark.sparkContext.defaultParallelism
+        for n_chunks, per_part in ((n, 1), (2 * n + 1, 3)):
+            chunks = spark.createDataFrame(
+                [("https://example.org/mega", k) for k in range(n_chunks)],
+                "url string, chunk_no int",
+            )
+            placed = place_chunks(chunks, n).select(
+                "chunk_no", F.spark_partition_id().alias("p")
+            ).collect()
+            assert sorted(r.chunk_no for r in placed) == list(range(n_chunks))
+            load: dict[int, int] = {}
+            for r in placed:
+                load[r.p] = load.get(r.p, 0) + 1
+            assert len(load) == n and max(load.values()) == per_part
+
     def test_chunked_guards(self, spark, ctx_synth, lexicons):
         """Unsupported configs are refused; form-feed mega docs silently
         fall back to the fused path with identical results."""

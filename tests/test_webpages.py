@@ -1,5 +1,6 @@
 """URL canonicalization + freshest-crawl dedup (operators/webpages)."""
 
+import pytest
 from pyspark.sql import functions as F
 
 from igtdetect_spark.operators.webpages import (
@@ -1830,10 +1831,9 @@ class TestCrawlDepth:
         assert all(got[i] == 0 for i in ids if i % 64 == 0)
         assert 1 in set(got.values())
         assert max(got.values()) <= 4
-        # the resolved edge relation is the ONLY persist handle —
-        # per-hop frontiers are eager localCheckpoints (round 6:
-        # lineage truncation), reclaimed by GC reference tracking
-        assert release_plan_caches(out) == 1
+        # handles: the resolved edge relation plus the seed frontier and
+        # one eager localCheckpoint per hop (lineage truncation)
+        assert release_plan_caches(out) == 1 + (1 + 4)
 
     def test_min_depth_not_last_write(self, spark):
         # a page reachable at hops 2 AND 3 must report 2 — the
@@ -2490,9 +2490,9 @@ class TestBowtieClasses:
         # but are never targets give in/disconnected
         classes = {r["cls"] for r in got.values()}
         assert classes == {"core", "in", "out", "disconnected"}
-        # the shared edge relation is the only persist handle (per-hop
-        # frontiers are eager localCheckpoints since round 6)
-        assert release_plan_caches(out) == 1
+        # handles: the shared edge relation plus both BFS runs' seed
+        # frontier and per-hop checkpoints
+        assert release_plan_caches(out) == 1 + 2 * (1 + 4)
 
 
 def _planted_pages(spark, edges, n):
@@ -2548,6 +2548,34 @@ class TestTriangleCounts:
             ).collect()
         }
         assert got == {0: (2, 1), 1: (2, 1), 2: (2, 1)}
+
+
+class TestBfsCheckpointRelease:
+    """The BFS kernels' per-hop localCheckpoints are release handles:
+    after release_plan_caches the session holds no RDD it did not hold
+    before the query.  (RDDs left by earlier tests may be cleaned up
+    meanwhile, so the check is for new RDDs, not set equality.)"""
+
+    @pytest.mark.parametrize(
+        "kernel", ["crawl_depth", "bowtie_classes", "landmark_closeness"]
+    )
+    def test_no_rdd_outlives_release(self, spark, kernel):
+        from igtdetect_spark.operators import webpages
+        from igtdetect_spark.operators.dedup import release_plan_caches
+
+        def persistent():
+            return set(spark.sparkContext._jsc.getPersistentRDDs().keySet()
+                       .toArray())
+
+        pages = _planted_pages(spark, [(0, 1), (1, 2), (2, 0), (3, 0)], 4)
+        kw = {"landmarks": (0,)} if kernel == "landmark_closeness" else {
+            "seeds_mod": 2}
+        before = persistent()
+        out = getattr(webpages, kernel)(pages, max_hops=3, **kw)
+        out.collect()
+        assert persistent() - before, "no checkpoint was taken"
+        release_plan_caches(out)
+        assert persistent() - before == set()
 
 
 class TestLandmarkCloseness:
