@@ -7,8 +7,11 @@ computed document-locally and denormalized onto the emitted rows. The
 feature stage downstream therefore needs **no shuffle, no window, no join**
 — the one shape that survives a 1000-executor 100 TB scan unchanged.
 
-Hot path is columnar (``segment_text_columns``): per-line Python objects
-are never allocated — a 100k-line mega-document segments in ~0.2 s.
+Segmentation is whole-batch Arrow (``segmentation.segment_batch``): no
+per-line Python runs before the frame is built. A 260k-line (10.7M-char)
+mega-document segments in ~0.13 s on one Xeon core, and its whole
+``batch_to_columns`` frame takes ~0.23 s (the per-line Python segmenter
+this replaced: ~0.4 s for segmentation alone).
 
 A generic window/agg path for pre-sharded line tables lives in
 ``doc_stats.py``; both are parity-tested against the oracle.
@@ -16,71 +19,53 @@ A generic window/agg path for pre-sharded line tables lives in
 
 from __future__ import annotations
 
-from typing import Iterable, Iterator, Optional
+from typing import Iterable, Iterator
 
+import numpy as np
 import pandas as pd
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..oracle.freki import FrekiDoc, parse_freki, safe_mode
-from ..segmentation import DEFAULT_FONT, extract_page_text, segment_text_columns
+from ..segmentation import DEFAULT_FONT, batch_page_texts, segment_batch
 from .schema import LINES_SCHEMA
 
 _COLS = [f.name for f in LINES_SCHEMA.fields]
 
 
-def doc_columns(url: str, content: str) -> Optional[dict[str, list]]:
-    """Columnar lines for one plain-text document, with denormalized
-    adjacency + doc stats. None if the document has no lines."""
-    c = segment_text_columns(content)
-    n = len(c["line_no"])
-    if n == 0:
-        return None
-    bid = c["block_id"]
-    c["url"] = [url] * n
-    c["llx"] = c.pop("block_llx")
-    c["prev_block_id"] = [None] + bid[:-1]
-    c["next_block_id"] = bid[1:] + [None]
-    c["doc_llx_mode"] = [safe_mode(c["llx"])] * n
-    return c
-
-
-def _append_doc(cols: dict[str, list], doc: dict[str, list]) -> None:
-    for k, v in doc.items():
-        cols[k].extend(v)
-
-
-def _empty_cols() -> dict[str, list]:
-    return {
-        k: []
-        for k in (
-            "url", "line_no", "page", "block_id", "llx", "line_llx",
-            "text", "prev_block_id", "next_block_id", "doc_llx_mode",
-        )
-    }
-
-
 def batch_to_columns(
     urls, htmls, texts, html_main_content: bool = False
-) -> tuple[dict[str, list], list[tuple[str, int, int]]]:
-    """Segment a batch of pages into one columnar frame + per-doc row
-    slices [(url, start, stop)]."""
-    cols = _empty_cols()
-    slices: list[tuple[str, int, int]] = []
-    n = 0
-    for url, html, text in zip(urls, htmls, texts):
-        content = extract_page_text(
-            bytes(html) if html is not None else None, text,
-            html_main_content=html_main_content,
-        )
-        doc = doc_columns(url, content)
-        if doc is None:
-            continue
-        _append_doc(cols, doc)
-        start = n
-        n = len(cols["line_no"])
-        slices.append((url, start, n))
+) -> tuple[dict[str, np.ndarray], list[tuple[str, int, int]]]:
+    """Segment a batch of pages into one columnar frame (line columns with
+    denormalized adjacency and document llx mode) + per-doc row slices
+    [(url, start, stop)] for the documents that have lines."""
+    urls = np.asarray(urls, dtype=object)
+    seg = segment_batch(batch_page_texts(htmls, texts, html_main_content))
+    bounds = seg.doc_bounds(len(urls)).tolist()
+    bid = seg.block_ids()
+    first = seg.line_no == 1
+    prev_bid = np.roll(bid, 1)
+    prev_bid[first] = None
+    next_bid = np.roll(bid, -1)
+    next_bid[np.roll(first, -1)] = None
+    cols = {
+        "url": urls[seg.doc],
+        "line_no": seg.line_no,
+        "page": seg.page,
+        "block_id": bid,
+        "llx": seg.block_llx,
+        "line_llx": seg.line_llx,
+        "text": seg.text.to_numpy(zero_copy_only=False),
+        "prev_block_id": prev_bid,
+        "next_block_id": next_bid,
+        "doc_llx_mode": seg.llx_modes(len(urls))[seg.doc],
+    }
+    slices = [
+        (urls[d], a, z)
+        for d, (a, z) in enumerate(zip(bounds[:-1], bounds[1:]))
+        if z > a
+    ]
     return cols, slices
 
 

@@ -149,7 +149,7 @@ class TokenBatch:
     def lists(self) -> list[list[str]]:
         """Per-row token lists (the ``split_words`` contract)."""
         bounds = np.searchsorted(self.rows, np.arange(self.n + 1))
-        words = self.words.to_pylist()
+        words = self.words.to_numpy(zero_copy_only=False).tolist()
         return [words[a:b] for a, b in zip(bounds[:-1], bounds[1:])]
 
 
@@ -210,7 +210,8 @@ def static_feature_columns(
                 else:  # the gram list uses regex syntax RE2 is not given
                     f = py_re.search
                     v |= np.fromiter(
-                        (f(t) is not None for t in text.to_pylist()),
+                        (f(t) is not None
+                         for t in text.to_numpy(zero_copy_only=False)),
                         dtype=bool, count=n,
                     )
             out[T_HAS_GRAMS] = v
@@ -558,6 +559,12 @@ def spans_from_labels(
     touches (the reference writes ``str(line.block)`` — the whole block,
     including any O lines it contains — deduped by block_id in
     first-occurrence order, igtdetect.py:1269-1276)."""
+    # The loop below reads one element at a time, which is cheaper from a
+    # list than from a numpy array.
+    line_nos, block_ids, texts = (
+        x.tolist() if isinstance(x, np.ndarray) else x
+        for x in (line_nos, block_ids, texts)
+    )
     out: list[dict] = []
     for url, a, b in doc_slices:
         # doc-local full block texts (every line of the doc is in the slice)

@@ -4,22 +4,25 @@ Every stage stays *narrow* except one placement repartition of text
 chunks, so no single task owns a whole mega-document and no per-line rows
 are shuffled:
 
-1. **split** (mapInPandas, narrow): segment each mega page once
-   (columnar), cut at block boundaries near every ``chunk_lines`` mark
-   (blocks never straddle chunks), and emit chunk rows carrying the text
-   slice, a ≤2-line feature halo with its ORIGINAL block identity/llx
-   (so the first real lines' adjacency/layout context is exact), and the
-   document-global line/block offsets.
+1. **split** (mapInPandas, narrow): segment each batch of mega pages
+   once (``segment_batch``, whole-batch Arrow), cut at the first block
+   start at or after every ``chunk_lines`` mark (blocks never straddle
+   chunks), and emit chunk rows carrying a slice of the page's own text
+   (from the chunk's first line to the end of its last, cut with the
+   segmenter's line offsets), a ≤2-line feature halo with its ORIGINAL
+   block identity/llx (so the first real lines' adjacency/layout context
+   is exact), and the document-global line offset and block ordinal.
 2. **place** the chunk rows (the only full-data shuffle): chunk ``k`` of
    a document goes to partition ``hash(url) + k`` (mod ``2 × cores``), so
    one document's chunks take consecutive partitions, one chunk each
    until they wrap (``place_chunks``).
-3. **fused kernel per chunk** (narrow): re-segmentation of the slice +
-   offsets reproduces document-global line numbers and block ids
-   (blocks are chunk-contained, so per-block llx matches the original);
-   halo rows provide n−2/n−1 context and are dropped before span
-   assembly; chunk-local spans are assembled with the EOF flush forced
-   on.
+3. **fused kernel per batch of chunks** (narrow): one ``segment_batch``
+   over the batch's slices; each chunk's line numbers and block
+   ordinals plus its offsets reproduce the document-global line numbers
+   and block ids (blocks are chunk-contained, so per-block llx matches
+   the original); halo rows provide n−2/n−1 context and are dropped
+   before span assembly; chunk-local spans are assembled with the EOF
+   flush forced on.
 4. **stitch** (groupBy url over SPANS only — a few rows per document):
    merge spans adjacent across chunk boundaries, renumber, re-apply the
    reference EOF quirk doc-globally.
@@ -37,7 +40,10 @@ from __future__ import annotations
 
 from typing import Iterator
 
+import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -54,7 +60,7 @@ from ..operators.schema import SPANS_SCHEMA
 from ..operators.segment import _plain_frame
 from ..operators.vectorized import label_documents, spans_from_labels
 from ..refmodel import ModelWeights
-from ..segmentation import extract_page_text, segment_text_columns
+from ..segmentation import batch_page_texts, segment_batch
 from .pipeline import DetectContext, detect_spans_fused
 
 _HALO_TYPE = StructType(
@@ -88,82 +94,97 @@ _CHUNK_SCHEMA = StructType(
 _SPAN_COLS = [f.name for f in SPANS_SCHEMA.fields]
 
 
+def _halo(rows, f: str) -> list:
+    """Field ``f`` of every halo entry (a dict or a Row, by Arrow
+    version)."""
+    return [x[f] if isinstance(x, dict) else getattr(x, f) for x in rows]
+
+
+def _neighbor(edge, f: str) -> int:
+    """Block number (1-based) of a frame edge's true neighbor, from the
+    one halo entry in ``edge``; 0 when there is none."""
+    v = _halo(edge, f)
+    return v[0] + 1 if v and v[0] is not None else 0
+
+
+def _block_keys(nums: np.ndarray) -> np.ndarray:
+    """The chunk frame's single-page block ids ``"1-{n}"`` per block
+    number, None where the number is 0 (no neighbor)."""
+    ids = pa.array(nums, mask=nums == 0).cast(pa.string())
+    return pc.binary_join_element_wise("1", ids, "-").to_numpy(
+        zero_copy_only=False
+    )
+
+
 def split_mega_pages(
     pages: DataFrame, chunk_lines: int, html_main_content: bool = False
 ) -> DataFrame:
-    """mega pages → chunk rows (one segmentation pass per doc, narrow)."""
+    """mega pages → chunk rows (one segmentation pass per batch, narrow)."""
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..oracle.freki import safe_mode
-
         for pdf in batches:
+            contents = batch_page_texts(
+                pdf["html"], pdf["text"], html_main_content
+            )
+            seg = segment_batch(contents)
+            bounds = seg.doc_bounds(len(contents))
+            modes = seg.llx_modes(len(contents))
+            starts, stops = seg.offsets()
             rows = []
-            for url, html, text in zip(pdf["url"], pdf["html"], pdf["text"]):
-                content = extract_page_text(
-                    bytes(html) if html is not None else None, text,
-                    html_main_content=html_main_content,
-                )
-                c = segment_text_columns(content)
-                n = len(c["line_no"])
+            for d, url in enumerate(pdf["url"]):
+                lo, hi = int(bounds[d]), int(bounds[d + 1])
+                n = hi - lo
                 if n == 0:
                     continue
-                llx_mode = safe_mode(c["block_llx"])
-                texts, bids = c["text"], c["block_id"]
-                bllx, lllx = c["block_llx"], c["line_llx"]
-                # doc-global block ordinal per line
-                block_ord = [0] * n
-                for i in range(1, n):
-                    block_ord[i] = block_ord[i - 1] + (bids[i] != bids[i - 1])
-                # cut AFTER the block containing each chunk_lines mark
+                ordn = seg.block_ord[lo:hi]
+                block_starts = np.flatnonzero(np.diff(ordn, prepend=-1))
+                # cut at the first block start at or after each
+                # chunk_lines mark (blocks never straddle chunks)
                 cuts = [0]
                 k = chunk_lines
                 while k < n:
-                    j = k
-                    while j < n and bids[j] == bids[j - 1]:
-                        j += 1
-                    if j >= n:
+                    i = np.searchsorted(block_starts, k)
+                    if i == len(block_starts):
                         break
-                    cuts.append(j)
-                    k = j + chunk_lines
+                    cuts.append(int(block_starts[i]))
+                    k = cuts[-1] + chunk_lines
                 cuts.append(n)
-                for ci in range(len(cuts) - 1):
-                    a, b = cuts[ci], cuts[ci + 1]
-                    def mk_halo(lo, hi):
-                        return [
-                            {
-                                "text": texts[i],
-                                "block_no": block_ord[i],
-                                "block_llx": bllx[i],
-                                "line_llx": lllx[i],
-                                "prev_block_no": block_ord[i - 1] if i > 0 else None,
-                                "next_block_no": block_ord[i + 1] if i + 1 < n else None,
-                            }
-                            for i in range(max(0, lo), min(hi, n))
-                        ]
 
-                    # prev/prev_prev context for the first lines + next
-                    # context for the last line
-                    halo = mk_halo(a - 2, a)
-                    halo_post = mk_halo(b, b + 1)
-                    # block-aware slice text: re-insert the blank-line
-                    # separators so re-segmentation reproduces the original
-                    # block structure
-                    parts: list[str] = []
-                    for i in range(a, b):
-                        if i > a and bids[i] != bids[i - 1]:
-                            parts.append("")
-                        parts.append(texts[i])
+                def halo(a, b):
+                    """Lines a..b-1 of the document with their original
+                    block identity and layout, and their true neighbors'
+                    blocks."""
+                    a, b = max(a, 0), min(b, n)
+                    return [
+                        {
+                            "text": seg.text[lo + i].as_py(),
+                            "block_no": int(ordn[i]),
+                            "block_llx": float(seg.block_llx[lo + i]),
+                            "line_llx": float(seg.line_llx[lo + i]),
+                            "prev_block_no": int(ordn[i - 1]) if i > 0 else None,
+                            "next_block_no": int(ordn[i + 1]) if i + 1 < n else None,
+                        }
+                        for i in range(a, b)
+                    ]
+
+                start, stop = starts[lo:hi], stops[lo:hi]
+                content = contents[d]
+                for ci, (a, b) in enumerate(zip(cuts[:-1], cuts[1:])):
                     rows.append(
                         {
                             "url": url,
                             "chunk_no": ci,
                             "line_offset": a,
-                            "block_offset": block_ord[a] if a < n else 0,
+                            "block_offset": int(ordn[a]),
                             "doc_last_line": n,
-                            "doc_llx_mode": llx_mode,
-                            "halo_pre": halo,
-                            "halo_post": halo_post,
-                            "text": "\n".join(parts),
+                            "doc_llx_mode": float(modes[d]),
+                            # prev/prev_prev context for the first lines +
+                            # next context for the last line
+                            "halo_pre": halo(a - 2, a),
+                            "halo_post": halo(b, b + 1),
+                            # the document's own text from the chunk's first
+                            # line to the end of its last one
+                            "text": content[start[a]:stop[b - 1]],
                         }
                     )
             yield pd.DataFrame(
@@ -173,6 +194,87 @@ def split_mega_pages(
     return pages.select("url", "html", "text").mapInPandas(
         gen, schema=_CHUNK_SCHEMA
     )
+
+
+def score_chunks(
+    pdf: pd.DataFrame, model: ModelWeights, lex, cfg
+) -> pd.DataFrame:
+    """Chunk rows (``_CHUNK_SCHEMA``) → their chunk-local spans plus each
+    document's last line number (``_doc_last``): one segmentation, one
+    frame and one featurize pass for the whole batch, scored per chunk."""
+    flush_cfg = cfg.with_(flush_eof_span=True)
+    seg = segment_batch(pdf["text"].tolist())
+    bounds = seg.doc_bounds(len(pdf)).tolist()
+    body_text = seg.text.to_numpy(zero_copy_only=False)
+    frames, slices, bodies, doc_last = [], [], [], {}
+    at = 0
+    for k, r in enumerate(pdf.itertuples(index=False)):
+        lo, hi = bounds[k], bounds[k + 1]
+        if lo == hi:
+            continue
+        pre, post = list(r.halo_pre), list(r.halo_post)
+        n_pre, n_body, n_post = len(pre), hi - lo, len(post)
+        n = n_pre + n_body + n_post
+        # document-global block numbers: the halo carries its original
+        # identity; body blocks are chunk-contained, so the chunk's block
+        # ordinals + the block offset reproduce the original ones (single
+        # page, as in the fused path)
+        num = np.concatenate([
+            np.array(_halo(pre, "block_no"), dtype=np.int64) + 1,
+            seg.block_ord[lo:hi] + (r.block_offset + 1),
+            np.array(_halo(post, "block_no"), dtype=np.int64) + 1,
+        ])
+        # frame-edge adjacency from the halo's true neighbors
+        prev_num = np.roll(num, 1)
+        prev_num[0] = _neighbor(pre[:1], "prev_block_no")
+        next_num = np.roll(num, -1)
+        next_num[-1] = _neighbor(post[-1:], "next_block_no")
+        frames.append({
+            "url": np.full(n, r.url, dtype=object),
+            "line_no": np.concatenate([
+                np.arange(r.line_offset - n_pre, r.line_offset) + 1,
+                seg.line_no[lo:hi] + r.line_offset,
+                np.arange(n_post) + r.line_offset + n_body + 1,
+            ]),
+            "page": np.ones(n, dtype=np.int64),
+            "block_id": num,
+            "llx": np.concatenate([
+                _halo(pre, "block_llx"), seg.block_llx[lo:hi],
+                _halo(post, "block_llx"),
+            ]),
+            "line_llx": np.concatenate([
+                _halo(pre, "line_llx"), seg.line_llx[lo:hi],
+                _halo(post, "line_llx"),
+            ]),
+            "text": np.concatenate([
+                np.array(_halo(pre, "text"), dtype=object),
+                body_text[lo:hi],
+                np.array(_halo(post, "text"), dtype=object),
+            ]),
+            "prev_block_id": prev_num,
+            "next_block_id": next_num,
+            "doc_llx_mode": np.full(n, r.doc_llx_mode),
+        })
+        slices.append((r.url, at, at + n))
+        # halo rows give context only; spans come from the body
+        bodies.append((r.url, at + n_pre, at + n_pre + n_body))
+        doc_last[r.url] = r.doc_last_line
+        at += n
+    if not frames:
+        return pd.DataFrame(columns=_SPAN_COLS + ["_doc_last"])
+    c = {k: np.concatenate([f[k] for f in frames]) for k in frames[0]}
+    for k in ("block_id", "prev_block_id", "next_block_id"):
+        c[k] = _block_keys(c[k])
+    labels = label_documents(_plain_frame(c), slices, lex, cfg, model)
+    out = pd.DataFrame(
+        spans_from_labels(
+            c["url"], c["line_no"], c["block_id"], c["text"], labels,
+            bodies, flush_cfg,
+        ),
+        columns=_SPAN_COLS,
+    )
+    out["_doc_last"] = out["url"].map(doc_last)
+    return out
 
 
 def place_chunks(chunks: DataFrame, n: int) -> DataFrame:
@@ -274,96 +376,8 @@ def detect_spans_chunked(
     def score_chunk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         model = ModelWeights.from_broadcastable(model_bc.value)
         lex = lex_bc.value
-        flush_cfg = cfg.with_(flush_eof_span=True)
         for pdf in batches:
-            out_frames = []
-            for r in pdf.itertuples(index=False):
-                halo = list(r.halo_pre)
-                post = list(r.halo_post)
-                n_halo = len(halo)
-                n_post = len(post)
-                c = segment_text_columns(r.text)
-                n_body = len(c["line_no"])
-                if n_body == 0:
-                    continue
-                n = n_halo + n_body + n_post
-                # document-global ids: halo carries its original identity;
-                # body blocks are chunk-contained so re-segmentation + the
-                # block offset reproduces the original block structure
-                def h(f, x):
-                    return x[f] if isinstance(x, dict) else getattr(x, f)
-
-                line_no = (
-                    [r.line_offset - n_halo + i + 1 for i in range(n_halo)]
-                    + [x + r.line_offset for x in c["line_no"]]
-                    + [r.line_offset + n_body + i + 1 for i in range(n_post)]
-                )
-                block_key = (
-                    [f"1-{h('block_no', x) + 1}" for x in halo]
-                    + [
-                        f"1-{int(b.split('-', 1)[1]) + r.block_offset}"
-                        for b in c["block_id"]
-                    ]  # matches the fused path's single-page numbering
-                    + [f"1-{h('block_no', x) + 1}" for x in post]
-                )
-                llx = (
-                    [h("block_llx", x) for x in halo]
-                    + c["block_llx"]
-                    + [h("block_llx", x) for x in post]
-                )
-                line_llx = (
-                    [h("line_llx", x) for x in halo]
-                    + c["line_llx"]
-                    + [h("line_llx", x) for x in post]
-                )
-                texts = (
-                    [h("text", x) for x in halo]
-                    + c["text"]
-                    + [h("text", x) for x in post]
-                )
-                prev_ids = [None] + block_key[:-1]
-                next_ids = block_key[1:] + [None]
-                # frame-edge adjacency from the halo's true neighbors
-                if halo and h("prev_block_no", halo[0]) is not None:
-                    prev_ids[0] = f"1-{h('prev_block_no', halo[0]) + 1}"
-                if post and h("next_block_no", post[-1]) is not None:
-                    next_ids[-1] = f"1-{h('next_block_no', post[-1]) + 1}"
-                frame = _plain_frame(
-                    {
-                        "url": [r.url] * n,
-                        "line_no": line_no,
-                        "page": [1] * n,
-                        "block_id": block_key,
-                        "llx": llx,
-                        "line_llx": line_llx,
-                        "text": texts,
-                        "prev_block_id": prev_ids,
-                        "next_block_id": next_ids,
-                        "doc_llx_mode": [r.doc_llx_mode] * n,
-                    }
-                )
-                labels = label_documents(
-                    frame, [(r.url, 0, n)], lex, cfg, model
-                )
-                body = slice(n_halo, n_halo + n_body)
-                rows = spans_from_labels(
-                    [r.url] * n_body,
-                    line_no[body],
-                    block_key[body],
-                    texts[body],
-                    labels[body],
-                    [(r.url, 0, n_body)],
-                    flush_cfg,
-                )
-                for row in rows:
-                    row["_doc_last"] = r.doc_last_line
-                if rows:
-                    out_frames.append(pd.DataFrame(rows))
-            cols = _SPAN_COLS + ["_doc_last"]
-            if out_frames:
-                yield pd.concat(out_frames, ignore_index=True)[cols]
-            else:
-                yield pd.DataFrame(columns=cols)
+            yield score_chunks(pdf, model, lex, cfg)
 
     chunk_spans_schema = StructType(
         list(SPANS_SCHEMA.fields) + [StructField("_doc_last", IntegerType())]
@@ -455,6 +469,9 @@ def detect_spans_chunked(
 # boot): ten 4M-char megas — fused 6.4 s vs chunked 8.1 s (fused
 # correctly chosen); one 16M-char mega — fused 13.6 s vs chunked 6.6 s
 # (chunked correctly chosen). Span counts bit-identical across paths.
+# The Arrow feature kernel and the Arrow segmenter have since shrunk both
+# sides; BENCH/PLANS.md re-measures fused vs chunked on the benchmark's
+# skewed corpus. The constants stay, so that corpus keeps taking chunked.
 AUTO_OVERHEAD_CHARS = 8_000_000
 AUTO_FAIRSHARE_FACTOR = 0.6
 

@@ -3,8 +3,10 @@
 The reference consumes pre-segmented freki files produced offline by
 pdf-to-text tooling. Our engine ingests Common-Crawl-style ``pages`` rows
 (``url, warc_ts, html, text, lang`` — driver input_hint) and performs the
-segmentation itself. Deterministic rules, shared verbatim by the oracle and
-the Spark ``mapInPandas`` UDF:
+segmentation itself. Deterministic rules, implemented twice: per line in
+``segment_text`` (the oracle) and over whole Arrow batches in
+``segment_batch`` (every Spark path); tests pin the two together over
+every code point:
 
 - pages (PDF-text convention): form-feed ``\\f`` separates pages, 1-based.
 - blocks: maximal runs of non-blank lines (blank = ``strip() == ''``);
@@ -26,10 +28,17 @@ unescaped — then the plain-text segmentation above applies.
 
 from __future__ import annotations
 
+import functools
 import html as _htmlmod
 import re
-from dataclasses import dataclass
+from dataclasses import dataclass, field
 from typing import Optional
+
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
+
+from .unicode_classes import space_set
 
 DEFAULT_FONT = ("F0", 12.0)
 
@@ -99,57 +108,169 @@ def segment_text(text: str) -> list[SegmentedLine]:
     return out
 
 
-def segment_text_columns(text: str) -> dict[str, list]:
-    """Columnar fast path of ``segment_text`` — same rules, but emits
-    parallel lists instead of per-line objects (the per-line dataclass
-    allocation dominates mega-document segmentation cost). Parity with
-    ``segment_text`` is pinned by tests."""
-    line_no: list[int] = []
-    page_col: list[int] = []
-    block_id: list[str] = []
-    block_llx: list[float] = []
-    line_llx: list[float] = []
-    texts: list[str] = []
+@dataclass
+class LineColumns:
+    """Every non-blank line of a batch of documents in document order,
+    one array per field: ``segment_text``'s lines, segmented by
+    ``segment_batch``."""
 
-    n_total = 0
-    for page_idx, page_text in enumerate(text.split("\f"), start=1):
-        block_no = 0
-        blk_start = None  # index into the output arrays
-        blk_min_ws = 0
-        for raw in page_text.split("\n"):
-            line = raw.rstrip("\r")
-            if not line.strip():
-                if blk_start is not None:
-                    llx = float(blk_min_ws)
-                    for i in range(blk_start, n_total):
-                        block_llx[i] = llx
-                    blk_start = None
-                continue
-            if blk_start is None:
-                block_no += 1
-                blk_start = n_total
-                blk_min_ws = 1 << 30
-            ws = _leading_ws(line)
-            blk_min_ws = min(blk_min_ws, ws)
-            n_total += 1
-            line_no.append(n_total)
-            page_col.append(page_idx)
-            block_id.append(f"{page_idx}-{block_no}")
-            block_llx.append(0.0)
-            line_llx.append(float(ws))
-            texts.append(line)
-        if blk_start is not None:
-            llx = float(blk_min_ws)
-            for i in range(blk_start, n_total):
-                block_llx[i] = llx
-    return {
-        "line_no": line_no,
-        "page": page_col,
-        "block_id": block_id,
-        "block_llx": block_llx,
-        "line_llx": line_llx,
-        "text": texts,
-    }
+    doc: np.ndarray        # batch row of the line's document, ascending
+    line_no: np.ndarray    # 1-based per document
+    page: np.ndarray       # 1-based per document
+    block: np.ndarray      # 0-based block index over the whole batch
+    block_no: np.ndarray   # 1-based per page: block_id = f"{page}-{block_no}"
+    block_ord: np.ndarray  # 0-based per document, not restarting on pages
+    block_llx: np.ndarray
+    line_llx: np.ndarray
+    text: pa.Array         # the line, its trailing "\r" run stripped
+    raw: pa.Array = field(repr=False)       # every split piece, blank or not
+    raw_doc: np.ndarray = field(repr=False)  # batch row of each raw piece
+    kept: np.ndarray = field(repr=False)     # index of each line in ``raw``
+
+    def doc_bounds(self, n_docs: int) -> np.ndarray:
+        """The lines of batch row ``d`` are ``bounds[d]:bounds[d + 1]``."""
+        return np.searchsorted(self.doc, np.arange(n_docs + 1))
+
+    def block_ids(self) -> np.ndarray:
+        """``f"{page}-{block_no}"`` per line, as an object array."""
+        first = np.flatnonzero(np.diff(self.block, prepend=-1))
+        ids = pc.binary_join_element_wise(
+            pc.cast(pa.array(self.page[first]), pa.string()),
+            pc.cast(pa.array(self.block_no[first]), pa.string()),
+            "-",
+        ).to_numpy(zero_copy_only=False)
+        return ids[self.block]
+
+    def llx_modes(self, n_docs: int) -> np.ndarray:
+        """``safe_mode`` of each document's per-line block llx (NaN for a
+        document without lines)."""
+        return grouped_mode(self.doc, self.block_llx, n_docs)
+
+    def offsets(self) -> tuple[np.ndarray, np.ndarray]:
+        """Code-point offsets ``(start, stop)`` of each line in its
+        document: ``doc[start:stop]`` is the line before its ``\\r`` run
+        is stripped."""
+        # Every raw piece is followed by one separator ("\n" or "\f"),
+        # so a piece starts at the running sum of (length + 1) before it.
+        size = pc.utf8_length(self.raw).to_numpy().astype(np.int64) + 1
+        start = np.cumsum(size) - size
+        start -= start[_group_first(self.raw_doc)]
+        start = start[self.kept]
+        return start, start + size[self.kept] - 1
+
+
+def _group_first(keys: np.ndarray) -> np.ndarray:
+    """For ascending ``keys``: index of the first element of each
+    element's run of equal keys."""
+    idx = np.arange(len(keys))
+    new = np.ones(len(keys), dtype=bool)
+    new[1:] = keys[1:] != keys[:-1]
+    return np.maximum.accumulate(np.where(new, idx, 0))
+
+
+def grouped_mode(groups: np.ndarray, values: np.ndarray, n_groups: int) -> np.ndarray:
+    """``safe_mode`` of ``values`` within each group (ascending ``groups``):
+    the most frequent value, ties broken by first occurrence; NaN for an
+    empty group."""
+    out = np.full(n_groups, np.nan)
+    if not len(groups):
+        return out
+    order = np.lexsort((values, groups))  # stable: runs keep input order
+    g, v = groups[order], values[order]
+    new = np.ones(len(g), dtype=bool)
+    new[1:] = (g[1:] != g[:-1]) | (v[1:] != v[:-1])
+    runs = np.flatnonzero(new)
+    count = np.diff(np.append(runs, len(g)))
+    first = order[runs]
+    best = np.lexsort((first, -count, g[runs]))
+    head = np.ones(len(best), dtype=bool)
+    head[1:] = g[runs][best][1:] != g[runs][best][:-1]
+    pick = runs[best[head]]
+    out[g[pick]] = v[pick]
+    return out
+
+
+@functools.cache
+def _blank_pattern() -> str:
+    return f"^[{space_set()}]*$"
+
+
+def segment_batch(contents: list[str]) -> LineColumns:
+    """Segment a batch of plain-text documents with whole-batch Arrow
+    kernels, by ``segment_text``'s rules (the tests pin the two together
+    over every code point).
+
+    Split on ``\\f`` then ``\\n``; strip each line's trailing ``\\r`` run;
+    a line is blank when it matches ``^\\s*$`` (Python's ``\\s``, which is
+    what ``str.strip`` removes, spelled out for RE2); llx is the leading
+    ``[ \\t]*`` run with tabs counting ``_TAB_WIDTH``. Block numbers are a
+    cumulative sum of block starts, block llx the minimum over the
+    block's lines. The ``\\f`` split and the ``\\r`` strip run only when
+    some document has the character."""
+    docs = pa.array(contents, type=pa.large_string())
+    if any("\f" in c for c in contents if c):
+        pages = pc.split_pattern(docs, "\f")
+        page_doc = pc.list_parent_indices(pages).to_numpy()
+        pages = pc.list_flatten(pages)
+    else:  # one page per document
+        pages, page_doc = docs, np.arange(len(docs))
+    raw = pc.split_pattern(pages, "\n")
+    raw_page = pc.list_parent_indices(raw).to_numpy()
+    raw = pc.list_flatten(raw)
+    lines = raw
+    if any("\r" in c for c in contents if c):
+        lines = pc.utf8_rtrim(raw, characters="\r")
+
+    keep = ~pc.match_substring_regex(lines, _blank_pattern()).to_numpy(
+        zero_copy_only=False
+    )
+    # A block starts at a kept line whose predecessor on its page is
+    # blank or missing.
+    prev_kept = np.zeros(len(keep), dtype=bool)
+    prev_kept[1:] = keep[:-1] & (raw_page[1:] == raw_page[:-1])
+    starts_block = (keep & ~prev_kept)[keep]
+
+    kept = np.flatnonzero(keep)
+    text = lines.take(pa.array(kept))
+    page_idx = raw_page[kept]
+    doc = page_doc[page_idx]
+    block = np.cumsum(starts_block) - 1
+    doc_first = _group_first(doc)
+    page_no = np.arange(len(page_doc)) - _group_first(page_doc) + 1
+
+    # llx: the leading [ \t]* run, plus (_TAB_WIDTH - 1) per tab in it
+    # (counted only on the lines that have such a run).
+    lead = pc.subtract(
+        pc.binary_length(text),
+        pc.binary_length(pc.ascii_ltrim(text, characters=" \t")),
+    ).to_numpy()
+    line_llx = lead.astype(np.float64)
+    indented = np.flatnonzero(lead)
+    if len(indented):
+        sub = text.take(pa.array(indented))
+        tabs = pc.subtract(
+            pc.count_substring(sub, "\t"),
+            pc.count_substring(pc.ascii_ltrim(sub, characters=" \t"), "\t"),
+        ).to_numpy()
+        line_llx[indented] += (_TAB_WIDTH - 1) * tabs
+    first = np.flatnonzero(starts_block)
+    block_llx = np.repeat(
+        np.minimum.reduceat(line_llx, first), np.diff(np.append(first, len(kept)))
+    )
+    return LineColumns(
+        doc=doc,
+        line_no=np.arange(len(kept)) - doc_first + 1,
+        page=page_no[page_idx],
+        block=block,
+        block_no=block - block[_group_first(page_idx)] + 1,
+        block_ord=block - block[doc_first],
+        block_llx=block_llx,
+        line_llx=line_llx,
+        text=text,
+        raw=raw,
+        raw_doc=page_doc[raw_page],
+        kept=kept,
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -287,6 +408,17 @@ def extract_page_text(
             return main_content_text(html)
         return strip_html(html)
     return text or ""
+
+
+def batch_page_texts(htmls, texts, html_main_content: bool = False) -> list[str]:
+    """``extract_page_text`` over a batch's ``html`` and ``text`` columns."""
+    return [
+        extract_page_text(
+            bytes(html) if html is not None else None, text,
+            html_main_content=html_main_content,
+        )
+        for html, text in zip(htmls, texts)
+    ]
 
 
 def segment_page(html: Optional[bytes], text: Optional[str]) -> list[SegmentedLine]:

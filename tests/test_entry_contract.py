@@ -143,7 +143,7 @@ HOSTILE_CHECKED = [
     "c4_clean", "line_dedup", "pii_redact", "dsir_weights",
     "sequence_pack", "temperature_mixture", "cleaning_funnel",
     "incremental_dedup", "budget_select", "bigram_lm_score",
-    "incremental_dedup_bloom", "nb_domain_score",
+    "incremental_dedup_bloom", "nb_domain_score", "igt_segment_lines",
 ]
 
 

@@ -15,7 +15,8 @@ from igtdetect_spark.oracle.evaluate import (
     partial_matches,
 )
 from igtdetect_spark.oracle.pipeline import assign_spans, detect_spans
-from igtdetect_spark.segmentation import segment_text, segment_text_columns
+from igtdetect_spark.oracle.freki import safe_mode
+from igtdetect_spark.segmentation import segment_batch, segment_text
 
 # --- strategies -----------------------------------------------------------
 
@@ -164,16 +165,41 @@ def test_label_evaluator_bounds(pairs):
 
 # --- segmentation ------------------------------------------------------------
 
-@settings(max_examples=200, deadline=None)
-@given(doc_texts)
-def test_segmentation_columnar_matches_object(text):
-    segs = segment_text(text)
-    cols = segment_text_columns(text)
-    assert [s.line_no for s in segs] == cols["line_no"]
-    assert [s.page for s in segs] == cols["page"]
-    assert [s.block_id for s in segs] == cols["block_id"]
-    assert [s.block_llx for s in segs] == cols["block_llx"]
-    assert [s.text for s in segs] == cols["text"]
+# Separators, Python-only whitespace (\x1c-\x1f, \x85, NBSP, U+1680,
+# U+2028, U+3000 are str.isspace but not ASCII \s) and a few letters,
+# one of which (İ) changes length under lowercasing.
+hostile_docs = st.text(
+    alphabet=" \t\r\n\f\x0b\x1c\x1d\x1e\x1f\x85\xa0\u1680\u2028\u3000abéİ",
+    max_size=80,
+)
+
+
+@settings(max_examples=300, deadline=None)
+@given(st.lists(hostile_docs, min_size=1, max_size=6))
+def test_segmentation_columnar_matches_object(docs):
+    """segment_batch over a multi-document batch equals segment_text per
+    document in every column, the llx mode equals safe_mode, and each
+    line's offsets cut its raw text out of the document."""
+    c = segment_batch(docs)
+    bounds = c.doc_bounds(len(docs))
+    block_ids = c.block_ids()
+    text = c.text.to_pylist()
+    modes = c.llx_modes(len(docs))
+    start, stop = c.offsets()
+    for d, doc in enumerate(docs):
+        want = segment_text(doc)
+        a, b = bounds[d], bounds[d + 1]
+        assert [s.line_no for s in want] == c.line_no[a:b].tolist()
+        assert [s.page for s in want] == c.page[a:b].tolist()
+        assert [s.block_id for s in want] == block_ids[a:b].tolist()
+        assert [s.block_llx for s in want] == c.block_llx[a:b].tolist()
+        assert [s.line_llx for s in want] == c.line_llx[a:b].tolist()
+        assert [s.text for s in want] == text[a:b]
+        assert [
+            doc[i:j].rstrip("\r") for i, j in zip(start[a:b], stop[a:b])
+        ] == text[a:b]
+        if want:
+            assert modes[d] == safe_mode([s.block_llx for s in want])
 
 
 @settings(max_examples=200, deadline=None)
