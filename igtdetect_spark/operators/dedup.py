@@ -590,7 +590,7 @@ def simhash_batch(texts: pd.Series, bits: int = 64) -> np.ndarray:
     texts: md5 once per DISTINCT token, bit expansion via np.unpackbits,
     per-doc ±1 sums as one vectorized gather+reduce per doc — no
     per-token×per-bit Python loop. Module-level so it is directly
-    microbenchable (tools/microbench_simhash.py) and pinnable in tests."""
+    callable on a pandas Series and pinnable in tests."""
     if not 1 <= bits <= 64:
         raise ValueError(f"bits must be in [1, 64], got {bits}")
     texts = texts.fillna("")

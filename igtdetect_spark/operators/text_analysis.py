@@ -225,7 +225,7 @@ def winnow_batch(texts: pd.Series, k: int = 5, window: int = 4
     ``np.frombuffer`` over the utf-32-le encoding (no per-char Python
     loop), the k-term rolling hash and the sliding-window minima are k
     resp. window strided numpy passes. Module-level so it is directly
-    microbenchable (tools/microbench_winnow.py) and pinnable in tests."""
+    callable on a pandas Series and pinnable in tests."""
     import hashlib
 
     n_grams_out, n_sel_out, sig_out = [], [], []

@@ -5,7 +5,7 @@ per-doc run under the same cfg)."""
 import pytest
 
 from igtdetect_spark.config import DEFAULT_CONFIG, T_HAS_DIA, T_HAS_UNI
-from igtdetect_spark.flagship import get_lexicons, get_synthetic_model
+from igtdetect_spark.flagship import get_synthetic_model
 from igtdetect_spark.oracle.corpus import doc_from_text, make_corpus
 from igtdetect_spark.oracle.pipeline import (
     detect_spans,
@@ -31,7 +31,7 @@ VARIANTS = {
 
 
 @pytest.mark.parametrize("name", sorted(VARIANTS))
-def test_fused_matches_oracle_under_variant(spark, name):
+def test_fused_matches_oracle_under_variant(spark, lexicons, name):
     from igtdetect_spark.plans.pipeline import (
         DetectContext,
         detect_spans_fused,
@@ -41,7 +41,7 @@ def test_fused_matches_oracle_under_variant(spark, name):
 
     cfg = VARIANTS[name]
     model = get_synthetic_model()
-    lex = get_lexicons()
+    lex = lexicons
 
     want = {}
     for d in make_corpus(10):

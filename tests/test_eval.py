@@ -5,7 +5,7 @@ overlap asymmetry)."""
 
 import pytest
 
-from igtdetect_spark.flagship import get_lexicons, get_synthetic_model
+from igtdetect_spark.flagship import get_synthetic_model
 from igtdetect_spark.labels import handle_label
 from igtdetect_spark.oracle.corpus import doc_from_text, make_corpus
 from igtdetect_spark.oracle.evaluate import (
@@ -24,11 +24,11 @@ N_DOCS = 25
 
 
 @pytest.fixture(scope="module")
-def corpus_pred():
+def corpus_pred(lexicons):
     """Per-url (gold_tags, pred_tags, gold_spans, pred_spans) from the
     oracle pipeline on synthetic docs."""
     model = get_synthetic_model()
-    lex = get_lexicons()
+    lex = lexicons
     out = {}
     for d in make_corpus(N_DOCS, seed=99):
         doc = doc_from_text(d.url, d.text, d.gold_tags)

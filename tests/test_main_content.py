@@ -66,10 +66,10 @@ class TestMainContent:
         out = main_content_text(html)
         assert "the original paper" in out  # low link fraction → kept
 
-    def test_pipeline_gate(self, spark):
+    def test_pipeline_gate(self, spark, lexicons):
         """Fused pipeline with html_main_content=True never sees nav
         lines."""
-        from igtdetect_spark.flagship import get_lexicons, get_synthetic_model
+        from igtdetect_spark.flagship import get_synthetic_model
         from igtdetect_spark.plans.pipeline import (
             DetectContext,
             classify_lines_fused,
@@ -84,7 +84,7 @@ class TestMainContent:
             PAGES_SCHEMA,
         )
         cfg = DEFAULT_CONFIG.with_(html_main_content=True)
-        ctx = DetectContext(spark, get_synthetic_model(), get_lexicons(), cfg)
+        ctx = DetectContext(spark, get_synthetic_model(), lexicons, cfg)
         texts = [r["text"] for r in classify_lines_fused(pages, ctx).collect()]
         assert texts
         assert not any("Home" in t or "Privacy" in t for t in texts)

@@ -192,14 +192,52 @@ class TestWordOverlap:
         """Pin the vectorized codepoint extraction (np.frombuffer over
         utf-32-le) + list-repr join against the round-2 per-char ord()
         kernel on unicode-heavy, astral-plane and edge-length inputs."""
-        import sys
+        import hashlib
 
         import pandas as pd
 
-        sys.path.insert(0, "/root/repo/tools")
-        from microbench_winnow import ord_loop_batch
+        from igtdetect_spark.operators.text_analysis import (
+            WINNOW_BASE,
+            WINNOW_MOD,
+            winnow_batch,
+        )
 
-        from igtdetect_spark.operators.text_analysis import winnow_batch
+        def ord_loop_batch(texts, k=5, window=4):
+            """The round-2 kernel: identical except codepoints come from
+            a per-char Python loop."""
+            n_grams_out, n_sel_out, sig_out = [], [], []
+            powers = np.array(
+                [pow(WINNOW_BASE, k - 1 - j, WINNOW_MOD) for j in range(k)],
+                dtype=np.int64,
+            )
+            for t in texts.fillna(""):
+                if len(t) < k:
+                    n_grams_out.append(0)
+                    n_sel_out.append(0)
+                    sig_out.append(hashlib.md5(b"").hexdigest())
+                    continue
+                cp = np.array([ord(c) for c in t], dtype=np.int64)
+                n = len(cp) - k + 1
+                h = np.zeros(n, dtype=np.int64)
+                for j in range(k):
+                    h = (h + cp[j:j + n] * powers[j]) % WINNOW_MOD
+                if n >= window:
+                    mins = h[:n - window + 1].copy()
+                    for j in range(1, window):
+                        np.minimum(mins, h[j:j + n - window + 1], out=mins)
+                else:
+                    mins = np.array([h.min()], dtype=np.int64)
+                sel = np.unique(mins)
+                n_grams_out.append(n)
+                n_sel_out.append(len(sel))
+                sig_out.append(
+                    hashlib.md5(",".join(str(int(x)) for x in sel).encode())
+                    .hexdigest()
+                )
+            return pd.DataFrame(
+                {"n_grams": n_grams_out, "n_selected": n_sel_out,
+                 "winnow_sig": sig_out}
+            )
 
         texts = pd.Series([
             "the quick brown fox jumps over the lazy dog",

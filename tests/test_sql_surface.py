@@ -2,16 +2,16 @@
 
 import pytest
 
-from igtdetect_spark.flagship import get_lexicons, get_synthetic_model
+from igtdetect_spark.flagship import get_synthetic_model
 
 
 @pytest.fixture(scope="module")
-def views(spark):
+def views(spark, lexicons):
     from igtdetect_spark.plans.pipeline import DetectContext
     from igtdetect_spark.sources.pages import synthetic_pages
     from igtdetect_spark.sql import register_engine_views
 
-    ctx = DetectContext(spark, get_synthetic_model(), get_lexicons())
+    ctx = DetectContext(spark, get_synthetic_model(), lexicons)
     pages = synthetic_pages(spark, 20).cache()
     return register_engine_views(spark, pages, ctx, prefix="t_")
 

@@ -4,14 +4,14 @@ watermarked monitor aggregates."""
 
 import pytest
 
-from igtdetect_spark.flagship import get_lexicons, get_synthetic_model
+from igtdetect_spark.flagship import get_synthetic_model
 
 
 @pytest.fixture(scope="module")
-def ctx(spark):
+def ctx(spark, lexicons):
     from igtdetect_spark.plans.pipeline import DetectContext
 
-    return DetectContext(spark, get_synthetic_model(), get_lexicons())
+    return DetectContext(spark, get_synthetic_model(), lexicons)
 
 
 @pytest.fixture(scope="module")

@@ -190,16 +190,7 @@ def main():
     print("skewed16 control 2→8:", eff_ctl, flush=True)
 
     os.makedirs("/root/repo/BENCH", exist_ok=True)
-    # preserve sections other tools own (scaling_query.py's
-    # registry_queries) across re-measurements of the flagship ladder
-    path = "/root/repo/BENCH/scaling.json"
-    if os.path.exists(path):
-        with open(path) as f:
-            prior = json.load(f)
-        for key in ("registry_queries",):
-            if key in prior and key not in results:
-                results[key] = prior[key]
-    with open(path, "w") as f:
+    with open("/root/repo/BENCH/scaling.json", "w") as f:
         json.dump(results, f, indent=2)
     render(results)
 
@@ -396,50 +387,9 @@ Raw numbers: `BENCH/scaling.json`. Span counts are identical across
 paths and parallelism levels (parity-tested in
 `tests/test_spark_pipeline.py`).
 """
-    md += _render_registry_queries(results.get("registry_queries", {}))
     with open("/root/repo/BENCH/BASELINE.md", "w") as f:
         f.write(md)
     print("wrote BENCH/BASELINE.md")
-
-
-def _render_registry_queries(rq: dict) -> str:
-    """Render the per-query scaling section from scaling_query.py's
-    results, so a flagship-ladder re-render never drops it."""
-    if not rq:
-        return ""
-    rows = []
-    for key in sorted(
-        rq, key=lambda k: (k.split("@k")[0],
-                           int((k.split("@k") + ["1"])[1]))
-    ):
-        r = rq[key]
-        name, scale = (key.split("@k") + ["1"])[:2] if "@k" in key else (
-            key, "1")
-        label = f"sf0.1 ×{scale}" if scale != "1" else "sf0.1"
-        rows.append(
-            f"| {name} | {label} | {r['T2_sec']} | {r['T8_sec']} | "
-            f"{r['efficiency_2_to_8']} |"
-        )
-    body = "\n".join(rows)
-    return f"""
-## Registry-query scaling (beyond the flagship)
-
-`tools/scaling_query.py` runs any registry query at taskset-pinned
-local[2] vs local[8] (interleaved legs, best wall per level) — the
-same N→4N proxy discipline as the flagship ladder, optionally over a
-K×-replicated corpus (`--scale K`) so the parallel work dwarfs fixed
-per-job cost (planning, scheduling, Python worker spin-up: ~0.5 s that
-parallelism cannot shrink).
-
-| query | input | T₂ (s) | T₈ (s) | 2→8 efficiency |
-|---|---|---|---|---|
-{body}
-
-Reading: sub-3 s walls measure the fixed-cost floor, not the engine —
-kept deliberately as the overhead record. As parallel work grows the
-one-or-two-shuffle hash-aggregate plans converge to linear (the regime
-a 100 TB run occupies: hours of work against seconds of fixed cost).
-"""
 
 
 if __name__ == "__main__":
