@@ -35,6 +35,9 @@ import os
 import subprocess
 import sys
 
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+BENCH_DIR = os.path.join(REPO, "BENCH")
+
 RUNNER = r"""
 import json, sys, time
 from igtdetect_spark.session import build_session
@@ -113,7 +116,7 @@ def run_level(cpus: int, mode: str) -> dict:
     cmd = ["taskset", "-c", f"{n_host - cpus}-{n_host - 1}",
            sys.executable, "-c", RUNNER, str(cpus), mode]
     out = subprocess.run(
-        cmd, capture_output=True, text=True, cwd="/root/repo", timeout=2400,
+        cmd, capture_output=True, text=True, cwd=REPO, timeout=2400,
     )
     line = [l for l in out.stdout.splitlines() if l.startswith("{")][-1]
     r = json.loads(line)
@@ -189,8 +192,8 @@ def main():
     print("packing bound:", results["skewed_packing_bound"], flush=True)
     print("skewed16 control 2→8:", eff_ctl, flush=True)
 
-    os.makedirs("/root/repo/BENCH", exist_ok=True)
-    with open("/root/repo/BENCH/scaling.json", "w") as f:
+    os.makedirs(BENCH_DIR, exist_ok=True)
+    with open(os.path.join(BENCH_DIR, "scaling.json"), "w") as f:
         json.dump(results, f, indent=2)
     render(results)
 
@@ -387,14 +390,14 @@ Raw numbers: `BENCH/scaling.json`. Span counts are identical across
 paths and parallelism levels (parity-tested in
 `tests/test_spark_pipeline.py`).
 """
-    with open("/root/repo/BENCH/BASELINE.md", "w") as f:
+    with open(os.path.join(BENCH_DIR, "BASELINE.md"), "w") as f:
         f.write(md)
     print("wrote BENCH/BASELINE.md")
 
 
 if __name__ == "__main__":
     if len(sys.argv) > 1 and sys.argv[1] == "--render-only":
-        with open("/root/repo/BENCH/scaling.json") as f:
+        with open(os.path.join(BENCH_DIR, "scaling.json")) as f:
             render(json.load(f))
     else:
         main()

@@ -18,6 +18,8 @@ query's error instead of a silent switch to the interpreted plan. A query
 that raises, or whose traced (rows, checksum) differs from its priming
 pass, is recorded with its error and the run goes on.
 
+SF_DIR defaults to ``$SPARK_GRAFT_SF_DIR``, as in ``bench.py``.
+
 Writes ``BENCH/layers_<N>core_<sf dir name>.json``; exits 1 if any query
 erred. Two records with different ``--cores`` give per-query N to 4N
 scaling.
@@ -94,9 +96,12 @@ def totals(recs: list[dict]) -> dict:
 def main(argv=None) -> int:
     ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
     ap.add_argument("--cores", type=int, default=CORES)
-    ap.add_argument("sf_dir", nargs="?", default="/root/testdata/sf0.1")
+    ap.add_argument("sf_dir", nargs="?",
+                    default=os.environ.get("SPARK_GRAFT_SF_DIR"))
     ap.add_argument("queries", nargs="*")
     args = ap.parse_args(argv)
+    if args.sf_dir is None:
+        ap.error("give SF_DIR or set SPARK_GRAFT_SF_DIR")
     if not os.path.isdir(args.sf_dir):
         ap.error(f"SF_DIR {args.sf_dir!r} is not a directory")
 
