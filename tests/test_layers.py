@@ -36,9 +36,17 @@ def layers():
 def records(spark, layers):
     from igtdetect_spark.entry_queries import queries
 
-    reg = layers.registry(spark, SF_SMOKE_DIR, queries())
-    return {q: layers.measure(reg, q, f"layers-test-{q}")
-            for q in QUERIES + ["no_such_query"]}
+    # the runner's session conf (codegen fallback off), restored afterwards
+    prev = {k: spark.conf.get(k) for k in layers.CONF}
+    try:
+        for k, v in layers.CONF.items():
+            spark.conf.set(k, v)
+        reg = layers.registry(spark, SF_SMOKE_DIR, queries())
+        return {q: layers.measure(reg, q, f"layers-test-{q}")
+                for q in QUERIES + ["no_such_query"]}
+    finally:
+        for k, v in prev.items():
+            spark.conf.set(k, v)
 
 
 @pytest.mark.parametrize("q", QUERIES)

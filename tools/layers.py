@@ -1,6 +1,6 @@
 """Per-query layer record of the whole query registry.
 
-    python tools/layers.py [--cores N] [SF_DIR] [QUERY ...]
+    python tools/layers.py SF_DIR [QUERY ...]
 
 Runs every query of ``entry_queries.queries()`` (or only the named ones)
 over the tables in SF_DIR through the benchmark's own per-query step,
@@ -18,11 +18,9 @@ query's error instead of a silent switch to the interpreted plan. A query
 that raises, or whose traced (rows, checksum) differs from its priming
 pass, is recorded with its error and the run goes on.
 
-SF_DIR defaults to ``$SPARK_GRAFT_SF_DIR``, as in ``bench.py``.
-
-Writes ``BENCH/layers_<N>core_<sf dir name>.json``; exits 1 if any query
-erred. Two records with different ``--cores`` give per-query N to 4N
-scaling.
+The session is the benchmark's: ``perfbench.common.MASTER`` (4 cores)
+with its shuffle partitions. Writes
+``BENCH/layers_4core_<sf dir name>.json``; exits 1 if any query erred.
 """
 
 from __future__ import annotations
@@ -38,7 +36,8 @@ import time
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
-from perfbench.common import CORES, new_session, stop_processes  # noqa: E402
+from perfbench.common import (  # noqa: E402
+    CORES, MASTER, new_session, stop_processes)
 from perfbench.registry import Registry  # noqa: E402
 from perfbench.trace import Tracer  # noqa: E402
 
@@ -95,13 +94,9 @@ def totals(recs: list[dict]) -> dict:
 
 def main(argv=None) -> int:
     ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
-    ap.add_argument("--cores", type=int, default=CORES)
-    ap.add_argument("sf_dir", nargs="?",
-                    default=os.environ.get("SPARK_GRAFT_SF_DIR"))
-    ap.add_argument("queries", nargs="*")
+    ap.add_argument("sf_dir")
+    ap.add_argument("queries", nargs="*", default=[])
     args = ap.parse_args(argv)
-    if args.sf_dir is None:
-        ap.error("give SF_DIR or set SPARK_GRAFT_SF_DIR")
     if not os.path.isdir(args.sf_dir):
         ap.error(f"SF_DIR {args.sf_dir!r} is not a directory")
 
@@ -110,12 +105,11 @@ def main(argv=None) -> int:
     qs = queries()
     names = args.queries or list(qs)
     sf_name = os.path.basename(os.path.normpath(args.sf_dir))
-    out = os.path.join(REPO, "BENCH", f"layers_{args.cores}core_{sf_name}.json")
+    out = os.path.join(REPO, "BENCH", f"layers_{CORES}core_{sf_name}.json")
     work = tempfile.mkdtemp(prefix="layers-")
-    master = f"local[{args.cores}]"
     recs: list[dict] = []
     t0 = time.perf_counter()
-    spark = new_session(work, master)
+    spark = new_session(work)
     try:
         for k, v in CONF.items():
             spark.conf.set(k, v)
@@ -126,7 +120,7 @@ def main(argv=None) -> int:
             print(f"{q}: {r['error'] or '%.2f s' % r['wall_s']}", file=sys.stderr)
     finally:
         record = {
-            "sf_dir": args.sf_dir, "cores": args.cores, "master": master,
+            "sf_dir": args.sf_dir, "cores": CORES, "master": MASTER,
             "conf": CONF, "run_wall_s": time.perf_counter() - t0,
             "totals": totals(recs), "queries": recs,
         }
