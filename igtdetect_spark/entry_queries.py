@@ -18,6 +18,8 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from .operators.dedup import materialize, scoped
+
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     from .operators.scale import spread_small_scan
@@ -792,17 +794,13 @@ def q_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     # double loses an ulp on exact decimal ratios (the token_stats
     # lesson; the threshold FILTER compares the plain quotient on both
     # engines, so it stays on the operator's jaccard column)
-    out = pairs.select(
+    return pairs.select(
         "doc_a", "doc_b", "n_common", "n_a", "n_b",
         F.floor(
             F.col("n_common") * 1e6
             / (F.col("n_a") + F.col("n_b") - F.col("n_common"))
         ).cast("long").alias("jaccard_e6"),
     )
-    # propagate the shingle-relation cache handle so callers can release
-    # it after the consuming action (operators/dedup.release_plan_caches)
-    out._plan_cache_handles = getattr(pairs, "_plan_cache_handles", [])
-    return out
 
 
 SQL_NGRAM_JACCARD = f"""
@@ -1968,15 +1966,11 @@ def q_substring_dedup_clean(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = _t(spark, sf_dir, "documents")
-    toks = doc_tokens(docs).persist()
+    toks = materialize(doc_tokens(docs), "persist")
     spans = duplicated_ngram_spans(
         docs, n=_SUBSTR_N, min_count=2, tokens=toks
     )
-    out = remove_duplicated_spans(docs, spans, tokens=toks)
-    out._plan_cache_handles = (
-        getattr(spans, "_plan_cache_handles", []) + [toks]
-    )
-    return out
+    return remove_duplicated_spans(docs, spans, tokens=toks)
 
 
 def _sql_substring_dedup_clean() -> str:
@@ -2380,14 +2374,8 @@ def q_curation_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     contamination gate — whose shared-gram COUNTS the funnel prunes
     anyway — joins against the eval set's DISTINCT shingles and
     dedups doc_id in ONE exchange instead of two (pair aggregate +
-    distinct). The near-dup kernel's persist handles are carried to
-    the returned frame (the q_clustering_coeffs lesson)."""
-    from .operators.dedup import (
-        attach_plan_cache,
-        doc_tokens,
-        neardup_clusters,
-        word_shingles,
-    )
+    distinct)."""
+    from .operators.dedup import doc_tokens, neardup_clusters, word_shingles
     from .operators.text_analysis import gopher_filters
 
     docs = _t(spark, sf_dir, "documents")
@@ -2396,7 +2384,7 @@ def q_curation_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     # kernel, the corpus 13-gram shingles AND the eval-set slice —
     # md5(array_join(_toks, " ")) == md5(normalized_text) exactly
     # (normalize output is trimmed/single-spaced, so split⁻¹ == join)
-    toks = doc_tokens(docs).persist()
+    toks = materialize(doc_tokens(docs), "persist")
     fp = toks.select(
         "doc_id", F.md5(F.array_join("_toks", " ")).alias("fingerprint")
     )
@@ -2404,8 +2392,9 @@ def q_curation_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     ex = fp.join(keep, "fingerprint").select(
         "doc_id", (F.col("doc_id") == F.col("_keep")).alias("exact_keep")
     )
-    ndf = neardup_clusters(docs, tokens=toks)
-    nd = ndf.select("doc_id", F.col("is_representative").alias("is_rep"))
+    nd = neardup_clusters(docs, tokens=toks).select(
+        "doc_id", F.col("is_representative").alias("is_rep")
+    )
     ev_toks = toks.filter(F.col("doc_id") % 41 == 0).select(
         "doc_id",
         F.split(
@@ -2431,17 +2420,13 @@ def q_curation_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     q, e = F.col("gopher_pass"), F.col("exact_keep")
     r, nc = F.col("is_rep"), F.col("_c").isNull()
-    out = flags.agg(
+    return flags.agg(
         F.count(F.lit(1)).alias("n_total"),
         F.sum(q.cast("long")).alias("n_quality"),
         F.sum((q & e).cast("long")).alias("n_after_exact"),
         F.sum((q & e & r).cast("long")).alias("n_after_neardup"),
         F.sum((q & e & r & nc).cast("long")).alias("n_clean"),
     )
-    attach_plan_cache(out, toks)
-    for h in getattr(ndf, "_plan_cache_handles", []):
-        attach_plan_cache(out, h)
-    return out
 
 
 def _sql_curation_funnel() -> str:
@@ -2900,9 +2885,7 @@ def q_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus, the full table plays the increment — so a third of the
     increment is flagged seen and the rest admitted. Seen-relation join
     is size-aware broadcast-XOR-shuffle (operators/scale.py)."""
-    from .operators.dedup import (
-        attach_plan_cache, fingerprint_docs, incremental_dedup,
-    )
+    from .operators.dedup import fingerprint_docs, incremental_dedup
     from .operators.scale import plan_size_bytes
 
     docs = _t(spark, sf_dir, "documents")
@@ -2911,13 +2894,12 @@ def q_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # fingerprinted relation yields exactly fingerprint_docs(filtered
     # docs) — the normalize+md5 pass over the corpus runs once instead
     # of three times (increment join, keep-first, store derivation).
-    fp = fingerprint_docs(docs).persist()
+    fp = materialize(fingerprint_docs(docs), "persist")
     seen = fp.filter(F.col("doc_id") % 3 == 0).select("fingerprint")
-    out = incremental_dedup(
+    return incremental_dedup(
         docs, seen, corpus_bound_bytes=plan_size_bytes(docs),
         fingerprints=fp,
     )
-    return attach_plan_cache(out, fp)
 
 
 SQL_INCREMENTAL_DEDUP = f"""
@@ -2947,22 +2929,19 @@ def q_incremental_dedup_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
     definitively new with no join at all. The false-positive rate costs
     extra join rows, never correctness (operators/dedup.py
     incremental_dedup_bloom)."""
-    from .operators.dedup import (
-        attach_plan_cache, fingerprint_docs, incremental_dedup_bloom,
-    )
+    from .operators.dedup import fingerprint_docs, incremental_dedup_bloom
     from .operators.scale import plan_size_bytes
 
     docs = _t(spark, sf_dir, "documents")
     # Same single-persisted-fingerprint-scan shape as
     # q_incremental_dedup; the Bloom bitset build also collects from
     # the cached relation instead of re-hashing the corpus.
-    fp = fingerprint_docs(docs).persist()
+    fp = materialize(fingerprint_docs(docs), "persist")
     seen = fp.filter(F.col("doc_id") % 3 == 0).select("fingerprint")
-    out = incremental_dedup_bloom(
+    return incremental_dedup_bloom(
         docs, seen, corpus_bound_bytes=plan_size_bytes(docs),
         fingerprints=fp,
     )
-    return attach_plan_cache(out, fp)
 
 
 def q_temperature_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -6260,15 +6239,13 @@ def q_spam_mass(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.webpages import _resolve_edges
 
     ids, edges = _resolve_edges(pages)
-    graph = (ids, edges.localCheckpoint(eager=True))
-    pr0 = pagerank(pages, graph=graph)
-    tr0 = trustrank(pages, graph=graph)
-    pr = pr0.select("url", "rank_e6")
-    tr = tr0.select("url", "trust_e6")
+    graph = (ids, materialize(edges, "local"))
+    pr = pagerank(pages, graph=graph).select("url", "rank_e6")
+    tr = trustrank(pages, graph=graph).select("url", "trust_e6")
     # persisted: j feeds BOTH the 1-row totals and the scored
     # projection — without it each branch re-runs the two kernels'
     # output joins (incl. the synthetic-url md5 projection) (§2.4)
-    j = pr.join(tr, "url").persist()
+    j = materialize(pr.join(tr, "url"), "persist")
     totals = j.agg(
         F.sum("rank_e6").alias("_sr"), F.sum("trust_e6").alias("_st")
     )
@@ -6282,21 +6259,11 @@ def q_spam_mass(spark: SparkSession, sf_dir: str) -> DataFrame:
             " * ((_sr * 1000000L) div _st)) div 1000000L))"
         ).alias("spam_mass_ppm"),
     )
-    out = scored.withColumn(
+    return scored.withColumn(
         "suspect",
         (F.col("spam_mass_ppm") >= 500_000)
         & (F.col("rank_e6") > 1_000_000),
     )
-    # carry the kernels' persisted edge-relation handles to THIS
-    # output (handles attach to DataFrame objects; pr0/tr0 are
-    # discarded here) so bench/mirror release them per invocation
-    from .operators.dedup import attach_plan_cache
-
-    for src in (pr0, tr0):
-        for h in getattr(src, "_plan_cache_handles", []):
-            attach_plan_cache(out, h)
-    attach_plan_cache(out, j)
-    return out
 
 
 def _sql_spam_mass() -> str:
@@ -6341,19 +6308,10 @@ def q_clustering_coeffs(spark: SparkSession, sf_dir: str) -> DataFrame:
             "(2 * triangles * 1000000L) div (degree * (degree - 1))"
         ).alias("cc_e6"),
     )
-    out = per_node.groupBy("degree").agg(
+    return per_node.groupBy("degree").agg(
         F.count(F.lit(1)).cast("long").alias("n_nodes"),
         F.expr("sum(cc_e6) div count(1)").alias("mean_cc_e6"),
     )
-    # Re-attach the triangle kernel's persist handles to the RETURNED
-    # frame — handles live on the DataFrame object, not the plan, so
-    # the filter/select/groupBy above would otherwise orphan them and
-    # leak 3 persisted frames per invocation (the spam_mass lesson).
-    from .operators.dedup import attach_plan_cache
-
-    for h in getattr(tri, "_plan_cache_handles", None) or []:
-        attach_plan_cache(out, h)
-    return out
 
 
 def _sql_clustering_coeffs(mod: int = 48) -> str:
@@ -7202,7 +7160,10 @@ FROM k
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    return {
+    """name → query. Each query runs in its own :func:`scoped` call, so
+    its result carries every relation materialized while it was built
+    (``release_plan_caches``)."""
+    return {name: scoped(q) for name, q in {
         "igt_classify_lines": q_igt_classify_lines,
         "igt_detect_spans": q_igt_detect_spans,
         "igt_segment_lines": q_igt_segment_lines,
@@ -7333,7 +7294,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "spam_mass": q_spam_mass,
         "snapshot_expire": q_snapshot_expire,
         "sitemap_robots_conflict": q_sitemap_robots_conflict,
-    }
+    }.items()}
 
 
 def oracle_sql() -> dict[str, str]:

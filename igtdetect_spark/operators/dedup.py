@@ -22,7 +22,9 @@ Scale notes (100 TB posture):
 
 from __future__ import annotations
 
+import functools
 import hashlib
+from contextvars import ContextVar
 
 import numpy as np
 import pandas as pd
@@ -32,6 +34,100 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
 NORM_PATTERN = "[^a-z0-9 ]+"
+
+
+# ---------------------------------------------------------------------------
+# Materialized relations and their release
+# ---------------------------------------------------------------------------
+
+# One handle list per open ``scoped`` call, outermost first.
+_SCOPES: ContextVar[tuple[list[DataFrame], ...]] = ContextVar(
+    "plan_cache_scopes", default=()
+)
+
+
+def materialize(df: DataFrame, kind: str) -> DataFrame:
+    """Materialize ``df`` and register the result as a release handle
+    in every open :func:`scoped` call. ``kind`` is ``"persist"`` (lazy
+    MEMORY_AND_DISK cache), ``"local"`` (eager ``localCheckpoint``:
+    executor block stores, lineage cut) or ``"reliable"`` (eager
+    ``checkpoint`` under the context's checkpoint dir).
+
+    Raises ``RuntimeError`` when no scope is open: nothing would ever
+    release the handle."""
+    scopes = _SCOPES.get()
+    if not scopes:
+        raise RuntimeError(
+            "materialize() called outside any @scoped function; the "
+            "materialized relation would never be released"
+        )
+    if kind == "persist":
+        out = df.persist()
+    elif kind == "local":
+        out = df.localCheckpoint(eager=True)
+    elif kind == "reliable":
+        out = df.checkpoint(eager=True)
+    else:
+        raise ValueError(f"materialize: unknown kind {kind!r}")
+    for handles in scopes:
+        handles.append(out)
+    return out
+
+
+def scoped(fn):
+    """Decorator: every relation :func:`materialize` registers while
+    ``fn`` runs, nested scopes included, becomes a release handle of
+    the DataFrame ``fn`` returns (``release_plan_caches``), whatever
+    transformations came after the materialization. Handles stay
+    registered in every enclosing scope too. If ``fn`` raises, the
+    handles it took are released before the exception propagates."""
+
+    @functools.wraps(fn)
+    def run(*args, **kwargs):
+        handles: list[DataFrame] = []
+        token = _SCOPES.set(_SCOPES.get() + (handles,))
+        try:
+            out = fn(*args, **kwargs)
+        except BaseException:
+            _release(handles)
+            raise
+        finally:
+            _SCOPES.reset(token)
+        out._plan_cache_handles = handles
+        return out
+
+    return run
+
+
+def _release(handles: list[DataFrame]) -> None:
+    for h in handles:
+        # blocking: a fire-and-forget unpersist leaves the entry
+        # visible in getPersistentRDDs for an arbitrary while (racy
+        # leak checks) and lets block cleanup bleed into the NEXT
+        # timed query of a bench loop — release deterministically,
+        # outside any timed window by contract.
+        h.unpersist(blocking=True)
+        plan = h._jdf.queryExecution().analyzed()
+        if plan.getClass().getSimpleName() == "LogicalRDD":
+            plan.rdd().unpersist(True)
+
+
+def release_plan_caches(df: DataFrame) -> int:
+    """Unpersist every relation materialized while the :func:`scoped`
+    function that returned ``df`` ran (no-op for a plan without one).
+    Call after the consuming action — a long-lived session (bench
+    loops, notebooks, services) otherwise accumulates dead
+    MEMORY_AND_DISK entries, one per invocation. A handle may be a
+    persisted DataFrame or a checkpoint; a checkpoint's blocks belong
+    to the RDD under its plan's ``LogicalRDD`` leaf, which
+    ``DataFrame.unpersist()`` does not touch, so that RDD is unpersisted
+    too (the released plan cannot run again). Returns the number of
+    handles released."""
+    handles = getattr(df, "_plan_cache_handles", None) or []
+    _release(handles)
+    if handles:
+        df._plan_cache_handles = []
+    return len(handles)
 
 
 def normalized_text(col):
@@ -171,6 +267,7 @@ def word_shingles(docs: DataFrame, n: int = 3, id_col: str = "doc_id",
     )
 
 
+@scoped
 def ngram_jaccard_pairs(
     docs: DataFrame,
     n: int = 3,
@@ -178,7 +275,6 @@ def ngram_jaccard_pairs(
     max_df: int | None = None,
     id_col: str = "doc_id",
     text_col: str = "text",
-    materialize: bool = True,
 ) -> DataFrame:
     """Document pairs with word-n-gram Jaccard ≥ threshold:
     (doc_a, doc_b, n_common, n_a, n_b, jaccard), doc_a < doc_b.
@@ -189,11 +285,9 @@ def ngram_jaccard_pairs(
 
     The shingle relation feeds 3-4 plan branches (df counts, doc sizes,
     both self-join sides); without materialization Spark recomputes the
-    shingle expressions per branch — ~4x the dominant cost. With
-    ``materialize`` (default) it is persisted MEMORY_AND_DISK, the
-    distributed analogue of staging a shingle temp table (measured 4-5x
-    end-to-end); at cluster scale prefer writing the shingle relation to
-    an actual temp table and pass ``materialize=False``."""
+    shingle expressions per branch — ~4x the dominant cost. It is
+    persisted MEMORY_AND_DISK, the distributed analogue of staging a
+    shingle temp table (measured 4-5x end-to-end)."""
     sh = word_shingles(docs, n, id_col, text_col)
     # Round 6: ONE aggregate to per-shingle sorted doc lists replaces
     # the previous shape (df-count aggregate + prune join re-executed
@@ -204,10 +298,8 @@ def ngram_jaccard_pairs(
     # (i<j) positions ARE (doc_a<doc_b) values — identical pairs and
     # counts to the self-join by construction; the DuckDB oracle still
     # spells the join form and hash-matches). One shuffle of the
-    # shingle relation instead of three, no sort. ``materialize``
-    # persists the doc-list relation (the one multi-consumer handle —
-    # callers release via ``release_plan_caches``); at cluster scale
-    # stage it to a temp table and pass materialize=False.
+    # shingle relation instead of three, no sort. The doc-list
+    # relation (the one multi-consumer relation) is persisted.
     # NULL-shingle rows (NULL-text docs) never satisfy the join form's
     # a.shingle == b.shingle (NULL equality), so they pair with
     # nothing; they are dropped before the grouping. Doc SIZES follow
@@ -221,9 +313,7 @@ def ngram_jaccard_pairs(
     )
     if max_df:
         grp = grp.filter(F.size("_ds") <= max_df)
-    grp = grp.select("_ds")
-    if materialize:
-        grp = grp.persist()
+    grp = materialize(grp.select("_ds"), "persist")
     size_src = (
         grp.select(F.explode("_ds").alias("doc_id"))
         if max_df
@@ -248,8 +338,7 @@ def ngram_jaccard_pairs(
         )
         .agg(F.count("*").alias("n_common"))
     )
-    sh = grp  # the handle attached below
-    out = (
+    return (
         common.join(
             sizes.select(F.col("doc_id").alias("doc_a"), F.col("n_sh").alias("n_a")),
             "doc_a",
@@ -265,46 +354,6 @@ def ngram_jaccard_pairs(
         .filter(F.col("jaccard") >= threshold)
         .select("doc_a", "doc_b", "n_common", "n_a", "n_b", "jaccard")
     )
-    if materialize:
-        attach_plan_cache(out, sh)
-    return out
-
-
-def attach_plan_cache(df: DataFrame, handle: DataFrame) -> DataFrame:
-    """Record that ``df``'s plan depends on a persisted ``handle`` the
-    caller should release once the plan has been consumed."""
-    handles = getattr(df, "_plan_cache_handles", None)
-    if handles is None:
-        handles = []
-        df._plan_cache_handles = handles
-    handles.append(handle)
-    return df
-
-
-def release_plan_caches(df: DataFrame) -> int:
-    """Unpersist every cache handle attached to ``df`` (no-op for plans
-    without one). Call after the consuming action — a long-lived session
-    (bench loops, notebooks, services) otherwise accumulates dead
-    MEMORY_AND_DISK entries, one per invocation. A handle may be a
-    persisted DataFrame or a ``localCheckpoint``; the checkpoint's blocks
-    belong to the RDD under its plan's ``LogicalRDD`` leaf, which
-    ``DataFrame.unpersist()`` does not touch, so that RDD is unpersisted
-    too (the released plan cannot run again). Returns the number of
-    handles released."""
-    handles = getattr(df, "_plan_cache_handles", None) or []
-    for h in handles:
-        # blocking: a fire-and-forget unpersist leaves the entry
-        # visible in getPersistentRDDs for an arbitrary while (racy
-        # leak checks) and lets block cleanup bleed into the NEXT
-        # timed query of a bench loop — release deterministically,
-        # outside any timed window by contract.
-        h.unpersist(blocking=True)
-        plan = h._jdf.queryExecution().analyzed()
-        if plan.getClass().getSimpleName() == "LogicalRDD":
-            plan.rdd().unpersist(True)
-    if handles:
-        df._plan_cache_handles = []
-    return len(handles)
 
 
 # ---------------------------------------------------------------------------
@@ -678,6 +727,7 @@ def simhash_docs(docs: DataFrame, id_col: str = "doc_id",
 # Near-duplicate cluster assignment (connected components over LSH pairs)
 # ---------------------------------------------------------------------------
 
+@scoped
 def connected_components(
     edges: DataFrame,
     max_rounds: int = 25,
@@ -742,23 +792,19 @@ def connected_components(
                 stacklevel=2,
             )
 
-        def _ckpt(df: DataFrame) -> DataFrame:
-            return df.checkpoint()
-    else:
-        def _ckpt(df: DataFrame) -> DataFrame:
-            return df.localCheckpoint()
+    kind = "local" if checkpoint_dir is None else "reliable"
 
     # Materialize the edge relation ONCE: every round joins against it,
     # and without this each round would re-execute the full upstream
     # candidate-pair pipeline (signature scan + LSH self-join) from
     # scratch — measured 5× on the graded near-dup query.
-    und = _ckpt(edges.select(
+    und = materialize(edges.select(
         F.col("doc_a").alias("u"), F.col("doc_b").alias("v")
     ).union(
         edges.select(F.col("doc_b").alias("u"), F.col("doc_a").alias("v"))
-    ))
-    labels = _ckpt(
-        und.select("u").distinct().withColumn("lab", F.col("u"))
+    ), kind)
+    labels = materialize(
+        und.select("u").distinct().withColumn("lab", F.col("u")), kind
     )
     prev_sum = None
     converged = False
@@ -782,7 +828,7 @@ def connected_components(
             F.least(F.col("lab"), F.coalesce("plab", F.col("lab")))
             .alias("lab"),
         )
-        labels = _ckpt(jumped)
+        labels = materialize(jumped, kind)
         cur_sum = labels.agg(F.sum("lab")).collect()[0][0]
         if cur_sum == prev_sum:
             converged = True
@@ -798,6 +844,7 @@ def connected_components(
     return labels.select(F.col("u").alias("node"), F.col("lab").alias("component"))
 
 
+@scoped
 def neardup_clusters(
     docs: DataFrame,
     n_perms: int = 16,
@@ -838,25 +885,19 @@ def neardup_clusters(
         )
     )
     w = Window.partitionBy("cluster_id")
-    out = out.select(
+    return out.select(
         "doc_id",
         "cluster_id",
         F.count(F.lit(1)).over(w).alias("cluster_size"),
         (F.col("doc_id") == F.col("cluster_id")).alias("is_representative"),
     )
-    # forward any persist handles the pair pipeline attaches (none
-    # today — CC localCheckpoints the pair relation and checkpoint RDDs
-    # are GC-reclaimed — but a future materialize step must not leak
-    # silently through the discarded ``pairs`` object)
-    for h in getattr(pairs, "_plan_cache_handles", []):
-        attach_plan_cache(out, h)
-    return out
 
 
 # ---------------------------------------------------------------------------
 # SimHash near-duplicate pairs (banded hamming-distance join)
 # ---------------------------------------------------------------------------
 
+@scoped
 def simhash_neardup_pairs(
     docs: DataFrame,
     max_hamming: int = 3,
@@ -896,13 +937,12 @@ def simhash_neardup_pairs(
     # the Arrow simhash kernel scans the corpus ONCE instead of once
     # per branch (it previously also fed two rescore joins — 4 scans
     # per evaluation; guide §2.4/§4). Narrow: (doc_id, simhash BIGINT).
-    # Callers release via release_plan_caches after their action.
     # NOTE: the doc-list aggregate shape that won for ngram_jaccard /
     # minhash_lsh_pairs was measured SLOWER here (2.9 → 5.7 s at
     # sf1.0) — the 2^16-value band keys make millions of tiny buckets,
     # where collect_list + per-list pair explosion costs more than the
     # equi-join it replaces. Kept the join.
-    sig = simhash_docs(docs, id_col, text_col).persist()
+    sig = materialize(simhash_docs(docs, id_col, text_col), "persist")
 
     # 4 rows/doc: (band, band value). Arithmetic shiftright + mask is
     # sign-extension-safe (the mask keeps only the band's own bits) and
@@ -920,7 +960,7 @@ def simhash_neardup_pairs(
             ])
         ).alias("band", "band_val"),
     )
-    out = (
+    return (
         bands.alias("a")
         .join(
             bands.alias("b"),
@@ -941,7 +981,6 @@ def simhash_neardup_pairs(
         .filter(F.col("hamming") <= max_hamming)
         .distinct()
     )
-    return attach_plan_cache(out, sig)
 
 
 # ---------------------------------------------------------------------------
@@ -1059,13 +1098,13 @@ def positional_ngram_hashes(
     )
 
 
+@scoped
 def duplicated_ngram_spans(
     docs: DataFrame,
     n: int = 13,
     min_count: int = 2,
     id_col: str = "doc_id",
     text_col: str = "text",
-    materialize: bool = True,
     gram_hash: str = "md5",
     tokens: DataFrame | None = None,
 ) -> DataFrame:
@@ -1087,8 +1126,7 @@ def duplicated_ngram_spans(
     with map-side partial aggregation, one window+agg by doc_id; the
     island groupBy reuses the window's doc_id partitioning). The gram
     relation feeds both the duplicate-gram aggregate and the join back,
-    so it is persisted once (``materialize``); at cluster scale write it
-    to a temp table instead and pass ``materialize=False``. At 100 TB,
+    so it is persisted once. At 100 TB,
     pass ``gram_hash='i64'`` (native xxhash64 → BIGINT) to shrink the
     shuffled gram key from a 32-byte md5 hex string to 8 bytes; the
     default stays ``'md5'`` for bit-exact oracle parity. Both schemes
@@ -1097,13 +1135,12 @@ def duplicated_ngram_spans(
     the span logic, so the hash choice only matters at 2⁶⁴-collision
     probability.
     """
-    g = positional_ngram_hashes(
-        docs, n, id_col, text_col, gram_hash, tokens=tokens
+    g = materialize(
+        positional_ngram_hashes(
+            docs, n, id_col, text_col, gram_hash, tokens=tokens
+        ),
+        "persist",
     )
-    handles = []
-    if materialize:
-        g = g.persist()
-        handles.append(g)
     dup = (
         g.groupBy("gram")
         .agg(F.count(F.lit(1)).alias("_c"))
@@ -1130,7 +1167,7 @@ def duplicated_ngram_spans(
             ),
         )
     )
-    out = (
+    return (
         flagged.groupBy("doc_id", "_isl")
         .agg(
             F.min("pos").alias("span_start"),
@@ -1145,8 +1182,6 @@ def duplicated_ngram_spans(
             "n_dup_grams",
         )
     )
-    out._plan_cache_handles = handles
-    return out
 
 
 # ---------------------------------------------------------------------------
@@ -1261,6 +1296,7 @@ def remove_duplicated_spans(
     )
 
 
+@scoped
 def incremental_dedup(
     new_docs: DataFrame,
     seen_fps: DataFrame,
@@ -1299,21 +1335,19 @@ def incremental_dedup(
     # seen store from the same scan, or a persisted handle) avoids
     # re-running the normalize+md5 corpus scan here. Without it the
     # increment scan feeds two branches (membership join + keep-first
-    # aggregate), so it is persisted — narrow (id, 32-char hex) rows;
-    # callers release via release_plan_caches.
-    if fingerprints is not None:
-        fp = fingerprints
-        handles = []
-    else:
-        fp = fingerprint_docs(new_docs, id_col, text_col).persist()
-        handles = [fp]
+    # aggregate), so it is persisted — narrow (id, 32-char hex) rows.
+    fp = fingerprints
+    if fp is None:
+        fp = materialize(
+            fingerprint_docs(new_docs, id_col, text_col), "persist"
+        )
     seen = seen_fps.select(
         F.col("fingerprint"), F.lit(1).alias("_seen")
     ).dropDuplicates(["fingerprint"])
     first = fp.groupBy("fingerprint").agg(
         F.min("doc_id").alias("_first_id")
     )
-    out = (
+    return (
         fp.join(
             maybe_broadcast(seen, bound_bytes=corpus_bound_bytes),
             "fingerprint", "left",
@@ -1331,9 +1365,6 @@ def incremental_dedup(
             ).cast("int").alias("is_new"),
         )
     )
-    for h in handles:
-        attach_plan_cache(out, h)
-    return out
 
 
 def bloom_bitset(
@@ -1370,6 +1401,7 @@ def bloom_bitset(
     return bits
 
 
+@scoped
 def incremental_dedup_bloom(
     new_docs: DataFrame,
     seen_fps: DataFrame,
@@ -1422,12 +1454,11 @@ def incremental_dedup_bloom(
     # feeds three branches here (hit probe, miss probe, keep-first
     # aggregate) — without materialization the normalize+md5 corpus
     # scan re-runs per branch.
-    if fingerprints is not None:
-        fp = fingerprints
-        handles = []
-    else:
-        fp = fingerprint_docs(new_docs, id_col, text_col).persist()
-        handles = [fp]
+    fp = fingerprints
+    if fp is None:
+        fp = materialize(
+            fingerprint_docs(new_docs, id_col, text_col), "persist"
+        )
     probed = fp.withColumn(
         "_maybe",
         _probe(*[
@@ -1454,7 +1485,7 @@ def incremental_dedup_bloom(
     first = fp.groupBy("fingerprint").agg(
         F.min("doc_id").alias("_first_id")
     )
-    out = merged.join(first, "fingerprint").select(
+    return merged.join(first, "fingerprint").select(
         "doc_id", "fingerprint",
         F.col("_seen").isNotNull().cast("int").alias("seen_in_corpus"),
         (F.col("doc_id") == F.col("_first_id")).cast("int").alias(
@@ -1465,6 +1496,3 @@ def incremental_dedup_bloom(
             & (F.col("doc_id") == F.col("_first_id"))
         ).cast("int").alias("is_new"),
     )
-    for h in handles:
-        attach_plan_cache(out, h)
-    return out

@@ -35,6 +35,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from .cleaning import tokenized
+from .dedup import materialize, scoped
 
 
 def term_frequencies(docs: DataFrame) -> DataFrame:
@@ -49,6 +50,7 @@ def term_frequencies(docs: DataFrame) -> DataFrame:
     )
 
 
+@scoped
 def bm25_topk(
     docs: DataFrame,
     queries: DataFrame,
@@ -97,9 +99,8 @@ def bm25_topk(
     # plays that role.  Round 6: EAGER localCheckpoint instead of lazy
     # persist — the lazy cache left tf's subtree inlined in all three
     # branch plans and let the branches race its first materialization
-    # (4.4 → 2.5 s at sf1.0, A/B in one session); checkpoint blocks
-    # are GC-reclaimed, so no release handle is needed.
-    tf = term_frequencies(docs).localCheckpoint(eager=True)
+    # (4.4 → 2.5 s at sf1.0, A/B in one session).
+    tf = materialize(term_frequencies(docs), "local")
     qt = F.broadcast(queries)
     hits = tf.join(qt, "term")
     dl = tf.groupBy("doc_id").agg(F.sum("tf").alias("dl"))
@@ -207,6 +208,7 @@ def postings_gap_stats(
     )
 
 
+@scoped
 def search_rank_fusion(
     docs: DataFrame,
     queries: DataFrame,
@@ -264,7 +266,7 @@ def search_rank_fusion(
     final_w = Window.partitionBy("query_id").orderBy(
         F.desc("rrf_e6"), F.col("doc_id")
     )
-    out = (
+    return (
         scored.withColumn(
             "final_rank", F.row_number().over(final_w).cast("long")
         )
@@ -274,13 +276,6 @@ def search_rank_fusion(
             "text_rank", "prior_rank", "rrf_e6",
         )
     )
-    # carry bm25's persisted tf handle to THIS output (handles attach
-    # to DataFrame objects, not plans — bm's object is discarded here)
-    from .dedup import attach_plan_cache
-
-    for h in getattr(bm, "_plan_cache_handles", []):
-        attach_plan_cache(out, h)
-    return out
 
 
 def index_shard_balance(docs: DataFrame, n_shards: int = 8) -> DataFrame:

@@ -14,6 +14,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from .dedup import materialize, scoped
+
 
 def stratified_sample(
     docs: DataFrame,
@@ -138,6 +140,7 @@ def mixture_resample(
     )
 
 
+@scoped
 def dsir_weights(
     docs: DataFrame,
     target_pred,
@@ -244,10 +247,8 @@ def dsir_weights(
     # projection is map-only (no extra exchange; both aggregates below
     # keep their map-side partial combine) and drops the gram string
     # before the cache. At cluster scale write this relation to a temp
-    # table instead. Callers release via release_plan_caches.
-    from .dedup import attach_plan_cache
-
-    gb = grams.select("doc_id", "_is_target", "bucket").persist()
+    # table instead.
+    gb = materialize(grams.select("doc_id", "_is_target", "bucket"), "persist")
     stats = gb.groupBy("bucket").agg(
         F.count(F.lit(1)).alias("_cr"),
         F.sum(F.col("_is_target").cast("long")).alias("_ct"),
@@ -271,7 +272,7 @@ def dsir_weights(
         "bucket",
         F.floor(F.log(ratio) * 1e6).cast("long").alias("_w_e6"),
     )
-    out = (
+    return (
         gb.join(F.broadcast(bucket_w), "bucket")
         .groupBy("doc_id")
         .agg(
@@ -280,7 +281,6 @@ def dsir_weights(
         )
         .select("doc_id", "n_grams", "weight_e6")
     )
-    return attach_plan_cache(out, gb)
 
 
 def sequence_pack(
@@ -395,6 +395,7 @@ def temperature_mixture(
     )
 
 
+@scoped
 def budget_select(
     docs: DataFrame,
     budget_ppm: int = 250_000,
@@ -487,10 +488,8 @@ def budget_select(
     # score_e6, _bucket) proxy so the tokenize + distinct + regexp scan
     # runs once instead of once per branch (guide §8 "decide with small
     # rows" — 4 integers/doc). At cluster scale checkpoint it to a temp
-    # table instead. Callers release via release_plan_caches.
-    from .dedup import attach_plan_cache
-
-    per_doc = per_doc.persist()
+    # table instead.
+    per_doc = materialize(per_doc, "persist")
 
     hist = per_doc.groupBy("_bucket").agg(
         F.sum("n_tokens").alias("_mass")
@@ -532,4 +531,4 @@ def budget_select(
         .filter(F.col("_cum") <= F.col("_residual"))
         .select("doc_id", "n_tokens", "score_e6")
     )
-    return attach_plan_cache(full.unionByName(boundary), per_doc)
+    return full.unionByName(boundary)

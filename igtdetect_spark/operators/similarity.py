@@ -18,6 +18,8 @@ import numpy as np
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from .dedup import materialize, scoped
+
 
 def _dot(a, b):
     return F.aggregate(
@@ -544,6 +546,7 @@ def embedding_stats(embeddings: DataFrame, id_col: str = "vec_id",
     )
 
 
+@scoped
 def semdedup(
     embeddings: DataFrame,
     threshold: float = 0.35,
@@ -650,11 +653,8 @@ def semdedup(
     # n_lists-wide centroid-distance assignment re-runs per branch —
     # 3× the dominant map cost (guide §2.4 "share one exchange" /
     # ngram_jaccard's persist discipline). Narrow relation (id, vec,
-    # norm, cluster, d2) — corpus rows but no text. Callers release
-    # via release_plan_caches after their action (bench does).
-    from .dedup import attach_plan_cache
-
-    assigned = assigned.persist()
+    # norm, cluster, d2) — corpus rows but no text.
+    assigned = materialize(assigned, "persist")
 
     # Pair stage as ONE vectorized numpy kernel per cluster instead of
     # a self-join evaluating interpreted zip_with/aggregate folds per
@@ -730,10 +730,9 @@ def semdedup(
     removed = assigned.groupBy("cluster_id").applyInPandas(
         _cluster_removed, "vec_id long, dup_sim_e6 long"
     )
-    out = assigned.join(removed, "vec_id", "left").select(
+    return assigned.join(removed, "vec_id", "left").select(
         "vec_id",
         "cluster_id",
         F.col("dup_sim_e6").isNull().alias("kept"),
         "dup_sim_e6",
     )
-    return attach_plan_cache(out, assigned)

@@ -12,7 +12,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
-from .dedup import normalized_text
+from .dedup import materialize, normalized_text, scoped
 
 # Deterministic English stopword list (inlined — heuristic language-ID /
 # quality cue; not the reference wordlists, which stay the IGT features').
@@ -738,6 +738,7 @@ def bigram_lm_scores(
     )
 
 
+@scoped
 def nb_domain_scores(
     docs: DataFrame,
     label_col: str = "source",
@@ -807,13 +808,18 @@ def nb_domain_scores(
     # the earlier rejected "tf proxy" experiment differed in that it
     # lazily persisted the wide proxy and re-derived EVERY branch from
     # it — measured here: 5.3 → 4.0 s at sf1.0, value-identical.
-    tfl = stream.groupBy("doc_id", "_lab", "term").agg(
-        F.count(F.lit(1)).alias("tf")
-    ).localCheckpoint(eager=True)
+    tfl = materialize(
+        stream.groupBy("doc_id", "_lab", "term").agg(
+            F.count(F.lit(1)).alias("tf")
+        ),
+        "local",
+    )
     tf = tfl.select("doc_id", "term", "tf")
-    ctl = tfl.groupBy(
-        "term", F.col("_lab").alias("label")
-    ).agg(F.sum("tf").alias("ctl")).localCheckpoint(eager=True)
+    ctl = materialize(
+        tfl.groupBy("term", F.col("_lab").alias("label"))
+        .agg(F.sum("tf").alias("ctl")),
+        "local",
+    )
     vocab = ctl.select("term").distinct()
     vrel = vocab.agg(F.count(F.lit(1)).alias("V"))
     labels = (

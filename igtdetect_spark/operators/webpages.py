@@ -34,6 +34,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .dedup import materialize, scoped
+
 #: Query parameters dropped during canonicalization: tracking junk that
 #: never changes the resource (Google Analytics ``utm_*``, Facebook's
 #: click id).  SQL-LIKE-free so both engines use the same regex.
@@ -696,6 +698,7 @@ def anchor_text_profile(pages: DataFrame) -> DataFrame:
     )
 
 
+@scoped
 def pagerank(
     pages: DataFrame, iterations: int = 3, damping_ppm: int = 850_000,
     graph: tuple[DataFrame, DataFrame] | None = None,
@@ -720,10 +723,8 @@ def pagerank(
     iteration is then one shuffle join on ``src_id`` (edges re-use
     their partitioning; AQE handles the rank side) plus one hash
     aggregate on ``dst_id``. Rank state is one BIGINT per node —
-    ~8 B·|V|, trivially partitionable. For deep iteration chains the
-    caller should checkpoint the rank relation every ~10 rounds to cut
-    lineage (same pattern as ``connected_components``); at 3 rounds it
-    is unnecessary.
+    ~8 B·|V|, trivially partitionable. Every round's rank relation is
+    an eager ``localCheckpoint``, so each round's plan stays O(1).
 
     Output: (url, rank_e6, out_deg) — out_deg 0 for pure sinks.
     """
@@ -734,7 +735,7 @@ def pagerank(
     deg = edges.groupBy("src_id").agg(
         F.count(F.lit(1)).cast("long").alias("out_deg")
     )
-    er = edges.join(deg, "src_id").persist()
+    er = materialize(edges.join(deg, "src_id"), "persist")
     nodes = ids.select(F.col("_nid").alias("id"))
     teleport = 1_000_000 - damping_ppm
     ranks = nodes.select("id", F.lit(1_000_000).cast("long").alias("rank_e6"))
@@ -743,10 +744,10 @@ def pagerank(
         # PLAN otherwise inlines every prior iteration (persist caches
         # data, not lineage) and Catalyst optimization cost compounds —
         # the _bfs_depths lesson applied to the power iteration
-        ranks = _pagerank_iter(
-            er, nodes, ranks, damping_ppm, teleport
-        ).localCheckpoint(eager=True)
-    out = (
+        ranks = materialize(
+            _pagerank_iter(er, nodes, ranks, damping_ppm, teleport), "local"
+        )
+    return (
         ranks.join(ids, ranks.id == ids._nid)
         .join(deg, ranks.id == deg.src_id, "left")
         .select(
@@ -755,10 +756,6 @@ def pagerank(
             .alias("out_deg"),
         )
     )
-    from .dedup import attach_plan_cache
-
-    attach_plan_cache(out, er)
-    return out
 
 
 def _resolve_edges(pages: DataFrame) -> tuple[DataFrame, DataFrame]:
@@ -790,6 +787,7 @@ def _internal_edges(pages: DataFrame) -> tuple[DataFrame, DataFrame]:
     return ids, edges.distinct()
 
 
+@scoped
 def crawl_depth(
     pages: DataFrame, seeds_mod: int = 64, max_hops: int = 4
 ) -> DataFrame:
@@ -812,12 +810,9 @@ def crawl_depth(
     that partitioning across hops; frontiers shrink geometrically once
     the reachable set saturates, and Spark broadcasts them under the
     AQE threshold so late hops degenerate to broadcast joins.  Each
-    hop's frontier is persisted (it is consumed by the next hop's join
-    AND the final union) — handles attached for
-    ``release_plan_caches``.  For deep crawls (hops ≫ 10) the visited
-    union should be checkpointed every ~10 hops to cut lineage, the
-    same pattern as ``connected_components``; at 4 hops it is
-    unnecessary.
+    hop's frontier is an eager ``localCheckpoint`` (it is consumed by
+    the next hop's join AND the final union), which also cuts the
+    plan's lineage every hop (see :func:`_bfs_depths`).
 
     Output: (url, depth) for every page reached within ``max_hops``
     hops (seeds at depth 0).  Unreached pages are absent — the
@@ -825,27 +820,21 @@ def crawl_depth(
     """
     ids, edges = _internal_edges(pages)
     # resolve the two url joins ONCE — every hop re-joins this relation
-    edges = edges.persist()
+    edges = materialize(edges, "persist")
     seeds = pages.filter((F.col("doc_id") % seeds_mod) == 0).select(
         F.col("doc_id").alias("id")
     )
-    visited, frontiers = _bfs_depths(edges, seeds, max_hops)
-    out = visited.join(ids, visited.id == ids._nid).select("url", "depth")
-    from .dedup import attach_plan_cache
-
-    for f in frontiers + [edges]:
-        attach_plan_cache(out, f)
-    return out
+    visited = _bfs_depths(edges, seeds, max_hops)
+    return visited.join(ids, visited.id == ids._nid).select("url", "depth")
 
 
 def _bfs_depths(
     edges: DataFrame, seeds: DataFrame, max_hops: int
-) -> tuple[DataFrame, list[DataFrame]]:
+) -> DataFrame:
     """Shared frontier-BFS kernel (the hop loop of :func:`crawl_depth`,
     reused by :func:`bowtie_classes` on both edge directions).
     ``edges`` is (src_id, dst_id), ``seeds`` is (id).  Returns the
-    visited (id, depth) relation plus the per-hop checkpoints, for the
-    caller to attach as ``release_plan_caches`` handles.
+    visited (id, depth) relation.
 
     Round 6: each hop's frontier is an EAGER ``localCheckpoint``, not a
     lazy persist.  A persisted frontier caches DATA but not PLAN: hop
@@ -858,28 +847,27 @@ def _bfs_depths(
     every hop's plan O(1).  Same executor-loss caveat as
     ``connected_components``: on a real cluster prefer reliable
     checkpoints for deep crawls."""
-    frontiers = [
-        seeds.select("id", F.lit(0).cast("long").alias("depth"))
-        .localCheckpoint(eager=True)
-    ]
-    visited = frontiers[0]
+    frontier = materialize(
+        seeds.select("id", F.lit(0).cast("long").alias("depth")), "local"
+    )
+    visited = frontier
     for hop in range(1, max_hops + 1):
-        nxt = (
+        frontier = materialize(
             edges.join(
-                frontiers[-1].select(F.col("id").alias("src_id")),
+                frontier.select(F.col("id").alias("src_id")),
                 "src_id",
             )
             .select(F.col("dst_id").alias("id"))
             .distinct()
             .join(visited.select("id"), "id", "left_anti")
-            .select("id", F.lit(hop).cast("long").alias("depth"))
-            .localCheckpoint(eager=True)
+            .select("id", F.lit(hop).cast("long").alias("depth")),
+            "local",
         )
-        frontiers.append(nxt)
-        visited = visited.unionByName(nxt)
-    return visited, frontiers
+        visited = visited.unionByName(frontier)
+    return visited
 
 
+@scoped
 def bowtie_classes(
     pages: DataFrame, seeds_mod: int = 64, max_hops: int = 4
 ) -> DataFrame:
@@ -912,16 +900,16 @@ def bowtie_classes(
     """
     ids, edges = _internal_edges(pages)
     # resolved ONCE, consumed by 2 × max_hops hop joins
-    edges = edges.persist()
+    edges = materialize(edges, "persist")
     seeds = pages.filter((F.col("doc_id") % seeds_mod) == 0).select(
         F.col("doc_id").alias("id")
     )
-    fwd, f_handles = _bfs_depths(edges, seeds, max_hops)
+    fwd = _bfs_depths(edges, seeds, max_hops)
     rev_edges = edges.select(
         F.col("dst_id").alias("src_id"), F.col("src_id").alias("dst_id")
     )
-    bwd, b_handles = _bfs_depths(rev_edges, seeds, max_hops)
-    out = (
+    bwd = _bfs_depths(rev_edges, seeds, max_hops)
+    return (
         ids.join(fwd.withColumnRenamed("depth", "fwd_depth"),
                  ids._nid == fwd.id, "left")
         .drop("id")
@@ -936,13 +924,9 @@ def bowtie_classes(
             .otherwise(F.lit("disconnected")).alias("cls"),
         )
     )
-    from .dedup import attach_plan_cache
-
-    for h in f_handles + b_handles + [edges]:
-        attach_plan_cache(out, h)
-    return out
 
 
+@scoped
 def hits_scores(pages: DataFrame, iterations: int = 2) -> DataFrame:
     """Integer-exact HITS (hubs & authorities) over the crawl's
     internal link graph — the complement of :func:`pagerank` for
@@ -973,39 +957,32 @@ def hits_scores(pages: DataFrame, iterations: int = 2) -> DataFrame:
     Output: (url, hub_e6, auth_e6).
     """
     ids, edges = _internal_edges(pages)
-    er = edges.persist()
+    er = materialize(edges, "persist")
     nodes = ids.select(F.col("_nid").alias("id"))
     hub = nodes.select("id", F.lit(1_000_000).cast("long").alias("s"))
     auth = None
-    handles = [er]
     for _ in range(iterations):
         raw_a = (
             er.join(hub.withColumnRenamed("id", "src_id"), "src_id")
             .groupBy(F.col("dst_id").alias("id"))
             .agg(F.sum("s").alias("_raw"))
         )
-        auth, h = _l1_normalize_e6(nodes, raw_a)
-        handles.append(h)
+        auth = _l1_normalize_e6(nodes, raw_a)
         raw_h = (
             er.join(auth.withColumnRenamed("id", "dst_id"), "dst_id")
             .groupBy(F.col("src_id").alias("id"))
             .agg(F.sum("s").alias("_raw"))
         )
-        hub, h = _l1_normalize_e6(nodes, raw_h)
-        handles.append(h)
-    out = (
+        hub = _l1_normalize_e6(nodes, raw_h)
+    return (
         hub.withColumnRenamed("s", "hub_e6")
         .join(auth.withColumnRenamed("s", "auth_e6"), "id")
         .join(ids, F.col("id") == ids._nid)
         .select("url", "hub_e6", "auth_e6")
     )
-    from .dedup import attach_plan_cache
-
-    for h in handles:
-        attach_plan_cache(out, h)
-    return out
 
 
+@scoped
 def triangle_counts(pages: DataFrame) -> DataFrame:
     """Per-node triangle participation over the UNDIRECTED view of the
     crawl's internal link graph — the local-clustering signal link-spam
@@ -1038,21 +1015,23 @@ def triangle_counts(pages: DataFrame) -> DataFrame:
     degree distribution rides along for free.
     """
     ids, edges = _internal_edges(pages)
-    und = (
+    # consumed by the degree agg AND the orientation join
+    und = materialize(
         edges.filter(F.col("src_id") != F.col("dst_id"))
         .select(
             F.least("src_id", "dst_id").alias("a"),
             F.greatest("src_id", "dst_id").alias("b"),
         )
-        .distinct()
-        .localCheckpoint(eager=True)  # consumed by the degree agg AND the orientation join
+        .distinct(),
+        "local",
     )
-    deg = (
+    # consumed by two orientation joins + the output join
+    deg = materialize(
         und.select(F.col("a").alias("id"))
         .unionByName(und.select(F.col("b").alias("id")))
         .groupBy("id")
-        .agg(F.count(F.lit(1)).alias("deg"))
-        .localCheckpoint(eager=True)  # consumed by two orientation joins + the output join
+        .agg(F.count(F.lit(1)).alias("deg")),
+        "local",
     )
     e = (
         und.join(deg.select(F.col("id").alias("a"),
@@ -1063,11 +1042,15 @@ def triangle_counts(pages: DataFrame) -> DataFrame:
     # a < b always, so a degree tie keeps the a→b direction — the
     # (degree, id) order needs no explicit id comparison here
     low = F.col("da") <= F.col("db")
-    o = e.select(
-        F.when(low, F.col("a")).otherwise(F.col("b")).alias("u"),
-        F.when(low, F.col("b")).otherwise(F.col("a")).alias("v"),
-        F.when(low, F.col("db")).otherwise(F.col("da")).alias("dv"),
-    ).localCheckpoint(eager=True)  # consumed THREE times: both wedge sides + closing join
+    # consumed THREE times: both wedge sides + closing join
+    o = materialize(
+        e.select(
+            F.when(low, F.col("a")).otherwise(F.col("b")).alias("u"),
+            F.when(low, F.col("b")).otherwise(F.col("a")).alias("v"),
+            F.when(low, F.col("db")).otherwise(F.col("da")).alias("dv"),
+        ),
+        "local",
+    )
     e1, e2 = o.alias("e1"), o.alias("e2")
     wedge = e1.join(
         e2,
@@ -1091,7 +1074,7 @@ def triangle_counts(pages: DataFrame) -> DataFrame:
         .groupBy("id")
         .agg(F.count(F.lit(1)).alias("triangles"))
     )
-    out = (
+    return (
         deg.join(per_node, "id", "left")
         .join(ids, deg.id == ids._nid)
         .select(
@@ -1101,16 +1084,11 @@ def triangle_counts(pages: DataFrame) -> DataFrame:
             .cast("long").alias("triangles"),
         )
     )
-    from .dedup import attach_plan_cache
-
-    for h in (und, deg, o):
-        attach_plan_cache(out, h)
-    return out
 
 
 def _bfs_depths_multi(
     edges: DataFrame, seeds: DataFrame, max_hops: int
-) -> tuple[DataFrame, list[DataFrame]]:
+) -> DataFrame:
     """Multi-source variant of :func:`_bfs_depths`: the frontier and
     visited relations are keyed ``(lm, id)`` so each landmark's BFS
     runs independently inside ONE set of joins (the landmark id rides
@@ -1119,29 +1097,25 @@ def _bfs_depths_multi(
 
     Round 6: per-hop eager ``localCheckpoint`` instead of lazy persist
     — see :func:`_bfs_depths` (plan lineage, not data, was the wall)."""
-    frontiers = [
-        seeds.select(
-            "lm", "id", F.lit(0).cast("long").alias("depth")
-        ).localCheckpoint(eager=True)
-    ]
-    visited = frontiers[0]
+    frontier = materialize(
+        seeds.select("lm", "id", F.lit(0).cast("long").alias("depth")),
+        "local",
+    )
+    visited = frontier
     for hop in range(1, max_hops + 1):
-        nxt = (
+        frontier = materialize(
             edges.join(
-                frontiers[-1].select(
-                    "lm", F.col("id").alias("src_id")
-                ),
+                frontier.select("lm", F.col("id").alias("src_id")),
                 "src_id",
             )
             .select("lm", F.col("dst_id").alias("id"))
             .distinct()
             .join(visited.select("lm", "id"), ["lm", "id"], "left_anti")
-            .select("lm", "id", F.lit(hop).cast("long").alias("depth"))
-            .localCheckpoint(eager=True)
+            .select("lm", "id", F.lit(hop).cast("long").alias("depth")),
+            "local",
         )
-        frontiers.append(nxt)
-        visited = visited.unionByName(nxt)
-    return visited, frontiers
+        visited = visited.unionByName(frontier)
+    return visited
 
 
 #: Fixed landmark page ids for :func:`landmark_closeness` — a
@@ -1152,6 +1126,7 @@ def _bfs_depths_multi(
 CLOSENESS_LANDMARKS = (0, 7, 21, 35)
 
 
+@scoped
 def landmark_closeness(
     pages: DataFrame,
     landmarks: tuple[int, ...] = CLOSENESS_LANDMARKS,
@@ -1184,14 +1159,16 @@ def landmark_closeness(
     """
     ids, edges = _internal_edges(pages)
     # resolved ONCE, consumed by every hop join
-    rev = edges.select(
-        F.col("dst_id").alias("src_id"), F.col("src_id").alias("dst_id")
-    ).persist()
+    rev = materialize(
+        edges.select(
+            F.col("dst_id").alias("src_id"), F.col("src_id").alias("dst_id")
+        ),
+        "persist",
+    )
     seeds = pages.filter(
         F.col("doc_id").isin(*[int(x) for x in landmarks])
     ).select(F.col("doc_id").alias("lm"), F.col("doc_id").alias("id"))
-    visited, handles = _bfs_depths_multi(rev, seeds, max_hops)
-    handles = handles + [rev]
+    visited = _bfs_depths_multi(rev, seeds, max_hops)
     agg = (
         visited.filter(F.col("depth") > 0)
         .groupBy("id")
@@ -1200,16 +1177,11 @@ def landmark_closeness(
             F.sum(F.expr("1000000L div depth")).alias("closeness_e6"),
         )
     )
-    out = agg.join(ids, agg.id == ids._nid).select(
+    return agg.join(ids, agg.id == ids._nid).select(
         "url",
         F.col("n_landmarks").cast("long").alias("n_landmarks"),
         F.col("closeness_e6").cast("long").alias("closeness_e6"),
     )
-    from .dedup import attach_plan_cache
-
-    for h in handles:
-        attach_plan_cache(out, h)
-    return out
 
 
 def _pagerank_iter(
@@ -1240,6 +1212,7 @@ def _pagerank_iter(
     )
 
 
+@scoped
 def pagerank_checkpointed(
     pages: DataFrame,
     out_dir: str,
@@ -1298,7 +1271,7 @@ def pagerank_checkpointed(
     deg = edges.groupBy("src_id").agg(
         F.count(F.lit(1)).cast("long").alias("out_deg")
     )
-    er = edges.join(deg, "src_id").persist()
+    er = materialize(edges.join(deg, "src_id"), "persist")
     nodes = ids.select(F.col("_nid").alias("id"))
     teleport = 1_000_000 - damping_ppm
     spark = pages.sparkSession
@@ -1332,7 +1305,7 @@ def pagerank_checkpointed(
             os.replace(tmp, mpath)  # atomic commit point
             ranks = spark.read.parquet(state_dir)  # lineage cut
 
-    out = (
+    return (
         ranks.join(ids, ranks.id == ids._nid)
         .join(deg, ranks.id == deg.src_id, "left")
         .select(
@@ -1341,12 +1314,9 @@ def pagerank_checkpointed(
             .alias("out_deg"),
         )
     )
-    from .dedup import attach_plan_cache
-
-    attach_plan_cache(out, er)
-    return out
 
 
+@scoped
 def trustrank(
     pages: DataFrame,
     seeds_mod: int = 64,
@@ -1385,7 +1355,7 @@ def trustrank(
     deg = edges.groupBy("src_id").agg(
         F.count(F.lit(1)).cast("long").alias("out_deg")
     )
-    er = edges.join(deg, "src_id").persist()
+    er = materialize(edges.join(deg, "src_id"), "persist")
     teleport = 1_000_000 - damping_ppm
     nodes = ids.select(F.col("_nid").alias("id"))
     seed_mass = F.when(
@@ -1404,33 +1374,27 @@ def trustrank(
             .groupBy("dst_id")
             .agg(F.sum("_c").alias("_in"))
         )
-        trust = (
+        # per-round lineage truncation — see pagerank
+        trust = materialize(
             nodes.join(contrib, nodes.id == contrib.dst_id, "left")
             .select(
                 "id",
                 (seed_mass + F.coalesce(F.col("_in"), F.lit(0)))
                 .cast("long").alias("trust_e6"),
-            )
-            # per-round lineage truncation — see pagerank
-            .localCheckpoint(eager=True)
+            ),
+            "local",
         )
-    out = (
+    return (
         trust.join(ids, trust.id == ids._nid)
         .select(
             "url", "trust_e6",
             ((F.col("id") % seeds_mod) == 0).alias("seed"),
         )
     )
-    from .dedup import attach_plan_cache
-
-    attach_plan_cache(out, er)
-    return out
 
 
-def _l1_normalize_e6(
-    nodes: DataFrame, raw: DataFrame
-) -> tuple[DataFrame, DataFrame]:
-    """(id, s) plus the materialized handle: left-join ``raw`` sums
+def _l1_normalize_e6(nodes: DataFrame, raw: DataFrame) -> DataFrame:
+    """(id, s): left-join ``raw`` sums
     onto the full node set (absent → 0) and L1-normalize to micro-units
     with integral division.  The joined relation is MATERIALIZED
     because it is consumed TWICE — by the 1-row global sum and by the
@@ -1443,19 +1407,18 @@ def _l1_normalize_e6(
     time, not execution, was the wall).  The global sum itself comes
     back via a broadcast cross join — a scalar exchange, not a data
     shuffle."""
-    full = (
+    full = materialize(
         nodes.join(raw, "id", "left")
-        .select("id", F.coalesce(F.col("_raw"), F.lit(0)).alias("_raw"))
-        .localCheckpoint(eager=True)
+        .select("id", F.coalesce(F.col("_raw"), F.lit(0)).alias("_raw")),
+        "local",
     )
     tot = full.agg(F.sum("_raw").alias("_tot"))
-    norm = full.crossJoin(F.broadcast(tot)).select(
+    return full.crossJoin(F.broadcast(tot)).select(
         "id",
         F.when(F.col("_tot") > 0,
                F.expr("(_raw * 1000000L) div _tot"))
         .otherwise(F.lit(0)).cast("long").alias("s"),
     )
-    return norm, full
 
 
 def crawl_cadence(
@@ -1950,6 +1913,7 @@ def synthetic_host_pages(
     )
 
 
+@scoped
 def host_quality_gate(
     pages: DataFrame,
     min_pages: int = 2,
@@ -1975,10 +1939,8 @@ def host_quality_gate(
     Round 6 (§2.4): the scored relation feeds BOTH the host aggregate
     and the final join — Catalyst re-executed the scoring scan (the
     full-text strip regex is the dominant per-row cost) once per
-    branch; it is now persisted (narrow: url, host, one BIGINT) and
-    released by the caller via ``release_plan_caches``.
+    branch; it is now persisted (narrow: url, host, one BIGINT).
     """
-    from .dedup import attach_plan_cache
     from .scale import maybe_broadcast, plan_size_bytes
 
     score = F.when(
@@ -1990,9 +1952,9 @@ def host_quality_gate(
             / F.length("text")
         )
     ).cast("long")
-    scored = pages.select(
-        "url", "host", score.alias("score_ppm")
-    ).persist()
+    scored = materialize(
+        pages.select("url", "host", score.alias("score_ppm")), "persist"
+    )
     verdict = scored.groupBy("host").agg(
         F.count(F.lit(1)).cast("long").alias("host_pages"),
         F.sum("score_ppm").alias("_sum"),
@@ -2008,11 +1970,10 @@ def host_quality_gate(
         & (F.col("host_avg_ppm") >= min_avg_score_ppm),
     )
     small = maybe_broadcast(verdict, bound_bytes=plan_size_bytes(pages))
-    out = scored.join(small, "host").select(
+    return scored.join(small, "host").select(
         "url", "host", "score_ppm", "host_pages", "host_avg_ppm",
         F.col("host_kept").alias("kept"),
     )
-    return attach_plan_cache(out, scored)
 
 # ---------------------------------------------------------------------------
 # SURT keys + CDX-style capture index (the Common-Crawl index build)
@@ -3648,6 +3609,7 @@ def synthetic_mirror_pages(docs: DataFrame, id_col: str = "doc_id"
     return base.unionByName(mirrored).drop("_hid", "_id")
 
 
+@scoped
 def mirror_hosts(
     pages: DataFrame,
     sketch_k: int = 16,
@@ -3690,7 +3652,7 @@ def mirror_hosts(
         .select("host", F.md5(F.col("_line")).alias("line_h"))
         .distinct()
     )
-    lines = lines.persist()
+    lines = materialize(lines, "persist")
     sizes = lines.groupBy("host").agg(
         F.count(F.lit(1)).cast("long").alias("n_lines")
     )
@@ -3739,7 +3701,7 @@ def mirror_hosts(
         .groupBy("host_a", "host_b")
         .agg(F.count(F.lit(1)).cast("long").alias("n_common"))
     )
-    out = (
+    return (
         common
         .join(sizes.select(F.col("host").alias("host_a"),
                            F.col("n_lines").alias("n_a")), "host_a")
@@ -3752,7 +3714,3 @@ def mirror_hosts(
         )
         .filter(F.col("jaccard_e6") >= threshold_e6)
     )
-    from .dedup import attach_plan_cache
-
-    attach_plan_cache(out, lines)
-    return out

@@ -33,6 +33,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..operators.dedup import materialize, scoped
+
 #: Header terminator and block terminator, per ISO 28500.
 CRLF = "\r\n"
 
@@ -45,6 +47,7 @@ def _warc_date(ts_sec) -> "F.Column":
     )
 
 
+@scoped
 def synthetic_warc_records(
     docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
 ) -> DataFrame:
@@ -88,7 +91,7 @@ def synthetic_warc_records(
     )
     if getattr(out, "isStreaming", False):
         return out
-    return out.localCheckpoint(eager=True)
+    return materialize(out, "local")
 
 
 def parse_warc(

@@ -5,19 +5,19 @@ import numpy as np
 import pytest
 
 from igtdetect_spark.config import DEFAULT_CONFIG, REF_SAMPLE_TEST
-from igtdetect_spark.flagship import get_lexicons, get_synthetic_model
+from igtdetect_spark.flagship import get_lexicons
 from igtdetect_spark.oracle.corpus import doc_from_text, make_corpus, make_doc
 from igtdetect_spark.oracle.freki import read_freki
 from igtdetect_spark.oracle.pipeline import extract_doc_features, score_doc
 
 
 @pytest.fixture(scope="module")
-def lex_bc(spark):
-    return spark.sparkContext.broadcast(get_lexicons())
+def lex_bc(spark, lexicons):
+    return spark.sparkContext.broadcast(lexicons)
 
 
 class TestFeatureParity:
-    def test_svmlight_rendering_matches_oracle(self, spark, lex_bc):
+    def test_svmlight_rendering_matches_oracle(self, spark):
         """Full widened feature checkpoint (context copies + prev_tag +
         BI-rewritten label, svmlight rendering) — Spark window operators
         vs the oracle, byte-identical, on the reference sample doc."""
@@ -34,7 +34,9 @@ class TestFeatureParity:
         want = {li.lineno: li.svmlight() for li in inst}
 
         lines = segment_freki_files(spark, [REF_SAMPLE_TEST])
-        feats = with_features(lines, lex_bc)
+        feats = with_features(
+            lines, spark.sparkContext.broadcast(get_lexicons())
+        )
         widened = widen_context_df(bi_rewrite_tags(feats))
         got = {
             r["line_no"]: r["svmlight"]
@@ -106,7 +108,7 @@ class TestDistributedTraining:
         for f in vocab:
             assert got[f] == pytest.approx(want[f], rel=1e-9), f
 
-    def test_spark_ml_model_predicts(self, spark, train_df):
+    def test_spark_ml_model_predicts(self, spark, train_df, lexicons):
         """End-to-end distributed training → ModelWeights → oracle-side
         scoring reaches high accuracy on held-out synthetic docs."""
         from igtdetect_spark.plans.train import train_spark_ml
@@ -114,7 +116,7 @@ class TestDistributedTraining:
         model = train_spark_ml(spark, train_df, max_features=2000)
         assert model.classes == ["G", "L", "M", "O", "T"]
 
-        lex = get_lexicons()
+        lex = lexicons
         ok = tot = 0
         for i in range(200, 215):
             d = make_doc(i)

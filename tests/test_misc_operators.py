@@ -10,7 +10,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from igtdetect_spark.config import DEFAULT_CONFIG, REF_SAMPLE_TEST
-from igtdetect_spark.flagship import get_lexicons, get_synthetic_model
 
 
 class TestDocsDb:
@@ -46,14 +45,14 @@ class TestDocsDb:
 
 
 class TestWordOverlap:
-    def test_fired_names_match_oracle(self):
+    def test_fired_names_match_oracle(self, lexicons):
         from igtdetect_spark.operators.segment import _plain_frame, batch_to_columns
         from igtdetect_spark.operators.vectorized import fired_name_lists
         from igtdetect_spark.oracle.corpus import doc_from_text, make_doc
         from igtdetect_spark.oracle.pipeline import extract_doc_features
 
         cfg = DEFAULT_CONFIG.with_(word_overlap=True)
-        lex = get_lexicons()
+        lex = lexicons
         text = (
             "the quick brown fox\nthe quick brown fox\nentirely different words\n"
             "\nthe quick brown fox jumps again today"
@@ -307,10 +306,10 @@ class TestWordOverlap:
         """The funnel's persisted tokenize pass must be attached to the
         returned frame and released by release_plan_caches — not left
         behind per invocation."""
-        from igtdetect_spark.entry_queries import q_curation_funnel
+        from igtdetect_spark.entry_queries import queries
         from igtdetect_spark.operators.dedup import release_plan_caches
 
-        df = q_curation_funnel(spark, "/root/testdata/sf0.001")
+        df = queries()["curation_funnel"](spark, "/root/testdata/sf0.001")
         df.count()
         assert release_plan_caches(df) >= 1
 
@@ -318,7 +317,7 @@ class TestWordOverlap:
         """The persisted shingle relation must be releasable after the
         consuming action: repeated invocations (bench best-of-2 loops,
         long-lived sessions) must not accumulate dead cache entries."""
-        from igtdetect_spark.entry_queries import q_ngram_jaccard
+        from igtdetect_spark.entry_queries import queries
         from igtdetect_spark.operators.dedup import release_plan_caches
 
         def cached_ids():
@@ -329,7 +328,7 @@ class TestWordOverlap:
 
         before = cached_ids()
         for _ in range(2):
-            df = q_ngram_jaccard(spark, "/root/testdata/sf0.001")
+            df = queries()["ngram_jaccard"](spark, "/root/testdata/sf0.001")
             df.count()
             assert cached_ids() - before, "shingle relation not persisted"
             released = release_plan_caches(df)
@@ -459,7 +458,7 @@ class TestWordOverlap:
 
 
 class TestNfold:
-    def test_nfold_runs_and_scores(self, spark):
+    def test_nfold_runs_and_scores(self, spark, lexicons):
         from igtdetect_spark.functions.labels import normalize_label_col
         from igtdetect_spark.operators.features import (
             bi_rewrite_tags,
@@ -472,7 +471,7 @@ class TestNfold:
         from igtdetect_spark.sources.pages import synthetic_pages
         from pyspark.sql import functions as F
 
-        lex_bc = spark.sparkContext.broadcast(get_lexicons())
+        lex_bc = spark.sparkContext.broadcast(lexicons)
         pages = synthetic_pages(spark, 20, html_every=0)
         lines = segment_pages(pages)
         rows = []

@@ -126,12 +126,15 @@ def test_revenue_topk_plan_broadcasts_and_bounds_the_sort(spark):
 
 
 def test_ngram_jaccard_plan_has_no_cartesian(spark):
-    from igtdetect_spark.operators.dedup import ngram_jaccard_pairs
+    from igtdetect_spark.operators.dedup import (
+        ngram_jaccard_pairs,
+        release_plan_caches,
+    )
 
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
-    plan = _plan(
-        ngram_jaccard_pairs(docs, max_df=10, materialize=False)
-    )
+    df = ngram_jaccard_pairs(docs, max_df=10)
+    plan = _plan(df)
+    release_plan_caches(df)
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
 
@@ -447,13 +450,20 @@ def test_incremental_dedup_join_is_broadcast_xor_shuffle(spark):
     """The seen-fingerprint relation is corpus-sized: broadcast under
     the bound, shuffle-hash on fingerprint above it, never cartesian —
     the same size-aware discipline as the term and boilerplate joins."""
-    from igtdetect_spark.entry_queries import q_incremental_dedup
+    from igtdetect_spark.entry_queries import queries
+    from igtdetect_spark.operators.dedup import release_plan_caches
 
-    plan_small = _plan(q_incremental_dedup(spark, SF_DIR))
+    def plan_of_query():
+        df = queries()["incremental_dedup"](spark, SF_DIR)
+        plan = _plan(df)
+        release_plan_caches(df)
+        return plan
+
+    plan_small = plan_of_query()
     assert "BroadcastHashJoin" in plan_small, plan_small
     spark.conf.set("igtdetect.broadcastBoundBytes", "0")
     try:
-        plan_big = _plan(q_incremental_dedup(spark, SF_DIR))
+        plan_big = plan_of_query()
     finally:
         spark.conf.unset("igtdetect.broadcastBoundBytes")
     assert "ShuffledHashJoin" in plan_big, plan_big

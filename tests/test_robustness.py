@@ -162,7 +162,7 @@ def test_ngram_jaccard_e6_is_multiply_first(spark):
     the pre-divided double."""
     from pyspark.sql import functions as F
 
-    from igtdetect_spark.entry_queries import q_ngram_jaccard
+    from igtdetect_spark.entry_queries import queries
     from igtdetect_spark.operators.dedup import release_plan_caches
 
     # two 6-token docs sharing exactly 3 of 5 total distinct 3-gram
@@ -178,7 +178,7 @@ def test_ngram_jaccard_e6_is_multiply_first(spark):
 
     with tempfile.TemporaryDirectory() as d:
         docs.write.parquet(f"{d}/documents.parquet")
-        df = q_ngram_jaccard(spark, d)
+        df = queries()["ngram_jaccard"](spark, d)
         rows = df.collect()
         release_plan_caches(df)
     by_pair = {(r["doc_a"], r["doc_b"]): r for r in rows}

@@ -496,7 +496,8 @@ class TestPagerank:
         assert max(r["rank_e6"] for r in got.values()) > 1_000_000
         from igtdetect_spark.operators.dedup import release_plan_caches
 
-        assert release_plan_caches(out) == 1  # persisted edge relation
+        # persisted edge relation plus one eager localCheckpoint per round
+        assert release_plan_caches(out) == 1 + 3
 
     def test_plan_no_python_no_cartesian(self, spark):
         from igtdetect_spark.operators.dedup import release_plan_caches
@@ -2147,7 +2148,8 @@ class TestTrustrank:
         nonseed = [got[i]["trust_e6"] for i in ids if i % 64]
         assert any(v > 0 for v in nonseed)
         assert any(v == 0 for v in nonseed)
-        assert release_plan_caches(out) == 1
+        # persisted edge relation plus one eager localCheckpoint per round
+        assert release_plan_caches(out) == 1 + 3
 
     def test_spam_cluster_starves(self, spark):
         # a reciprocal pair far from any seed gets trust 0 even
@@ -2931,7 +2933,6 @@ class TestClusteringCoeffs:
     """Integer clustering coefficient over the triangle kernel."""
 
     def test_clique_values(self, spark):
-        from igtdetect_spark.entry_queries import q_clustering_coeffs
         from igtdetect_spark.operators.webpages import triangle_counts
 
         # K4 + pendant (see TestTriangleCounts): clique nodes of

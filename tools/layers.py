@@ -19,8 +19,10 @@ that raises, or whose traced (rows, checksum) differs from its priming
 pass, is recorded with its error and the run goes on.
 
 The session is the benchmark's: ``perfbench.common.MASTER`` (4 cores)
-with its shuffle partitions. Writes
-``BENCH/layers_4core_<sf dir name>.json``; exits 1 if any query erred.
+with its shuffle partitions. A whole-registry run writes
+``BENCH/layers_4core_<sf dir name>.json``, a run of named queries
+``BENCH/layers_4core_<sf dir name>_subset.json`` (so it never overwrites
+the whole-registry record); exits 1 if any query erred.
 """
 
 from __future__ import annotations
@@ -105,7 +107,9 @@ def main(argv=None) -> int:
     qs = queries()
     names = args.queries or list(qs)
     sf_name = os.path.basename(os.path.normpath(args.sf_dir))
-    out = os.path.join(REPO, "BENCH", f"layers_{CORES}core_{sf_name}.json")
+    subset = "_subset" if args.queries else ""
+    out = os.path.join(
+        REPO, "BENCH", f"layers_{CORES}core_{sf_name}{subset}.json")
     work = tempfile.mkdtemp(prefix="layers-")
     recs: list[dict] = []
     t0 = time.perf_counter()
