@@ -22,38 +22,13 @@ from .operators.dedup import materialize, scoped
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    from .operators.scale import spread_small_scan
+    """The driver table ``name`` as a plain parquet scan. Spreading a
+    task-starved scan is the consuming operator's call: each operator
+    whose per-row work comes before its first exchange spreads its own
+    input (``operators/scale.py:spread_small_scan``)."""
     from .shipping import ensure_package_shipped
 
     ensure_package_shipped(spark)  # executors import the zipped package
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-    # Round 6: the driver tables are single-row-group parquet at every
-    # SF, so every map stage over a bare scan runs as ONE task no
-    # matter how many file splits the planner cuts. For the TEXT and
-    # VECTOR tables — whose consumers do expensive per-row kernel work
-    # before their first exchange — round-robin the scan across the
-    # default parallelism (a no-op past 64 MB, so cluster-scale inputs
-    # keep their native splits; operators/scale.py:spread_small_scan).
-    # The relational tables stay raw: their consumers' first operation
-    # is a keyed aggregate/window, where the spread just inserts a
-    # second full exchange before the keyed one (measured +0.6-1.6 s
-    # on span_islands_events / revenue_topk and friends).
-    if name in ("documents", "embeddings"):
-        df = spread_small_scan(df)
-    return df
-
-
-def _t_raw(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Un-spread scan for consumers where the round-robin spread was
-    measured a LOSS: the iterative graph kernels derive their edge
-    tables from doc_id alone (no text crosses any map stage) and
-    re-execute the base subtree once per iteration — each re-execution
-    would pay the exchange while the per-iteration stage barriers, not
-    scan parallelism, are the wall (hits_scores 5.6 → 8.3 s with the
-    spread, same-session A/B)."""
-    from .shipping import ensure_package_shipped
-
-    ensure_package_shipped(spark)
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
@@ -329,7 +304,7 @@ def q_json_props(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.scale import spread_small_scan
 
     # per-row JSON parse before the first exchange → spread
-    ev = spread_small_scan(_t(spark, sf_dir, "events"))
+    ev = spread_small_scan(_t(spark, sf_dir, "events"), "event_id")
     k = F.get_json_object(F.col("props"), "$.k").cast("int")
     return ev.groupBy("event_type").agg(
         F.count("*").alias("n"),
@@ -453,7 +428,7 @@ def q_label_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.scale import spread_small_scan
 
     # per-row label-grammar regexes before the first exchange → spread
-    li = spread_small_scan(_t(spark, sf_dir, "lineitem"))
+    li = spread_small_scan(_t(spark, sf_dir, "lineitem"), "l_orderkey")
     raw = F.concat(
         F.when(F.col("l_returnflag") == "R", F.lit("*")).otherwise(F.lit("")),
         F.when(F.col("l_linestatus") == "O", F.lit("B-")).otherwise(F.lit("I-")),
@@ -1044,7 +1019,7 @@ def q_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle join on term instead (see operators/scale.py)."""
     from .operators.scale import maybe_broadcast, plan_size_bytes
 
-    docs = _t_raw(spark, sf_dir, "documents")
+    docs = _t(spark, sf_dir, "documents")
     _vocab_bound = plan_size_bytes(docs)
     toks = docs.select(
         "source",
@@ -1129,7 +1104,7 @@ def q_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.sampling import stratified_sample
 
     return stratified_sample(
-        _t_raw(spark, sf_dir, "documents"), n_per_group=50, salt_parts=8
+        _t(spark, sf_dir, "documents"), n_per_group=50, salt_parts=8
     )
 
 
@@ -2021,9 +1996,7 @@ def q_mixture_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle)."""
     from .operators.sampling import mixture_resample
 
-    # _t_raw: first op is a keyed cell aggregate + broadcast verdict
-    # map — the small-scan spread just inserts an extra exchange
-    return mixture_resample(_t_raw(spark, sf_dir, "documents"))
+    return mixture_resample(_t(spark, sf_dir, "documents"))
 
 
 def _sql_mixture_resample() -> str:
@@ -2076,7 +2049,7 @@ def q_mixture_resample_recipe(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast back on."""
     from .operators.sampling import mixture_resample
 
-    docs = _t_raw(spark, sf_dir, "documents")
+    docs = _t(spark, sf_dir, "documents")
     cells = docs.select("lang", "source").distinct()
     w = Window.orderBy("lang", "source")
     rec = cells.withColumn("_r", F.row_number().over(w).cast("long"))
@@ -2197,11 +2170,16 @@ def q_unigram_familiarity(spark: SparkSession, sf_dir: str) -> DataFrame:
     under ``igtdetect.broadcastBoundBytes`` (default 64 MB); at corpus
     scales where Heaps' law breaks that bound, the planner gets a
     plain shuffle join on term (see operators/scale.py)."""
-    from .operators.scale import maybe_broadcast, plan_size_bytes
+    from .operators.scale import (
+        maybe_broadcast,
+        plan_size_bytes,
+        spread_small_scan,
+    )
 
     docs = _t(spark, sf_dir, "documents")
     _vocab_bound = plan_size_bytes(docs)
-    toks = docs.select(
+    # per-row tokenizing regexes before the first exchange → spread
+    toks = spread_small_scan(docs, "doc_id").select(
         "doc_id",
         F.explode(
             F.split(
@@ -3441,7 +3419,7 @@ def q_link_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.webpages import link_graph, synthetic_linked_pages
 
     return link_graph(
-        synthetic_linked_pages(_t_raw(spark, sf_dir, "documents"))
+        synthetic_linked_pages(_t(spark, sf_dir, "documents"))
     )
 
 
@@ -3513,7 +3491,7 @@ def q_robots_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     return robots_filter(
-        synthetic_linked_pages(_t_raw(spark, sf_dir, "documents")),
+        synthetic_linked_pages(_t(spark, sf_dir, "documents")),
         robots_rules_df(spark),
     )
 
@@ -3898,7 +3876,7 @@ def q_anchor_text(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.webpages import anchor_text_profile, synthetic_linked_pages
 
     return anchor_text_profile(
-        synthetic_linked_pages(_t_raw(spark, sf_dir, "documents"))
+        synthetic_linked_pages(_t(spark, sf_dir, "documents"))
     )
 
 
@@ -3934,7 +3912,7 @@ def q_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     bit-for-bit."""
     from .operators.webpages import pagerank, synthetic_linked_pages
 
-    return pagerank(synthetic_linked_pages(_t_raw(spark, sf_dir, "documents")))
+    return pagerank(synthetic_linked_pages(_t(spark, sf_dir, "documents")))
 
 
 def _sql_pagerank(iterations: int = 3, damping_ppm: int = 850_000) -> str:
@@ -4015,14 +3993,10 @@ def q_hll_cardinality(spark: SparkSession, sf_dir: str) -> DataFrame:
     Both SFs sit in the raw-estimate regime (≫ 2.5m distinct), so the
     estimate is pure integer math + one identical double division —
     the ESTIMATE itself is oracle-hashed, not just the registers."""
-    from .operators.scale import spread_small_scan
     from .operators.sketches import hll_cardinality
 
-    # per-row md5 BEFORE the first exchange: spread the scan (the
-    # layout-aware branch covers the big single-row-group case —
-    # 6.0 → 3.6 s at sf1.0 on a 150 MB single-group lineitem)
     return hll_cardinality(
-        spread_small_scan(_t(spark, sf_dir, "lineitem")),
+        _t(spark, sf_dir, "lineitem"),
         F.col("l_orderkey").cast("string"),
         ["l_returnflag"],
         p=8,
@@ -4089,7 +4063,7 @@ def q_host_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.webpages import host_graph, synthetic_linked_pages
 
     return host_graph(
-        synthetic_linked_pages(_t_raw(spark, sf_dir, "documents"))
+        synthetic_linked_pages(_t(spark, sf_dir, "documents"))
     )
 
 
@@ -4211,7 +4185,7 @@ def q_snapshot_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     outer join; both sides crawl-sized, nothing broadcast."""
     from .operators.webpages import snapshot_upsert
 
-    docs = _t_raw(spark, sf_dir, "documents")
+    docs = _t(spark, sf_dir, "documents")
     d = F.col("doc_id")
     h = F.md5(d.cast("string"))
     from .operators.webpages import _nib
@@ -4419,7 +4393,7 @@ def q_link_spam(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     return link_spam_scores(
-        host_graph(synthetic_linked_pages(_t_raw(spark, sf_dir, "documents")))
+        host_graph(synthetic_linked_pages(_t(spark, sf_dir, "documents")))
     )
 
 
@@ -4591,7 +4565,7 @@ def q_host_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.webpages import host_quality_gate, synthetic_host_pages
 
     return host_quality_gate(
-        synthetic_host_pages(_t_raw(spark, sf_dir, "documents"))
+        synthetic_host_pages(_t(spark, sf_dir, "documents"))
     )
 
 
@@ -5215,7 +5189,7 @@ def q_wat_export(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.webpages import synthetic_linked_pages
     from .sources.warc import parse_warc, wat_records
 
-    pages = synthetic_linked_pages(_t_raw(spark, sf_dir, "documents"))
+    pages = synthetic_linked_pages(_t(spark, sf_dir, "documents"))
     w = parse_warc(wat_records(pages), with_payload=True)
     return w.select(
         "url",
@@ -5608,7 +5582,7 @@ def q_crawl_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     return crawl_budget(
         domain_rollup(
-            synthetic_domain_pages(_t_raw(spark, sf_dir, "documents")),
+            synthetic_domain_pages(_t(spark, sf_dir, "documents")),
             public_suffix_df(spark),
         )
     )
@@ -5750,7 +5724,7 @@ def q_crawl_depth(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.webpages import crawl_depth, synthetic_linked_pages
 
     return crawl_depth(
-        synthetic_linked_pages(_t_raw(spark, sf_dir, "documents"))
+        synthetic_linked_pages(_t(spark, sf_dir, "documents"))
     )
 
 
@@ -5804,7 +5778,7 @@ def q_bowtie_classes(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.webpages import bowtie_classes, synthetic_linked_pages
 
     return bowtie_classes(
-        synthetic_linked_pages(_t_raw(spark, sf_dir, "documents"))
+        synthetic_linked_pages(_t(spark, sf_dir, "documents"))
     )
 
 
@@ -5838,7 +5812,7 @@ def q_hits_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.webpages import hits_scores, synthetic_linked_pages
 
     return hits_scores(
-        synthetic_linked_pages(_t_raw(spark, sf_dir, "documents"))
+        synthetic_linked_pages(_t(spark, sf_dir, "documents"))
     )
 
 
@@ -5903,7 +5877,7 @@ def q_trustrank(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.webpages import synthetic_linked_pages, trustrank
 
     return trustrank(
-        synthetic_linked_pages(_t_raw(spark, sf_dir, "documents"))
+        synthetic_linked_pages(_t(spark, sf_dir, "documents"))
     )
 
 
@@ -6162,7 +6136,7 @@ def q_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     return triangle_counts(
         synthetic_linked_pages(
-            _t_raw(spark, sf_dir, "documents"), targets_mod=48
+            _t(spark, sf_dir, "documents"), targets_mod=48
         )
     )
 
@@ -6231,7 +6205,7 @@ def q_spam_mass(spark: SparkSession, sf_dir: str) -> DataFrame:
         trustrank,
     )
 
-    pages = synthetic_linked_pages(_t_raw(spark, sf_dir, "documents"))
+    pages = synthetic_linked_pages(_t(spark, sf_dir, "documents"))
     # resolve the link graph ONCE for both kernels (each otherwise
     # re-runs extract_links + the two url joins — §2.4); eager
     # materialization, not lazy persist, for the same stampede/lineage
@@ -6299,7 +6273,7 @@ def q_clustering_coeffs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     tri = triangle_counts(
         synthetic_linked_pages(
-            _t_raw(spark, sf_dir, "documents"), targets_mod=48
+            _t(spark, sf_dir, "documents"), targets_mod=48
         )
     )
     per_node = tri.filter(F.col("degree") >= 2).select(
@@ -6339,7 +6313,7 @@ def q_landmark_closeness(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     return landmark_closeness(
         synthetic_linked_pages(
-            _t_raw(spark, sf_dir, "documents"), targets_mod=48
+            _t(spark, sf_dir, "documents"), targets_mod=48
         )
     )
 
@@ -6349,7 +6323,8 @@ def _sql_bfs_chain_lm(
 ) -> str:
     """Unrolled MULTI-SOURCE frontier-BFS CTE chain: like
     :func:`_sql_bfs_chain` but keyed (lm, id) so each landmark's sweep
-    stays independent — the oracle mirror of ``_bfs_depths_multi``."""
+    stays independent — the oracle mirror of ``_bfs_depths`` keyed on
+    ``lm``."""
     lms = ", ".join(str(int(x)) for x in landmarks)
     parts = [f"""{p}n0 AS (
   SELECT doc_id AS lm, doc_id AS id, CAST(0 AS BIGINT) AS depth
@@ -6547,7 +6522,7 @@ def q_dust_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.webpages import dust_rules, synthetic_param_pages
 
     return dust_rules(
-        synthetic_param_pages(_t_raw(spark, sf_dir, "documents"))
+        synthetic_param_pages(_t(spark, sf_dir, "documents"))
     )
 
 
@@ -6621,7 +6596,7 @@ def q_crawl_trap_hosts(spark: SparkSession, sf_dir: str) -> DataFrame:
         synthetic_param_pages,
     )
 
-    docs = _t_raw(spark, sf_dir, "documents")
+    docs = _t(spark, sf_dir, "documents")
     clean = docs.select(
         F.concat(
             F.lit("https://clean"),
@@ -7116,7 +7091,7 @@ def q_robots_rfc9309(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     return robots_rfc9309(
-        synthetic_linked_pages(_t_raw(spark, sf_dir, "documents")),
+        synthetic_linked_pages(_t(spark, sf_dir, "documents")),
         rfc9309_rules_df(spark),
     )
 

@@ -29,7 +29,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .scale import maybe_broadcast
+from .scale import maybe_broadcast, spread_small_scan
 from .text_analysis import WS_CLASS
 
 #: C4 (Raffel et al. 2020, §2.2) line-keep rule: terminal punctuation.
@@ -71,6 +71,7 @@ def pseudo_lines(docs: DataFrame, tokens_per_line: int = 8,
     the Spark plan and the DuckDB oracle chunk identically (1-based
     token index ``i`` → chunk ``(i-1) // k``), making every downstream
     comparison exact.  Trailing chunks may be short (< k tokens)."""
+    docs = spread_small_scan(docs, id_col)
     k = tokens_per_line
     # tokenize into a NAMED column first — slicing the tokenizer
     # expression inside the transform lambda would re-tokenize the
@@ -103,6 +104,7 @@ def paged_text(docs: DataFrame, tokens_per_line: int = 8,
     where ``(doc_id + pos) % punct_every == 0`` — gives the C4 rules a
     corpus where every gate (punctuation, word count, page size) has
     both passing and failing population.  Mirrored verbatim in SQL."""
+    docs = spread_small_scan(docs, id_col)
     k, p = tokens_per_line, punct_every
     # same named-column discipline as pseudo_lines (lambda trap)
     base = docs.select(
@@ -247,6 +249,7 @@ def pii_redact(docs: DataFrame, id_col: str = "doc_id",
     ZERO shuffles — three chained native ``regexp_replace`` calls
     inside one codegen stage; patterns are in the Java∩RE2 subset so
     Spark and DuckDB agree byte-for-byte."""
+    docs = spread_small_scan(docs, id_col)
     t = F.coalesce(F.col(text_col), F.lit(""))
     after_email = F.regexp_replace(t, EMAIL_RE, "<EMAIL>")
     after_ip = F.regexp_replace(after_email, IPV4_RE, "<IP>")
@@ -312,9 +315,7 @@ def span_corruption(
 
     import pandas as _pd
 
-    from .scale import spread_small_scan
-
-    docs = spread_small_scan(docs)
+    docs = spread_small_scan(docs, id_col)
     B, M = int(block_tokens), int(mask_nibbles)
 
     def _corrupt(batches):

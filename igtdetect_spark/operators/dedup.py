@@ -33,6 +33,8 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
+from .scale import spread_small_scan
+
 NORM_PATTERN = "[^a-z0-9 ]+"
 
 
@@ -152,9 +154,7 @@ def normalized_text(col):
 def fingerprint_docs(docs: DataFrame, id_col: str = "doc_id",
                      text_col: str = "text") -> DataFrame:
     """doc_id + md5 fingerprint of normalized text."""
-    from .scale import spread_small_scan
-
-    docs = spread_small_scan(docs)
+    docs = spread_small_scan(docs, id_col)
     return docs.select(
         F.col(id_col).alias("doc_id"),
         F.md5(normalized_text(F.col(text_col))).alias("fingerprint"),
@@ -213,9 +213,7 @@ def doc_tokens(docs: DataFrame, id_col: str = "doc_id",
     hook instead of re-running the normalize regexes per branch
     (guide §2.4 — the normalize projection alone measures ~1.5 s per
     pass at sf1.0)."""
-    from .scale import spread_small_scan
-
-    return spread_small_scan(docs).select(
+    return spread_small_scan(docs, id_col).select(
         F.col(id_col).alias("doc_id"),
         F.split(normalized_text(F.col(text_col)), " ").alias("_toks"),
     )
@@ -501,10 +499,8 @@ def minhash_band_hashes(
     # ceil: a trailing partial band still contributes (perms not evenly
     # divisible by band_size must not be silently dropped)
     n_bands = -(-n_perms // band_size)
-    from .scale import spread_small_scan
-
     if tokens is None:
-        docs = spread_small_scan(docs)
+        docs = spread_small_scan(docs, id_col)
 
     if scheme == "affine":
         # Round 6: the shingle→hash→16-permutation→band chain runs as
@@ -709,9 +705,7 @@ def simhash_docs(docs: DataFrame, id_col: str = "doc_id",
     """(doc_id, simhash BIGINT): 64-bit SimHash over normalized tokens,
     md5-based token hashes (deterministic across runs/engines). One
     vectorized Arrow kernel (``simhash_batch``) per batch."""
-    from .scale import spread_small_scan
-
-    docs = spread_small_scan(docs)
+    docs = spread_small_scan(docs, id_col)
 
     @pandas_udf("long")
     def _simhash(texts: pd.Series) -> pd.Series:

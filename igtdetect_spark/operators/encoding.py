@@ -36,6 +36,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .scale import spread_small_scan
+
 #: UTF-8 byte-order mark.
 UTF8_BOM = bytes([0xEF, 0xBB, 0xBF])
 
@@ -203,6 +205,7 @@ def synthetic_encoded_pages(
     """
     from .webpages import _nib
 
+    docs = spread_small_scan(docs, id_col)
     h = F.md5(F.col(id_col).cast("string"))
     m = _nib(h, 11) % 8
     ident = F.col(id_col).cast("string")

@@ -36,12 +36,14 @@ from pyspark.sql import functions as F
 
 from .cleaning import tokenized
 from .dedup import materialize, scoped
+from .scale import spread_small_scan
 
 
 def term_frequencies(docs: DataFrame) -> DataFrame:
     """(term, doc_id, tf) — per-document term counts over whitespace
     tokens (the cleaning family's tokenizer, so every index query
     shares one congruent token definition with the oracles)."""
+    docs = spread_small_scan(docs, "doc_id")
     return (
         tokenized(docs)
         .select("doc_id", F.explode("tk").alias("term"))

@@ -35,6 +35,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from .scale import spread_small_scan
+
 
 def page_lines(pages: DataFrame, text_col: str = "layout_text") -> DataFrame:
     """(doc_id, line_no, line): the page's fixed-width text exploded
@@ -149,6 +151,7 @@ def synthetic_layout_pages(
     has an all-blank interior gutter ending at column 20 whose start
     varies with the longest token. Documents with no tokens produce no
     page."""
+    docs = spread_small_scan(docs, id_col)
     # The oracle spells RE2's \s, which EXCLUDES \x0b (vertical tab);
     # Java's \s includes it, so the class must be written out or the
     # two engines tokenize a \x0b-bearing document differently (found

@@ -33,6 +33,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from .scale import spread_small_scan
+
 MEDIA_SCHEMA = StructType(
     [
         StructField("media_id", StringType(), False),
@@ -116,6 +118,7 @@ def extract_media_features(
 ) -> DataFrame:
     """Batch decode + feature-extract: Arrow batches of binary payloads →
     (n_bytes, sha, 16-dim embedding). One narrow mapInPandas."""
+    media = spread_small_scan(media, "media_id")
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:

@@ -15,6 +15,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from .dedup import materialize, scoped
+from .scale import spread_small_scan
 
 
 def stratified_sample(
@@ -197,9 +198,7 @@ def dsir_weights(
 
     from pyspark.sql.functions import pandas_udf
 
-    from .scale import spread_small_scan
-
-    docs = spread_small_scan(docs)
+    docs = spread_small_scan(docs, id_col)
 
     @pandas_udf("array<int>")
     def _buckets(texts: pd.Series) -> pd.Series:
@@ -235,10 +234,15 @@ def dsir_weights(
         target_pred.cast("boolean").alias("_is_target"),
         _buckets(F.col(text_col)).alias("_bk"),
     )
+    # explode_outer + a filter on the generated column, not explode:
+    # for an inner explode Catalyst infers ``size(_bk) > 0`` and pushes
+    # it below the spread exchange, which evaluates ``_buckets`` a
+    # second time on the one unspread scan task. A filter on the
+    # generated column cannot pass the Generate.
     grams = tokenized.select(
         "doc_id", "_is_target",
-        F.explode("_bk").alias("bucket"),
-    )
+        F.explode_outer("_bk").alias("bucket"),
+    ).filter(F.col("bucket").isNotNull())
     # Project the gram stream down to its 17-byte decision columns and
     # persist: both consumers (per-bucket stats, per-doc weighting)
     # derive from the SAME md5 gram scan, which previously re-ran once
@@ -313,6 +317,7 @@ def sequence_pack(
     shard, and offset each shard's packs by the previous shards' total
     token count (a 2-phase scan; the per-shard totals relation is tiny).
     """
+    docs = spread_small_scan(docs, id_col)
     L = chunk_tokens
     toks = F.split(
         F.trim(F.regexp_replace(F.coalesce(F.col(text_col), F.lit("")),
@@ -445,9 +450,7 @@ def budget_select(
 
     Output: (doc_id, n_tokens, score_e6) of admitted documents.
     """
-    from .scale import spread_small_scan
-
-    docs = spread_small_scan(docs)
+    docs = spread_small_scan(docs, id_col)
     tk = F.filter(
         F.split(
             F.trim(F.regexp_replace(

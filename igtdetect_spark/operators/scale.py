@@ -70,7 +70,7 @@ def broadcast_bound_bytes(spark) -> int:
 
 
 #: Upper bound (bytes, Catalyst scan estimate) under which
-#: :func:`spread_small_scan` round-robins a scan across the default
+#: :func:`spread_small_scan` hash-partitions a scan across the default
 #: parallelism.  64 MB: an input this small is at most a handful of
 #: parquet row groups — often ONE, which makes every downstream map
 #: stage a single task no matter how many file splits the planner
@@ -90,20 +90,26 @@ _SPREAD_CONF_KEY = "igtdetect.spreadSmallScanBytes"
 #: only when the file COUNT is already below the parallelism — at
 #: cluster scale inputs are many files, so the gate skips without
 #: opening anything.  Conf ``igtdetect.spreadStarvedScanBytes``,
-#: 0 disables; the 1 GiB default keeps the round-robin exchange
-#: bounded.
+#: 0 disables; the 1 GiB default keeps the hash exchange bounded.
 DEFAULT_STARVED_BOUND = 1024 * 1024 * 1024
 
 _STARVED_CONF_KEY = "igtdetect.spreadStarvedScanBytes"
 
 
-def spread_small_scan(df: DataFrame) -> DataFrame:
-    """Spread a task-starved scan across ``defaultParallelism`` via a
-    hash exchange on the leading (id) column.  Fires when the scan
-    estimate is under ``igtdetect.spreadSmallScanBytes`` (0 disables),
-    or — the layout-aware branch — when a larger input's parquet
-    footers show fewer row groups than half the cores (under
+def spread_small_scan(df: DataFrame, key) -> DataFrame:
+    """Spread a task-starved input across ``defaultParallelism`` via a
+    hash exchange on ``key`` (a column name, or a Column for a derived
+    key).  Fires when the plan estimate is under
+    ``igtdetect.spreadSmallScanBytes`` (0 disables), or — the
+    layout-aware branch — when a larger input's parquet footers show
+    fewer row groups than half the cores (under
     ``igtdetect.spreadStarvedScanBytes``).
+
+    Called at the entry of each operator whose per-row work (a Python
+    UDF, ``mapInPandas``, regex / md5 / parsing over text) comes before
+    its first exchange; scans themselves stay raw, so an operator whose
+    first step is keyed (aggregate, window, join) pays no extra
+    exchange.
 
     Why: a single-row-group parquet input (the driver tables, at EVERY
     SF) gives the vectorized reader exactly one non-empty task no
@@ -112,21 +118,20 @@ def spread_small_scan(df: DataFrame) -> DataFrame:
     Arrow-kernel operators at bench scale, 2-4× on the 150 MB
     relational scans).  The exchange moves only the pruned columns
     (Catalyst inserts the pruning Project below the repartition) and
-    costs far less than the recovered parallelism.  HASH on the id
-    column, not round-robin: round-robin sorts each input partition
-    first for retry determinism (sortBeforeRepartition) and that sort
-    runs on the one starved task; the id-hash exchange is
-    value-deterministic with no sort.  Row order is irrelevant to
-    every consumer here (aggregates, hash-compared outputs).
-    Streaming frames, natively-parallel and disabled inputs pass
-    through untouched."""
+    costs far less than the recovered parallelism.  HASH, not
+    round-robin: round-robin sorts each input partition first for
+    retry determinism (``spark.sql.execution.sortBeforeRepartition``)
+    and that sort runs on the one starved task — pure overhead at every
+    size (measured 4.9 s vs 1.5 s on a 6M-row file); the hash exchange
+    is value-deterministic with no sort, so ``key`` should be a
+    near-unique id column.  Row order is irrelevant to every consumer
+    here (aggregates, hash-compared outputs).  Streaming frames,
+    natively-parallel and disabled inputs, and frames that already end
+    in a repartition pass through untouched."""
     if getattr(df, "isStreaming", False):
         return df
     spark = df.sparkSession
     try:
-        # idempotence: a frame that IS already a repartition (e.g. a
-        # source helper spread it before an operator-level call) must
-        # not pay a second exchange
         if df._jdf.queryExecution().logical().getClass() \
                 .getSimpleName() in ("Repartition",
                                      "RepartitionByExpression"):
@@ -146,25 +151,14 @@ def spread_small_scan(df: DataFrame) -> DataFrame:
         return df
     par = spark.sparkContext.defaultParallelism
     if size <= bound:
-        # HASH on the leading column, not round-robin: round-robin
-        # first SORTS each input partition for retry determinism
-        # (spark.sql.execution.sortBeforeRepartition), and on a
-        # single-row-group input that sort runs on the one starved
-        # task — pure overhead at every size (measured 4.9 s vs 1.5 s
-        # on a 6M-row file; ~0.3 s even at 600k).  The hash exchange
-        # is value-deterministic with no sort, and the driver tables
-        # all lead with a near-unique id column.
-        return df.repartition(par, F.col(df.columns[0]))
-    # Layout-aware branch (round 6, session 2): over-bound inputs can
-    # still be task-starved — the driver tables are SINGLE-ROW-GROUP
-    # parquet at every SF, and a row group is the vectorized reader's
-    # atomic unit, so a 150 MB single-group file runs every map stage
-    # as one task no matter how many splits the planner cuts.  Decide
-    # from the physical layout: when the input is few files (cheap
-    # gate — cluster-scale inputs are many files and skip here without
-    # touching a footer) AND their total row-group count is under half
-    # the parallelism, the scan cannot feed the cores and the
-    # round-robin exchange pays for itself.
+        return df.repartition(par, key)
+    # Layout-aware branch: over-bound inputs can still be task-starved
+    # — a row group is the vectorized reader's atomic unit, so a
+    # 150 MB single-group file runs every map stage as one task.
+    # Decide from the physical layout: when the input is few files
+    # (cheap gate — cluster-scale inputs are many files and skip here
+    # without touching a footer) AND their total row-group count is
+    # under half the parallelism, the exchange pays for itself.
     try:
         raw = spark.conf.get(_STARVED_CONF_KEY)
     except Exception:
@@ -192,11 +186,7 @@ def spread_small_scan(df: DataFrame) -> DataFrame:
     except Exception:
         return df
     if groups < max(2, par // 2):
-        # same hash-on-leading-column exchange as the small branch
-        # (see above); a pathological low-cardinality leading column
-        # still spreads across min(par, n_distinct) tasks and the
-        # conf can disable the branch outright
-        return df.repartition(par, F.col(df.columns[0]))
+        return df.repartition(par, key)
     return df
 
 

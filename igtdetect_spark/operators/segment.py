@@ -30,6 +30,7 @@ from pyspark.sql import functions as F
 from ..oracle.freki import FrekiDoc, parse_freki, safe_mode
 from ..segmentation import DEFAULT_FONT, batch_page_texts, segment_batch
 from .schema import LINES_SCHEMA
+from .scale import spread_small_scan
 
 _COLS = [f.name for f in LINES_SCHEMA.fields]
 
@@ -84,7 +85,7 @@ def _plain_frame(cols: dict[str, list]) -> pd.DataFrame:
 
 def segment_pages(pages: DataFrame, html_main_content: bool = False) -> DataFrame:
     """pages(url, warc_ts, html, text, lang) → lines DataFrame."""
-
+    pages = spread_small_scan(pages, "url")
     fid, fsize = DEFAULT_FONT
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:

@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from .dedup import materialize, scoped
+from .scale import spread_small_scan
 
 
 def _dot(a, b):
@@ -45,6 +46,7 @@ def cosine_topk(
     """(query_id, neighbor_id, rank, cos_sim_e6): exact top-k cosine
     neighbors for each query id (self excluded). Similarity is emitted as
     floor(sim·1e6) so cross-engine float comparison is stable."""
+    embeddings = spread_small_scan(embeddings, id_col)
     emb = embeddings.select(
         F.col(id_col).alias("neighbor_id"),
         F.col(vec_col).cast("array<double>").alias("_v"),
@@ -98,7 +100,7 @@ def hard_negatives(
     Output: (query_id, query_label, neighbor_id, neighbor_label,
     rank, cos_sim_e6).
     """
-    emb = embeddings.select(
+    emb = spread_small_scan(embeddings, id_col).select(
         F.col(id_col).alias("neighbor_id"),
         F.col(label_col).cast("long").alias("neighbor_label"),
         F.col(vec_col).cast("array<double>").alias("_v"),
@@ -170,6 +172,7 @@ def lsh_bucketed_ann(
     bucket, then exact cosine rescoring. Same output shape as
     ``cosine_topk`` (ranks may differ where the bucket pruned a true
     neighbor — that's the approximation)."""
+    embeddings = spread_small_scan(embeddings, id_col)
     buckets = hyperplane_buckets(
         embeddings, n_planes, seed, dim, id_col, vec_col
     )
@@ -272,10 +275,8 @@ def embedding_neardup_pairs(
     sized for ~10⁹ vectors; small corpora should drop band_planes so
     buckets stay populated (the graded query uses 4×4). The threshold
     compares floor(sim·1e6) so the cut is bit-stable across engines."""
-    from .scale import spread_small_scan
-
     embeddings = spread_small_scan(
-        embeddings.filter(F.col(vec_col).isNotNull())
+        embeddings.filter(F.col(vec_col).isNotNull()), id_col
     )
     thr_e6 = int(threshold * 1e6)
     rng = np.random.RandomState(seed)
@@ -464,6 +465,7 @@ def ivf_ann(
     The scale shape: list assignment is a narrow map; the search join
     fans each query to n_probe list-partitions instead of the full
     corpus — candidate volume drops ~n_lists/n_probe-fold."""
+    embeddings = spread_small_scan(embeddings, id_col)
     spark = embeddings.sparkSession
     C = (
         centroids
@@ -593,9 +595,7 @@ def semdedup(
         )
     )
     Cd = np.asarray(C, dtype=np.float64)
-    from .scale import spread_small_scan
-
-    embeddings = spread_small_scan(embeddings)
+    embeddings = spread_small_scan(embeddings, id_col)
 
     # Assignment as one vectorized numpy kernel per batch instead of a
     # transform-over-centroids of interpreted aggregate/zip_with folds

@@ -31,6 +31,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .scale import spread_small_scan
+
 #: Hash width: 12 hex chars of md5 → 48 bits, exact in BIGINT/double.
 HASH_BITS = 48
 
@@ -146,7 +148,12 @@ def hll_cardinality(
 ) -> DataFrame:
     """Sketch vs truth in one relation: (group..., hll_est,
     exact_distinct, err_ppm).  The exact count is the graded
-    ground-truth column; at corpus scale one ships only the sketch."""
+    ground-truth column; at corpus scale one ships only the sketch.
+    The per-row md5 runs before the first exchange, so a task-starved
+    input is spread on ``key`` first (the layout-aware branch covers a
+    big single-row-group input: 6.0 → 3.6 s at sf1.0 on a 150 MB
+    single-group lineitem)."""
+    df = spread_small_scan(df, key)
     est = hll_estimate(hll_registers(df, key, group_cols, p), group_cols, p)
     exact = df.groupBy(*group_cols).agg(
         F.countDistinct(key).alias("exact_distinct")

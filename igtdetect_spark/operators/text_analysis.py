@@ -13,6 +13,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
 from .dedup import materialize, normalized_text, scoped
+from .scale import spread_small_scan
 
 # Deterministic English stopword list (inlined — heuristic language-ID /
 # quality cue; not the reference wordlists, which stay the IGT features').
@@ -43,6 +44,7 @@ def token_stats(docs: DataFrame, id_col: str = "doc_id",
     their oracle (``floor(sum·1e6/n)`` ≠ ``floor((sum/n)·1e6)`` in
     IEEE doubles: 41/10 → 4099999 vs 4100000 — the round-6 sf0.1
     token_stats hash miss)."""
+    docs = spread_small_scan(docs, id_col)
     toks = _tokens(F.col(text_col))
     sum_len = F.aggregate(toks, F.lit(0), lambda acc, x: acc + F.length(x))
     return docs.select(
@@ -83,9 +85,7 @@ def quality_scores(docs: DataFrame, id_col: str = "doc_id",
     import math
     import re as _re
 
-    from .scale import spread_small_scan
-
-    docs = spread_small_scan(docs)
+    docs = spread_small_scan(docs, id_col)
     sw_set = frozenset(EN_STOPWORDS)
 
     @pandas_udf(
@@ -146,6 +146,7 @@ def lang_id(docs: DataFrame, id_col: str = "doc_id",
     """(doc_id, sw_hits, pred_lang): heuristic language-ID — English
     stopword coverage + script detection (the n-gram-scoring shape of the
     reference's wordlist features, over web text)."""
+    docs = spread_small_scan(docs, id_col)
     t = F.col(text_col)
     lower_toks = _tokens(F.lower(t))
     sw = F.array([F.lit(w) for w in EN_STOPWORDS])
@@ -185,6 +186,7 @@ def subword_token_stats(docs: DataFrame, id_col: str = "doc_id",
     ``regexp_extract_all`` (JVM, codegen) over lowercased text. The
     subwords-per-whitespace-token ratio is the standard "fertility" cost
     signal for training-data budgeting. NULL text behaves as empty."""
+    docs = spread_small_scan(docs, id_col)
     t = F.lower(F.coalesce(F.col(text_col), F.lit("")))
     pieces = F.regexp_extract_all(t, F.lit(BPE_SPLIT_RE), F.lit(0))
     ws = _tokens(t)
@@ -288,7 +290,8 @@ def winnowing_fingerprints(
     (guarantees a shared fingerprint for any match ≥ k+window-1 chars),
     signature = md5 of the sorted distinct selected hashes. Pure integer
     math → the DuckDB oracle reproduces it bit-for-bit. One narrow Arrow
-    kernel per doc (``winnow_batch``), zero shuffles."""
+    kernel per doc (``winnow_batch``) after the spread."""
+    docs = spread_small_scan(docs, id_col)
 
     @pandas_udf(
         "struct<n_grams: long, n_selected: long, winnow_sig: string>"
@@ -362,9 +365,7 @@ def gopher_filters(
     import math
     import re as _re
 
-    from .scale import spread_small_scan
-
-    docs = spread_small_scan(docs)
+    docs = spread_small_scan(docs, id_col)
     mw, xw = int(min_words), int(max_words)
 
     @pandas_udf(
@@ -526,9 +527,7 @@ def repetition_ratios(
     import math
     import re as _re
 
-    from .scale import spread_small_scan
-
-    docs = spread_small_scan(docs)
+    docs = spread_small_scan(docs, id_col)
 
     @pandas_udf(
         "struct<n_lines:int,dup_line_frac_e6:bigint,"
@@ -655,11 +654,11 @@ def bigram_lm_scores(
     production run would set them from measured NLL terciles the same
     way CCNet does with its Wikipedia LM.
     """
-    from .scale import maybe_broadcast, plan_size_bytes, spread_small_scan
+    from .scale import maybe_broadcast, plan_size_bytes
 
     if corpus_bound_bytes is None:
         corpus_bound_bytes = 2 * plan_size_bytes(docs)
-    docs = spread_small_scan(docs)
+    docs = spread_small_scan(docs, id_col)
     tk = F.filter(
         _tokens(F.lower(F.coalesce(F.col(text_col), F.lit("")))),
         lambda w: F.length(w) > 0,
@@ -778,11 +777,11 @@ def nb_domain_scores(
     """
     from pyspark.sql import Window
 
-    from .scale import maybe_broadcast, plan_size_bytes, spread_small_scan
+    from .scale import maybe_broadcast, plan_size_bytes
 
     if corpus_bound_bytes is None:
         corpus_bound_bytes = plan_size_bytes(docs)
-    docs = spread_small_scan(docs)
+    docs = spread_small_scan(docs, id_col)
     tk = F.filter(
         _tokens(F.lower(F.coalesce(F.col(text_col), F.lit("")))),
         lambda w: F.length(w) > 0,
@@ -918,6 +917,7 @@ def blocklist_filter(
 
     Output: (doc_id, n_bad, bad_words, kept).
     """
+    docs = spread_small_scan(docs, id_col)
     bl = F.array(*[F.lit(w) for w in blocklist])
     toks = docs.select(
         F.col(id_col).alias("doc_id"),

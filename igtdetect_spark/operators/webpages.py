@@ -35,6 +35,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .dedup import materialize, scoped
+from .scale import spread_small_scan
 
 #: Query parameters dropped during canonicalization: tracking junk that
 #: never changes the resource (Google Analytics ``utm_*``, Facebook's
@@ -65,6 +66,7 @@ def synthetic_page_urls(
     * ``fetch_ts_sec`` strictly distinct per doc (7919 is coprime to
       the modulus span), so "latest fetch" is well-defined.
     """
+    docs = spread_small_scan(docs, id_col)
     h = F.md5(F.col(id_col).cast("string"))
     path_id = (_nib(h, 5) * 16 + _nib(h, 6)) % 40
     scheme = F.when(_nib(h, 3) % 2 == 0, F.lit("http")).otherwise(
@@ -394,8 +396,9 @@ def synthetic_html_pages(
     exactly ONE block in the page (real pages go through the kernels
     unsanitized — hostile inputs are pytest-covered on the kernel
     directly; this builder's job is a *provable* expected value on both
-    engines). Zero shuffles: one projection over the scan.
+    engines). One projection over the (spread) scan.
     """
+    docs = spread_small_scan(docs, id_col)
     h = F.md5(F.col(id_col).cast("string"))
     esc = F.coalesce(F.col(text_col), F.lit(""))
     for bad, good in (
@@ -732,12 +735,9 @@ def pagerank(
     # :func:`_resolve_edges` — a composition running several kernels
     # over the same pages resolves (and materializes) the links once
     ids, edges = graph if graph is not None else _resolve_edges(pages)
-    deg = edges.groupBy("src_id").agg(
-        F.count(F.lit(1)).cast("long").alias("out_deg")
-    )
-    er = materialize(edges.join(deg, "src_id"), "persist")
+    er, deg = _degree_join(edges)
     nodes = ids.select(F.col("_nid").alias("id"))
-    teleport = 1_000_000 - damping_ppm
+    teleport = F.lit(1_000_000 - damping_ppm)
     ranks = nodes.select("id", F.lit(1_000_000).cast("long").alias("rank_e6"))
     for _ in range(iterations):
         # eager localCheckpoint per round (round 6): the rank chain's
@@ -774,6 +774,17 @@ def _resolve_edges(pages: DataFrame) -> tuple[DataFrame, DataFrame]:
         .select("src_id", "dst_id")
     )
     return ids, edges
+
+
+def _degree_join(edges: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """(er, deg): the per-source out-degree relation ``deg`` and the
+    (src_id, dst_id, out_deg) relation ``er`` every power iteration
+    joins, persisted once (:func:`pagerank`, :func:`trustrank`,
+    :func:`pagerank_checkpointed`)."""
+    deg = edges.groupBy("src_id").agg(
+        F.count(F.lit(1)).cast("long").alias("out_deg")
+    )
+    return materialize(edges.join(deg, "src_id"), "persist"), deg
 
 
 def _internal_edges(pages: DataFrame) -> tuple[DataFrame, DataFrame]:
@@ -829,12 +840,17 @@ def crawl_depth(
 
 
 def _bfs_depths(
-    edges: DataFrame, seeds: DataFrame, max_hops: int
+    edges: DataFrame, seeds: DataFrame, max_hops: int,
+    keys: tuple[str, ...] = (),
 ) -> DataFrame:
     """Shared frontier-BFS kernel (the hop loop of :func:`crawl_depth`,
-    reused by :func:`bowtie_classes` on both edge directions).
-    ``edges`` is (src_id, dst_id), ``seeds`` is (id).  Returns the
-    visited (id, depth) relation.
+    reused by :func:`bowtie_classes` on both edge directions and by
+    :func:`landmark_closeness`).  ``edges`` is (src_id, dst_id),
+    ``seeds`` is (*keys, id).  Returns the visited (*keys, id, depth)
+    relation.  With ``keys`` (e.g. a landmark id) the frontier and
+    visited relations are keyed ``(*keys, id)``, so the BFS of every key
+    value runs independently inside ONE set of joins, not as one job
+    per key value.
 
     Round 6: each hop's frontier is an EAGER ``localCheckpoint``, not a
     lazy persist.  A persisted frontier caches DATA but not PLAN: hop
@@ -848,19 +864,20 @@ def _bfs_depths(
     ``connected_components``: on a real cluster prefer reliable
     checkpoints for deep crawls."""
     frontier = materialize(
-        seeds.select("id", F.lit(0).cast("long").alias("depth")), "local"
+        seeds.select(*keys, "id", F.lit(0).cast("long").alias("depth")),
+        "local",
     )
     visited = frontier
     for hop in range(1, max_hops + 1):
         frontier = materialize(
             edges.join(
-                frontier.select(F.col("id").alias("src_id")),
+                frontier.select(*keys, F.col("id").alias("src_id")),
                 "src_id",
             )
-            .select(F.col("dst_id").alias("id"))
+            .select(*keys, F.col("dst_id").alias("id"))
             .distinct()
-            .join(visited.select("id"), "id", "left_anti")
-            .select("id", F.lit(hop).cast("long").alias("depth")),
+            .join(visited.select(*keys, "id"), [*keys, "id"], "left_anti")
+            .select(*keys, "id", F.lit(hop).cast("long").alias("depth")),
             "local",
         )
         visited = visited.unionByName(frontier)
@@ -1086,38 +1103,6 @@ def triangle_counts(pages: DataFrame) -> DataFrame:
     )
 
 
-def _bfs_depths_multi(
-    edges: DataFrame, seeds: DataFrame, max_hops: int
-) -> DataFrame:
-    """Multi-source variant of :func:`_bfs_depths`: the frontier and
-    visited relations are keyed ``(lm, id)`` so each landmark's BFS
-    runs independently inside ONE set of joins (the landmark id rides
-    along as a grouping column — |landmarks| × the single-source work,
-    not |landmarks| sequential jobs).  ``seeds`` is (lm, id).
-
-    Round 6: per-hop eager ``localCheckpoint`` instead of lazy persist
-    — see :func:`_bfs_depths` (plan lineage, not data, was the wall)."""
-    frontier = materialize(
-        seeds.select("lm", "id", F.lit(0).cast("long").alias("depth")),
-        "local",
-    )
-    visited = frontier
-    for hop in range(1, max_hops + 1):
-        frontier = materialize(
-            edges.join(
-                frontier.select("lm", F.col("id").alias("src_id")),
-                "src_id",
-            )
-            .select("lm", F.col("dst_id").alias("id"))
-            .distinct()
-            .join(visited.select("lm", "id"), ["lm", "id"], "left_anti")
-            .select("lm", "id", F.lit(hop).cast("long").alias("depth")),
-            "local",
-        )
-        visited = visited.unionByName(frontier)
-    return visited
-
-
 #: Fixed landmark page ids for :func:`landmark_closeness` — a
 #: CONSTANT-SIZE set by construction (a real deployment samples a few
 #: hundred well-connected pages once), unlike a ``doc_id % k`` seed
@@ -1148,10 +1133,10 @@ def landmark_closeness(
     a crawl planner wants anyway.
 
     Scale shape: ONE multi-source BFS over the reversed edge relation
-    (:func:`_bfs_depths_multi` — landmark id rides as a key column, so
-    |landmarks| sweeps share each hop's single shuffle join); state is
-    (lm, id, depth) with |landmarks| constant by construction. The
-    final fold is one hash aggregate on ``id``.
+    (:func:`_bfs_depths` with ``keys=("lm",)`` — landmark id rides as a
+    key column, so |landmarks| sweeps share each hop's single shuffle
+    join); state is (lm, id, depth) with |landmarks| constant by
+    construction. The final fold is one hash aggregate on ``id``.
 
     Output: (url, n_landmarks, closeness_e6) for pages that reach ≥1
     landmark within the horizon (unreached pages are absent — the
@@ -1168,7 +1153,7 @@ def landmark_closeness(
     seeds = pages.filter(
         F.col("doc_id").isin(*[int(x) for x in landmarks])
     ).select(F.col("doc_id").alias("lm"), F.col("doc_id").alias("id"))
-    visited = _bfs_depths_multi(rev, seeds, max_hops)
+    visited = _bfs_depths(rev, seeds, max_hops, keys=("lm",))
     agg = (
         visited.filter(F.col("depth") > 0)
         .groupBy("id")
@@ -1186,11 +1171,13 @@ def landmark_closeness(
 
 def _pagerank_iter(
     er: DataFrame, nodes: DataFrame, ranks: DataFrame,
-    damping_ppm: int, teleport: int,
+    damping_ppm: int, restart,
 ) -> DataFrame:
-    """One power iteration: shuffle join of the (src, dst, out_deg)
-    relation against the rank state, hash aggregate on the receiver,
-    teleport re-added on the full node set."""
+    """One power iteration over the (id, rank_e6) state: shuffle join of
+    the (src, dst, out_deg) relation against the rank state, hash
+    aggregate on the receiver, ``restart`` mass re-added on the full
+    node set — a Column over ``id``: the uniform teleport for
+    :func:`pagerank`, the seed mass for :func:`trustrank`."""
     contrib = (
         er.join(ranks, er.src_id == ranks.id)
         .select(
@@ -1206,7 +1193,7 @@ def _pagerank_iter(
         nodes.join(contrib, nodes.id == contrib.dst_id, "left")
         .select(
             "id",
-            (F.lit(teleport) + F.coalesce(F.col("_in"), F.lit(0)))
+            (restart + F.coalesce(F.col("_in"), F.lit(0)))
             .cast("long").alias("rank_e6"),
         )
     )
@@ -1259,21 +1246,10 @@ def pagerank_checkpointed(
         if int(d.rsplit("=", 1)[1]) not in committed:
             shutil.rmtree(d)  # orphan of a crash: never committed
 
-    ids = pages.select(F.col("url"), F.col("doc_id").alias("_nid"))
-    raw = extract_links(pages)
-    edges = (
-        raw.join(ids.select(F.col("url").alias("src_url"),
-                            F.col("_nid").alias("src_id")), "src_url")
-        .join(ids.select(F.col("url").alias("dst_url"),
-                         F.col("_nid").alias("dst_id")), "dst_url")
-        .select("src_id", "dst_id")
-    )
-    deg = edges.groupBy("src_id").agg(
-        F.count(F.lit(1)).cast("long").alias("out_deg")
-    )
-    er = materialize(edges.join(deg, "src_id"), "persist")
+    ids, edges = _resolve_edges(pages)
+    er, deg = _degree_join(edges)
     nodes = ids.select(F.col("_nid").alias("id"))
-    teleport = 1_000_000 - damping_ppm
+    teleport = F.lit(1_000_000 - damping_ppm)
     spark = pages.sparkSession
 
     start = max((i for i in committed if i <= iterations), default=0)
@@ -1352,42 +1328,22 @@ def trustrank(
         ids, edges = graph[0], graph[1].distinct()
     else:
         ids, edges = _internal_edges(pages)
-    deg = edges.groupBy("src_id").agg(
-        F.count(F.lit(1)).cast("long").alias("out_deg")
-    )
-    er = materialize(edges.join(deg, "src_id"), "persist")
-    teleport = 1_000_000 - damping_ppm
+    er, _ = _degree_join(edges)
     nodes = ids.select(F.col("_nid").alias("id"))
     seed_mass = F.when(
-        (F.col("id") % seeds_mod) == 0, F.lit(teleport)
+        (F.col("id") % seeds_mod) == 0, F.lit(1_000_000 - damping_ppm)
     ).otherwise(F.lit(0)).cast("long")
-    trust = nodes.select("id", seed_mass.alias("trust_e6"))
+    trust = nodes.select("id", seed_mass.alias("rank_e6"))
     for _ in range(iterations):
-        contrib = (
-            er.join(trust, er.src_id == trust.id)
-            .select(
-                F.col("dst_id"),
-                F.expr(
-                    f"(trust_e6 * {damping_ppm}L) div (1000000L * out_deg)"
-                ).alias("_c"),
-            )
-            .groupBy("dst_id")
-            .agg(F.sum("_c").alias("_in"))
-        )
         # per-round lineage truncation — see pagerank
         trust = materialize(
-            nodes.join(contrib, nodes.id == contrib.dst_id, "left")
-            .select(
-                "id",
-                (seed_mass + F.coalesce(F.col("_in"), F.lit(0)))
-                .cast("long").alias("trust_e6"),
-            ),
+            _pagerank_iter(er, nodes, trust, damping_ppm, seed_mass),
             "local",
         )
     return (
         trust.join(ids, trust.id == ids._nid)
         .select(
-            "url", "trust_e6",
+            "url", F.col("rank_e6").alias("trust_e6"),
             ((F.col("id") % seeds_mod) == 0).alias("seed"),
         )
     )
@@ -2073,6 +2029,7 @@ def synthetic_sitemaps(
     (independent md5 nibbles), so every parser branch has firing and
     non-firing population — the real-web raggedness the parser must
     survive. Entry locs reuse the 4-host page-URL scheme."""
+    docs = spread_small_scan(docs, id_col)
     h = F.md5(F.col(id_col).cast("string"))
     k = 1 + _nib(h, 10) % 3
 
@@ -2348,6 +2305,7 @@ def synthetic_host_lined_pages(
     from the document's own text (unique per page).  ``concat_ws``
     skips the NULL promo on both engines, so line numbering stays
     dense."""
+    docs = spread_small_scan(docs, "doc_id")
     d = F.col("doc_id")
     host = F.concat(
         F.lit("h"), (d % n_hosts).cast("string"), F.lit(".example.org")
@@ -2692,6 +2650,7 @@ def synthetic_soft404_pages(
     host's constant custom-error body, identical across the host's
     clones) — all served as HTTP 200, which is exactly the soft-404
     problem."""
+    docs = spread_small_scan(docs, "doc_id")
     d = F.col("doc_id")
     host = F.concat(
         F.lit("h"), (d % n_hosts).cast("string"), F.lit(".example.org")
@@ -3003,6 +2962,7 @@ def synthetic_relhref_pages(docs: DataFrame) -> DataFrame:
     real web's broken footers), query-only and fragment-only.  Slots
     5-10 are nibble-gated so lists are ragged and every branch has a
     non-firing population at any corpus size."""
+    docs = spread_small_scan(docs, "doc_id")
     d = F.col("doc_id")
     h = F.md5(d.cast("string"))
 
@@ -3265,6 +3225,7 @@ def synthetic_seo_pages(docs: DataFrame, id_col: str = "doc_id"
     once (nibble₃ ≡ 1 mod 4) or never (otherwise), so the density
     screen has firing and non-firing population at every corpus size.
     """
+    docs = spread_small_scan(docs, id_col)
     h = F.md5(F.col(id_col).cast("string"))
     kw = F.concat(F.lit("kw"), (F.col(id_col) % SEO_KEYWORD_MOD)
                   .cast("string"))
@@ -3372,6 +3333,7 @@ def synthetic_paginated_pages(docs: DataFrame, id_col: str = "doc_id"
     Members with ``k ≥ L`` are standalone single-page articles (no
     pagination links at all) — the majority case on the real web, so
     the assembler must not fabricate chains for them."""
+    docs = spread_small_scan(docs, id_col)
     a = F.floor(F.col(id_col) / 4).cast("long")
     k = (F.col(id_col) % 4).cast("long")
     ha = F.md5(a.cast("string"))

@@ -34,6 +34,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..operators.dedup import materialize, scoped
+from ..operators.scale import spread_small_scan
 
 #: Header terminator and block terminator, per ISO 28500.
 CRLF = "\r\n"
@@ -429,6 +430,7 @@ def synthetic_digest_store(docs: DataFrame) -> DataFrame:
     must re-emit a full response)."""
     from ..operators.webpages import _nib, _page_url
 
+    docs = spread_small_scan(docs, "doc_id")
     h = F.md5(F.col("doc_id").cast("string"))
     cur = F.coalesce(F.col("text"), F.lit(""))
     old = F.concat(cur, F.lit(" [stale revision]"))

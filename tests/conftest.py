@@ -14,6 +14,16 @@ def spark():
     s.stop()
 
 
+@pytest.fixture
+def no_spread(spark):
+    """Pin the cluster-scale plan shape: disable the small-scan hash
+    spread (``operators/scale.py:spread_small_scan``), which fires only
+    on tiny single-row-group inputs and is a no-op past 64 MB."""
+    spark.conf.set("igtdetect.spreadSmallScanBytes", "0")
+    yield
+    spark.conf.unset("igtdetect.spreadSmallScanBytes")
+
+
 @pytest.fixture(scope="session")
 def lexicons():
     """Hermetic flagship lexicons: the benchmark's seeded builder (corpus

@@ -509,7 +509,7 @@ class TestBlocklistFilter:
         # blocklist hits; only the bare final token is
         assert out[6]["n_bad"] == 1
 
-    def test_plan_zero_shuffle_no_python(self, spark):
+    def test_plan_zero_shuffle_no_python(self, spark, no_spread):
         from igtdetect_spark.operators.text_analysis import (
             blocklist_filter,
         )

@@ -129,7 +129,7 @@ class TestSniffDecode:
         assert got["text_decoded"] == '<meta charset="latin1">café'
         assert not got["text_decoded"].startswith("﻿")
 
-    def test_zero_shuffle_python_free_plan(self, spark):
+    def test_zero_shuffle_python_free_plan(self, spark, no_spread):
         docs = spark.read.parquet(
             "/root/testdata/sf0.001/documents.parquet"
         )

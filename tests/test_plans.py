@@ -54,7 +54,7 @@ from contextlib import contextmanager
 @contextmanager
 def _no_spread(spark):
     """Pin the cluster-scale plan shape: disable the small-scan
-    round-robin spread (``spread_small_scan``), which fires only on
+    hash spread (``spread_small_scan``), which fires only on
     tiny (single-row-group) bench inputs and is a no-op past 64 MB —
     the zero-exchange contracts below are 100 TB claims."""
     spark.conf.set("igtdetect.spreadSmallScanBytes", "0")
@@ -139,7 +139,7 @@ def test_ngram_jaccard_plan_has_no_cartesian(spark):
     assert "BroadcastNestedLoopJoin" not in plan
 
 
-def test_cosine_topk_corpus_side_is_narrow(spark):
+def test_cosine_topk_corpus_side_is_narrow(spark, no_spread):
     """Exact ANN: the only join is against the broadcast 5-row query
     side; the corpus side must not shuffle before scoring (the one
     Exchange allowed is the per-query top-k window partitioning)."""
@@ -151,7 +151,7 @@ def test_cosine_topk_corpus_side_is_narrow(spark):
     assert plan.count("Exchange hashpartitioning") <= 1
 
 
-def test_ivf_plan_has_no_distinct_exchange(spark):
+def test_ivf_plan_has_no_distinct_exchange(spark, no_spread):
     """(query, neighbor) pairs are unique by construction — the plan must
     not contain a distinct aggregate between scoring and the window."""
     from igtdetect_spark.operators.similarity import ivf_ann
@@ -713,23 +713,44 @@ def test_revisit_export_is_one_join_native_render(spark):
     assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
 
 
+@pytest.mark.parametrize("name", [
+    "canonical_attribution", "domain_rollup", "mime_sniff", "mirror_hosts",
+])
+def test_keyed_first_query_reads_its_scan_unspread(spark, name):
+    """Scans are read raw and only per-row kernels spread their input:
+    a query whose first operation is keyed (aggregate, window, join)
+    gets no spread exchange in front of its keyed one."""
+    from igtdetect_spark.entry_queries import queries
+    from igtdetect_spark.operators.dedup import release_plan_caches
+
+    df = queries()[name](spark, SF_DIR)
+    plan = _plan(df)
+    release_plan_caches(df)
+    assert "REPARTITION_BY_NUM" not in plan, plan
+
+
 def test_spread_small_scan_is_scale_adaptive(spark):
-    """The round-robin spread fires only under the byte bound (tiny
-    bench inputs), never rewrites the partitioning key-wise, is
+    """The hash spread fires only under the byte bound (tiny bench
+    inputs), hashes on the NAMED key whatever the column order, is
     idempotent, and is a strict no-op when disabled or over-bound —
     the cluster-scale guarantee that it cannot shrink parallelism."""
     from igtdetect_spark.operators.scale import spread_small_scan
 
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
-    spread = spread_small_scan(docs)
+    spread = spread_small_scan(docs, "doc_id")
     plan = _plan(spread)
-    # hash on the leading id column — value-deterministic, no
+    # hash on the id column — value-deterministic, no
     # sort-before-repartition (the round-robin trap: the determinism
     # sort runs on the single starved input task)
     assert "hashpartitioning(doc_id" in plan.lower(), plan
     assert "roundrobin" not in plan.lower(), plan
+    # the key is taken by name, not position: a frame led by the
+    # low-cardinality ``lang`` column still hashes on doc_id
+    by_name = _plan(
+        spread_small_scan(docs.select("lang", "doc_id"), "doc_id"))
+    assert "hashpartitioning(doc_id" in by_name.lower(), by_name
     # idempotent: a second application adds no second exchange
-    assert _plan(spread_small_scan(spread)).lower().count(
+    assert _plan(spread_small_scan(spread, "doc_id")).lower().count(
         "exchange hashpartitioning"
     ) == plan.lower().count("exchange hashpartitioning")
     # over the small-scan bound but LAYOUT-STARVED (single-row-group
@@ -740,19 +761,19 @@ def test_spread_small_scan_is_scale_adaptive(spark):
     try:
         # hash on the leading id column, NOT round-robin: round-robin
         # sorts the (single, starved) input partition first
-        p = _plan(spread_small_scan(docs)).lower()
+        p = _plan(spread_small_scan(docs, "doc_id")).lower()
         assert "hashpartitioning(doc_id" in p, p
         assert "roundrobin" not in p, p
         # starved branch disabled → over-bound input untouched
         spark.conf.set("igtdetect.spreadStarvedScanBytes", "0")
-        assert spread_small_scan(docs) is docs
+        assert spread_small_scan(docs, "doc_id") is docs
     finally:
         spark.conf.unset("igtdetect.spreadSmallScanBytes")
         spark.conf.unset("igtdetect.spreadStarvedScanBytes")
     # fully disabled → untouched
     spark.conf.set("igtdetect.spreadSmallScanBytes", "0")
     try:
-        assert spread_small_scan(docs) is docs
+        assert spread_small_scan(docs, "doc_id") is docs
     finally:
         spark.conf.unset("igtdetect.spreadSmallScanBytes")
     # a many-row-group over-bound input keeps its native splits: write
@@ -772,7 +793,7 @@ def test_spread_small_scan_is_scale_adaptive(spark):
         )
         spark.conf.set("igtdetect.spreadSmallScanBytes", "1")
         try:
-            out = spread_small_scan(many)
+            out = spread_small_scan(many, "doc_id")
             if ngroups >= spark.sparkContext.defaultParallelism:
                 assert out is many  # natively parallel → no exchange
         finally:

@@ -102,7 +102,7 @@ class TestUrlDedup:
         out = url_dedup(pages)
         assert out.filter("n_variants > 1").count() > 0
 
-    def test_plan_single_exchange_no_python(self, spark):
+    def test_plan_single_exchange_no_python(self, spark, no_spread):
         docs = spark.read.parquet(
             "/root/testdata/sf0.001/documents.parquet"
         )
@@ -236,7 +236,7 @@ class TestHtmlExtract:
         assert main_content_text(b"") == ""
         assert main_content_text(b"<p>   </p><div>\t</div>") == ""
 
-    def test_plan_zero_exchange_arrow_batched_pruned(self, spark):
+    def test_plan_zero_exchange_arrow_batched_pruned(self, spark, no_spread):
         """ONE Arrow-batched map over the scan: no shuffle anywhere, and
         column pruning keeps lang/text companions out of the scan."""
         from igtdetect_spark.operators.webpages import (
@@ -1070,7 +1070,7 @@ class TestSitemapEntries:
     def test_empty_urlset_yields_no_rows(self, spark):
         assert self._parse(spark, "<urlset></urlset>") == []
 
-    def test_synthetic_plan_zero_exchange_no_python(self, spark):
+    def test_synthetic_plan_zero_exchange_no_python(self, spark, no_spread):
         from igtdetect_spark.operators.webpages import (
             sitemap_entries,
             synthetic_sitemaps,
@@ -1115,7 +1115,7 @@ class TestFetchSchedule:
         # per-host delay is a function of the host alone
         assert len({rows[i]["delay_sec"] for i in (1, 2, 3)}) == 1
 
-    def test_single_window_exchange(self, spark):
+    def test_single_window_exchange(self, spark, no_spread):
         from igtdetect_spark.operators.webpages import (
             fetch_schedule,
             synthetic_page_urls,
@@ -2009,7 +2009,7 @@ class TestAdaptiveRevisit:
         assert got["u/new"]["revisit_bucket"] == "daily"
         assert got["u/new"]["next_fetch_ts_sec"] == 7 + 86_400
 
-    def test_composed_single_shuffle(self, spark):
+    def test_composed_single_shuffle(self, spark, no_spread):
         # recrawl_delta's window exchange on canonical_url is the ONE
         # exchange; the policy aggregate reuses that partitioning
         from igtdetect_spark.operators.webpages import (
@@ -2090,7 +2090,7 @@ class TestKeywordStuffing:
         verdicts = {r["stuffed"] for r in got.values()}
         assert verdicts == {True, False}
 
-    def test_zero_shuffle_native_plan(self, spark):
+    def test_zero_shuffle_native_plan(self, spark, no_spread):
         from igtdetect_spark.operators.webpages import (
             keyword_stuffing,
             synthetic_seo_pages,
