@@ -1,4 +1,32 @@
+import os
+
 import pytest
+
+from igtdetect_spark.config import (
+    REF_EN_WORDLIST,
+    REF_GLS_WORDLIST,
+    REF_GRAMS,
+    REF_GRAMS_CASED,
+    REF_LANGS,
+    REF_MET_WORDLIST,
+)
+
+# every file load_reference_lexicons() (so flagship.get_lexicons()) reads
+REF_LEXICON_FILES = (
+    REF_LANGS, REF_GRAMS, REF_GRAMS_CASED,
+    REF_EN_WORDLIST, REF_GLS_WORDLIST, REF_MET_WORDLIST,
+)
+
+
+def needs_reference(*paths):
+    """Mark a test that reads reference data files: it is skipped, with
+    the first missing path as the reason, unless every one exists, and
+    runs unchanged wherever they do."""
+    missing = [p for p in paths if not os.path.exists(p)]
+    return pytest.mark.skipif(
+        bool(missing),
+        reason=f"reference file missing: {missing[0]}" if missing else "",
+    )
 
 
 @pytest.fixture(scope="session")

@@ -2,13 +2,17 @@
 detected files → eval vs gold) through `python -m igtdetect_spark.cli`,
 with the extracted pretrained model — detected bytes match the oracle."""
 
-import os
 import subprocess
 import sys
+from pathlib import Path
 
 import pytest
 
-from igtdetect_spark.config import REF_MODEL_PATH, REF_SAMPLE_TEST
+from igtdetect_spark.config import (
+    REF_MODEL_PATH,
+    REF_SAMPLE_TEST,
+    REF_SAMPLE_TRAIN,
+)
 from igtdetect_spark.flagship import get_lexicons
 from igtdetect_spark.oracle.freki import read_freki
 from igtdetect_spark.oracle.pipeline import (
@@ -19,14 +23,17 @@ from igtdetect_spark.oracle.pipeline import (
 )
 from igtdetect_spark.refmodel import load_reference_model
 
+from conftest import REF_LEXICON_FILES, needs_reference
+
+REPO_ROOT = Path(__file__).resolve().parents[1]
+
 
 @pytest.mark.slow
+@needs_reference(REF_SAMPLE_TRAIN, *REF_LEXICON_FILES)
 def test_cli_train_auto_routes_to_distributed(tmp_path):
     """Above --collect-threshold the CLI trains via Spark ML instead of
     collecting features to the driver; the resulting model loads and
     selects the same chi² vocabulary as the collected path."""
-    from igtdetect_spark.config import REF_SAMPLE_TRAIN
-
     dist_path = tmp_path / "dist.npz"
     coll_path = tmp_path / "coll.npz"
     # max-features above the total feature count: the chi² cutoff would
@@ -40,13 +47,13 @@ def test_cli_train_auto_routes_to_distributed(tmp_path):
     r1 = subprocess.run(
         common + ["--classifier-path", str(dist_path),
                   "--collect-threshold", "1"],
-        capture_output=True, text=True, cwd="/root/repo", timeout=600,
+        capture_output=True, text=True, cwd=REPO_ROOT, timeout=600,
     )
     assert r1.returncode == 0, r1.stderr[-2000:]
     assert "distributed Spark ML trainer" in r1.stderr
     r2 = subprocess.run(
         common + ["--classifier-path", str(coll_path)],
-        capture_output=True, text=True, cwd="/root/repo", timeout=600,
+        capture_output=True, text=True, cwd=REPO_ROOT, timeout=600,
     )
     assert r2.returncode == 0, r2.stderr[-2000:]
     assert "distributed Spark ML trainer" not in r2.stderr
@@ -60,6 +67,7 @@ def test_cli_train_auto_routes_to_distributed(tmp_path):
 
 
 @pytest.mark.slow
+@needs_reference(REF_SAMPLE_TEST, REF_MODEL_PATH, *REF_LEXICON_FILES)
 def test_cli_test_eval_workflow(tmp_path):
     classified = tmp_path / "classified"
     detected = tmp_path / "detected"
@@ -83,7 +91,7 @@ def test_cli_test_eval_workflow(tmp_path):
             "--gold-dir", str(gold),
             "--out", str(tmp_path / "report.txt"),
         ],
-        capture_output=True, text=True, cwd="/root/repo", timeout=600,
+        capture_output=True, text=True, cwd=REPO_ROOT, timeout=600,
     )
     assert r.returncode == 0, r.stderr[-2000:]
 

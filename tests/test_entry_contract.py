@@ -6,6 +6,8 @@ the fast suite)."""
 import duckdb
 import pytest
 
+from conftest import REF_LEXICON_FILES, needs_reference
+
 SF_DIR = "/root/testdata/sf0.001"
 TABLES = [
     "region", "nation", "customer", "supplier", "part", "orders",
@@ -61,6 +63,7 @@ def _canon(cols, rows):
     return sorted("\x1f".join(_norm(r[i]) for i in order) for r in rows)
 
 
+@needs_reference(*REF_LEXICON_FILES)
 def test_entry_smoke(spark):
     import __spark_entry__ as e
 

@@ -10,6 +10,8 @@ from igtdetect_spark.oracle.corpus import doc_from_text, make_corpus, make_doc
 from igtdetect_spark.oracle.freki import read_freki
 from igtdetect_spark.oracle.pipeline import extract_doc_features, score_doc
 
+from conftest import REF_LEXICON_FILES, needs_reference
+
 
 @pytest.fixture(scope="module")
 def lex_bc(spark, lexicons):
@@ -17,6 +19,7 @@ def lex_bc(spark, lexicons):
 
 
 class TestFeatureParity:
+    @needs_reference(REF_SAMPLE_TEST, *REF_LEXICON_FILES)
     def test_svmlight_rendering_matches_oracle(self, spark):
         """Full widened feature checkpoint (context copies + prev_tag +
         BI-rewritten label, svmlight rendering) — Spark window operators

@@ -10,13 +10,17 @@ from igtdetect_spark.config import (
     DEFAULT_CONFIG,
     DEFAULT_FREKI_FEATS,
     DEFAULT_TEXT_FEATS,
+    REF_LANGS,
     PipelineConfig,
     load_ini,
 )
 
+from conftest import REF_LEXICON_FILES, needs_reference
+
 SAMPLE_INI = "/root/reference/defaults.ini.sample"
 
 
+@needs_reference(SAMPLE_INI)
 def test_defaults_sample_maps_onto_config():
     cfg, paths = load_ini(SAMPLE_INI)
     # gate sets in the sample are exactly the engine defaults (med_gls_oov
@@ -45,6 +49,7 @@ def test_defaults_sample_maps_onto_config():
     assert paths["feat_dir"] == "/root/reference/output/feats"
 
 
+@needs_reference(SAMPLE_INI)
 def test_cascade_override(tmp_path):
     override = tmp_path / "override.ini"
     override.write_text(textwrap.dedent("""\
@@ -82,6 +87,7 @@ def test_cascade_override(tmp_path):
     )
 
 
+@needs_reference(SAMPLE_INI)
 def test_word_overlap_gate_reaches_config(tmp_path):
     """The reference forwards every ini option as kwargs, so
     word_overlap=1 in [text_features] must flip cfg.word_overlap (it is
@@ -93,6 +99,7 @@ def test_word_overlap_gate_reaches_config(tmp_path):
     assert "word_overlap" not in cfg.enabled_text_feats
 
 
+@needs_reference(REF_LANGS)
 def test_ini_files_section_loads_lexicons(tmp_path):
     """[files] wordlist paths from the ini drive the lexicon load
     (reference load_wordlist over config paths); a dangling path loads as
@@ -123,6 +130,7 @@ def test_from_ini_classmethod(tmp_path):
     assert cfg == DEFAULT_CONFIG.with_(max_features=123)
 
 
+@needs_reference(SAMPLE_INI, *REF_LEXICON_FILES)
 def test_ini_config_flips_gates_end_to_end(spark, tmp_path):
     """An override ini drives the full Spark pipeline: disabling feature
     gates via INI produces the same spans as the oracle under the same

@@ -11,6 +11,8 @@ from pyspark.sql import functions as F
 
 from igtdetect_spark.config import DEFAULT_CONFIG, REF_SAMPLE_TEST
 
+from conftest import needs_reference
+
 
 class TestDocsDb:
     def test_read_and_join(self, spark, tmp_path):
@@ -508,6 +510,7 @@ class TestNfold:
 
 
 class TestDocStatsDistributed:
+    @needs_reference(REF_SAMPLE_TEST)
     def test_matches_denormalized(self, spark):
         """attach_doc_stats on a stripped lines table reproduces the
         segmentation-denormalized stats + adjacency."""
@@ -534,6 +537,7 @@ class TestDocStatsDistributed:
 
 
 class TestFrekiRender:
+    @needs_reference(REF_SAMPLE_TEST)
     def test_render_round_trip(self):
         """Oracle freki renderer round-trips through the parser (the
         classified-doc sink shape, reference str(fd) :1281)."""

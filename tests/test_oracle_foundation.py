@@ -41,6 +41,8 @@ from igtdetect_spark.oracle.corpus import make_doc, make_corpus
 from igtdetect_spark.refmodel import load_reference_model, split_prefix
 from igtdetect_spark.segmentation import segment_text, segment_page, strip_html
 
+from conftest import REF_LEXICON_FILES, needs_reference
+
 
 @pytest.fixture(scope="module")
 def lex():
@@ -64,6 +66,7 @@ def sample_test_doc():
 # ---------------------------------------------------------------------------
 
 class TestFrekiParse:
+    @needs_reference(REF_SAMPLE_TEST)
     def test_sample_test_shape(self, sample_test_doc):
         d = sample_test_doc
         assert d.doc_id == "2629.tetml"
@@ -73,11 +76,13 @@ class TestFrekiParse:
         assert len(d.blocks) == 40
         assert len([b for b in d.blocks if b.lines]) == 33
 
+    @needs_reference(REF_SAMPLE_TRAIN)
     def test_sample_train_shape(self):
         d = read_freki(REF_SAMPLE_TRAIN)
         assert d.doc_id == "94.tetml"
         assert len(d) == 3948
 
+    @needs_reference(REF_SAMPLE_TEST)
     def test_line13_attrs(self, sample_test_doc):
         ln = sample_test_doc.get_line(13)
         assert ln.tag == "L"
@@ -87,12 +92,14 @@ class TestFrekiParse:
         assert ("F2", 12.0) in ln.fonts and ("F1", 12.0) in ln.fonts
         assert ln.text.lstrip().startswith("a.")
 
+    @needs_reference(REF_SAMPLE_TEST)
     def test_block_fields(self, sample_test_doc):
         b = sample_test_doc.get_line(1).block
         assert b.block_id == "1-2"
         assert b.page == 1
         assert b.bbox == (56.6, 723.2, 437.9, 773.1)
 
+    @needs_reference(REF_SAMPLE_TEST)
     def test_spans_ordered(self, sample_test_doc):
         spans = sample_test_doc.spans()
         assert list(spans)[:3] == ["s0", "s1", "s2"]
@@ -103,6 +110,7 @@ class TestFrekiParse:
         assert safe_mode(["b", "a", "a", "b", "c"]) == "b"
         assert safe_mode([]) is None
 
+    @needs_reference(REF_SAMPLE_TEST)
     def test_doc_info(self, sample_test_doc):
         fi = FrekiInfo.from_doc(sample_test_doc)
         assert fi.def_font == ("F1", 12.0)
@@ -210,21 +218,21 @@ class TestTextFeatures:
         f = text_features("zzz qqq the", lex, cfg)
         assert f["high_oov_rate"]  # 2/3 ≥ 0.5
 
-    def test_grams_substring_no_boundary(self, lex):
+    def test_grams_substring_no_boundary(self, lexicons):
         # 'ACC' cased gram matches as substring (no word boundary)
-        f = self.feats("word-ACCUSATIVE", lex)
+        f = self.feats("word-ACCUSATIVE", lexicons)
         assert f["has_grams"]
         # case-insensitive list: '1SG' matches inside '1sg.pron'
-        f2 = self.feats("1sg.pron-pl", lex)
+        f2 = self.feats("1sg.pron-pl", lexicons)
         assert f2["has_grams"]
 
-    def test_langname_single_token_only(self, lex):
-        f = self.feats("the russian example", lex)
+    def test_langname_single_token_only(self, lexicons):
+        f = self.feats("the russian example", lexicons)
         assert f["has_langname"]
         # matching is token ∈ set — multi-word names only fire when one of
         # their words is independently a name; short tokens never match
         # (names are ≥5 chars)
-        f2 = self.feats("xx yy zz", lex)
+        f2 = self.feats("xx yy zz", lexicons)
         assert not f2["has_langname"]
 
     def test_svmlight_rendering(self):
@@ -237,6 +245,7 @@ class TestTextFeatures:
 # ---------------------------------------------------------------------------
 
 class TestModel:
+    @needs_reference(REF_MODEL_PATH)
     def test_classes(self, model):
         assert model.classes == ["G", "L", "M", "O", "T"]
         assert model.intercept.shape == (5,)
@@ -252,6 +261,7 @@ class TestModel:
         assert split_prefix("prev_tag_L") == ("cur", "prev_tag_L")
         assert split_prefix("word_prev_tag_l") == ("cur", "word_prev_tag_l")
 
+    @needs_reference(REF_MODEL_PATH, REF_SAMPLE_TEST, *REF_LEXICON_FILES)
     def test_decomposition_matches_direct(self, model, lex, sample_test_doc):
         """Folded context-weight scoring == direct selected-feature-space
         scoring, on the real sample doc."""
@@ -268,6 +278,7 @@ class TestModel:
         d_decomp = model.decision_doc(_base_matrix(inst, model))
         assert np.abs(d_direct - d_decomp).max() < 1e-9
 
+    @needs_reference(REF_MODEL_PATH, REF_SAMPLE_TEST, *REF_LEXICON_FILES)
     def test_sample_doc_predictions_stable(self, model, lex, sample_test_doc):
         """Regression pin: predictions on the reference sample doc."""
         inst = extract_doc_features(sample_test_doc, lex)
@@ -279,6 +290,7 @@ class TestModel:
         # pinned from first verified run — any semantics change must be deliberate
         assert non_o == [(90, "L"), (91, "G"), (92, "T"), (101, "G")]
 
+    @needs_reference(REF_SAMPLE_TEST, *REF_LEXICON_FILES)
     def test_bi_rewrite_in_training_labels(self, lex, sample_test_doc):
         inst = extract_doc_features(sample_test_doc, lex)
         # line 13 is gold L at span start → B-L; line 14 G continuing s0 → I-G
@@ -286,6 +298,7 @@ class TestModel:
         assert by_lineno[13].label == "B-L"
         assert by_lineno[14].label == "I-G"
 
+    @needs_reference(REF_SAMPLE_TEST, *REF_LEXICON_FILES)
     def test_prev_tag_feature_from_mutated_tag(self, lex, sample_test_doc):
         inst = extract_doc_features(sample_test_doc, lex)
         by_lineno = {i.lineno: i for i in inst}

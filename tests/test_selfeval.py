@@ -8,7 +8,12 @@ from igtdetect_spark.config import REF_MODEL_PATH, REF_SAMPLE_TEST, REF_SAMPLE_T
 from igtdetect_spark.flagship import get_lexicons
 from igtdetect_spark.refmodel import load_reference_model
 
+from conftest import REF_LEXICON_FILES, needs_reference
 
+
+@needs_reference(
+    REF_MODEL_PATH, REF_SAMPLE_TEST, REF_SAMPLE_TRAIN, *REF_LEXICON_FILES
+)
 def test_selfeval_sample_docs_pinned(spark):
     from igtdetect_spark.operators.segment import segment_freki_files
     from igtdetect_spark.plans.pipeline import DetectContext

@@ -13,8 +13,11 @@ from igtdetect_spark.config import (
 )
 from igtdetect_spark.lexicons import load_gram_list, load_langnames, load_wordlist
 
+from conftest import needs_reference
+
 
 class TestWordlistSources:
+    @needs_reference(REF_EN_WORDLIST)
     def test_wordlist_df_matches_set(self, spark):
         from igtdetect_spark.sources.wordlists import wordlist_df
 
@@ -22,12 +25,14 @@ class TestWordlistSources:
         assert got == set(load_wordlist(REF_EN_WORDLIST))
         assert len(got) == 109_582
 
+    @needs_reference(REF_GRAMS)
     def test_gram_df_matches_set(self, spark):
         from igtdetect_spark.sources.wordlists import gram_list_df
 
         got = {r["gram"] for r in gram_list_df(spark, REF_GRAMS).collect()}
         assert got == set(load_gram_list(REF_GRAMS))
 
+    @needs_reference(REF_LANGS)
     def test_langnames_df_matches_set(self, spark):
         from igtdetect_spark.sources.wordlists import langnames_df
 
@@ -36,6 +41,7 @@ class TestWordlistSources:
         assert got == want
         assert len(got) > 30_000
 
+    @needs_reference(REF_LANGS)
     def test_has_langname_join(self, spark):
         from igtdetect_spark.sources.wordlists import (
             has_langname_join,
@@ -74,6 +80,7 @@ class TestSvmlight:
 
 
 class TestRenderSink:
+    @needs_reference(REF_SAMPLE_TEST)
     def test_render_freki_df_round_trip(self, spark):
         """Spark grouped-map renderer → parse → same lines as source."""
         from igtdetect_spark.operators.segment import (

@@ -27,6 +27,8 @@ from igtdetect_spark.oracle.pipeline import (
 )
 from igtdetect_spark.refmodel import load_reference_model
 
+from conftest import REF_LEXICON_FILES, needs_reference
+
 
 N_DOCS = 30
 
@@ -269,6 +271,9 @@ class TestFrekiSampleParity:
             out[doc.doc_id] = detected_text(detect_spans(doc, labels))
         return out
 
+    @needs_reference(
+        REF_MODEL_PATH, REF_SAMPLE_TEST, REF_SAMPLE_TRAIN, *REF_LEXICON_FILES
+    )
     def test_staged_freki_matches_oracle(self, spark, ctx_ref, oracle_ref):
         from igtdetect_spark.operators.segment import segment_freki_files
         from igtdetect_spark.operators.score import score_lines
