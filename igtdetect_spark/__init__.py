@@ -22,7 +22,6 @@ def __getattr__(name):  # lazy public API (keeps pyspark import off the cold pat
         "build_session": ("igtdetect_spark.session", "build_session"),
         "DetectContext": ("igtdetect_spark.plans.pipeline", "DetectContext"),
         "detect_spans_fused": ("igtdetect_spark.plans.pipeline", "detect_spans_fused"),
-        "detect_spans_staged": ("igtdetect_spark.plans.pipeline", "detect_spans_staged"),
         "classify_lines_fused": ("igtdetect_spark.plans.pipeline", "classify_lines_fused"),
         "load_model": ("igtdetect_spark.refmodel", "load_model"),
         "save_model": ("igtdetect_spark.refmodel", "save_model"),

@@ -222,10 +222,7 @@ def cmd_test(args, spark=None, own_session=True):
     if args.detected_dir:
         os.makedirs(args.detected_dir, exist_ok=True)
         spans = detected_span_text(
-            assign_spans_df(
-                pred_lines.withColumn("pred", F.col("tag")), tag_col="pred"
-            ),
-            ctx.cfg,
+            pred_lines.withColumn("pred", F.col("tag")), ctx.cfg
         )
         texts = detected_text_df(spans).collect()
         for r in texts:  # urls with zero spans never appear (empty-file unlink)

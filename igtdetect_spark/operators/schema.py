@@ -61,7 +61,6 @@ SCORED_SCHEMA = StructType(
         StructField("url", StringType(), False),
         StructField("line_no", IntegerType(), False),
         StructField("pred", StringType(), True),
-        StructField("probs", MapType(StringType(), DoubleType()), True),
     ]
 )
 

@@ -1,15 +1,13 @@
 """Scoring operators: lines → per-line predictions.
 
-``score_lines`` is the staged operator: one shuffle groups each document
-onto one worker (``groupBy(url).applyInPandas``), then the vectorized
-kernel scores the whole document as numpy matmuls. The sequential greedy
-decode (prev_tag models) runs in the same place — it is the one inherently
-non-relational piece of the reference (SURVEY.md §2.4) and is cleanly
-quarantined here.
+``score_lines`` scores a ``lines`` table: one shuffle groups each document
+onto one worker (``groupBy(url).applyInPandas``), and each group runs
+``vectorized.label_documents`` — the same featurize-and-score kernel as
+the fused and chunked paths, including the sequential greedy decode of
+prev_tag models (SURVEY.md §2.4).
 
-For the flagship zero-shuffle path (pages → spans with no grouping at
-all), see ``plans/pipeline.py``; for mega-documents split across tasks,
-see ``plans/chunked.py``.
+For pages → spans with no grouping at all, see ``plans/pipeline.py``; for
+mega-documents split across tasks, see ``plans/chunked.py``.
 """
 
 from __future__ import annotations
@@ -20,7 +18,7 @@ from pyspark.sql import DataFrame
 
 from ..config import DEFAULT_CONFIG, PipelineConfig
 from .schema import SCORED_SCHEMA
-from .vectorized import base_feature_matrix, score_matrix
+from .vectorized import label_documents
 
 _SCORE_INPUT_COLS = [
     "url", "line_no", "text", "page", "llx", "doc_llx_mode", "block_id",
@@ -34,9 +32,8 @@ def score_lines(
     model_bc,
     lex_bc,
     cfg: PipelineConfig = DEFAULT_CONFIG,
-    want_probs: bool = False,
 ) -> DataFrame:
-    """lines → (url, line_no, pred, probs?).
+    """lines → (url, line_no, pred).
 
     :param model_bc: broadcast of ``ModelWeights.as_broadcastable()``.
     :param lex_bc: broadcast of ``Lexicons``.
@@ -45,28 +42,16 @@ def score_lines(
 
     def decode(pdf: pd.DataFrame) -> pd.DataFrame:
         model = ModelWeights.from_broadcastable(model_bc.value)
-        lex = lex_bc.value
         pdf = pdf.sort_values("line_no", kind="mergesort").reset_index(drop=True)
-        X = base_feature_matrix(pdf, lex, cfg, model)
-        labels, probs = score_matrix(X, model, cfg, want_probs=want_probs)
-        out = pd.DataFrame(
-            {
-                "url": pdf["url"],
-                "line_no": pdf["line_no"],
-                "pred": labels,
-            }
+        labels = label_documents(
+            pdf, [(pdf["url"].iat[0], 0, len(pdf))], lex_bc.value, cfg, model
         )
-        if want_probs and probs is not None:
-            out["probs"] = [
-                dict(zip(model.classes, row)) for row in probs
-            ]
-        else:
-            out["probs"] = None
-        return out
+        return pd.DataFrame(
+            {"url": pdf["url"], "line_no": pdf["line_no"], "pred": labels}
+        )
 
     return (
         lines.select(*_SCORE_INPUT_COLS)
         .groupBy("url")
         .applyInPandas(decode, schema=SCORED_SCHEMA)
     )
-

@@ -1,5 +1,6 @@
-"""Span operators: gaps-and-islands grouping, materialization, detected
-text — all native window/agg expressions (SURVEY.md §2.4).
+"""Span operators: gaps-and-islands span ids and span tables as native
+window/agg expressions, and detected span text through the fused path's
+document kernel (SURVEY.md §2.4).
 
 ``assign_spans_df`` mirrors reference ``assign_spans`` (igtdetect.py:
 906-933): a new span starts on a non-O line whose previous tag contains
@@ -9,10 +10,14 @@ text — all native window/agg expressions (SURVEY.md §2.4).
 
 from __future__ import annotations
 
+import pandas as pd
+
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..config import DEFAULT_CONFIG, PipelineConfig
+from .schema import SPANS_SCHEMA
+from .vectorized import spans_from_labels
 
 
 def assign_spans_df(
@@ -60,83 +65,32 @@ def detected_span_text(
     lines_with_pred: DataFrame,
     cfg: PipelineConfig = DEFAULT_CONFIG,
 ) -> DataFrame:
-    """Detected-IGT text per span, reference block semantics (SURVEY §2.4):
-    the span's text is the concatenation of the full rendered blocks it
-    touches, deduped by first occurrence. EOF quirk: the last span of a
-    doc is dropped unless it is followed by an O line (no post-loop flush
-    in the reference) — replicated unless ``cfg.flush_eof_span``.
+    """Detected-IGT spans of a scored lines table (``SPANS_SCHEMA``): one
+    shuffle groups each document onto one worker, and the fused path's
+    assembler ``vectorized.spans_from_labels`` runs over it (reference
+    classify_docs loop): only an O line closes a span, a span's text is
+    the full blocks it touches, deduped by first occurrence, and a span
+    still open at EOF is dropped unless ``cfg.flush_eof_span``.
 
-    Input needs: url, line_no, block_id, text, pred, span_id (from
-    ``assign_spans_df``).
+    Input needs: url, line_no, block_id, text, pred; other columns are
+    ignored.
     """
-    w = Window.partitionBy("url")
-
-    # full block text (all lines of the block, in order) + doc last line —
-    # both computed BEFORE filtering to span lines
-    wb = Window.partitionBy("url", "block_id")
-    blocks = (
-        lines_with_pred
-        .withColumn(
-            "_block_text",
-            F.array_join(
-                F.transform(
-                    F.array_sort(
-                        F.collect_list(F.struct("line_no", "text")).over(wb)
-                    ),
-                    lambda x: x["text"],
-                ),
-                "\n",
+    def assemble(pdf: pd.DataFrame) -> pd.DataFrame:
+        pdf = pdf.sort_values("line_no", kind="mergesort")
+        return pd.DataFrame(
+            spans_from_labels(
+                pdf["url"].to_numpy(), pdf["line_no"].to_numpy(),
+                pdf["block_id"].to_numpy(), pdf["text"].to_numpy(),
+                pdf["pred"].tolist(), [(pdf["url"].iat[0], 0, len(pdf))], cfg,
             ),
+            columns=SPANS_SCHEMA.names,
         )
-        .withColumn("_doc_last", F.max("line_no").over(w))
-    )
 
-    span_lines = blocks.filter(F.col("span_id").isNotNull())
-
-    spans = (
-        span_lines.groupBy("url", "span_id")
-        .agg(
-            F.min("line_no").alias("start_line"),
-            F.max("line_no").alias("end_line"),
-            F.array_sort(
-                F.collect_list(F.struct("line_no", "pred"))
-            ).alias("_lt"),
-            # (line_no, block, text) sorted → dedup keeps first-touch order
-            F.array_sort(
-                F.collect_list(F.struct("line_no", "block_id", "_block_text"))
-            ).alias("_bt"),
-            F.max("_doc_last").alias("_doc_last"),
-        )
-        .withColumn("tags", F.transform("_lt", lambda x: x["pred"]))
-        .withColumn(
-            "_bt_dedup",
-            F.array_distinct(
-                F.transform("_bt", lambda x: F.struct(x["block_id"], x["_block_text"]))
-            ),
-        )
-        .withColumn(
-            "block_ids", F.transform("_bt_dedup", lambda x: x["block_id"])
-        )
-        .withColumn(
-            "text",
-            F.array_join(
-                F.transform("_bt_dedup", lambda x: x["_block_text"]), "\n"
-            ),
-        )
+    return (
+        lines_with_pred.select("url", "line_no", "block_id", "text", "pred")
+        .groupBy("url")
+        .applyInPandas(assemble, schema=SPANS_SCHEMA)
     )
-    if not cfg.flush_eof_span:
-        spans = spans.filter(F.col("end_line") < F.col("_doc_last"))
-    spans = (
-        spans.withColumn(
-            "span_no",
-            F.regexp_extract("span_id", r"s(\d+)", 1).cast("int"),
-        )
-        .select(
-            "url", "span_no", "start_line", "end_line", "tags",
-            "block_ids", "text",
-        )
-    )
-    return spans
 
 
 def detected_text_per_url(spans: DataFrame) -> DataFrame:

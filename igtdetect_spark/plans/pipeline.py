@@ -1,18 +1,16 @@
 """End-to-end IGT detection pipelines (reference `test` lifecycle,
 SURVEY.md §3.1).
 
-Two physical strategies, identical results (parity-tested):
-
-- **fused** (flagship): pages → spans in ONE narrow ``mapInPandas`` stage.
-  Each input row is a whole document, so segmentation, features, scoring
-  and span assembly are document-local — zero shuffles, zero windows,
-  zero joins. On a 1000-executor cluster over 100 TB this is a pure scan
-  → scan-shaped job: throughput = executors × per-core kernel speed, no
-  skew interactions between documents (a mega-doc only occupies one task
-  slot while it lasts; AQE-balanced input splits keep slots busy).
-- **staged**: the relational composition (segment → window features →
-  grouped scoring → span windows) for when the input is an already-
-  sharded ``lines`` table — one shuffle on url.
+**fused** (flagship): pages → spans in ONE narrow ``mapInPandas`` stage.
+Each input row is a whole document, so segmentation, features, scoring
+and span assembly are document-local — zero shuffles, zero windows, zero
+joins. On a 1000-executor cluster over 100 TB this is a pure scan →
+scan-shaped job: throughput = executors × per-core kernel speed, no skew
+interactions between documents (a mega-doc only occupies one task slot
+while it lasts; AQE-balanced input splits keep slots busy). Mega-documents
+split across tasks take ``plans/chunked.py``; an already-sharded ``lines``
+table is scored by ``operators/score.py:score_lines`` and assembled by
+``operators/spans.py:detected_span_text``, the same document kernel.
 
 Model + lexicons travel as broadcast variables (~2 MB).
 """
@@ -31,9 +29,7 @@ from ..config import DEFAULT_CONFIG, PipelineConfig
 from ..featurespec import Lexicons
 from ..refmodel import ModelWeights
 from ..operators.schema import SPANS_SCHEMA
-from ..operators.segment import _plain_frame, batch_to_columns, segment_pages
-from ..operators.score import score_lines
-from ..operators.spans import assign_spans_df, detected_span_text
+from ..operators.segment import _plain_frame, batch_to_columns
 from ..operators.vectorized import label_documents, spans_from_labels
 
 
@@ -46,20 +42,6 @@ class DetectContext:
         self.cfg = cfg
         self.model_bc = sc.broadcast(model.as_broadcastable())
         self.lex_bc = sc.broadcast(lex)
-
-    @classmethod
-    def from_reference(cls, spark: SparkSession,
-                       cfg: PipelineConfig = DEFAULT_CONFIG) -> "DetectContext":
-        from ..config import REF_MODEL_PATH
-        from ..lexicons import load_reference_lexicons
-        from ..refmodel import load_reference_model
-
-        return cls(
-            spark,
-            load_reference_model(REF_MODEL_PATH),
-            load_reference_lexicons(),
-            cfg,
-        )
 
 
 _SPAN_COLS = [f.name for f in SPANS_SCHEMA.fields]
@@ -120,17 +102,6 @@ def classify_lines_fused(pages: DataFrame, ctx: DetectContext) -> DataFrame:
     """pages → per-line predictions (url, line_no, page, block_id, text,
     pred) in one narrow stage — the flagship classified-lines sink."""
     return _fused_map(pages, ctx, spans=False)
-
-
-def detect_spans_staged(pages: DataFrame, ctx: DetectContext) -> DataFrame:
-    """pages → spans via the relational operator chain (one url shuffle)."""
-    lines = segment_pages(pages, ctx.cfg.html_main_content)
-    scored = score_lines(lines, ctx.model_bc, ctx.lex_bc, ctx.cfg)
-    joined = lines.select(
-        "url", "line_no", "block_id", "text"
-    ).join(scored.select("url", "line_no", "pred"), ["url", "line_no"])
-    with_ids = assign_spans_df(joined, tag_col="pred")
-    return detected_span_text(with_ids, ctx.cfg)
 
 
 def detect_with_metrics(pages: DataFrame, ctx: DetectContext):

@@ -29,6 +29,19 @@ def needs_reference(*paths):
     )
 
 
+def lines_table_spans(lines, ctx):
+    """The CLI's lines-table detection: score ``lines`` per document, join
+    the predictions back on (url, line_no) and assemble detected spans."""
+    from igtdetect_spark.operators.score import score_lines
+    from igtdetect_spark.operators.spans import detected_span_text
+
+    scored = score_lines(lines, ctx.model_bc, ctx.lex_bc, ctx.cfg)
+    joined = lines.select("url", "line_no", "block_id", "text").join(
+        scored.select("url", "line_no", "pred"), ["url", "line_no"]
+    )
+    return detected_span_text(joined, ctx.cfg)
+
+
 @pytest.fixture(scope="session")
 def spark():
     from igtdetect_spark.session import build_session

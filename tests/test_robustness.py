@@ -9,6 +9,8 @@ import pytest
 from igtdetect_spark.flagship import get_synthetic_model
 from igtdetect_spark.sources.pages import PAGES_SCHEMA
 
+from conftest import lines_table_spans
+
 TS = datetime.datetime(2024, 1, 1)
 
 HOSTILE_ROWS = [
@@ -47,10 +49,11 @@ def test_fused_survives_hostile_pages(spark, hostile, ctx):
     detect_spans_fused(hostile, ctx).collect()  # must not raise
 
 
-def test_staged_survives_hostile_pages(spark, hostile, ctx):
-    from igtdetect_spark.plans.pipeline import detect_spans_staged
+def test_lines_table_survives_hostile_pages(spark, hostile, ctx):
+    from igtdetect_spark.operators.segment import segment_pages
 
-    detect_spans_staged(hostile, ctx).collect()
+    lines = segment_pages(hostile, ctx.cfg.html_main_content)
+    lines_table_spans(lines, ctx).collect()
 
 
 def test_segmentation_of_hostile_values():

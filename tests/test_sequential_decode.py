@@ -11,6 +11,8 @@ from igtdetect_spark.oracle.corpus import doc_from_text, make_corpus, make_doc
 from igtdetect_spark.oracle.pipeline import extract_doc_features, score_doc
 from igtdetect_spark.training import train_model
 
+from conftest import lines_table_spans
+
 
 @pytest.fixture(scope="module")
 def seq_model(lexicons):
@@ -46,10 +48,10 @@ def test_spark_matches_oracle_sequential(spark, seq_model, lexicons):
     from igtdetect_spark.plans.pipeline import (
         DetectContext,
         classify_lines_fused,
-        detect_spans_staged,
         detect_spans_fused,
         detected_text_df,
     )
+    from igtdetect_spark.operators.segment import segment_pages
     from igtdetect_spark.sources.pages import synthetic_pages
     from igtdetect_spark.oracle.pipeline import detect_spans, detected_text
     from igtdetect_spark.segmentation import extract_page_text
@@ -81,9 +83,10 @@ def test_spark_matches_oracle_sequential(spark, seq_model, lexicons):
         r["url"]: r["detected_text"]
         for r in detected_text_df(detect_spans_fused(pages, ctx)).collect()
     }
+    lines = segment_pages(pages, ctx.cfg.html_main_content)
     got_s = {
         r["url"]: r["detected_text"]
-        for r in detected_text_df(detect_spans_staged(pages, ctx)).collect()
+        for r in detected_text_df(lines_table_spans(lines, ctx)).collect()
     }
     assert got_f == want_text
     assert got_s == want_text

@@ -3,7 +3,8 @@
 Byte-identity of per-url concatenated detected span text between
 - the pure-Python oracle,
 - the fused zero-shuffle pipeline (pages → spans in one mapInPandas), and
-- the staged relational pipeline (segment → grouped scoring → span windows),
+- the lines-table path the CLI runs (segment → grouped scoring → join on
+  (url, line_no) → grouped span assembly),
 on both the synthetic corpus (trained flagship model, non-trivial spans)
 and the reference freki sample docs (extracted pretrained model).
 """
@@ -27,7 +28,7 @@ from igtdetect_spark.oracle.pipeline import (
 )
 from igtdetect_spark.refmodel import load_reference_model
 
-from conftest import REF_LEXICON_FILES, needs_reference
+from conftest import REF_LEXICON_FILES, lines_table_spans, needs_reference
 
 
 N_DOCS = 30
@@ -81,10 +82,13 @@ class TestSyntheticParity:
         assert len(oracle_detected) > 10  # non-trivial
         assert got == oracle_detected
 
-    def test_staged_matches_oracle(self, spark, ctx_synth, pages, oracle_detected):
-        from igtdetect_spark.plans.pipeline import detect_spans_staged
+    def test_lines_table_matches_oracle(
+        self, spark, ctx_synth, pages, oracle_detected
+    ):
+        from igtdetect_spark.operators.segment import segment_pages
 
-        got = _collect_detected(detect_spans_staged(pages, ctx_synth))
+        lines = segment_pages(pages, ctx_synth.cfg.html_main_content)
+        got = _collect_detected(lines_table_spans(lines, ctx_synth))
         assert got == oracle_detected
 
     def test_chunked_matches_fused(self, spark, ctx_synth):
@@ -248,6 +252,71 @@ class TestSyntheticParity:
                 assert all(t != "O" for t in s["tags"])
 
 
+# Hand-built documents for span assembly over a scored lines table; a
+# blank line starts a new block.
+BIO_TEXT = (
+    "intro line\n\nword one\nfirst gloss\n\n"
+    "word two\nsecond gloss\nthird line\n\nclosing line\nlast line"
+)
+BIO_TAGS = ["O", "B-L", "I-G", "B-L", "I-T", "O", "O", "O"]
+EOF_TEXT = "intro line\n\nword one\nfirst gloss\nline three\n\nword four\nword five"
+EOF_TAGS = ["O", "L", "G", "O", "L", "T"]
+SPAN_CASES = {"bio": (BIO_TEXT, BIO_TAGS), "eof": (EOF_TEXT, EOF_TAGS)}
+
+
+class TestLinesTableSpanAssembly:
+    """``detected_span_text`` against the oracle's ``detect_spans`` on
+    given tags: only an O line closes a span (a ``B-`` tag does not), a
+    span's text is the whole blocks it touches, and a span open at EOF
+    is dropped unless ``flush_eof_span``."""
+
+    @pytest.mark.parametrize("flush_eof", [False, True])
+    @pytest.mark.parametrize("url", sorted(SPAN_CASES))
+    def test_matches_oracle(self, spark, url, flush_eof):
+        import dataclasses
+
+        from igtdetect_spark.operators.spans import detected_span_text
+
+        text, tags = SPAN_CASES[url]
+        cfg = dataclasses.replace(DEFAULT_CONFIG, flush_eof_span=flush_eof)
+        doc = doc_from_text(url, text)
+        lines = list(doc.lines())
+        assert len(lines) == len(tags)
+        lines_df = spark.createDataFrame(
+            [
+                (url, ln.lineno, ln.block.block_id, ln.text, t)
+                for ln, t in zip(lines, tags)
+            ],
+            "url string, line_no int, block_id string, text string, "
+            "pred string",
+        )
+        got = [
+            (r["span_no"], r["start_line"], r["end_line"], r["tags"],
+             r["block_ids"], r["text"])
+            for r in sorted(
+                detected_span_text(lines_df, cfg).collect(),
+                key=lambda r: r["span_no"],
+            )
+        ]
+        want = [
+            (s.span_no, s.start_line, s.end_line, s.tags, s.block_ids, s.text)
+            for s in detect_spans(doc, tags, cfg)
+        ]
+        assert got == want
+        if url == "bio":
+            # one span over lines 2-5: the second B-L does not split it,
+            # and block 1-3 brings its O line 6 into the text
+            assert [(g[1], g[2], g[4]) for g in got] == [(2, 5, ["1-2", "1-3"])]
+            assert got[0][5] == (
+                "word one\nfirst gloss\nword two\nsecond gloss\nthird line"
+            )
+        else:
+            # the span at lines 5-6 is still open at EOF
+            assert [(g[1], g[2]) for g in got] == (
+                [(2, 3), (5, 6)] if flush_eof else [(2, 3)]
+            )
+
+
 class TestFrekiSampleParity:
     """Pretrained reference model over the real sample freki docs."""
 
@@ -274,18 +343,12 @@ class TestFrekiSampleParity:
     @needs_reference(
         REF_MODEL_PATH, REF_SAMPLE_TEST, REF_SAMPLE_TRAIN, *REF_LEXICON_FILES
     )
-    def test_staged_freki_matches_oracle(self, spark, ctx_ref, oracle_ref):
+    def test_lines_table_freki_matches_oracle(self, spark, ctx_ref, oracle_ref):
         from igtdetect_spark.operators.segment import segment_freki_files
-        from igtdetect_spark.operators.score import score_lines
-        from igtdetect_spark.operators.spans import assign_spans_df, detected_span_text
         from igtdetect_spark.plans.pipeline import detected_text_df
 
         lines = segment_freki_files(spark, [REF_SAMPLE_TEST, REF_SAMPLE_TRAIN])
-        scored = score_lines(lines, ctx_ref.model_bc, ctx_ref.lex_bc, ctx_ref.cfg)
-        joined = lines.select("url", "line_no", "block_id", "text").join(
-            scored.select("url", "line_no", "pred"), ["url", "line_no"]
-        )
-        spans = detected_span_text(assign_spans_df(joined), ctx_ref.cfg)
+        spans = lines_table_spans(lines, ctx_ref)
         got = {
             r["url"]: r["detected_text"]
             for r in detected_text_df(spans).collect()
