@@ -79,7 +79,7 @@ def _ctx(spark, args, model=None):
     return DetectContext(spark, model, _lex(args), cfg=_cfg(args))
 
 
-def _widened(spark, lines, lex_bc):
+def _widened(lines, lex_bc, cfg):
     from pyspark.sql import functions as F
 
     from .functions.labels import normalize_label_col
@@ -90,44 +90,47 @@ def _widened(spark, lines, lex_bc):
     )
 
     return widen_context_df(
-        bi_rewrite_tags(with_features(lines, lex_bc))
-    ).withColumn("norm_label", normalize_label_col(F.col("bi_tag")))
+        bi_rewrite_tags(with_features(lines, lex_bc, cfg)), cfg
+    ).withColumn("norm_label", normalize_label_col(F.col("bi_tag"), cfg))
 
 
-def cmd_train(args):
-    spark = _spark(args)
-    from .refmodel import save_model
+def _train(spark, args, cfg, files):
+    """Model trained on the gold tags of the freki files ``files``."""
+    from .operators.segment import segment_freki_files
+    from .sources.pages import glob_paths
     from .training import train_model
 
     lex_bc = spark.sparkContext.broadcast(_lex(args))
-    lines = _lines_df(spark, args)
-    widened = _widened(spark, lines, lex_bc)
-    distributed = args.distributed
-    if not distributed:
-        # parity training collects the feature rows to the driver — fine
-        # for reference-sized corpora, unsafe at scale. Auto-route big
-        # inputs to the Spark ML path instead of OOMing the driver.
-        n_lines = widened.count()
-        if n_lines > args.collect_threshold:
-            print(
-                f"{n_lines} training lines > --collect-threshold "
-                f"{args.collect_threshold}: using the distributed "
-                "Spark ML trainer", file=sys.stderr,
-            )
-            distributed = True
-    if distributed:
+    lines = segment_freki_files(spark, glob_paths(files))
+    widened = _widened(lines, lex_bc, cfg)
+    # parity training collects the feature rows to the driver — fine
+    # for reference-sized corpora, unsafe at scale. Auto-route big
+    # inputs to the Spark ML path instead of OOMing the driver.
+    n_lines = widened.count()
+    if n_lines > args.collect_threshold:
+        print(
+            f"{n_lines} training lines > --collect-threshold "
+            f"{args.collect_threshold}: using the distributed "
+            "Spark ML trainer", file=sys.stderr,
+        )
         from .plans.train import feature_label_df, train_spark_ml
 
-        model = train_spark_ml(
+        return train_spark_ml(
             spark, feature_label_df(widened), max_features=args.max_features
         )
-    else:
-        rows = widened.select("features_ctx", "norm_label").collect()
-        model = train_model(
-            [{f: True for f in r["features_ctx"]} for r in rows],
-            [r["norm_label"] for r in rows],
-            max_features=args.max_features,
-        )
+    rows = widened.select("features_ctx", "norm_label").collect()
+    return train_model(
+        [{f: True for f in r["features_ctx"]} for r in rows],
+        [r["norm_label"] for r in rows],
+        max_features=args.max_features,
+    )
+
+
+def cmd_train(args):
+    from .refmodel import save_model
+
+    spark = _spark(args)
+    model = _train(spark, args, _cfg(args), args.files)
     save_model(model, args.classifier_path)
     print(f"trained: classes={model.classes} features={len(model.feature_names)} "
           f"→ {args.classifier_path}")
@@ -176,10 +179,8 @@ def cmd_test(args, spark=None, own_session=True):
             print(f"features: all {len(all_urls)} docs cached → "
                   f"{args.feat_dir}")
         else:
-            from pyspark.sql import functions as F
-
             widened = _widened(
-                spark, lines.filter(F.col("url").isin(todo)), ctx.lex_bc
+                lines.filter(F.col("url").isin(todo)), ctx.lex_bc, ctx.cfg
             )
             by_url: dict[str, list] = {}
             for r in (
@@ -202,15 +203,12 @@ def cmd_test(args, spark=None, own_session=True):
     pred_lines = lines.drop("tag").join(
         scored.select("url", "line_no", F.col("pred").alias("tag")),
         ["url", "line_no"],
-    )
+    ).cache()
 
     if args.classified_dir:
         os.makedirs(args.classified_dir, exist_ok=True)
-        with_ids = assign_spans_df(
-            pred_lines.withColumn("pred", F.col("tag")), tag_col="pred"
-        ).withColumnRenamed("span_id", "span_id_new")
         rendered = render_freki_df(
-            with_ids.drop("span_id").withColumnRenamed("span_id_new", "span_id")
+            assign_spans_df(pred_lines.drop("span_id"), tag_col="tag")
         ).collect()
         for r in rendered:
             name = r["url"].split("/")[-1].split(".")[0] + "_classified.freki"
@@ -232,6 +230,8 @@ def cmd_test(args, spark=None, own_session=True):
                 f.write(r["detected_text"])
         print(f"detected: {len(texts)} docs with spans → {args.detected_dir}")
 
+    pred_lines.unpersist()
+    lines.unpersist()
     if own_session:
         spark.stop()
 
@@ -239,17 +239,11 @@ def cmd_test(args, spark=None, own_session=True):
 def cmd_eval(args, spark=None, own_session=True):
     if spark is None:
         spark = _spark(args)
-    from .operators.eval import (
-        align_eval_gold,
-        confusion_counts,
-        label_metrics,
-        render_report,
-        span_metrics,
-    )
-    from .operators.segment import segment_freki_files
-    from .operators.spans import assign_spans_df, materialize_spans
-    from .sources.pages import glob_paths
     from pyspark.sql import functions as F
+
+    from .operators.segment import segment_freki_files
+    from .plans.selfeval import evaluate_lines
+    from .sources.pages import glob_paths
 
     eval_paths = glob_paths(args.eval_files)
     eval_lines = segment_freki_files(spark, eval_paths)
@@ -266,24 +260,10 @@ def cmd_eval(args, spark=None, own_session=True):
         sys.exit(2)
     gold_lines = segment_freki_files(spark, gold_paths)
 
-    aligned = align_eval_gold(
+    report = evaluate_lines(
         eval_lines.select("url", "line_no", F.col("tag").alias("pred")),
-        gold_lines,
-    )
-    counts = confusion_counts(aligned).cache()
-    lm = label_metrics(counts)
-    sys_spans = materialize_spans(
-        assign_spans_df(
-            eval_lines.select("url", "line_no", F.col("tag").alias("pred"))
-        )
-    )
-    gold_spans = gold_lines.filter(F.col("span_id").isNotNull()).groupBy(
-        "url", "span_id"
-    ).agg(
-        F.min("line_no").alias("start_line"), F.max("line_no").alias("end_line")
-    )
-    sm = span_metrics(sys_spans, gold_spans)
-    report = render_report(counts, lm, sm, csv=args.csv)
+        gold_lines, _cfg(args), args.csv,
+    ).report
     if args.out:
         with open(args.out, "w") as f:
             f.write(report + "\n")
@@ -308,8 +288,7 @@ def cmd_nfold(args):
     from .plans.nfold import run_nfold
 
     lex_bc = spark.sparkContext.broadcast(_lex(args))
-    lines = _lines_df(spark, args)
-    widened = _widened(spark, lines, lex_bc)
+    widened = _widened(_lines_df(spark, args), lex_bc, _cfg(args))
     results, summary = run_nfold(
         widened, ratio=args.ratio, iters=args.iters, seed=args.seed,
         max_features=args.max_features,
@@ -371,15 +350,23 @@ def main(argv=None):
         if model:
             sp.add_argument("--classifier-path", required=True)
 
+    def train_opts(sp):
+        sp.add_argument("--max-features", type=int, default=10000)
+        sp.add_argument(
+            "--collect-threshold", type=int, default=200_000,
+            help="above this many training lines, route to the distributed "
+            "Spark ML trainer instead of collecting features to the driver",
+        )
+
+    def eval_opts(sp):
+        sp.add_argument("--gold-dir", required=True)
+        sp.add_argument("--out")
+        sp.add_argument("--csv", action="store_true")
+
     sp = sub.add_parser("train")
-    common_io(sp)
-    sp.add_argument("--max-features", type=int, default=10000)
-    sp.add_argument("--distributed", action="store_true")
-    sp.add_argument(
-        "--collect-threshold", type=int, default=200_000,
-        help="above this many training lines, route to the distributed "
-        "Spark ML trainer instead of collecting features to the driver",
-    )
+    common_io(sp, files=False)
+    sp.add_argument("--files", required=True, help="training freki glob")
+    train_opts(sp)
     sp.set_defaults(fn=cmd_train)
 
     sp = sub.add_parser("test")
@@ -390,18 +377,14 @@ def main(argv=None):
 
     sp = sub.add_parser("eval")
     sp.add_argument("--eval-files", required=True)
-    sp.add_argument("--gold-dir", required=True)
-    sp.add_argument("--out")
-    sp.add_argument("--csv", action="store_true")
+    eval_opts(sp)
     sp.set_defaults(fn=cmd_eval)
 
     sp = sub.add_parser("testeval")
     common_io(sp)
     sp.add_argument("--classified-dir", required=True)
     sp.add_argument("--detected-dir")
-    sp.add_argument("--gold-dir", required=True)
-    sp.add_argument("--out")
-    sp.add_argument("--csv", action="store_true")
+    eval_opts(sp)
     sp.set_defaults(fn="testeval")
 
     sp = sub.add_parser("traintesteval")
@@ -411,11 +394,8 @@ def main(argv=None):
     sp.add_argument("--classifier-path", required=True)
     sp.add_argument("--classified-dir", required=True)
     sp.add_argument("--detected-dir")
-    sp.add_argument("--gold-dir", required=True)
-    sp.add_argument("--out")
-    sp.add_argument("--csv", action="store_true")
-    sp.add_argument("--max-features", type=int, default=10000)
-    sp.add_argument("--distributed", action="store_true")
+    eval_opts(sp)
+    train_opts(sp)
     sp.set_defaults(fn="traintesteval")
 
     sp = sub.add_parser("nfold")
@@ -441,29 +421,13 @@ def main(argv=None):
 
     args = p.parse_args(argv)
 
-    if args.fn == "testeval":
+    if args.fn in ("testeval", "traintesteval"):
         spark = _spark(args)
-        cmd_test(args, spark=spark, own_session=False)
-        args.eval_files = os.path.join(args.classified_dir, "*_classified.freki")
-        cmd_eval(args, spark=spark, own_session=False)
-        spark.stop()
-    elif args.fn == "traintesteval":
-        spark = _spark(args)
-        train_args = argparse.Namespace(**vars(args))
-        train_args.files = args.train_files
-        # train in-session
-        from .refmodel import save_model
-        from .training import train_model as _tm
+        if args.fn == "traintesteval":
+            from .refmodel import save_model
 
-        lex_bc = spark.sparkContext.broadcast(_lex(args))
-        widened = _widened(spark, _lines_df(spark, train_args), lex_bc)
-        rows = widened.select("features_ctx", "norm_label").collect()
-        model = _tm(
-            [{f: True for f in r["features_ctx"]} for r in rows],
-            [r["norm_label"] for r in rows],
-            max_features=args.max_features,
-        )
-        save_model(model, args.classifier_path)
+            model = _train(spark, args, _cfg(args), args.train_files)
+            save_model(model, args.classifier_path)
         cmd_test(args, spark=spark, own_session=False)
         args.eval_files = os.path.join(args.classified_dir, "*_classified.freki")
         cmd_eval(args, spark=spark, own_session=False)

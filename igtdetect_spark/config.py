@@ -122,10 +122,6 @@ class PipelineConfig:
     # -- ingestion --
     html_main_content: bool = False   # density-based boilerplate removal
 
-    # -- scale knobs --
-    salt_buckets: int = 0             # >0: salt mega-docs in feature stages
-    max_doc_lines_sequential: int = 200_000  # above: fall back to batch decode
-
     def with_(self, **kw) -> "PipelineConfig":
         return replace(self, **kw)
 

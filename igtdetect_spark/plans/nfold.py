@@ -2,11 +2,11 @@
 seeded shuffle of the document list, ``nfold_ratio`` train/test split
 rotated ``nfold_iters`` times, features extracted ONCE and reused across
 iterations (the reference's one explicit cache-this-subplan optimization →
-``persist()`` here), mean/σ of the per-iteration metrics.
+one collect here), mean/σ of the per-iteration metrics.
 
-The shuffle is the deterministic Spark mirror of the reference's seeded
-``Random.shuffle``: ``orderBy(xxhash64(url, lit(seed)))`` — stable across
-cluster sizes and partitionings.
+The shuffle is the deterministic mirror of the reference's seeded
+``Random.shuffle``: urls sorted by ``md5(f"{seed}|{url}")`` in Python
+(``seeded_doc_order``) — stable across cluster sizes and partitionings.
 """
 
 from __future__ import annotations
@@ -14,12 +14,11 @@ from __future__ import annotations
 import statistics
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+import numpy as np
+from pyspark.sql import DataFrame
 
-from ..config import DEFAULT_CONFIG, PipelineConfig
-from ..featurespec import Lexicons
-from ..labels import handle_label
+from ..oracle.evaluate import LabelEvaluator
+from ..refmodel import split_prefix
 from ..training import train_model
 
 
@@ -48,16 +47,19 @@ def run_nfold(
     iters: int = 10,
     seed: int = 232,
     max_features: int = 5000,
-    cfg: PipelineConfig = DEFAULT_CONFIG,
 ) -> tuple[list[NfoldResult], dict]:
     """``widened``: the training features DF (url, line_no, features_ctx,
-    bi_tag, norm_label) — extracted once, persisted, rotated.
+    bi_tag, norm_label) — collected once, rotated.
 
     Returns per-iteration metrics + mean/σ summary (reference
     igtdetect.py:1652-1664)."""
-    widened = widened.persist()
-    urls = [r["url"] for r in widened.select("url").distinct().collect()]
-    order = seeded_doc_order(urls, seed)
+    # rows arrive (url, line_no)-ordered → doc line order holds per url
+    rows = [
+        (r["url"], {f: True for f in r["features_ctx"]}, r["norm_label"])
+        for r in widened.select("url", "line_no", "features_ctx", "norm_label")
+        .orderBy("url", "line_no").collect()
+    ]
+    order = seeded_doc_order({url for url, _, _ in rows}, seed)
     n = len(order)
     n_test = max(1, int(round(n * (1 - ratio))))
 
@@ -69,31 +71,19 @@ def run_nfold(
         test_urls = set(
             order[(start + k) % n] for k in range(n_test)
         )
-        rows = widened.select(
-            "url", "line_no", "features_ctx", "norm_label"
-        ).orderBy("url", "line_no").collect()
         train_fds, train_labels = [], []
         test_by_url: dict[str, list] = {}
-        for r in rows:
-            fd = {f: True for f in r["features_ctx"]}
-            if r["url"] in test_urls:
-                # rows arrive (url, line_no)-ordered → doc line order holds
-                test_by_url.setdefault(r["url"], []).append(
-                    (fd, r["norm_label"])
-                )
+        for url, fd, label in rows:
+            if url in test_urls:
+                test_by_url.setdefault(url, []).append((fd, label))
             else:
                 train_fds.append(fd)
-                train_labels.append(r["norm_label"])
+                train_labels.append(label)
         model = train_model(
             train_fds, train_labels, max_features=max_features, iters=300
         )
 
-        import numpy as np
-
-        from ..refmodel import split_prefix
-
-        ok = tot = 0
-        dno = gno = ono = 0
+        ev = LabelEvaluator()
         for url, items in test_by_url.items():
             X = np.zeros((len(items), model.n_base))
             for i, (fd, _) in enumerate(items):
@@ -103,21 +93,10 @@ def run_nfold(
                         j = model.base_index.get(base)
                         if j is not None:
                             X[i, j] = 1.0
-            preds = model.predict_doc(X)
-            for (fd, gold), p in zip(items, preds):
-                tot += 1
-                ok += gold == p
-                if gold == p and gold != "O":
-                    dno += 1
-                if p != "O":
-                    gno += 1
-                if gold != "O":
-                    ono += 1
-        p = dno / gno if gno else 0
-        r = dno / ono if ono else 0
-        f1 = 2 * p * r / (p + r) if (p + r) > 0 else 0
+            for (_, gold), p in zip(items, model.predict_doc(X)):
+                ev.add_eval_pair(gold, p)
         results.append(
-            NfoldResult(it, ok / tot if tot else 0, p, r, f1)
+            NfoldResult(it, ev.precision(), *ev.prf(exclude=["O"]))
         )
 
     def mean_std(vals):
@@ -133,5 +112,4 @@ def run_nfold(
         "ratio": ratio,
         "seed": seed,
     }
-    widened.unpersist()
     return results, summary

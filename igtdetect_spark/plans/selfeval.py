@@ -5,16 +5,17 @@ tags, then score predictions against those tags — label metrics over the
 
 This is the engine's quality-parity regression surface (BASELINE.md): run
 on the reference sample freki docs with the extracted pretrained model.
+``evaluate_lines`` is also the CLI ``eval`` command's evaluator.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..config import DEFAULT_CONFIG, PipelineConfig
+from ..config import PipelineConfig
 from ..operators.eval import (
     LabelMetrics,
     SpanMetrics,
@@ -38,25 +39,35 @@ class SelfEvalResult:
 
 
 def selfeval_lines(lines: DataFrame, ctx: DetectContext) -> SelfEvalResult:
-    """``lines`` must carry gold ``tag`` (and ``span_id`` for gold spans).
+    """Score ``lines`` with ``ctx`` and evaluate the predictions against
+    the lines' own gold ``tag`` (and ``span_id``) — ``evaluate_lines``."""
+    scored = score_lines(lines, ctx.model_bc, ctx.lex_bc, ctx.cfg)
+    return evaluate_lines(scored, lines, ctx.cfg)
+
+
+def evaluate_lines(
+    pred: DataFrame,
+    gold: DataFrame,
+    cfg: PipelineConfig,
+    csv: bool = False,
+) -> SelfEvalResult:
+    """``pred`` is (url, line_no, pred); ``gold`` carries gold ``tag``
+    (and ``span_id`` for gold spans).
 
     Two span-metric sections, mirroring the reference eval report
     (README.md:196-203): *span_id-based* gold spans = the document's own
     ids (fd.spans()); *auto-spans* = contiguous non-O gold-tag runs
     (assign_spans applied to the gold side). Predicted spans are always
     auto-assigned over contiguous non-O predictions (:1185)."""
-    scored = score_lines(lines, ctx.model_bc, ctx.lex_bc, ctx.cfg)
-    aligned = align_eval_gold(
-        scored, lines.select("url", "line_no", "tag"), ctx.cfg
-    )
+    aligned = align_eval_gold(pred, gold, cfg)
     counts = confusion_counts(aligned).cache()
     lm = label_metrics(counts)
 
     pred_spans = materialize_spans(
-        assign_spans_df(scored, tag_col="pred"), tag_col="pred"
+        assign_spans_df(pred, tag_col="pred"), tag_col="pred"
     )
     gold_spans = (
-        lines.filter(F.col("span_id").isNotNull())
+        gold.filter(F.col("span_id").isNotNull())
         .groupBy("url", "span_id")
         .agg(
             F.min("line_no").alias("start_line"),
@@ -68,13 +79,13 @@ def selfeval_lines(lines: DataFrame, ctx: DetectContext) -> SelfEvalResult:
     # auto-spans: gold side re-derived from contiguous non-O gold tags
     gold_auto = materialize_spans(
         assign_spans_df(
-            lines.select("url", "line_no", F.col("tag").alias("pred")),
+            gold.select("url", "line_no", F.col("tag").alias("pred")),
             tag_col="pred",
         ),
         tag_col="pred",
     )
     auto_sm = span_metrics(pred_spans, gold_auto)
 
-    report = render_report(counts, lm, sm, auto_sm=auto_sm)
+    report = render_report(counts, lm, sm, auto_sm=auto_sm, csv=csv)
     counts.unpersist()
     return SelfEvalResult(labels=lm, spans=sm, auto_spans=auto_sm, report=report)

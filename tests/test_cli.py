@@ -126,3 +126,82 @@ def test_cli_test_eval_workflow(tmp_path):
     # eval report produced with the reference's section structure
     report = (tmp_path / "report.txt").read_text()
     assert "----- Labels -----" in report and "----- Spans ------" in report
+
+
+def _write_bio_workflow_inputs(root):
+    """Hermetic CLI inputs under ``root``: 12 synthetic gold-tagged freki
+    docs in ``docs/`` (file stem = doc id stem, so they double as the gold
+    dir), lexicon files from the benchmark's seeded lexicons, and ``bi.ini``
+    that turns on B-/I- labels and names those lexicon files."""
+    from perfbench.inputs import build_lexicons
+
+    from igtdetect_spark.oracle.corpus import doc_from_text, make_corpus
+
+    docs = root / "docs"
+    docs.mkdir()
+    for d in make_corpus(12, html_every=0):
+        (docs / f"{d.url.rsplit('/', 1)[1]}.freki").write_text(
+            doc_from_text(d.url, d.text, d.gold_tags).render(),
+            encoding="utf-8",
+        )
+    lex = build_lexicons(0)
+    files = {
+        # langs.txt shape: the name list is the fourth column on
+        "lng_names": "\n".join(f"x\tx\tx\t{n}" for n in sorted(lex.langnames)),
+        "gram_list": "\n".join(lex.gram_list),
+        "gram_list_cased": "\n".join(lex.gram_list_cased),
+        "en_wordlist": "\n".join(sorted(lex.en_words)),
+        "gls_wordlist": "\n".join(sorted(lex.gls_words)),
+        "met_wordlist": "\n".join(sorted(lex.met_words)),
+    }
+    for key, text in files.items():
+        (root / f"{key}.txt").write_text(text + "\n", encoding="utf-8")
+    (root / "bi.ini").write_text(
+        "[labels]\nuse_bi_labels = 1\n\n[files]\n"
+        + "".join(f"{key} = {key}.txt\n" for key in files)
+    )
+    return docs, root / "bi.ini"
+
+
+@pytest.mark.slow
+def test_cli_train_test_eval_follow_config(tmp_path):
+    """``-c`` reaches every workflow step: with ``use_bi_labels = 1``
+    traintesteval trains a B-/I- model, scores with it and evaluates
+    with B-/I- labels, and the eval report carries the reference's
+    Auto-Spans section; nfold runs on the same config."""
+    docs, ini = _write_bio_workflow_inputs(tmp_path)
+    common = [
+        sys.executable, "-m", "igtdetect_spark.cli",
+        "--master", "local[2]", "--shuffle-partitions", "4", "-c", str(ini),
+    ]
+    model_path = tmp_path / "model.npz"
+    r = subprocess.run(
+        common + [
+            "traintesteval",
+            "--train-files", str(docs / "*.freki"),
+            "--files", str(docs / "*.freki"),
+            "--classifier-path", str(model_path),
+            "--classified-dir", str(tmp_path / "classified"),
+            "--gold-dir", str(docs),
+            "--out", str(tmp_path / "report.txt"),
+        ],
+        capture_output=True, text=True, cwd=REPO_ROOT, timeout=600,
+    )
+    assert r.returncode == 0, r.stderr[-2000:]
+
+    from igtdetect_spark.refmodel import load_model
+
+    classes = load_model(str(model_path)).classes
+    assert any(c.startswith(("B-", "I-")) for c in classes), classes
+    report = (tmp_path / "report.txt").read_text()
+    assert "--- Auto-Spans ---" in report
+    header = report.splitlines()[0].split("\t")
+    assert any(c.startswith(("B-", "I-")) for c in header), header
+
+    r = subprocess.run(
+        common + ["nfold", "--files", str(docs / "*.freki"), "--iters", "2"],
+        capture_output=True, text=True, cwd=REPO_ROOT, timeout=600,
+    )
+    assert r.returncode == 0, r.stderr[-2000:]
+    iters = [l for l in r.stdout.splitlines() if l.startswith("iter ")]
+    assert [l.split(":")[0] for l in iters] == ["iter 0", "iter 1"], r.stdout
