@@ -5719,8 +5719,8 @@ FROM j WHERE jaccard_e6 >= {threshold_e6}
 def q_crawl_depth(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Crawl-depth BFS from the deterministic seed set over the
     synthetic internal link graph — min hop distance per reached page,
-    4 hops, frontier anti-joined against the visited set each hop (one
-    shuffle join + distinct per hop, frontiers persisted)."""
+    4 hops, each hop one narrow job over the persisted edges with the
+    frontier and visited set on the driver (``_bfs_depths``)."""
     from .operators.webpages import crawl_depth, synthetic_linked_pages
 
     return crawl_depth(

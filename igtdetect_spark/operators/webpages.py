@@ -742,8 +742,7 @@ def pagerank(
     for _ in range(iterations):
         # eager localCheckpoint per round (round 6): the rank chain's
         # PLAN otherwise inlines every prior iteration (persist caches
-        # data, not lineage) and Catalyst optimization cost compounds —
-        # the _bfs_depths lesson applied to the power iteration
+        # data, not lineage) and Catalyst optimization cost compounds
         ranks = materialize(
             _pagerank_iter(er, nodes, ranks, damping_ppm, teleport), "local"
         )
@@ -810,27 +809,22 @@ def crawl_depth(
 
     Seeds are the deterministic set ``doc_id % seeds_mod == 0`` (the
     stand-in for a seed list; sparse at every corpus size).  Classic
-    frontier BFS, unrolled to ``max_hops``: each hop is ONE shuffle
-    join of the edge relation against the (small) frontier, a DISTINCT
-    on the discovered targets, and an anti-join against the visited
-    set so depth = FIRST hop seen (min distance) and the frontier
-    never re-expands settled nodes — the property that bounds total
-    work at O(|E reachable|) regardless of hop count.
+    frontier BFS, unrolled to ``max_hops`` (:func:`_bfs_depths`): depth
+    = FIRST hop seen (min distance) and the frontier never re-expands
+    settled nodes — the property that bounds total work at
+    O(|E reachable|) regardless of hop count.
 
-    Scale shape: the edge relation partitions on ``src_id`` and keeps
-    that partitioning across hops; frontiers shrink geometrically once
-    the reachable set saturates, and Spark broadcasts them under the
-    AQE threshold so late hops degenerate to broadcast joins.  Each
-    hop's frontier is an eager ``localCheckpoint`` (it is consumed by
-    the next hop's join AND the final union), which also cuts the
-    plan's lineage every hop (see :func:`_bfs_depths`).
+    Scale shape: the resolved edge relation is persisted once; each hop
+    is one narrow filter-and-collect job over it keyed by the frontier's
+    ids, with the frontier and visited set held on the driver and the
+    BFS stopping when the frontier empties.
 
     Output: (url, depth) for every page reached within ``max_hops``
     hops (seeds at depth 0).  Unreached pages are absent — the
     consumer's outer-join decides their fate, not this operator.
     """
     ids, edges = _internal_edges(pages)
-    # resolve the two url joins ONCE — every hop re-joins this relation
+    # resolve the two url joins ONCE — every hop reads this relation
     edges = materialize(edges, "persist")
     seeds = pages.filter((F.col("doc_id") % seeds_mod) == 0).select(
         F.col("doc_id").alias("id")
@@ -845,43 +839,73 @@ def _bfs_depths(
 ) -> DataFrame:
     """Shared frontier-BFS kernel (the hop loop of :func:`crawl_depth`,
     reused by :func:`bowtie_classes` on both edge directions and by
-    :func:`landmark_closeness`).  ``edges`` is (src_id, dst_id),
-    ``seeds`` is (*keys, id).  Returns the visited (*keys, id, depth)
-    relation.  With ``keys`` (e.g. a landmark id) the frontier and
-    visited relations are keyed ``(*keys, id)``, so the BFS of every key
-    value runs independently inside ONE set of joins, not as one job
-    per key value.
+    :func:`landmark_closeness`).  ``edges`` is (src_id, dst_id) over
+    integer ids, ``seeds`` is (*keys, id).  Returns the visited
+    (*keys, id, depth) relation: every seed row as given at depth 0
+    (duplicates kept), then each (*keys, id) pair once, at the first
+    hop that reaches it.  With ``keys`` (e.g. a landmark id) the BFS of
+    every key value runs independently inside the same hops.
 
-    Round 6: each hop's frontier is an EAGER ``localCheckpoint``, not a
-    lazy persist.  A persisted frontier caches DATA but not PLAN: hop
-    h's logical tree inlined the full history of hops 0..h−1 (the
-    visited anti-join side is the union of every prior frontier), so
-    the plan grew multiplicatively — the landmark plan reached ~1300
-    join nodes and Catalyst optimization time, not execution, dominated
-    the wall (guide §5 driver costs; the CC kernel's checkpoint
-    discipline).  Checkpointing truncates lineage per hop, keeping
-    every hop's plan O(1).  Same executor-loss caveat as
-    ``connected_components``: on a real cluster prefer reliable
-    checkpoints for deep crawls."""
-    frontier = materialize(
-        seeds.select(*keys, "id", F.lit(0).cast("long").alias("depth")),
-        "local",
-    )
-    visited = frontier
+    The frontier and the visited set live on the driver.  The seeds are
+    collected once; each hop is ONE narrow job over the already
+    persisted ``edges`` — ``src_id IN (…)`` over the frontier's ids,
+    sent as one SQL text (``Column.isin`` would cost one py4j round
+    trip per id), its out-edges collected through Arrow, with no
+    exchange, distinct or anti-join in Spark — and the driver expands
+    each edge per key, drops the pairs it has seen and stops as soon as
+    the frontier is empty.  A null seed id is kept at depth 0 and never
+    expanded.  The result is a local relation, so no hop state sits on
+    executors and nothing needs releasing.
+
+    Driver memory grows with the visited (*keys, id) pairs plus one
+    hop's out-edges, and the IN text with the frontier; nothing caps
+    either.  landmark_closeness at sf0.1 holds 4,875 visited rows and
+    sends at most 1,419 ids per hop; at a regenerated sf1.0, 49,050 rows
+    and 14,268 ids, where parsing the text costs ~1 s per hop (ROADMAP
+    direction C)."""
+    spark = edges.sparkSession
+    cols = [*keys, "id"]
+    schema = seeds.select(*cols).schema.add("depth", T.LongType(), False)
+    rows = [(*r, 0) for r in seeds.select(*cols).collect()]
+    seen = {r[:-1] for r in rows}
+    found = list(seen)
     for hop in range(1, max_hops + 1):
-        frontier = materialize(
-            edges.join(
-                frontier.select(*keys, F.col("id").alias("src_id")),
-                "src_id",
-            )
-            .select(*keys, F.col("dst_id").alias("id"))
-            .distinct()
-            .join(visited.select(*keys, "id"), [*keys, "id"], "left_anti")
-            .select(*keys, "id", F.lit(hop).cast("long").alias("depth")),
-            "local",
+        frontier: dict = {}
+        for *k, i in found:
+            if i is not None:
+                frontier.setdefault(i, []).append(tuple(k))
+        if not frontier:
+            break
+        id_list = ",".join(str(int(i)) for i in frontier)
+        got = (
+            edges.filter(f"src_id IN ({id_list})")
+            .select("src_id", "dst_id")
+            .toArrow()
         )
-        visited = visited.unionByName(frontier)
-    return visited
+        found = []
+        for s, d in zip(got.column(0).to_pylist(), got.column(1).to_pylist()):
+            for k in frontier[s]:
+                p = (*k, d)
+                if p not in seen:
+                    seen.add(p)
+                    found.append(p)
+        rows.extend((*p, hop) for p in found)
+    return _local_relation(spark, rows, schema)
+
+
+def _local_relation(spark, rows: list[tuple], schema: T.StructType) -> DataFrame:
+    """``rows`` as a LocalRelation.  Built through Arrow: a
+    ``createDataFrame`` of Python rows plans as an ExistingRDD scan
+    whose size estimate blocks broadcast joins."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    names = schema.fieldNames()
+    table = pa.table(
+        {n: [r[j] for r in rows] for j, n in enumerate(names)},
+        schema=to_arrow_schema(schema),
+    )
+    return spark.createDataFrame(table, schema)
 
 
 @scoped
@@ -907,16 +931,18 @@ def bowtie_classes(
     relative to its seed list), bounded at ``max_hops`` like
     :func:`crawl_depth` — both choices disclosed, not hidden.
 
-    Scale shape: exactly two runs of the shared BFS kernel — the
-    reverse pass swaps the edge columns, reusing the SAME resolved
-    edge relation (no second extraction); the classifier is two left
-    joins of the page table against the two (id, depth) relations.
+    Scale shape: exactly two runs of the shared BFS kernel
+    (:func:`_bfs_depths`: one narrow job per hop, frontier on the
+    driver) — the reverse pass swaps the edge columns, reusing the SAME
+    persisted edge relation (no second extraction); the classifier is
+    two left joins of the page table against the two local
+    (id, depth) relations.
 
     Output: (url, fwd_depth, bwd_depth, cls) — depths NULL when
     unreached in that direction.
     """
     ids, edges = _internal_edges(pages)
-    # resolved ONCE, consumed by 2 × max_hops hop joins
+    # resolved ONCE, read by every hop of both directions
     edges = materialize(edges, "persist")
     seeds = pages.filter((F.col("doc_id") % seeds_mod) == 0).select(
         F.col("doc_id").alias("id")
@@ -1134,16 +1160,17 @@ def landmark_closeness(
 
     Scale shape: ONE multi-source BFS over the reversed edge relation
     (:func:`_bfs_depths` with ``keys=("lm",)`` — landmark id rides as a
-    key column, so |landmarks| sweeps share each hop's single shuffle
-    join); state is (lm, id, depth) with |landmarks| constant by
-    construction. The final fold is one hash aggregate on ``id``.
+    key, so |landmarks| sweeps share each hop's single narrow job);
+    the (lm, id, depth) state lives on the driver with |landmarks|
+    constant by construction. The final fold is one hash aggregate on
+    ``id``.
 
     Output: (url, n_landmarks, closeness_e6) for pages that reach ≥1
     landmark within the horizon (unreached pages are absent — the
     consumer's outer join decides their score, not this operator).
     """
     ids, edges = _internal_edges(pages)
-    # resolved ONCE, consumed by every hop join
+    # resolved ONCE, read by every hop
     rev = materialize(
         edges.select(
             F.col("dst_id").alias("src_id"), F.col("src_id").alias("dst_id")

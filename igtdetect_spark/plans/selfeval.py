@@ -58,7 +58,12 @@ def evaluate_lines(
     (README.md:196-203): *span_id-based* gold spans = the document's own
     ids (fd.spans()); *auto-spans* = contiguous non-O gold-tag runs
     (assign_spans applied to the gold side). Predicted spans are always
-    auto-assigned over contiguous non-O predictions (:1185)."""
+    auto-assigned over contiguous non-O predictions (:1185).
+
+    ``pred`` is cached for the call: the label counts and both span
+    sections each run several actions over it, and an uncached ``pred``
+    (``selfeval_lines``' scoring) would be recomputed by every one."""
+    pred = pred.cache()
     aligned = align_eval_gold(pred, gold, cfg)
     counts = confusion_counts(aligned).cache()
     lm = label_metrics(counts)
@@ -88,4 +93,5 @@ def evaluate_lines(
 
     report = render_report(counts, lm, sm, auto_sm=auto_sm, csv=csv)
     counts.unpersist()
+    pred.unpersist()
     return SelfEvalResult(labels=lm, spans=sm, auto_spans=auto_sm, report=report)

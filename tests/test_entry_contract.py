@@ -147,6 +147,7 @@ HOSTILE_CHECKED = [
     "sequence_pack", "temperature_mixture", "cleaning_funnel",
     "incremental_dedup", "budget_select", "bigram_lm_score",
     "incremental_dedup_bloom", "nb_domain_score", "igt_segment_lines",
+    "crawl_depth", "bowtie_classes", "landmark_closeness",
 ]
 
 

@@ -586,21 +586,17 @@ def test_triangle_count_wedge_join_is_equi_keyed(spark):
     assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
 
 
-def test_landmark_closeness_is_anti_joined_bfs(spark):
-    """Multi-source BFS: each hop anti-joins the frontier against the
-    visited set so settled (lm, id) pairs never re-expand — behavior
-    pinned by the depth tests; since round 6 the hops execute EAGERLY
-    as localCheckpoints (plan-lineage truncation), so the FINAL plan
-    must consume the materialized frontiers (ExistingRDD scans, a
-    bounded union — not a re-derivation of the hop joins), and nothing
-    runs in Python."""
+def test_landmark_closeness_is_driver_bfs(spark):
+    """Multi-source BFS: the frontier and visited set live on the
+    driver (``_bfs_depths``), so settled (lm, id) pairs never re-expand
+    — behavior pinned by the depth tests — and the FINAL plan reads the
+    visited set as a local relation: no anti-join, no checkpoint scan,
+    no re-derivation of the hops, and nothing runs in Python."""
     from igtdetect_spark.entry_queries import q_landmark_closeness
 
     plan = _plan(q_landmark_closeness(spark, SF_DIR))
-    assert "ExistingRDD" in plan
-    # lineage is truncated: the hop joins must NOT be re-planned in
-    # the final query (a LeftAnti here would mean the checkpoint is
-    # not cutting the tree)
+    assert "LocalTableScan" in plan
+    assert "ExistingRDD" not in plan
     assert "LeftAnti" not in plan
     assert "CartesianProduct" not in plan
     assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan

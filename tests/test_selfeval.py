@@ -40,3 +40,49 @@ def test_selfeval_sample_docs_pinned(spark):
     # auto gold spans than span_id gold spans (151 → 88 on the samples)
     assert res.auto_spans.n_gold == 88
     assert "--- Auto-Spans ---" in res.report
+
+
+def test_selfeval_lines_scores_each_line_once(
+    spark, lexicons, tmp_path, monkeypatch
+):
+    """``evaluate_lines`` runs about ten Spark actions over its ``pred``
+    input; ``selfeval_lines`` must still score every line exactly once.
+    Hermetic: 12 synthetic gold-tagged freki docs, the synthetic model
+    and the benchmark's seeded lexicons."""
+    from igtdetect_spark.flagship import get_synthetic_model
+    from igtdetect_spark.operators.segment import segment_freki_files
+    from igtdetect_spark.oracle.corpus import doc_from_text, make_corpus
+    from igtdetect_spark.plans import selfeval
+    from igtdetect_spark.plans.pipeline import DetectContext
+
+    paths = []
+    for d in make_corpus(12, html_every=0):
+        path = tmp_path / f"{d.url.rsplit('/', 1)[1]}.freki"
+        path.write_text(
+            doc_from_text(d.url, d.text, d.gold_tags).render(),
+            encoding="utf-8",
+        )
+        paths.append(str(path))
+    lines = segment_freki_files(spark, paths).cache()
+    n_lines = lines.count()
+
+    scored_rows = spark.sparkContext.accumulator(0)
+    score_lines = selfeval.score_lines
+
+    def counted_score_lines(*args, **kwargs):
+        def count(batches):
+            for b in batches:
+                scored_rows.add(len(b))
+                yield b
+
+        out = score_lines(*args, **kwargs)
+        return out.mapInPandas(count, out.schema)
+
+    monkeypatch.setattr(selfeval, "score_lines", counted_score_lines)
+    ctx = DetectContext(spark, get_synthetic_model(), lexicons)
+    res = selfeval.selfeval_lines(lines, ctx)
+    lines.unpersist()
+
+    assert res.labels is not None and "--- Auto-Spans ---" in res.report
+    assert n_lines > 0
+    assert scored_rows.value == n_lines

@@ -1832,9 +1832,9 @@ class TestCrawlDepth:
         assert all(got[i] == 0 for i in ids if i % 64 == 0)
         assert 1 in set(got.values())
         assert max(got.values()) <= 4
-        # handles: the resolved edge relation plus the seed frontier and
-        # one eager localCheckpoint per hop (lineage truncation)
-        assert release_plan_caches(out) == 1 + (1 + 4)
+        # handles: the resolved edge relation only — the frontier and
+        # visited set live on the driver, no hop is checkpointed
+        assert release_plan_caches(out) == 1
 
     def test_min_depth_not_last_write(self, spark):
         # a page reachable at hops 2 AND 3 must report 2 — the
@@ -2492,9 +2492,9 @@ class TestBowtieClasses:
         # but are never targets give in/disconnected
         classes = {r["cls"] for r in got.values()}
         assert classes == {"core", "in", "out", "disconnected"}
-        # handles: the shared edge relation plus both BFS runs' seed
-        # frontier and per-hop checkpoints
-        assert release_plan_caches(out) == 1 + 2 * (1 + 4)
+        # handles: the shared edge relation only — both BFS runs keep
+        # their frontier on the driver and checkpoint nothing
+        assert release_plan_caches(out) == 1
 
 
 def _planted_pages(spark, edges, n):
@@ -2553,7 +2553,7 @@ class TestTriangleCounts:
 
 
 class TestBfsCheckpointRelease:
-    """The BFS kernels' per-hop localCheckpoints are release handles:
+    """The BFS kernels' persisted edge relation is a release handle:
     after release_plan_caches the session holds no RDD it did not hold
     before the query.  (RDDs left by earlier tests may be cleaned up
     meanwhile, so the check is for new RDDs, not set equality.)"""
@@ -2575,9 +2575,65 @@ class TestBfsCheckpointRelease:
         before = persistent()
         out = getattr(webpages, kernel)(pages, max_hops=3, **kw)
         out.collect()
-        assert persistent() - before, "no checkpoint was taken"
+        assert persistent() - before, "the edge relation was not persisted"
         release_plan_caches(out)
         assert persistent() - before == set()
+
+
+class TestBfsDepths:
+    """Edge cases of the driver-held ``_bfs_depths`` kernel: an early
+    stop, duplicate seed rows and null seed ids."""
+
+    @staticmethod
+    def _bfs(spark, edges, seeds, max_hops, keys=()):
+        """(sorted output rows, Spark jobs run) of one ``_bfs_depths``."""
+        from igtdetect_spark.operators import webpages
+        from igtdetect_spark.operators.dedup import (
+            release_plan_caches,
+            scoped,
+        )
+
+        key_cols = "".join(f"{k} long, " for k in keys)
+        e = spark.createDataFrame(edges, "src_id long, dst_id long")
+        sd = spark.createDataFrame(seeds, f"{key_cols}id long")
+        group = f"bfs-{id(seeds)}-{max_hops}"
+        sc = spark.sparkContext
+        sc.setJobGroup(group, group)
+        try:
+            out = scoped(webpages._bfs_depths)(e, sd, max_hops, keys)
+            rows = out.collect()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        release_plan_caches(out)
+        jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+        return sorted(map(repr, map(tuple, rows))), jobs
+
+    def test_empty_frontier_stops(self, spark):
+        # 0 → 1 → 2: the frontier is empty before hop 3, so hops 3..10
+        # run no Spark job at all
+        edges = [(0, 1), (1, 2)]
+        rows, jobs = self._bfs(spark, edges, [(0,)], 10)
+        rows2, jobs2 = self._bfs(spark, edges, [(0,)], 3)
+        assert rows == rows2 == ["(0, 0)", "(1, 1)", "(2, 2)"]
+        assert jobs == jobs2
+
+    def test_duplicate_seed_rows_kept(self, spark):
+        rows, _ = self._bfs(spark, [(0, 1), (1, 0)], [(0,), (0,)], 3)
+        assert rows == ["(0, 0)", "(0, 0)", "(1, 1)"]
+
+    def test_null_seed_id_kept_not_expanded(self, spark):
+        # a null id would fail the IN text (int(None)); it stays at
+        # depth 0 and reaches nothing, keyed and unkeyed
+        edges = [(0, 1), (1, 2)]
+        rows, _ = self._bfs(spark, edges, [(None,), (1,)], 3)
+        assert rows == ["(1, 0)", "(2, 1)", "(None, 0)"]
+        rows, _ = self._bfs(
+            spark, edges, [(7, None), (7, 0), (8, 1)], 3, keys=("lm",)
+        )
+        assert rows == [
+            "(7, 0, 0)", "(7, 1, 1)", "(7, 2, 2)", "(7, None, 0)",
+            "(8, 1, 0)", "(8, 2, 1)",
+        ]
 
 
 class TestLandmarkCloseness:
