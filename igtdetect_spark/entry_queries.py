@@ -22,14 +22,19 @@ from .operators.dedup import materialize, scoped
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """The driver table ``name`` as a plain parquet scan. Spreading a
-    task-starved scan is the consuming operator's call: each operator
-    whose per-row work comes before its first exchange spreads its own
-    input (``operators/scale.py:spread_small_scan``)."""
+    """The table ``name`` under ``sf_dir`` as a plain parquet scan. The
+    schema is inferred on the session's first read of the table and
+    reused while its files are unchanged, so a warm ``_t`` runs no Spark
+    job; a path that cannot be stat'ed is inferred on every read
+    (``sources/parquet.py:read_parquet``). Spreading a task-starved scan
+    is the consuming operator's call: each operator whose per-row work
+    comes before its first exchange spreads its own input
+    (``operators/scale.py:spread_small_scan``)."""
     from .shipping import ensure_package_shipped
+    from .sources.parquet import read_parquet
 
     ensure_package_shipped(spark)  # executors import the zipped package
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    return read_parquet(spark, f"{sf_dir}/{name}.parquet")
 
 
 # ---------------------------------------------------------------------------
@@ -40,18 +45,16 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 def _detect_ctx(spark: SparkSession):
     from .flagship import get_lexicons, get_synthetic_model
     from .plans.pipeline import DetectContext
+    from .session import session_state
     from .shipping import ensure_package_shipped
 
     ensure_package_shipped(spark)
-
-    if not hasattr(_detect_ctx, "_cache"):
-        _detect_ctx._cache = {}
-    key = id(spark)
-    if key not in _detect_ctx._cache:
-        _detect_ctx._cache[key] = DetectContext(
+    st = session_state(spark)
+    if st.detect_ctx is None:
+        st.detect_ctx = DetectContext(
             spark, get_synthetic_model(), get_lexicons()
         )
-    return _detect_ctx._cache[key]
+    return st.detect_ctx
 
 
 def q_igt_classify_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -6207,7 +6210,7 @@ def q_spam_mass(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     pages = synthetic_linked_pages(_t(spark, sf_dir, "documents"))
     # resolve the link graph ONCE for both kernels (each otherwise
-    # re-runs extract_links + the two url joins — §2.4); eager
+    # re-runs extract_links + the url join — §2.4); eager
     # materialization, not lazy persist, for the same stampede/lineage
     # reasons as the kernels' own state
     from .operators.webpages import _resolve_edges

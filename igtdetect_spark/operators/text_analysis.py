@@ -57,14 +57,6 @@ def token_stats(docs: DataFrame, id_col: str = "doc_id",
     )
 
 
-def stopword_ratio(text_col):
-    toks = _tokens(F.lower(text_col))
-    sw = F.array([F.lit(w) for w in EN_STOPWORDS])
-    return F.size(F.array_intersect(F.array_distinct(toks), sw)) / F.size(
-        F.array_distinct(toks)
-    )
-
-
 def quality_scores(docs: DataFrame, id_col: str = "doc_id",
                    text_col: str = "text") -> DataFrame:
     """(doc_id, n_tokens, distinct_ratio, stopword_hits, alnum_ratio,
@@ -309,28 +301,6 @@ def winnowing_fingerprints(
 # Gopher-style repetition / structure filters
 # ---------------------------------------------------------------------------
 
-def _max_equal_run(sorted_arr):
-    """Count of the most frequent element of a SORTED array — a single
-    native ``aggregate`` carrying (prev, run, best) struct state, so the
-    per-doc mode needs NO explode/groupBy shuffle. NULL-init prev makes
-    the first element start its run at 1 (NULL comparison → false
-    branch)."""
-    init = F.struct(
-        F.lit(None).cast("string").alias("prev"),
-        F.lit(0).alias("run"),
-        F.lit(0).alias("best"),
-    )
-
-    def step(acc, x):
-        run = F.when(x == acc["prev"], acc["run"] + 1).otherwise(F.lit(1))
-        return F.struct(
-            x.alias("prev"), run.alias("run"),
-            F.greatest(acc["best"], run).alias("best"),
-        )
-
-    return F.aggregate(sorted_arr, init, step, lambda acc: acc["best"])
-
-
 def gopher_filters(
     docs: DataFrame,
     id_col: str = "doc_id",
@@ -343,10 +313,10 @@ def gopher_filters(
     gates — word-count bounds, mean word length in [3, 10], ≥80% words
     containing a letter, hash/ellipsis symbol ratio ≤ 0.1, and the
     repetition signal (fraction of word bigrams taken by the most
-    frequent one). All native expressions, zero shuffles: the per-doc
-    bigram mode is a run-length ``aggregate`` over the sorted bigram
-    array instead of an explode + groupBy (the relational shape the
-    DuckDB oracle mirror uses — same value, different plan).
+    frequent one). Zero shuffles: the per-doc bigram mode is the
+    longest run of the sorted bigram array instead of an explode +
+    groupBy (the relational shape the DuckDB oracle mirror uses — same
+    value, different plan).
 
     ``gopher_pass`` is derived from the floored _e6 columns, not the raw
     doubles, so the flag is trivially cross-engine-stable. Ratios are
@@ -437,56 +407,6 @@ def gopher_filters(
         F.col("_g.symbol_ratio_e6").alias("symbol_ratio_e6"),
         F.col("_g.top_bigram_frac_e6").alias("top_bigram_frac_e6"),
         F.col("_g.gopher_pass").alias("gopher_pass"),
-    )
-
-
-def _dup_run_chars(sorted_arr):
-    """Characters in 2nd+ occurrences of each repeated element of a
-    SORTED string array — the duplicate-character mass, as one native
-    ``aggregate`` (no explode/groupBy shuffle)."""
-    init = F.struct(
-        F.lit(None).cast("string").alias("prev"),
-        F.lit(0).cast("long").alias("dup"),
-    )
-
-    def step(acc, x):
-        dup = F.when(
-            x == acc["prev"], acc["dup"] + F.length(x)
-        ).otherwise(acc["dup"])
-        return F.struct(x.alias("prev"), dup.alias("dup"))
-
-    return F.aggregate(sorted_arr, init, step, lambda acc: acc["dup"])
-
-
-def _top_run_char_mass(sorted_arr):
-    """count(top element) × length(top element) over a SORTED string
-    array, where "top" maximizes (count, element) — the tie-break every
-    SQL mirror can reproduce with ORDER BY cnt DESC, gram DESC LIMIT 1.
-    Single native ``aggregate``; 0 on an empty array."""
-    init = F.struct(
-        F.lit(None).cast("string").alias("prev"),
-        F.lit(0).alias("run"),
-        F.lit(0).alias("best_run"),
-        F.lit("").alias("best"),
-    )
-
-    def step(acc, x):
-        run = F.when(x == acc["prev"], acc["run"] + 1).otherwise(F.lit(1))
-        better = (run > acc["best_run"]) | (
-            (run == acc["best_run"]) & (x > acc["best"])
-        )
-        return F.struct(
-            x.alias("prev"),
-            run.alias("run"),
-            F.when(better, run).otherwise(acc["best_run"]).alias("best_run"),
-            F.when(better, x).otherwise(acc["best"]).alias("best"),
-        )
-
-    return F.aggregate(
-        sorted_arr,
-        init,
-        step,
-        lambda acc: acc["best_run"].cast("long") * F.length(acc["best"]),
     )
 
 

@@ -538,6 +538,15 @@ def _page_url(id_expr) -> "F.Column":
     )
 
 
+def _page_url_sql(x: str) -> str:
+    """:func:`_page_url` as Spark SQL text over the SQL expression ``x``."""
+    return (
+        "concat('https://site', CAST(CAST(conv(substring("
+        f"md5(CAST({x} AS STRING)), 1, 1), 16, 10) AS INT) % 4 AS STRING), "
+        f"'.example.org/p/', CAST({x} AS STRING))"
+    )
+
+
 #: Anchor-word vocabulary for the synthetic link farm: word ``(doc_id +
 #: j) mod 5`` + the target id, so per-target anchor aggregation sees
 #: several distinct anchors (the real-web norm) yet stays provable.
@@ -556,39 +565,43 @@ def synthetic_linked_pages(
     handle ragged link lists; anchor text varies by (source, slot)
     (:data:`ANCHOR_WORDS`). Body text is constant: this table grades
     link/anchor extraction; page TEXT extraction is ``html_extract``'s
-    job."""
-    h = F.md5(F.col(id_col).cast("string"))
-    k = 1 + _nib(h, 2) % 3
+    job.
 
-    def link(j: int) -> "F.Column":
-        tgt = (F.col(id_col) * 31 + j * 97) % targets_mod
-        dst = (
-            F.concat(F.lit("https://ext"), tgt.cast("string"),
-                     F.lit(".example.net/"))
-            if j == 3
-            else _page_url(tgt)
-        )
-        word = F.element_at(
-            F.array(*[F.lit(w) for w in ANCHOR_WORDS]),
-            ((F.col(id_col) + j) % len(ANCHOR_WORDS) + 1).cast("int"),
-        )
-        return F.when(
-            F.lit(j) <= k,
-            F.concat(
-                F.lit('<li><a href="'), dst, F.lit('">'),
-                word, F.lit(" "), tgt.cast("string"),
-                F.lit("</a></li>"),
-            ),
-        ).otherwise(F.lit(""))
-    html = F.concat(
-        F.lit("<html><body><p>A short constant paragraph.</p><ul>"),
-        link(1), link(2), link(3),
-        F.lit("</ul></body></html>"),
+    The three output columns are Spark SQL text applied in ONE
+    ``selectExpr``: building the same expressions as ``Column`` objects
+    costs one py4j round trip per node, ~150 per call."""
+    i = f"`{id_col}`"
+    k = (
+        f"(1 + CAST(conv(substring(md5(CAST({i} AS STRING)), 2, 1), 16, 10)"
+        " AS INT) % 3)"
     )
-    return docs.select(
-        F.col(id_col).alias("doc_id"),
-        _page_url(F.col(id_col)).alias("url"),
-        F.encode(html, "utf-8").alias("html"),
+    words = ", ".join(f"'{w}'" for w in ANCHOR_WORDS)
+
+    def link(j: int) -> str:
+        tgt = f"(({i} * 31 + {j * 97}) % {int(targets_mod)})"
+        dst = (
+            f"concat('https://ext', CAST({tgt} AS STRING), '.example.net/')"
+            if j == 3
+            else _page_url_sql(tgt)
+        )
+        word = (
+            f"element_at(array({words}), "
+            f"CAST(({i} + {j}) % {len(ANCHOR_WORDS)} + 1 AS INT))"
+        )
+        return (
+            f"CASE WHEN {j} <= {k} THEN concat('<li><a href=\"', {dst}, "
+            f"'\">', {word}, ' ', CAST({tgt} AS STRING), '</a></li>') "
+            "ELSE '' END"
+        )
+
+    html = (
+        "concat('<html><body><p>A short constant paragraph.</p><ul>', "
+        f"{link(1)}, {link(2)}, {link(3)}, '</ul></body></html>')"
+    )
+    return docs.selectExpr(
+        f"{i} AS doc_id",
+        f"{_page_url_sql(i)} AS url",
+        f"encode({html}, 'utf-8') AS html",
     )
 
 
@@ -598,15 +611,17 @@ def extract_links(pages: DataFrame) -> DataFrame:
     regexp_extract_all + explode), whole-stage codegen, NO Python and
     NO shuffle. The per-row fan-out is the page's link count, so at
     10¹² pages this is a flat map fused into the scan."""
-    return pages.select(
-        F.col("url").alias("src_url"),
-        F.explode(
-            F.regexp_extract_all(
-                F.decode(F.col("html"), "UTF-8"),
-                F.lit(r'href="([^"]+)"'), F.lit(1),
-            )
-        ).alias("dst_url"),
-    )
+    return pages.select(F.col("url").alias("src_url"), _hrefs())
+
+
+def _hrefs() -> "F.Column":
+    """``dst_url``: one row per ``href`` of the page's html."""
+    return F.explode(
+        F.regexp_extract_all(
+            F.decode(F.col("html"), "UTF-8"),
+            F.lit(r'href="([^"]+)"'), F.lit(1),
+        )
+    ).alias("dst_url")
 
 
 def link_graph(pages: DataFrame) -> DataFrame:
@@ -720,8 +735,8 @@ def pagerank(
     bit-for-bit — floats would diverge across engines in summation
     order alone.
 
-    Scale shape: urls are resolved to integer node ids ONCE (two
-    equi-joins of the edge flat-map against the page table), and the
+    Scale shape: urls are resolved to integer node ids ONCE (one
+    equi-join of the edge flat-map against the page table), and the
     (src, dst, out_deg) relation is computed once and persisted; each
     iteration is then one shuffle join on ``src_id`` (edges re-use
     their partitioning; AQE handles the rank side) plus one hash
@@ -758,16 +773,18 @@ def pagerank(
 
 
 def _resolve_edges(pages: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """(ids, edges): url→integer-id resolution of the href flat-map
-    (two equi-joins), NON-distinct — one row per link occurrence,
-    exactly :func:`pagerank`'s edge build.  Compositions that run
-    several graph kernels over the SAME pages (spam_mass) materialize
-    this once and hand it to each kernel's ``graph=`` hook."""
+    """(ids, edges): url→integer-id resolution of the href flat-map,
+    NON-distinct — one row per link occurrence, exactly
+    :func:`pagerank`'s edge build.  ``url`` is the page table's key (one
+    row per url), so a link's ``src_id`` is its page's own ``doc_id``,
+    taken at extraction; only ``dst_id`` needs ONE equi-join against
+    the page urls, and a target outside the crawl drops in it.
+    Compositions that run several graph kernels over the SAME pages
+    (spam_mass) materialize this once and hand it to each kernel's
+    ``graph=`` hook."""
     ids = pages.select(F.col("url"), F.col("doc_id").alias("_nid"))
-    raw = extract_links(pages)
     edges = (
-        raw.join(ids.select(F.col("url").alias("src_url"),
-                            F.col("_nid").alias("src_id")), "src_url")
+        pages.select(F.col("doc_id").alias("src_id"), _hrefs())
         .join(ids.select(F.col("url").alias("dst_url"),
                          F.col("_nid").alias("dst_id")), "dst_url")
         .select("src_id", "dst_id")
@@ -788,11 +805,11 @@ def _degree_join(edges: DataFrame) -> tuple[DataFrame, DataFrame]:
 
 def _internal_edges(pages: DataFrame) -> tuple[DataFrame, DataFrame]:
     """Shared link-graph prep for the iterative graph operators: resolve
-    the href flat-map against the page table ONCE (two equi-joins) and
-    return ``(ids, edges)`` where ``ids = (url, _nid)`` and ``edges``
-    is the DISTINCT internal (src_id, dst_id) relation — external
-    targets drop in the inner dst join, exactly like :func:`pagerank`'s
-    edge build."""
+    the href flat-map against the page table ONCE (one url equi-join,
+    :func:`_resolve_edges`) and return ``(ids, edges)`` where
+    ``ids = (url, _nid)`` and ``edges`` is the DISTINCT internal
+    (src_id, dst_id) relation — external targets drop in the inner dst
+    join, exactly like :func:`pagerank`'s edge build."""
     ids, edges = _resolve_edges(pages)
     return ids, edges.distinct()
 
@@ -824,7 +841,7 @@ def crawl_depth(
     consumer's outer-join decides their fate, not this operator.
     """
     ids, edges = _internal_edges(pages)
-    # resolve the two url joins ONCE — every hop reads this relation
+    # resolve the url join ONCE — every hop reads this relation
     edges = materialize(edges, "persist")
     seeds = pages.filter((F.col("doc_id") % seeds_mod) == 0).select(
         F.col("doc_id").alias("id")

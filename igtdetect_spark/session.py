@@ -1,4 +1,5 @@
-"""SparkSession construction with the engine's standard configuration.
+"""SparkSession construction with the engine's standard configuration,
+and the state the engine caches per session (:func:`session_state`).
 
 Scale posture (SURVEY.md §4): Arrow everywhere, AQE on (skew-join +
 partition coalescing), sensible shuffle-partition default for local mode —
@@ -8,6 +9,7 @@ on a real cluster these come from spark-submit conf instead.
 from __future__ import annotations
 
 import os
+import weakref
 
 from pyspark.sql import SparkSession
 
@@ -61,3 +63,29 @@ def build_session(
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)
     return b.getOrCreate()
+
+
+class SessionState:
+    """What the engine caches for one SparkSession: the shipped package
+    archive, the registry's detection broadcasts and each parquet
+    table's schema (:func:`igtdetect_spark.sources.parquet.read_parquet`).
+    Nothing here may reference the session itself, or the session could
+    never be collected."""
+
+    __slots__ = ("shipped", "detect_ctx", "schemas")
+
+    def __init__(self) -> None:
+        self.shipped: str | None = None
+        self.detect_ctx = None
+        self.schemas: dict = {}
+
+
+# Keyed on the session object, not ``id(spark)``: CPython reuses the id
+# of a freed object, so an id-keyed cache can hand a new session the
+# state (broadcasts, "already shipped") of a stopped one.
+_states: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+
+
+def session_state(spark: SparkSession) -> SessionState:
+    """The :class:`SessionState` of ``spark``; it dies with the session."""
+    return _states.setdefault(spark, SessionState())

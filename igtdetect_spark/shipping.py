@@ -16,7 +16,7 @@ import zipfile
 
 from pyspark.sql import SparkSession
 
-_shipped: dict[int, str] = {}
+from .session import session_state
 
 
 def package_zip_path(pkg_dir: str | None = None, out_dir: str = "/tmp") -> str:
@@ -57,8 +57,8 @@ def package_zip_path(pkg_dir: str | None = None, out_dir: str = "/tmp") -> str:
 
 def ensure_package_shipped(spark: SparkSession) -> None:
     """Idempotent per-session addPyFile of the engine package."""
-    key = id(spark)
-    if key in _shipped:
+    st = session_state(spark)
+    if st.shipped is not None:
         return
     path = package_zip_path()
     try:
@@ -66,4 +66,4 @@ def ensure_package_shipped(spark: SparkSession) -> None:
     except Exception:
         # already added under the same name in this context — fine
         pass
-    _shipped[key] = path
+    st.shipped = path

@@ -19,6 +19,8 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
+from .parquet import read_parquet
+
 PAGES_SCHEMA = StructType(
     [
         StructField("url", StringType(), False),
@@ -31,7 +33,11 @@ PAGES_SCHEMA = StructType(
 
 
 def read_pages(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.parquet(path)
+    """The pages table at ``path`` (a parquet file or directory), read
+    with the session's cached schema once the table has been read
+    unchanged before; a path that cannot be stat'ed is read with schema
+    inference every time (:func:`.parquet.read_parquet`)."""
+    return read_parquet(spark, path)
 
 
 def glob_paths(pattern: str) -> list[str]:
@@ -95,7 +101,7 @@ def pages_from_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..shipping import ensure_package_shipped
 
     ensure_package_shipped(spark)
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_parquet(spark, f"{sf_dir}/documents.parquet")
     return docs.select(
         F.concat(F.lit("doc://"), F.col("doc_id").cast("string")).alias("url"),
         F.to_timestamp(F.lit("2024-01-01 00:00:00")).alias("warc_ts"),
