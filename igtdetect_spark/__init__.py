@@ -7,11 +7,10 @@ Layout
 - ``config``     : pipeline configuration (feature gates, thresholds, label opts)
 - ``refmodel``   : classifier-weight extraction from the reference pickle
 - ``oracle``     : pure-Python single-node reference semantics (test oracle)
-- ``sources``    : pages / freki / wordlist readers
+- ``sources``    : pages / parquet / WARC / SQLite docs-table readers
 - ``operators``  : Spark DataFrame operators (segment, features, score, spans,
                    eval, dedup, similarity, text analysis, multimodal)
 - ``plans``      : end-to-end pipelines (detect, train) with checkpoint/resume
-- ``streaming``  : Structured Streaming ingestion
 """
 
 __version__ = "0.1.0"

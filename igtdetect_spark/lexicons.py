@@ -6,8 +6,7 @@ parse_langnames = lowercased comma-split names ≥5 chars from cols 4+ of
 langs.txt with ``[`` stripped (igtdetect.py:798-813).
 
 These are ~1-2 MB total → driver-side load + ``sc.broadcast`` into Arrow
-UDF closures (SURVEY.md §2.3 joins table). A DataFrame variant lives in
-``sources/wordlists.py`` for provenance-style joins.
+UDF closures (SURVEY.md §2.3 joins table).
 """
 
 from __future__ import annotations

@@ -177,16 +177,11 @@ def exact_dedup_groups(docs: DataFrame, id_col: str = "doc_id",
 
 
 def shingle_arrays(docs: DataFrame, n: int = 3, id_col: str = "doc_id",
-                   text_col: str = "text",
-                   extra_cols: tuple[str, ...] = ()) -> DataFrame:
+                   text_col: str = "text") -> DataFrame:
     """Distinct word n-gram shingles per doc as ONE array column:
-    (doc_id, *extra_cols, shingles array<string>) — the narrow (no
-    explode) form. ``extra_cols`` pass through untouched (e.g. the event
-    timestamp a streaming consumer needs downstream)."""
+    (doc_id, shingles array<string>) — the narrow (no explode) form."""
     toks = F.split(normalized_text(F.col(text_col)), " ")
-    d = docs.select(
-        F.col(id_col).alias("doc_id"), *extra_cols, toks.alias("_toks")
-    )
+    d = docs.select(F.col(id_col).alias("doc_id"), toks.alias("_toks"))
     d = d.withColumn(
         "_shingles",
         F.when(
@@ -197,9 +192,7 @@ def shingle_arrays(docs: DataFrame, n: int = 3, id_col: str = "doc_id",
             ),
         ).otherwise(F.array(F.array_join("_toks", " "))),
     )
-    return d.select(
-        "doc_id", *extra_cols, F.array_distinct("_shingles").alias("shingles")
-    )
+    return d.select("doc_id", F.array_distinct("_shingles").alias("shingles"))
 
 
 def doc_tokens(docs: DataFrame, id_col: str = "doc_id",
@@ -466,14 +459,10 @@ def minhash_band_hashes(
     id_col: str = "doc_id",
     text_col: str = "text",
     scheme: str = "affine",
-    extra_cols: tuple[str, ...] = (),
     tokens: DataFrame | None = None,
 ) -> DataFrame:
-    """(doc_id, *extra_cols, band, band_hash): minhash signatures folded
-    into LSH bands. Docs sharing any band_hash are near-duplicate
-    candidates. ``extra_cols`` pass through the narrow projection chain
-    untouched (streaming consumers carry the event time this way —
-    joining it back post-hoc would be a stream-stream join).
+    """(doc_id, band, band_hash): minhash signatures folded into LSH
+    bands. Docs sharing any band_hash are near-duplicate candidates.
 
     Two cross-engine-exact permutation schemes, both pure native column
     expressions (whole-stage codegen end-to-end — no Python on the path):
@@ -523,18 +512,16 @@ def minhash_band_hashes(
             )
 
         if tokens is not None:
-            if extra_cols:
-                raise ValueError("tokens= does not carry extra_cols")
             d = tokens
         else:
             d = docs.select(
-                F.col(id_col).alias("doc_id"), *extra_cols,
+                F.col(id_col).alias("doc_id"),
                 F.split(
                     normalized_text(F.col(text_col)), " "
                 ).alias("_toks"),
             )
         return d.select(
-            "doc_id", *extra_cols,
+            "doc_id",
             F.posexplode_outer(_bands("_toks")).alias(
                 "band", "band_hash"
             ),
@@ -542,9 +529,9 @@ def minhash_band_hashes(
 
     if tokens is not None:
         raise ValueError("tokens= is only supported for scheme='affine'")
-    sh = shingle_arrays(docs, shingle_n, id_col, text_col, extra_cols)
+    sh = shingle_arrays(docs, shingle_n, id_col, text_col)
     if scheme == "md5":
-        d = sh.select("doc_id", *extra_cols, F.col("shingles").alias("_hs"))
+        d = sh.select("doc_id", F.col("shingles").alias("_hs"))
 
         def _perm_min_md5(pref: str):
             return F.array_min(
@@ -557,7 +544,7 @@ def minhash_band_hashes(
     else:
         raise ValueError(f"unknown minhash scheme: {scheme!r}")
 
-    d = d.select("doc_id", *extra_cols, *mins)
+    d = d.select("doc_id", *mins)
     bands = F.array(*[
         F.md5(
             F.concat_ws(
@@ -572,9 +559,7 @@ def minhash_band_hashes(
         )
         for b in range(n_bands)
     ])
-    return d.select(
-        "doc_id", *extra_cols, F.posexplode(bands).alias("band", "band_hash")
-    )
+    return d.select("doc_id", F.posexplode(bands).alias("band", "band_hash"))
 
 
 def minhash_lsh_pairs(

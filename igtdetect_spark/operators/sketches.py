@@ -1,20 +1,14 @@
-"""Mergeable cardinality sketches: a cross-engine-exact HyperLogLog.
+"""Cardinality sketches: a cross-engine-exact HyperLogLog.
 
 Spark ships HLL++ (``approx_count_distinct``) but its registers are
-engine-internal — you cannot persist them, merge them across corpus
-shards built by different systems, or oracle-check the estimate.  This
-module implements the textbook HLL (Flajolet et al. 2007) over an
-EXPLICIT register relation with a deterministic, engine-portable hash
-(48-bit md5 prefix — the repo's established cross-engine integer-hash
-convention), so:
-
-* the register relation ``(group, bucket, rho)`` is an ordinary
-  DataFrame — persist it per corpus shard, union + ``max`` to merge
-  (:func:`hll_merge_registers`), estimate at any later time;
-* every arithmetic step is integer-exact or a single double op on
-  identical operands, so the ESTIMATE itself hash-matches a DuckDB
-  oracle (``2^(48-rho)`` register terms are summed as exact BIGINTs,
-  never as floating ``2^-rho``).
+engine-internal — you cannot oracle-check the estimate.  This module
+implements the textbook HLL (Flajolet et al. 2007) over an EXPLICIT
+register relation ``(group, bucket, rho)`` with a deterministic,
+engine-portable hash (48-bit md5 prefix — the repo's established
+cross-engine integer-hash convention).  Every arithmetic step is
+integer-exact or a single double op on identical operands, so the
+ESTIMATE itself hash-matches a DuckDB oracle (``2^(48-rho)`` register
+terms are summed as exact BIGINTs, never as floating ``2^-rho``).
 
 Scale shape: building registers is one hash aggregate whose output is
 at most ``m`` rows per group — constant-size state per group no matter
@@ -85,19 +79,6 @@ def hll_registers(
         .groupBy(*group_cols, "bucket")
         .agg(F.max("_rho").alias("rho"))
     )
-
-
-def hll_merge_registers(*register_dfs: DataFrame) -> DataFrame:
-    """Merge register relations from independent shards: union + max
-    per (group, bucket).  HLL's defining property — merge-then-estimate
-    equals estimate-over-the-union, bit-for-bit with this
-    implementation (pinned by test)."""
-    it = iter(register_dfs)
-    u = next(it)
-    for d in it:
-        u = u.unionByName(d)
-    keys = [c for c in u.columns if c != "rho"]
-    return u.groupBy(*keys).agg(F.max("rho").alias("rho"))
 
 
 def hll_estimate(

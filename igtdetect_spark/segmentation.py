@@ -419,7 +419,3 @@ def batch_page_texts(htmls, texts, html_main_content: bool = False) -> list[str]
         )
         for html, text in zip(htmls, texts)
     ]
-
-
-def segment_page(html: Optional[bytes], text: Optional[str]) -> list[SegmentedLine]:
-    return segment_text(extract_page_text(html, text))

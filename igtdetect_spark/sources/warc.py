@@ -90,8 +90,6 @@ def synthetic_warc_records(
         F.encode(F.concat(header, F.lit(CRLF), payload), "utf-8")
         .alias("record"),
     )
-    if getattr(out, "isStreaming", False):
-        return out
     return materialize(out, "local")
 
 

@@ -39,7 +39,11 @@ from igtdetect_spark.oracle.pipeline import (
 )
 from igtdetect_spark.oracle.corpus import make_doc, make_corpus
 from igtdetect_spark.refmodel import load_reference_model, split_prefix
-from igtdetect_spark.segmentation import segment_text, segment_page, strip_html
+from igtdetect_spark.segmentation import (
+    extract_page_text,
+    segment_text,
+    strip_html,
+)
 
 from conftest import REF_LEXICON_FILES, needs_reference
 
@@ -400,7 +404,8 @@ class TestSegmentation:
         d_txt = make_doc(7, as_html=False)
         d_html = make_doc(7, as_html=True)
         lines_txt = [s.text for s in segment_text(d_txt.text)]
-        lines_html = [s.text.rstrip() for s in segment_page(d_html.html, None)]
+        page_text = extract_page_text(d_html.html, None)
+        lines_html = [s.text.rstrip() for s in segment_text(page_text)]
         assert [l.rstrip() for l in lines_txt] == lines_html
 
     def test_corpus_gold_span_construction(self):

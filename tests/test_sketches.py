@@ -1,12 +1,10 @@
-"""HyperLogLog sketch (operators/sketches): accuracy, mergeability,
-small-range branch, plan shape."""
+"""HyperLogLog sketch (operators/sketches): accuracy, small-range
+branch, plan shape."""
 
 from pyspark.sql import functions as F
 
 from igtdetect_spark.operators.sketches import (
     hll_cardinality,
-    hll_estimate,
-    hll_merge_registers,
     hll_registers,
 )
 
@@ -28,23 +26,6 @@ class TestHll:
         assert r["exact_distinct"] == 20_000
         assert abs(r["hll_est"] - 20_000) / 20_000 < 0.185
         assert r["err_ppm"] == abs(r["hll_est"] - 20_000) * 10**6 // 20_000
-
-    def test_merge_equals_global(self, spark):
-        # The defining sketch property: shard registers, merge, estimate
-        # — bit-identical to the single-pass global estimate, even with
-        # overlapping shards (max is idempotent).
-        df = _keyed(spark, 5_000)
-        a = df.filter(F.col("k").cast("long") < 3_000)
-        b = df.filter(F.col("k").cast("long") >= 2_000)  # overlap
-        merged = hll_merge_registers(
-            hll_registers(a, F.col("k"), ["g"], p=9),
-            hll_registers(b, F.col("k"), ["g"], p=9),
-        )
-        got = hll_estimate(merged, ["g"], p=9).collect()
-        want = hll_estimate(
-            hll_registers(df, F.col("k"), ["g"], p=9), ["g"], p=9
-        ).collect()
-        assert [r.asDict() for r in got] == [r.asDict() for r in want]
 
     def test_register_relation_is_bounded(self, spark):
         regs = hll_registers(
