@@ -70,12 +70,11 @@ def _lex(args):
     return get_lexicons()
 
 
-def _ctx(spark, args, model=None):
+def _ctx(spark, args):
     from .plans.pipeline import DetectContext
     from .refmodel import load_model
 
-    if model is None:
-        model = load_model(args.classifier_path)
+    model = load_model(args.classifier_path)
     return DetectContext(spark, model, _lex(args), cfg=_cfg(args))
 
 
@@ -151,9 +150,9 @@ def cmd_test(args, spark=None, own_session=True):
     lines = _lines_df(spark, args).cache()
 
     if getattr(args, "feat_dir", None):
-        # reference feature-file cache surface (igtdetect.py:122-132,
-        # get_feat_path :266-270): <doc>_feats.txt[.gz] per input doc,
-        # skipped when present unless -f/--overwrite-features
+        # feature-file export (reference igtdetect.py:122-132, get_feat_path
+        # :266-270): <doc>_feats.txt[.gz] per input doc. Nothing reads the
+        # files back: score_lines below always recomputes the features.
         import gzip as _gzip
 
         from .operators.features import render_svmlight_df
@@ -167,9 +166,9 @@ def cmd_test(args, spark=None, own_session=True):
                 args.feat_dir, url.split("/")[-1].split(".")[0] + suffix
             )
 
-        # reference cache semantics (igtdetect.py:123-130): docs whose
-        # feature file exists are SKIPPED entirely — no recompute, no
-        # driver collect — unless -f/--overwrite-features
+        # as in the reference (igtdetect.py:123-130), a doc whose feature
+        # file already exists is not exported again unless
+        # -f/--overwrite-features is given
         all_urls = [r["url"] for r in lines.select("url").distinct().collect()]
         todo = [
             u for u in all_urls
@@ -329,8 +328,10 @@ def main(argv=None):
     )
     p.add_argument(
         "--feat-dir", default=None,
-        help="write per-doc svmlight feature files here (reference feature "
-        "cache, <doc>_feats.txt[.gz])",
+        help="export per-doc svmlight feature files <doc>_feats.txt[.gz] "
+        "here; a doc whose file already exists is skipped unless -f is "
+        "given. The files are not read back: scoring always recomputes "
+        "the features",
     )
     p.add_argument(
         "-f", "--overwrite-features", dest="overwrite", action="store_true",

@@ -126,11 +126,10 @@ class PipelineConfig:
         return replace(self, **kw)
 
     @classmethod
-    def from_ini(cls, *paths: str,
-                 base: "PipelineConfig | None" = None) -> "PipelineConfig":
+    def from_ini(cls, *paths: str) -> "PipelineConfig":
         """Config from one or more INI files (reference cascade order:
         later files override earlier, section by section)."""
-        cfg, _ = load_ini(*paths, base=base)
+        cfg, _ = load_ini(*paths)
         return cfg
 
 
@@ -183,16 +182,14 @@ def _merge_ini(paths: tuple[str, ...]) -> ConfigParser:
     return conf
 
 
-def load_ini(*paths: str, base: PipelineConfig | None = None
-             ) -> tuple[PipelineConfig, dict[str, str]]:
+def load_ini(*paths: str) -> tuple[PipelineConfig, dict[str, str]]:
     """(PipelineConfig, resolved path options) from the INI cascade.
 
-    Only options present in the files override ``base``; feature-gate
+    Only options present in the files override the defaults; feature-gate
     sections ([freki_features]/[text_features]) replace the whole enabled
     set when present, mirroring ``enabled_feats`` (env.py:239-246): a
     gate absent from the section is disabled.
     """
-    base = base if base is not None else DEFAULT_CONFIG
     conf = _merge_ini(paths)
     kw: dict = {}
 
@@ -238,7 +235,7 @@ def load_ini(*paths: str, base: PipelineConfig | None = None
     for sec in ("paths", "files"):
         if conf.has_section(sec):
             resolved_paths.update(dict(conf[sec]))
-    return base.with_(**kw), resolved_paths
+    return DEFAULT_CONFIG.with_(**kw), resolved_paths
 
 # Paths into the read-only reference checkout (data files are inputs, the
 # code is never imported).

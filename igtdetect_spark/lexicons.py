@@ -57,15 +57,15 @@ def load_langnames(path: str) -> frozenset[str]:
     return frozenset(langs)
 
 
-def load_reference_lexicons(with_wordlists: bool = True) -> Lexicons:
+def load_reference_lexicons() -> Lexicons:
     """All lookup sets from the read-only reference data directory."""
     return Lexicons(
         langnames=load_langnames(REF_LANGS),
         gram_list=load_gram_list(REF_GRAMS),
         gram_list_cased=load_gram_list(REF_GRAMS_CASED),
-        en_words=load_wordlist(REF_EN_WORDLIST) if with_wordlists else frozenset(),
-        gls_words=load_wordlist(REF_GLS_WORDLIST) if with_wordlists else frozenset(),
-        met_words=load_wordlist(REF_MET_WORDLIST) if with_wordlists else frozenset(),
+        en_words=load_wordlist(REF_EN_WORDLIST),
+        gls_words=load_wordlist(REF_GLS_WORDLIST),
+        met_words=load_wordlist(REF_MET_WORDLIST),
     )
 
 

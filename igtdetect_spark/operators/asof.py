@@ -45,7 +45,6 @@ def auto_bucket_width(
     right_ts: str,
     hot_key_threshold: int = 100_000,
     probe_fraction: float = 1.0,
-    buckets_per_core: int = 32,
 ) -> int | None:
     """Hot-key probe for :func:`asof_join`: decide whether the bucketed
     plan is worth its two extra small shuffles, and pick a width.
@@ -56,7 +55,7 @@ def auto_bucket_width(
     row count, and returns ``None`` (keep the single-window plan) when
     the estimate stays under ``hot_key_threshold``. Above it, the width
     spreads the full observed time range over
-    ``buckets_per_core × defaultParallelism`` buckets, so the hot key's
+    ``32 × defaultParallelism`` buckets, so the hot key's
     window sort parallelizes across every core with tens of buckets
     each (amortizing the per-bucket carry-in stitch).
 
@@ -94,7 +93,7 @@ def auto_bucket_width(
     )
     spark = left.sparkSession
     n_buckets = max(
-        2, buckets_per_core * spark.sparkContext.defaultParallelism
+        2, 32 * spark.sparkContext.defaultParallelism
     )
     return max(1, -(-span_sec // n_buckets))  # ceil div
 

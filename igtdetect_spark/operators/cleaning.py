@@ -53,17 +53,14 @@ def _words(line):
     return F.filter(toks, lambda w: F.length(w) > 0)
 
 
-def tokenized(docs: DataFrame, id_col: str = "doc_id",
-              text_col: str = "text") -> DataFrame:
+def tokenized(docs: DataFrame) -> DataFrame:
     """(doc_id, tk: array<string>) — whitespace tokens per document."""
     return docs.select(
-        F.col(id_col).alias("doc_id"), _words(F.col(text_col)).alias("tk")
+        "doc_id", _words(F.col("text")).alias("tk")
     )
 
 
-def pseudo_lines(docs: DataFrame, tokens_per_line: int = 8,
-                 id_col: str = "doc_id",
-                 text_col: str = "text") -> DataFrame:
+def pseudo_lines(docs: DataFrame, tokens_per_line: int = 8) -> DataFrame:
     """(doc_id, pos, line): deterministic pseudo-lines — fixed-width
     chunks of ``tokens_per_line`` whitespace tokens, space-joined, in
     document order.  The driver's synthetic documents carry no newlines,
@@ -71,15 +68,15 @@ def pseudo_lines(docs: DataFrame, tokens_per_line: int = 8,
     the Spark plan and the DuckDB oracle chunk identically (1-based
     token index ``i`` → chunk ``(i-1) // k``), making every downstream
     comparison exact.  Trailing chunks may be short (< k tokens)."""
-    docs = spread_small_scan(docs, id_col)
+    docs = spread_small_scan(docs, "doc_id")
     k = tokens_per_line
     # tokenize into a NAMED column first — slicing the tokenizer
     # expression inside the transform lambda would re-tokenize the
     # whole document once per chunk (the O(tokens²) lambda trap,
     # PLANS.md); an attribute reference is evaluated once per row.
     base = docs.select(
-        F.col(id_col).alias("doc_id"),
-        _words(F.col(text_col)).alias("_tk"),
+        "doc_id",
+        _words(F.col("text")).alias("_tk"),
     )
     tk = F.col("_tk")
     chunks = F.transform(
@@ -96,20 +93,18 @@ def pseudo_lines(docs: DataFrame, tokens_per_line: int = 8,
     )
 
 
-def paged_text(docs: DataFrame, tokens_per_line: int = 8,
-               punct_every: int = 3, id_col: str = "doc_id",
-               text_col: str = "text") -> DataFrame:
+def paged_text(docs: DataFrame) -> DataFrame:
     """(doc_id, text): documents re-rendered as newline-joined
-    pseudo-lines with a deterministic terminal ``.`` on every line
-    where ``(doc_id + pos) % punct_every == 0`` — gives the C4 rules a
+    8-token pseudo-lines with a deterministic terminal ``.`` on every
+    line where ``(doc_id + pos) % 3 == 0`` — gives the C4 rules a
     corpus where every gate (punctuation, word count, page size) has
     both passing and failing population.  Mirrored verbatim in SQL."""
-    docs = spread_small_scan(docs, id_col)
-    k, p = tokens_per_line, punct_every
+    docs = spread_small_scan(docs, "doc_id")
+    k, p = 8, 3
     # same named-column discipline as pseudo_lines (lambda trap)
     base = docs.select(
-        F.col(id_col).alias("doc_id"),
-        _words(F.col(text_col)).alias("_tk"),
+        "doc_id",
+        _words(F.col("text")).alias("_tk"),
     )
     tk = F.col("_tk")
     lines = F.transform(
@@ -131,27 +126,25 @@ def paged_text(docs: DataFrame, tokens_per_line: int = 8,
     )
 
 
-def c4_clean(docs: DataFrame, min_words: int = 5, min_kept_lines: int = 3,
-             id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
+def c4_clean(docs: DataFrame) -> DataFrame:
     """C4-style rule cleaning (Raffel et al. 2020, §2.2), per page:
 
     * keep only lines that end in terminal punctuation AND have at
-      least ``min_words`` whitespace words;
-    * drop the whole page if fewer than ``min_kept_lines`` lines
-      survive, or the page contains ``lorem ipsum`` (case-insensitive)
-      or a ``{`` (code cue).
+      least 5 whitespace words;
+    * drop the whole page if fewer than 3 lines survive, or the page
+      contains ``lorem ipsum`` (case-insensitive) or a ``{`` (code cue).
 
     Output: (doc_id, clean_text, n_lines, n_kept, has_lorem INT,
     has_brace INT, page_kept INT); dropped pages emit ``clean_text=''``.
     ZERO shuffles — a pure per-row map that pipelines into the scan;
     at 10^12 docs this is the cheapest gate in the funnel and belongs
     before every shuffling stage."""
-    t = F.coalesce(F.col(text_col), F.lit(""))
+    t = F.coalesce(F.col("text"), F.lit(""))
     # staged named columns: the kept-lines filter is referenced three
     # times (size, join, gate) — as a raw expression each reference
     # would re-run the per-line regex filter (lambda trap, PLANS.md)
     staged = docs.select(
-        F.col(id_col).alias("doc_id"),
+        "doc_id",
         t.alias("_t"),
         F.transform(F.split(t, "\n"), lambda l: F.trim(l)).alias(
             "_lines"
@@ -161,13 +154,13 @@ def c4_clean(docs: DataFrame, min_words: int = 5, min_kept_lines: int = 3,
         F.filter(
             F.col("_lines"),
             lambda l: l.rlike(TERMINAL_PUNCT_RE)
-            & (F.size(_words(l)) >= min_words),
+            & (F.size(_words(l)) >= 5),
         ).alias("_kept"),
     )
     has_lorem = F.lower(F.col("_t")).contains("lorem ipsum")
     has_brace = F.col("_t").contains("{")
     page_kept = (
-        (F.size("_kept") >= min_kept_lines) & ~has_lorem & ~has_brace
+        (F.size("_kept") >= 3) & ~has_lorem & ~has_brace
     )
     return staged.select(
         "doc_id",
@@ -237,8 +230,7 @@ def corpus_line_dedup(lines: DataFrame, min_docs: int = 2,
     )
 
 
-def pii_redact(docs: DataFrame, id_col: str = "doc_id",
-               text_col: str = "text") -> DataFrame:
+def pii_redact(docs: DataFrame) -> DataFrame:
     """PII redaction over (doc_id, text): emails → ``<EMAIL>``, IPv4
     addresses → ``<IP>``, ``+N-NNN-NNNN`` phone numbers → ``<PHONE>``,
     applied in that order (each count is taken on the text AFTER the
@@ -249,13 +241,13 @@ def pii_redact(docs: DataFrame, id_col: str = "doc_id",
     ZERO shuffles — three chained native ``regexp_replace`` calls
     inside one codegen stage; patterns are in the Java∩RE2 subset so
     Spark and DuckDB agree byte-for-byte."""
-    docs = spread_small_scan(docs, id_col)
-    t = F.coalesce(F.col(text_col), F.lit(""))
+    docs = spread_small_scan(docs, "doc_id")
+    t = F.coalesce(F.col("text"), F.lit(""))
     after_email = F.regexp_replace(t, EMAIL_RE, "<EMAIL>")
     after_ip = F.regexp_replace(after_email, IPV4_RE, "<IP>")
     after_phone = F.regexp_replace(after_ip, PHONE_RE, "<PHONE>")
     return docs.select(
-        F.col(id_col).alias("doc_id"),
+        "doc_id",
         after_phone.alias("redacted_text"),
         F.regexp_count(t, F.lit(EMAIL_RE)).cast("long").alias("n_emails"),
         F.regexp_count(after_ip, F.lit(PHONE_RE))
@@ -267,13 +259,7 @@ def pii_redact(docs: DataFrame, id_col: str = "doc_id",
     )
 
 
-def span_corruption(
-    docs: DataFrame,
-    block_tokens: int = 3,
-    mask_nibbles: int = 3,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def span_corruption(docs: DataFrame) -> DataFrame:
     """T5-style span-corruption sample prep (Raffel et al. 2020):
     mask token spans, replace each with an ordinal sentinel in the
     INPUT, and emit sentinel+content pairs as the TARGET — the
@@ -281,10 +267,9 @@ def span_corruption(
     expressions.
 
     Determinism instead of RNG (cross-engine bit-exactness): tokens
-    are grouped into fixed ``block_tokens``-token blocks and a whole
-    block masks iff ``md5(doc:block)``'s first nibble <
-    ``mask_nibbles`` (3/16 ≈ 18.75% of tokens, spans of mean length
-    ``block_tokens`` that naturally merge when adjacent blocks both
+    are grouped into fixed 3-token blocks and a whole block masks iff
+    ``md5(doc:block)``'s first nibble < 3 (3/16 ≈ 18.75% of tokens,
+    spans of mean length 3 that naturally merge when adjacent blocks both
     mask — the same span-length/mask-rate shape as the sampled
     original, reproducible on any engine).  The closing no-content
     sentinel T5 appends is omitted (disclosed; it is a constant the
@@ -315,15 +300,15 @@ def span_corruption(
 
     import pandas as _pd
 
-    docs = spread_small_scan(docs, id_col)
-    B, M = int(block_tokens), int(mask_nibbles)
+    docs = spread_small_scan(docs, "doc_id")
+    B, M = 3, 3  # tokens per block, masked first-nibble values
 
     def _corrupt(batches):
         ws = _re.compile(WS_CLASS)
         for pdf in batches:
             ids, n_spans, masked_tokens, inputs, targets = \
                 [], [], [], [], []
-            for doc_id, text in zip(pdf[id_col], pdf[text_col]):
+            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
                 if text is None:
                     continue
                 toks = [w for w in
@@ -367,7 +352,7 @@ def span_corruption(
                 "targets": targets,
             })
 
-    return docs.select(F.col(id_col), F.col(text_col)).mapInPandas(
+    return docs.select(F.col("doc_id"), F.col("text")).mapInPandas(
         _corrupt,
         "doc_id long, n_spans long, masked_tokens long, "
         "inputs string, targets string",

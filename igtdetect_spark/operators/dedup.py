@@ -151,22 +151,20 @@ def normalized_text(col):
     return F.trim(F.regexp_replace(c, "[^a-z0-9]+", " "))
 
 
-def fingerprint_docs(docs: DataFrame, id_col: str = "doc_id",
-                     text_col: str = "text") -> DataFrame:
+def fingerprint_docs(docs: DataFrame) -> DataFrame:
     """doc_id + md5 fingerprint of normalized text."""
-    docs = spread_small_scan(docs, id_col)
+    docs = spread_small_scan(docs, "doc_id")
     return docs.select(
-        F.col(id_col).alias("doc_id"),
-        F.md5(normalized_text(F.col(text_col))).alias("fingerprint"),
+        "doc_id",
+        F.md5(normalized_text(F.col("text"))).alias("fingerprint"),
     )
 
 
-def exact_dedup_groups(docs: DataFrame, id_col: str = "doc_id",
-                       text_col: str = "text") -> DataFrame:
+def exact_dedup_groups(docs: DataFrame) -> DataFrame:
     """Duplicate groups by exact normalized-text hash:
     (fingerprint, n_docs, keep_id) for groups with ≥2 members."""
     return (
-        fingerprint_docs(docs, id_col, text_col)
+        fingerprint_docs(docs)
         .groupBy("fingerprint")
         .agg(
             F.count("*").alias("n_docs"),
@@ -176,27 +174,7 @@ def exact_dedup_groups(docs: DataFrame, id_col: str = "doc_id",
     )
 
 
-def shingle_arrays(docs: DataFrame, n: int = 3, id_col: str = "doc_id",
-                   text_col: str = "text") -> DataFrame:
-    """Distinct word n-gram shingles per doc as ONE array column:
-    (doc_id, shingles array<string>) — the narrow (no explode) form."""
-    toks = F.split(normalized_text(F.col(text_col)), " ")
-    d = docs.select(F.col(id_col).alias("doc_id"), toks.alias("_toks"))
-    d = d.withColumn(
-        "_shingles",
-        F.when(
-            F.size("_toks") >= n,
-            F.transform(
-                F.sequence(F.lit(0), F.size("_toks") - n),
-                lambda i: F.array_join(F.slice("_toks", i + 1, n), " "),
-            ),
-        ).otherwise(F.array(F.array_join("_toks", " "))),
-    )
-    return d.select("doc_id", F.array_distinct("_shingles").alias("shingles"))
-
-
-def doc_tokens(docs: DataFrame, id_col: str = "doc_id",
-               text_col: str = "text") -> DataFrame:
+def doc_tokens(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """(doc_id, _toks): the normalized-token relation every shingle /
     minhash kernel consumes — ``split(normalized_text(text), " ")``,
     computed in the JVM scan (Java and Python lower()/regex semantics
@@ -208,12 +186,11 @@ def doc_tokens(docs: DataFrame, id_col: str = "doc_id",
     pass at sf1.0)."""
     return spread_small_scan(docs, id_col).select(
         F.col(id_col).alias("doc_id"),
-        F.split(normalized_text(F.col(text_col)), " ").alias("_toks"),
+        F.split(normalized_text(F.col("text")), " ").alias("_toks"),
     )
 
 
 def word_shingles(docs: DataFrame, n: int = 3, id_col: str = "doc_id",
-                  text_col: str = "text",
                   tokens: DataFrame | None = None) -> DataFrame:
     """Distinct word n-gram shingles per doc: (doc_id, shingle).
 
@@ -229,7 +206,7 @@ def word_shingles(docs: DataFrame, n: int = 3, id_col: str = "doc_id",
     first-occurrence order exactly like array_distinct, so the
     exploded row multiset is bit-identical (DuckDB oracle pins it).
     NULL text yields the [NULL] shingle and short docs the single
-    whole-doc join, matching ``shingle_arrays``'s branches.
+    whole-doc join, as the oracle's SQL form does.
 
     ``explode_outer``, deliberately: plain explode triggers the
     InferFiltersFromGenerate optimizer rule, which injects a
@@ -252,7 +229,7 @@ def word_shingles(docs: DataFrame, n: int = 3, id_col: str = "doc_id",
 
         return tok_lists.map(one)
 
-    d = tokens if tokens is not None else doc_tokens(docs, id_col, text_col)
+    d = tokens if tokens is not None else doc_tokens(docs, id_col)
     return d.select(
         "doc_id", F.explode_outer(_shingles("_toks")).alias("shingle")
     )
@@ -264,8 +241,6 @@ def ngram_jaccard_pairs(
     n: int = 3,
     threshold: float = 0.5,
     max_df: int | None = None,
-    id_col: str = "doc_id",
-    text_col: str = "text",
 ) -> DataFrame:
     """Document pairs with word-n-gram Jaccard ≥ threshold:
     (doc_a, doc_b, n_common, n_a, n_b, jaccard), doc_a < doc_b.
@@ -279,7 +254,7 @@ def ngram_jaccard_pairs(
     shingle expressions per branch — ~4x the dominant cost. It is
     persisted MEMORY_AND_DISK, the distributed analogue of staging a
     shingle temp table (measured 4-5x end-to-end)."""
-    sh = word_shingles(docs, n, id_col, text_col)
+    sh = word_shingles(docs, n)
     # Round 6: ONE aggregate to per-shingle sorted doc lists replaces
     # the previous shape (df-count aggregate + prune join re-executed
     # per consuming branch + shingle-string SMJ self-join — the prune
@@ -360,21 +335,20 @@ def ngram_jaccard_pairs(
 MINHASH_PRIME = 2_147_483_647
 
 
-def minhash_affine_params(n_perms: int, seed: int = 13
-                          ) -> tuple[list[int], list[int]]:
+def minhash_affine_params(n_perms: int) -> tuple[list[int], list[int]]:
     """Deterministic (a_p, b_p) coefficient lists, md5-derived so any
     engine can re-derive or inline them as literals."""
     a, b = [], []
     for p in range(n_perms):
-        ha = int(hashlib.md5(f"a|{seed}|{p}".encode()).hexdigest()[:8], 16)
-        hb = int(hashlib.md5(f"b|{seed}|{p}".encode()).hexdigest()[:8], 16)
+        ha = int(hashlib.md5(f"a|13|{p}".encode()).hexdigest()[:8], 16)
+        hb = int(hashlib.md5(f"b|13|{p}".encode()).hexdigest()[:8], 16)
         a.append(ha % (MINHASH_PRIME - 1) + 1)
         b.append(hb % MINHASH_PRIME)
     return a, b
 
 
 def minhash_affine_bands_batch(
-    tok_lists, n_perms: int = 16, band_size: int = 4, shingle_n: int = 3
+    tok_lists, n_perms: int = 16, band_size: int = 4
 ) -> list:
     """The affine-scheme shingle→minhash→band kernel over one Arrow
     batch of per-doc (already normalized) token arrays: build the word
@@ -384,16 +358,13 @@ def minhash_affine_bands_batch(
     every permutation minimum as one segmented ``minimum.reduceat``
     over the flat hash array, band hashes as md5 of the comma-joined
     decimal minima. ALL-INTEGER/STRING arithmetic — products stay
-    < 2^62 in int64 exactly like the SQL form, so the kernel is
-    bit-identical to the expression chain by construction (no floats
-    anywhere; pinned by the affine==md5-scheme pair test and the
-    DuckDB oracle).
+    < 2^62 in int64 exactly like the SQL form, so the DuckDB oracle
+    reproduces the kernel bit for bit (no floats anywhere).
 
-    NULL handling mirrors the expression chain: a NULL token array
-    (NULL-text doc) yields the [NULL] shingle, whose minima are NULL;
-    ``concat_ws`` drops NULLs, so every band hashes the empty string.
-    Docs shorter than ``shingle_n`` tokens emit the single whole-doc
-    join, exactly like ``shingle_arrays``'s otherwise-branch.
+    NULL handling mirrors the oracle: a NULL token array (NULL-text
+    doc) has no shingles, so every band hashes the empty string.
+    Shingles are word 3-grams; docs shorter than 3 tokens emit the
+    single whole-doc join.
     Module-level for microbenching/pinning (the simhash_batch
     discipline)."""
     n_bands = -(-n_perms // band_size)
@@ -408,10 +379,10 @@ def minhash_affine_bands_batch(
         c = 0
         if toks is not None:
             toks = list(toks)
-            if len(toks) >= shingle_n:
+            if len(toks) >= 3:
                 shingles = {
-                    " ".join(toks[i:i + shingle_n])
-                    for i in range(len(toks) - shingle_n + 1)
+                    " ".join(toks[i:i + 3])
+                    for i in range(len(toks) - 3 + 1)
                 }
             else:
                 shingles = (" ".join(toks),)
@@ -455,121 +426,48 @@ def minhash_band_hashes(
     docs: DataFrame,
     n_perms: int = 16,
     band_size: int = 4,
-    shingle_n: int = 3,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    scheme: str = "affine",
     tokens: DataFrame | None = None,
 ) -> DataFrame:
-    """(doc_id, band, band_hash): minhash signatures folded into LSH
-    bands. Docs sharing any band_hash are near-duplicate candidates.
+    """(doc_id, band, band_hash): minhash signatures of each doc's word
+    3-gram shingles folded into LSH bands. Docs sharing any band_hash are
+    near-duplicate candidates.
 
-    Two cross-engine-exact permutation schemes, both pure native column
-    expressions (whole-stage codegen end-to-end — no Python on the path):
-    - ``affine`` (default): h = 32-bit md5 prefix of the shingle mod
-      2^31−1 (Mersenne), perm p = (a_p·h + b_p) mod 2^31−1; band hash =
-      md5 of the comma-joined decimal minima. ONE md5 per shingle.
-    - ``md5``: perm p of shingle s = md5(p || '|' || s), min over hex
-      strings (the original formulation; n_perms× the md5 cost).
+    The permutation scheme is cross-engine exact: h = 32-bit md5 prefix
+    of the shingle mod 2^31−1 (Mersenne), perm p = (a_p·h + b_p) mod
+    2^31−1; band hash = md5 of the comma-joined decimal minima. ONE md5
+    per shingle.
 
-    NULL text → NULL shingle: md5/conv null-propagate per element,
-    ``array_min`` skips nulls (all-null → null minimum), ``concat_ws``
-    drops null args — so every band hashes the empty string. The DuckDB
-    oracle mirrors this via COALESCE(string_agg(...), '').
+    NULL text has no shingles, so every band hashes the empty string.
+    The DuckDB oracle mirrors this via COALESCE(string_agg(...), '').
 
-    Scale shape: the whole signature is computed in narrow projections
-    per doc — no explode(shingles × n_perms) blowup, no groupBy shuffle;
-    the only rows produced per doc are its n_perms/band_size band hashes.
-    The per-shingle base hash is materialized as its OWN projection and
-    referenced by all n_perms minima: Catalyst's CollapseProject keeps a
-    multiply-referenced non-cheap alias in a separate Project, so md5 runs
-    once per shingle, not n_perms times (asserted in tests).
+    Scale shape: the whole signature is computed per doc in one narrow
+    projection — no explode(shingles × n_perms) blowup, no groupBy
+    shuffle; the only rows produced per doc are its n_perms/band_size
+    band hashes.
     """
-    # ceil: a trailing partial band still contributes (perms not evenly
-    # divisible by band_size must not be silently dropped)
-    n_bands = -(-n_perms // band_size)
-    if tokens is None:
-        docs = spread_small_scan(docs, id_col)
-
-    if scheme == "affine":
-        # Round 6: the shingle→hash→16-permutation→band chain runs as
-        # ONE vectorized Arrow kernel (``minhash_affine_bands_batch``)
-        # over the native token split instead of 18 interpreted
-        # higher-order transforms per doc (HOFs do not whole-stage-
-        # codegen; the per-perm transform+array_min passes over the
-        # shingle array were the measured wall — guide §4.2).
-        # All-integer/string arithmetic, so the kernel is bit-identical
-        # to the expression form (affine==md5 pair-parity test + DuckDB
-        # oracle pin it). Tokenization (lower/regex/split) stays in the
-        # JVM scan — Java and Python lower()/regex semantics are NOT
-        # interchangeable, string joins are.
-        @pandas_udf("array<string>")
-        def _bands(toks: pd.Series) -> pd.Series:
-            return pd.Series(
-                minhash_affine_bands_batch(
-                    list(toks), n_perms, band_size, shingle_n
-                )
-            )
-
-        if tokens is not None:
-            d = tokens
-        else:
-            d = docs.select(
-                F.col(id_col).alias("doc_id"),
-                F.split(
-                    normalized_text(F.col(text_col)), " "
-                ).alias("_toks"),
-            )
-        return d.select(
-            "doc_id",
-            F.posexplode_outer(_bands("_toks")).alias(
-                "band", "band_hash"
-            ),
+    # The shingle→hash→permutation→band chain runs as ONE vectorized
+    # Arrow kernel (``minhash_affine_bands_batch``) over the native token
+    # split instead of interpreted higher-order transforms per doc (HOFs
+    # do not whole-stage-codegen — guide §4.2). All-integer/string
+    # arithmetic, so the DuckDB oracle reproduces it bit for bit.
+    # Tokenization (lower/regex/split) stays in the JVM scan — Java and
+    # Python lower()/regex semantics are NOT interchangeable, string
+    # joins are.
+    @pandas_udf("array<string>")
+    def _bands(toks: pd.Series) -> pd.Series:
+        return pd.Series(
+            minhash_affine_bands_batch(list(toks), n_perms, band_size)
         )
 
-    if tokens is not None:
-        raise ValueError("tokens= is only supported for scheme='affine'")
-    sh = shingle_arrays(docs, shingle_n, id_col, text_col)
-    if scheme == "md5":
-        d = sh.select("doc_id", F.col("shingles").alias("_hs"))
-
-        def _perm_min_md5(pref: str):
-            return F.array_min(
-                F.transform("_hs", lambda s: F.md5(F.concat(F.lit(pref), s)))
-            )
-
-        mins = [
-            _perm_min_md5(f"{p}|").alias(f"_m{p}") for p in range(n_perms)
-        ]
-    else:
-        raise ValueError(f"unknown minhash scheme: {scheme!r}")
-
-    d = d.select("doc_id", *mins)
-    bands = F.array(*[
-        F.md5(
-            F.concat_ws(
-                ",",
-                *[
-                    F.col(f"_m{i}")
-                    for i in range(
-                        b * band_size, min((b + 1) * band_size, n_perms)
-                    )
-                ],
-            )
-        )
-        for b in range(n_bands)
-    ])
-    return d.select("doc_id", F.posexplode(bands).alias("band", "band_hash"))
+    d = tokens if tokens is not None else doc_tokens(docs)
+    return d.select(
+        "doc_id",
+        F.posexplode_outer(_bands("_toks")).alias("band", "band_hash"),
+    )
 
 
 def minhash_lsh_pairs(
     docs: DataFrame,
-    n_perms: int = 16,
-    band_size: int = 4,
-    shingle_n: int = 3,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    scheme: str = "affine",
     tokens: DataFrame | None = None,
 ) -> DataFrame:
     """Candidate near-duplicate pairs: docs sharing ≥1 LSH band.
@@ -583,10 +481,7 @@ def minhash_lsh_pairs(
     candidate set is identical by construction (DuckDB oracle still
     spells the join and hash-matches). Candidate volume is unchanged
     (Σ n_bucket² either way)."""
-    bands = minhash_band_hashes(
-        docs, n_perms, band_size, shingle_n, id_col, text_col, scheme,
-        tokens=tokens,
-    )
+    bands = minhash_band_hashes(docs, tokens=tokens)
     grp = (
         bands.groupBy("band", "band_hash")
         .agg(F.sort_array(F.collect_list(F.col("doc_id"))).alias("_ds"))
@@ -685,20 +580,19 @@ def simhash_batch(texts: pd.Series, bits: int = 64) -> np.ndarray:
     return out
 
 
-def simhash_docs(docs: DataFrame, id_col: str = "doc_id",
-                 text_col: str = "text", bits: int = 64) -> DataFrame:
+def simhash_docs(docs: DataFrame) -> DataFrame:
     """(doc_id, simhash BIGINT): 64-bit SimHash over normalized tokens,
     md5-based token hashes (deterministic across runs/engines). One
     vectorized Arrow kernel (``simhash_batch``) per batch."""
-    docs = spread_small_scan(docs, id_col)
+    docs = spread_small_scan(docs, "doc_id")
 
     @pandas_udf("long")
     def _simhash(texts: pd.Series) -> pd.Series:
-        return pd.Series(simhash_batch(texts, bits))
+        return pd.Series(simhash_batch(texts))
 
     return docs.select(
-        F.col(id_col).alias("doc_id"),
-        _simhash(normalized_text(F.col(text_col))).alias("simhash"),
+        "doc_id",
+        _simhash(normalized_text(F.col("text"))).alias("simhash"),
     )
 
 
@@ -826,12 +720,6 @@ def connected_components(
 @scoped
 def neardup_clusters(
     docs: DataFrame,
-    n_perms: int = 16,
-    band_size: int = 4,
-    shingle_n: int = 3,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    scheme: str = "affine",
     tokens: DataFrame | None = None,
 ) -> DataFrame:
     """(doc_id, cluster_id, cluster_size, is_representative): the
@@ -846,14 +734,11 @@ def neardup_clusters(
     touched once by the signature scan and once by the final left join +
     one window on cluster_id for sizes.
     """
-    pairs = minhash_lsh_pairs(
-        docs, n_perms, band_size, shingle_n, id_col, text_col, scheme,
-        tokens=tokens,
-    )
+    pairs = minhash_lsh_pairs(docs, tokens=tokens)
     comp = connected_components(pairs)
     base = (
         tokens.select("doc_id") if tokens is not None
-        else docs.select(F.col(id_col).alias("doc_id"))
+        else docs.select("doc_id")
     )
     out = (
         base
@@ -881,8 +766,6 @@ def simhash_neardup_pairs(
     docs: DataFrame,
     max_hamming: int = 3,
     n_bands: int = 4,
-    id_col: str = "doc_id",
-    text_col: str = "text",
 ) -> DataFrame:
     """(doc_a, doc_b, hamming): pairs of documents whose 64-bit SimHash
     signatures differ in ≤ ``max_hamming`` bits — the third near-dup
@@ -921,7 +804,7 @@ def simhash_neardup_pairs(
     # sf1.0) — the 2^16-value band keys make millions of tiny buckets,
     # where collect_list + per-list pair explosion costs more than the
     # equi-join it replaces. Kept the join.
-    sig = materialize(simhash_docs(docs, id_col, text_col), "persist")
+    sig = materialize(simhash_docs(docs), "persist")
 
     # 4 rows/doc: (band, band value). Arithmetic shiftright + mask is
     # sign-extension-safe (the mask keeps only the band's own bits) and
@@ -969,8 +852,6 @@ def simhash_neardup_pairs(
 def positional_ngram_hashes(
     docs: DataFrame,
     n: int = 13,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     gram_hash: str = "md5",
     tokens: DataFrame | None = None,
 ) -> DataFrame:
@@ -994,10 +875,7 @@ def positional_ngram_hashes(
     InferFiltersFromGenerate reason as ``word_shingles``."""
     if gram_hash not in ("md5", "i64"):
         raise ValueError(f"gram_hash must be 'md5' or 'i64', got {gram_hash!r}")
-    d = (
-        tokens if tokens is not None
-        else doc_tokens(docs, id_col, text_col)
-    )
+    d = tokens if tokens is not None else doc_tokens(docs)
     if gram_hash == "md5":
         # Round 6: gram construction + md5 as one Arrow kernel instead
         # of an interpreted transform-over-sequence (HOFs do not
@@ -1082,8 +960,6 @@ def duplicated_ngram_spans(
     docs: DataFrame,
     n: int = 13,
     min_count: int = 2,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     gram_hash: str = "md5",
     tokens: DataFrame | None = None,
 ) -> DataFrame:
@@ -1116,7 +992,7 @@ def duplicated_ngram_spans(
     """
     g = materialize(
         positional_ngram_hashes(
-            docs, n, id_col, text_col, gram_hash, tokens=tokens
+            docs, n, gram_hash=gram_hash, tokens=tokens
         ),
         "persist",
     )
@@ -1171,10 +1047,6 @@ def contamination_screen(
     docs: DataFrame,
     evalset: DataFrame,
     n: int = 13,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    eval_id_col: str = "eval_id",
-    eval_text_col: str = "text",
 ) -> DataFrame:
     """(doc_id, eval_id, n_shared_grams): corpus docs sharing ≥ 1 word
     n-gram with an eval-set item — the standard pretraining hygiene
@@ -1188,10 +1060,10 @@ def contamination_screen(
     with NO shuffle, and the only exchange is the final (doc_id,
     eval_id) count aggregate, whose input is already tiny (matches
     only). Never an all-pairs comparison."""
-    doc_sh = word_shingles(docs, n, id_col, text_col)
-    ev_sh = word_shingles(
-        evalset, n, eval_id_col, eval_text_col
-    ).withColumnRenamed("doc_id", "eval_id")
+    doc_sh = word_shingles(docs, n)
+    ev_sh = word_shingles(evalset, n, "eval_id").withColumnRenamed(
+        "doc_id", "eval_id"
+    )
     return (
         doc_sh.join(F.broadcast(ev_sh), "shingle")
         .groupBy("doc_id", "eval_id")
@@ -1202,8 +1074,6 @@ def contamination_screen(
 def remove_duplicated_spans(
     docs: DataFrame,
     spans: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     tokens: DataFrame | None = None,
 ) -> DataFrame:
     """The removal half of substring-level dedup: given the spans from
@@ -1226,7 +1096,7 @@ def remove_duplicated_spans(
     )
     d = (
         tokens if tokens is not None
-        else doc_tokens(docs, id_col, text_col)
+        else doc_tokens(docs)
     )
     joined = d.join(sp, "doc_id", "left").withColumn(
         "_spans", F.coalesce("_spans", F.array())
@@ -1280,8 +1150,6 @@ def incremental_dedup(
     new_docs: DataFrame,
     seen_fps: DataFrame,
     corpus_bound_bytes: int = None,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     fingerprints: DataFrame | None = None,
 ) -> DataFrame:
     """Dedup a NEW crawl increment against an EXISTING corpus: the
@@ -1318,7 +1186,7 @@ def incremental_dedup(
     fp = fingerprints
     if fp is None:
         fp = materialize(
-            fingerprint_docs(new_docs, id_col, text_col), "persist"
+            fingerprint_docs(new_docs), "persist"
         )
     seen = seen_fps.select(
         F.col("fingerprint"), F.lit(1).alias("_seen")
@@ -1387,8 +1255,6 @@ def incremental_dedup_bloom(
     m_bits: int = 1 << 20,
     k: int = 5,
     corpus_bound_bytes: int = None,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     fingerprints: DataFrame | None = None,
 ) -> DataFrame:
     """:func:`incremental_dedup` with a Bloom pre-filter on the
@@ -1436,7 +1302,7 @@ def incremental_dedup_bloom(
     fp = fingerprints
     if fp is None:
         fp = materialize(
-            fingerprint_docs(new_docs, id_col, text_col), "persist"
+            fingerprint_docs(new_docs), "persist"
         )
     probed = fp.withColumn(
         "_maybe",

@@ -1,8 +1,6 @@
-"""Distributed document-level statistics for pre-sharded line tables.
-
-The fused/segmented paths compute these document-locally (segment.py); the
-operators here are the shuffle-based general form — and the reusable
-``deterministic_mode`` aggregate exposed over the driver test tables.
+"""The reusable ``deterministic_mode`` aggregate, which the
+``deterministic_mode`` registry query runs. Segmentation computes the
+document-level stats document-locally (segment.py).
 """
 
 from __future__ import annotations
@@ -38,47 +36,4 @@ def deterministic_mode(
         counted.withColumn("_rn", F.row_number().over(w))
         .filter(F.col("_rn") == 1)
         .select(*keys, F.col(value_col).alias(out_col))
-    )
-
-
-def doc_stats_distributed(lines: DataFrame) -> DataFrame:
-    """(url, doc_llx_mode, def_font_id, def_font_size) from a bare lines
-    table (no denormalized stats) — one shuffle, broadcastable result."""
-    llx_mode = deterministic_mode(
-        lines, ["url"], "llx", "line_no", out_col="doc_llx_mode"
-    )
-    fonts = lines.select(
-        "url",
-        "line_no",
-        F.posexplode_outer("fonts").alias("_pos", "_font"),
-    ).select(
-        "url",
-        # fonts within a line keep their list order in the tie-break
-        (F.col("line_no") * 1000 + F.col("_pos")).alias("_ord"),
-        F.col("_font.font_id").alias("font_id"),
-        F.col("_font.size").alias("size"),
-    ).withColumn("_fv", F.concat_ws("\u001f", "font_id", F.col("size").cast("string")))
-    font_mode = deterministic_mode(
-        fonts, ["url"], "_fv", "_ord", out_col="_def_font"
-    ).select(
-        "url",
-        F.split("_def_font", "\u001f")[0].alias("def_font_id"),
-        F.split("_def_font", "\u001f")[1].cast("double").alias("def_font_size"),
-    )
-    return llx_mode.join(font_mode, "url", "left")
-
-
-def attach_doc_stats(lines: DataFrame) -> DataFrame:
-    """Join distributed doc stats + window adjacency onto a bare lines
-    table → same shape the denormalizing sources emit."""
-    w = Window.partitionBy("url").orderBy("line_no")
-    stats = doc_stats_distributed(
-        lines.select("url", "line_no", "llx", "fonts")
-    )
-    return (
-        lines.drop("doc_llx_mode", "def_font_id", "def_font_size",
-                   "prev_block_id", "next_block_id")
-        .withColumn("prev_block_id", F.lag("block_id").over(w))
-        .withColumn("next_block_id", F.lead("block_id").over(w))
-        .join(F.broadcast(stats), "url", "left")
     )

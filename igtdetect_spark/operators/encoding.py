@@ -82,9 +82,9 @@ def _whatwg_cp1252() -> str:
 CP1252_TO = _whatwg_cp1252()
 
 
-def declared_charset(html, probe_bytes: int = 1024) -> "F.Column":
-    """The raw ``charset=`` label declared in the first ``probe_bytes``
-    of a binary html column (lowercased), or NULL when absent.
+def declared_charset(html) -> "F.Column":
+    """The raw ``charset=`` label declared in the first 1024 bytes of a
+    binary html column (lowercased), or NULL when absent.
 
     The probe decodes the prefix as ISO-8859-1 — a byte-PRESERVING
     view (every byte maps to exactly one code point), so the ASCII
@@ -92,17 +92,17 @@ def declared_charset(html, probe_bytes: int = 1024) -> "F.Column":
     page's true encoding is. Matches both the HTML5 form
     (``charset="x"``) and the legacy http-equiv form
     (``content="text/html; charset=x"``)."""
-    probe = F.decode(F.substring(html, 1, probe_bytes), "ISO-8859-1")
+    probe = F.decode(F.substring(html, 1, 1024), "ISO-8859-1")
     raw = F.regexp_extract(
         probe, r"""charset=["']?([A-Za-z0-9_\-]+)""", 1
     )
     return F.nullif(F.lower(raw), F.lit(""))
 
 
-def sniff_charset(html, default: str = "utf-8") -> "F.Column":
+def sniff_charset(html) -> "F.Column":
     """Canonical charset for a binary html column via the sniffing
-    cascade (BOM → declaration → ``default``), as one native CASE
-    expression. Unknown declared labels normalize to ``default``."""
+    cascade (BOM → declaration → utf-8), as one native CASE expression.
+    Unknown declared labels normalize to utf-8."""
     declared = declared_charset(html)
     mapped = None
     for label, canon in CHARSET_ALIASES.items():
@@ -112,17 +112,13 @@ def sniff_charset(html, default: str = "utf-8") -> "F.Column":
             if mapped is None
             else mapped.when(cond, F.lit(canon))
         )
-    mapped = mapped.otherwise(F.lit(default))
+    mapped = mapped.otherwise(F.lit("utf-8"))
     return F.when(
         F.substring(html, 1, 3) == F.lit(UTF8_BOM), F.lit("utf-8")
     ).otherwise(mapped)
 
 
-def decode_html(
-    pages: DataFrame,
-    html_col: str = "html",
-    default: str = "utf-8",
-) -> DataFrame:
+def decode_html(pages: DataFrame) -> DataFrame:
     """Add ``(declared, charset, bom, utf8_fallback, text_decoded)`` to
     a page table: sniff each page's charset from its raw bytes and
     decode through the matching charset, stripping a leading U+FEFF
@@ -134,8 +130,8 @@ def decode_html(
     (``utf8_fallback = true`` on those rows); windows-1252 is the
     latin-1 decode + the :data:`CP1252_TO` translate; the latin-1
     decode itself is total."""
-    html = F.col(html_col)
-    cs = sniff_charset(html, default=default)
+    html = F.col("html")
+    cs = sniff_charset(html)
     latin1 = F.decode(html, "ISO-8859-1")
     utf8_ok = F.try_validate_utf8(html.cast("string"))
     branches = {
@@ -151,7 +147,7 @@ def decode_html(
             if decoded is None
             else decoded.when(cond, branch)
         )
-    decoded = decoded.otherwise(branches[default])
+    decoded = decoded.otherwise(branches["utf-8"])
     bom = F.substring(html, 1, 3) == F.lit(UTF8_BOM)
     text = F.when(
         bom,
@@ -183,9 +179,7 @@ LATIN1_BODY = ("Café entrée nº ", " ½ öl")          # é ½ ö º ∈ latin
 WIN1252_BODY = ("€ deal “", "” – now")              # € “ ” – ∈ cp1252 only
 
 
-def synthetic_encoded_pages(
-    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
+def synthetic_encoded_pages(docs: DataFrame) -> DataFrame:
     """(doc_id, html): a deterministic mixed-encoding page corpus over
     the driver documents — every sniffing branch populated at any
     corpus size by md5 nibble 11 (%8):
@@ -205,10 +199,10 @@ def synthetic_encoded_pages(
     """
     from .webpages import _nib
 
-    docs = spread_small_scan(docs, id_col)
-    h = F.md5(F.col(id_col).cast("string"))
+    docs = spread_small_scan(docs, "doc_id")
+    h = F.md5(F.col("doc_id").cast("string"))
     m = _nib(h, 11) % 8
-    ident = F.col(id_col).cast("string")
+    ident = F.col("doc_id").cast("string")
 
     def page(meta: str, body) -> "F.Column":
         return F.concat(
@@ -217,7 +211,7 @@ def synthetic_encoded_pages(
             F.lit("</p></body></html>"),
         )
 
-    doc_body = F.coalesce(F.col(text_col), F.lit(""))
+    doc_body = F.coalesce(F.col("text"), F.lit(""))
     latin_body = F.concat(
         F.lit(LATIN1_BODY[0]), ident, F.lit(LATIN1_BODY[1])
     )
@@ -261,7 +255,7 @@ def synthetic_encoded_pages(
             )
         )
     )
-    return docs.select(F.col(id_col).alias("doc_id"), html.alias("html"))
+    return docs.select("doc_id", html.alias("html"))
 
 # ---------------------------------------------------------------------------
 # MIME sniffing by magic bytes (payload routing for mixed-media archives)
@@ -295,9 +289,7 @@ _KIND_MAGIC = {
 }
 
 
-def synthetic_payloads(
-    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
+def synthetic_payloads(docs: DataFrame) -> DataFrame:
     """(doc_id, payload): a deterministic mixed-media binary column over
     the driver documents — md5 nibbles 14-15 (%9) pick the payload kind
     (html / pdf / png / gif / jpeg / gzip / zip / magic-less binary /
@@ -308,10 +300,10 @@ def synthetic_payloads(
     any corpus size."""
     from .webpages import _nib
 
-    h = F.md5(F.col(id_col).cast("string"))
+    h = F.md5(F.col("doc_id").cast("string"))
     m = (_nib(h, 14) * 16 + _nib(h, 15)) % 9
     body = F.encode(
-        F.regexp_replace(F.coalesce(F.col(text_col), F.lit("")),
+        F.regexp_replace(F.coalesce(F.col("text"), F.lit("")),
                          r"[^ -~]", ""),
         "utf-8",
     )
@@ -330,13 +322,11 @@ def synthetic_payloads(
         m == 7, F.concat(F.unhex(F.lit("0000")), body)  # kind 7: "bin"
     ).otherwise(body)  # kind 8: bare printable text
     return docs.select(
-        F.col(id_col).alias("doc_id"), payload.alias("payload")
+        "doc_id", payload.alias("payload")
     )
 
 
-def mime_sniff(
-    df: DataFrame, payload_col: str = "payload", probe_bytes: int = 1024
-) -> DataFrame:
+def mime_sniff(df: DataFrame) -> DataFrame:
     """Route raw archive payloads by content, not by the server's
     (routinely wrong) Content-Type header: magic-byte dispatch over the
     first bytes — PDF / PNG / GIF / JPEG / gzip / zip — then an HTML
@@ -352,8 +342,8 @@ def mime_sniff(
 
     Output: (doc_id, mime, magic_hex, payload_len, is_binary).
     """
-    payload = F.col(payload_col)
-    head = F.hex(F.substring(payload, 1, probe_bytes))
+    payload = F.col("payload")
+    head = F.hex(F.substring(payload, 1, 1024))
     # WHATWG mimesniff skips leading 0x09/0A/0C/0D/20 — exactly RE2's
     # \s, which the DuckDB oracle spells; Java's \s ALSO matches \x0b
     # (off-spec and engine-divergent — the layout_columns lesson), so

@@ -18,8 +18,6 @@ def align_eval_gold(
     eval_lines: DataFrame,
     gold_lines: DataFrame,
     cfg: PipelineConfig = DEFAULT_CONFIG,
-    eval_tag: str = "pred",
-    gold_tag: str = "tag",
 ) -> DataFrame:
     """Positional (url, line_no) alignment with label normalization and
     the eval-side TB/V→O remap (igtdetect.py:1372-1375). Documents with
@@ -30,14 +28,14 @@ def align_eval_gold(
         "url", "line_no",
         F.regexp_replace(
             F.regexp_replace(
-                normalize_label_col(F.col(eval_tag), cfg), "TB", "O"
+                normalize_label_col(F.col("pred"), cfg), "TB", "O"
             ),
             "V", "O",
         ).alias("pred"),
     )
     g = gold_lines.select(
         "url", "line_no",
-        normalize_label_col(F.col(gold_tag), cfg).alias("gold"),
+        normalize_label_col(F.col("tag"), cfg).alias("gold"),
     )
     ok_urls = (
         e.groupBy("url").agg(F.count("*").alias("ne"))

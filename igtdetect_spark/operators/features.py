@@ -68,7 +68,6 @@ def with_features(
 def widen_context_df(
     features_df: DataFrame,
     cfg: PipelineConfig = DEFAULT_CONFIG,
-    order_col: str = "line_no",
 ) -> DataFrame:
     """Add context-prefixed copies of neighbor features + the training
     ``prev_tag_<basic(prev tag)>`` feature, entirely with window functions
@@ -77,15 +76,15 @@ def widen_context_df(
     numbering behave like the reference's dict lookups) — a guard drops
     neighbor features when line numbers aren't consecutive.
     """
-    w = Window.partitionBy("url").orderBy(order_col)
+    w = Window.partitionBy("url").orderBy("line_no")
 
     def shifted(colexpr, off, prefix):
         neighbor = F.lag(colexpr, off).over(w) if off > 0 else F.lead(colexpr, -off).over(w)
         neighbor_no = (
-            F.lag(order_col, off).over(w) if off > 0 else F.lead(order_col, -off).over(w)
+            F.lag("line_no", off).over(w) if off > 0 else F.lead("line_no", -off).over(w)
         )
         aligned = F.when(
-            neighbor_no == F.col(order_col) - F.lit(off), neighbor
+            neighbor_no == F.col("line_no") - F.lit(off), neighbor
         ).otherwise(F.array().cast("array<string>"))
         return F.transform(
             F.coalesce(aligned, F.array().cast("array<string>")),

@@ -56,8 +56,6 @@ def term_frequencies(docs: DataFrame) -> DataFrame:
 def bm25_topk(
     docs: DataFrame,
     queries: DataFrame,
-    k1: float = 1.2,
-    b: float = 0.75,
     top_k: int = 10,
 ) -> DataFrame:
     """BM25 retrieval over the corpus for a bounded query workload —
@@ -69,7 +67,8 @@ def bm25_topk(
 
     Scoring is Robertson/Lucene BM25:
     ``idf(t) = ln(1 + (N - df + 0.5)/(df + 0.5))`` and
-    ``w(t,d) = idf·tf·(k1+1) / (tf + k1·(1 - b + b·dl/avgdl))``.
+    ``w(t,d) = idf·tf·(k1+1) / (tf + k1·(1 - b + b·dl/avgdl))`` with
+    the Lucene constants k1 = 1.2, b = 0.75.
 
     Cross-engine exactness: each TERM contribution is floored to e6
     micro-units FIRST and the per-(query, doc) score is the BIGINT sum
@@ -115,6 +114,7 @@ def bm25_topk(
         .join(qt.select("term").distinct(), "term")
     )
     avgdl = F.col("_tok").cast("double") / F.col("_n")
+    k1, b = 1.2, 0.75
     idf = F.log(
         F.lit(1.0)
         + (F.col("_n").cast("double") - F.col("df") + F.lit(0.5))
@@ -211,23 +211,17 @@ def postings_gap_stats(
 
 
 @scoped
-def search_rank_fusion(
-    docs: DataFrame,
-    queries: DataFrame,
-    candidates: int = 20,
-    top_k: int = 10,
-    rrf_k: int = 60,
-) -> DataFrame:
+def search_rank_fusion(docs: DataFrame, queries: DataFrame) -> DataFrame:
     """Retrieve-then-rerank with reciprocal-rank fusion (RRF,
     Cormack et al. 2009): BM25 generates each query's candidate set,
     a query-independent quality prior re-ranks WITHIN that set, and
     the two rankings fuse as
-    ``rrf_e6 = 10⁶ div (k + text_rank) + 10⁶ div (k + prior_rank)``
+    ``rrf_e6 = 10⁶ div (60 + text_rank) + 10⁶ div (60 + prior_rank)``
     — integral division keeps the fused score a BIGINT so the oracle
     matches bit-for-bit (float RRF would differ in the last ulp).
 
     Scale shape — the part that matters at 10¹² docs: the prior
-    ranking happens INSIDE each query's ≤``candidates`` candidate set
+    ranking happens INSIDE each query's ≤20-doc candidate set
     (a window partitioned by query_id over a few dozen rows), never as
     a global quality sort of the corpus; the quality join touches only
     candidate doc_ids.  Candidate generation inherits
@@ -235,11 +229,11 @@ def search_rank_fusion(
     corpus before any per-doc join).
 
     Output: (query_id, final_rank, doc_id, text_rank, prior_rank,
-    rrf_e6), ``final_rank ≤ top_k`` per query by (rrf desc, doc_id).
+    rrf_e6), ``final_rank ≤ 10`` per query by (rrf desc, doc_id).
     """
     from .text_analysis import quality_scores
 
-    bm = bm25_topk(docs, queries, top_k=candidates)
+    bm = bm25_topk(docs, queries, top_k=20)
     cands = bm.select(
         "query_id", "doc_id", F.col("rank").alias("text_rank")
     )
@@ -261,8 +255,8 @@ def search_rank_fusion(
         "text_rank",
         "prior_rank",
         F.expr(
-            f"1000000L div ({rrf_k} + text_rank)"
-            f" + 1000000L div ({rrf_k} + prior_rank)"
+            "1000000L div (60 + text_rank)"
+            " + 1000000L div (60 + prior_rank)"
         ).alias("rrf_e6"),
     )
     final_w = Window.partitionBy("query_id").orderBy(
@@ -272,7 +266,7 @@ def search_rank_fusion(
         scored.withColumn(
             "final_rank", F.row_number().over(final_w).cast("long")
         )
-        .filter(F.col("final_rank") <= top_k)
+        .filter(F.col("final_rank") <= 10)
         .select(
             "query_id", "final_rank", "doc_id",
             "text_rank", "prior_rank", "rrf_e6",

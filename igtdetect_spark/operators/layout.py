@@ -38,12 +38,12 @@ from pyspark.sql import functions as F
 from .scale import spread_small_scan
 
 
-def page_lines(pages: DataFrame, text_col: str = "layout_text") -> DataFrame:
+def page_lines(pages: DataFrame) -> DataFrame:
     """(doc_id, line_no, line): the page's fixed-width text exploded
     into 0-based numbered lines (flat map, no shuffle)."""
     return pages.select(
         "doc_id",
-        F.posexplode(F.split(F.col(text_col), "\n")).alias(
+        F.posexplode(F.split(F.col("layout_text"), "\n")).alias(
             "line_no", "line"
         ),
     )
@@ -113,9 +113,7 @@ def detect_gutters(
     )
 
 
-def split_columns(
-    pages: DataFrame, text_col: str = "layout_text", min_gap: int = 2
-) -> DataFrame:
+def split_columns(pages: DataFrame) -> DataFrame:
     """De-columnize two-column layout pages: every line splits at the
     page's detected gutter into (left_text, right_text) — the reading-
     order recovery pdftotext -layout consumers perform before any
@@ -125,8 +123,8 @@ def split_columns(
     gutter_end); single-column pages (no interior gutter) are absent —
     callers keep them whole.
     """
-    lines = page_lines(pages, text_col=text_col)
-    gutters = detect_gutters(lines, min_gap=min_gap)
+    lines = page_lines(pages)
+    gutters = detect_gutters(lines)
     return lines.join(gutters, "doc_id").select(
         "doc_id",
         "line_no",
@@ -141,9 +139,7 @@ def split_columns(
     )
 
 
-def synthetic_layout_pages(
-    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
+def synthetic_layout_pages(docs: DataFrame) -> DataFrame:
     """(doc_id, layout_text): deterministic two-column fixed-width
     pages over the driver documents — up to 8 of the document's first
     whitespace tokens become rows of ``rpad(token[:16], 20) ||
@@ -151,7 +147,7 @@ def synthetic_layout_pages(
     has an all-blank interior gutter ending at column 20 whose start
     varies with the longest token. Documents with no tokens produce no
     page."""
-    docs = spread_small_scan(docs, id_col)
+    docs = spread_small_scan(docs, "doc_id")
     # The oracle spells RE2's \s, which EXCLUDES \x0b (vertical tab);
     # Java's \s includes it, so the class must be written out or the
     # two engines tokenize a \x0b-bearing document differently (found
@@ -164,7 +160,7 @@ def synthetic_layout_pages(
             F.split(
                 F.trim(
                     F.regexp_replace(
-                        F.coalesce(F.col(text_col), F.lit("")),
+                        F.coalesce(F.col("text"), F.lit("")),
                         "[ \t\n\f\r]+", " ",
                     )
                 ),
@@ -184,7 +180,7 @@ def synthetic_layout_pages(
     )
     return (
         docs.select(
-            F.col(id_col).alias("doc_id"),
+            "doc_id",
             F.array_join(lines, "\n").alias("layout_text"),
             F.size(lines).alias("_n"),
         )

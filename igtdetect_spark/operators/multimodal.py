@@ -2,10 +2,9 @@
 
 The Spark-side plumbing — schemas, Arrow batch shape, partition-friendly
 ``mapInPandas`` decode/extract/resize/frame-sample operators — is real and
-tested; the codec step is stubbed (image/audio libraries are not in this
-container): ``decode_stub`` raises ``NotImplementedError`` unless
-``deterministic_fake=True``, which produces seeded, reproducible features
-derived from the bytes (md5-keyed), so downstream pipelines are testable.
+tested; the codec step is a seeded stand-in (image/audio libraries are not
+in this container): features are derived from the bytes (md5-keyed), so
+they are reproducible and downstream pipelines are testable.
 
 At 100 TB the shape matters more than the codec: binary payloads stay in
 Arrow buffers end-to-end (no base64, no per-row Python), metadata columns
@@ -82,18 +81,6 @@ def _fake_embedding_e6(payload: bytes) -> np.ndarray:
     )
 
 
-def decode_stub(payload: bytes, kind: str, deterministic_fake: bool = False) -> np.ndarray:
-    """Codec stand-in. Real deployment plugs a decoder here (PIL/ffmpeg);
-    this container has none, so either fail loudly or produce a seeded
-    deterministic fake derived from the payload bytes."""
-    if not deterministic_fake:
-        raise NotImplementedError(
-            f"no {kind} codec in this environment — pass deterministic_fake=True "
-            "for the seeded stand-in"
-        )
-    return (_fake_embedding_e6(payload) / 1e6).astype(np.float32)
-
-
 def media_from_documents(docs: DataFrame) -> DataFrame:
     """Synthesize a media table from the documents test table: the text
     bytes become the opaque payload (deterministic, NULL text = empty
@@ -113,9 +100,7 @@ def media_from_documents(docs: DataFrame) -> DataFrame:
     )
 
 
-def extract_media_features(
-    media: DataFrame, deterministic_fake: bool = True
-) -> DataFrame:
+def extract_media_features(media: DataFrame) -> DataFrame:
     """Batch decode + feature-extract: Arrow batches of binary payloads →
     (n_bytes, sha, 16-dim embedding). One narrow mapInPandas."""
     media = spread_small_scan(media, "media_id")
@@ -123,24 +108,17 @@ def extract_media_features(
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             embs, sigs, shas, sizes = [], [], [], []
-            for payload, kind in zip(pdf["payload"], pdf["kind"]):
+            for payload in pdf["payload"]:
                 b = bytes(payload) if payload is not None else b""
                 sizes.append(len(b))
                 shas.append(hashlib.sha256(b).hexdigest()[:16])
-                if deterministic_fake:
-                    e6 = _fake_embedding_e6(b)
-                    embs.append((e6 / 1e6).astype(np.float32).tolist())
-                    sigs.append(
-                        hashlib.md5(
-                            ",".join(str(int(x)) for x in e6).encode()
-                        ).hexdigest()
-                    )
-                else:
-                    emb = decode_stub(b, kind, deterministic_fake)
-                    embs.append(emb.tolist())
-                    sigs.append(
-                        hashlib.md5(emb.tobytes()).hexdigest()
-                    )
+                e6 = _fake_embedding_e6(b)
+                embs.append((e6 / 1e6).astype(np.float32).tolist())
+                sigs.append(
+                    hashlib.md5(
+                        ",".join(str(int(x)) for x in e6).encode()
+                    ).hexdigest()
+                )
             yield pd.DataFrame(
                 {
                     "media_id": pdf["media_id"],
@@ -157,21 +135,18 @@ def extract_media_features(
     )
 
 
-def resize_media(
-    media: DataFrame,
-    max_w: int = 640,
-    max_h: int = 480,
-) -> DataFrame:
+def resize_media(media: DataFrame) -> DataFrame:
     """Image-resize plumbing: aspect-preserving dimension clamp as exact
     integer expressions (JVM-side; the pixel resample itself would sit in
     the decode UDF — stubbed here like the codec, the payload passes
-    through untouched). Output: (media_id, w, h, new_w, new_h, payload).
+    through untouched), into a 640×480 box. Output: (media_id, w, h, new_w, new_h, payload).
 
     Integer math only (cross-multiplied aspect comparison, floor
     division) so the planning/metadata layer is fully oracle-checkable.
     Scaled dimensions are clamped to ≥ 1 (a 640×0 plan would be rejected
     by any resampler); degenerate 0-sized INPUT dims pass through as-is.
     """
+    max_w, max_h = 640, 480
     w, h = F.col("meta_width"), F.col("meta_height")
     fits = (w <= max_w) & (h <= max_h)
     width_limited = (w * max_h) >= (h * max_w)

@@ -21,12 +21,10 @@ from .scale import spread_small_scan
 def stratified_sample(
     docs: DataFrame,
     n_per_group: int = 50,
-    group_col: str = "lang",
-    id_col: str = "doc_id",
     salt_parts: int = 0,
 ) -> DataFrame:
-    """(group, doc_id, sample_rank): at most ``n_per_group`` docs per
-    stratum, drawn by md5-hash order of the id (deterministic uniform
+    """(lang, doc_id, sample_rank): at most ``n_per_group`` docs per
+    language stratum, drawn by md5-hash order of the id (deterministic uniform
     draw; ties — impossible in practice — break on the id itself).
 
     Skew posture: a plain ``row_number`` window shuffles every row of a
@@ -39,10 +37,10 @@ def stratified_sample(
     plan changes. Default 0 keeps the single-window plan for
     small-stratum corpora.
     """
-    key = F.md5(F.col(id_col).cast("string"))
+    key = F.md5(F.col("doc_id").cast("string"))
     src = docs.select(
-        F.col(group_col).alias("grp"),
-        F.col(id_col).alias("doc_id"),
+        F.col("lang").alias("grp"),
+        "doc_id",
         key.alias("_k"),
     )
     if salt_parts > 1:
@@ -60,19 +58,17 @@ def stratified_sample(
         src.withColumn("sample_rank", F.row_number().over(w))
         .filter(F.col("sample_rank") <= n_per_group)
         .select(
-            F.col("grp").alias(group_col), "doc_id", "sample_rank"
+            F.col("grp").alias("lang"), "doc_id", "sample_rank"
         )
     )
 
 
 def mixture_resample(
     docs: DataFrame,
-    cell_cols: tuple[str, str] = ("lang", "source"),
     target_ppm: DataFrame | None = None,
-    id_col: str = "doc_id",
 ) -> DataFrame:
-    """Deterministic mixture resampling: downsample each corpus cell
-    (default (lang, source)) toward a target share distribution —
+    """Deterministic mixture resampling: downsample each (lang, source)
+    corpus cell toward a target share distribution —
     the action that `corpus_mixture`'s report feeds. With no
     ``target_ppm`` the target is UNIFORM across observed cells
     ("balance the corpus"); pass a (cell..., target_ppm) frame for an
@@ -86,15 +82,15 @@ def mixture_resample(
     thinned by a reproducible md5 draw on the document id, so reruns
     and incremental rebuilds keep the SAME documents.
 
-    Returns (doc_id, *cell_cols, draw_ppm, accept_ppm, accepted).
+    Returns (doc_id, lang, source, draw_ppm, accept_ppm, accepted).
 
     Scale shape: one hash aggregate for cell counts (map-side partial),
     one 1-row total, both broadcast back onto the corpus scan — the
     corpus itself is touched once with no shuffle. The draw is
     conv(md5)-based, bit-equal across engines.
     """
-    a, b = cell_cols
-    d = docs.select(F.col(id_col).alias("doc_id"), a, b)
+    a, b = "lang", "source"
+    d = docs.select("doc_id", a, b)
     counts = d.groupBy(a, b).agg(F.count(F.lit(1)).alias("_n_cell"))
     totals = counts.agg(
         F.sum("_n_cell").alias("_n_total"),
@@ -142,13 +138,7 @@ def mixture_resample(
 
 
 @scoped
-def dsir_weights(
-    docs: DataFrame,
-    target_pred,
-    n_buckets: int = 1024,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def dsir_weights(docs: DataFrame, target_pred) -> DataFrame:
     """DSIR-style hashed n-gram importance weights (Xie et al. 2023,
     "Data Selection for Language Models via Importance Resampling"):
     score each raw document by how much its hashed unigram+bigram
@@ -156,7 +146,7 @@ def dsir_weights(
     ``target_pred``, e.g. ``F.col('lang') == 'en'``), so a downstream
     sampler can resample the raw corpus toward the target.
 
-    Per hash bucket ``b`` of ``n_buckets``: Laplace-smoothed
+    Per hash bucket ``b`` of 1024: Laplace-smoothed
     probabilities ``p_t(b) = (c_t(b)+1)/(T_t+B)`` over the target slice
     and ``p_r(b)`` over the full corpus; per document, the importance
     weight is ``Σ_grams log(p_t/p_r)`` with multiplicity.
@@ -170,9 +160,9 @@ def dsir_weights(
     Output: (doc_id, n_grams, weight_e6 BIGINT).
 
     Scale shape: the gram stream aggregates once per side on ``bucket``
-    (map-side partial combine) into exactly ``n_buckets`` rows each —
+    (map-side partial combine) into exactly 1024 rows each —
     the joined per-bucket stats relation is BOUNDED BY CONSTRUCTION at
-    ``n_buckets`` rows regardless of corpus size, so broadcasting it is
+    1024 rows regardless of corpus size, so broadcasting it is
     safe at 100 TB (unlike a vocabulary relation); the only other
     exchange is the final per-doc sum, which reuses the corpus's
     ``doc_id`` partitioning. Target and raw counts come from ONE
@@ -183,7 +173,7 @@ def dsir_weights(
     corpus-sized), and reruns can checkpoint the 1024-row stats
     relation to skip the first pass entirely.
     """
-    B = n_buckets
+    B = 1024
     # Round 6: unigram+bigram hashing as ONE Arrow kernel over the
     # native token split instead of the interpreted zip_with/explode
     # chain + per-gram md5 expression (HOFs do not whole-stage-codegen;
@@ -198,7 +188,7 @@ def dsir_weights(
 
     from pyspark.sql.functions import pandas_udf
 
-    docs = spread_small_scan(docs, id_col)
+    docs = spread_small_scan(docs, "doc_id")
 
     @pandas_udf("array<int>")
     def _buckets(texts: pd.Series) -> pd.Series:
@@ -230,9 +220,9 @@ def dsir_weights(
         return texts.map(one)
 
     tokenized = docs.select(
-        F.col(id_col).alias("doc_id"),
+        "doc_id",
         target_pred.cast("boolean").alias("_is_target"),
-        _buckets(F.col(text_col)).alias("_bk"),
+        _buckets(F.col("text")).alias("_bk"),
     )
     # explode_outer + a filter on the generated column, not explode:
     # for an inner explode Catalyst infers ``size(_bk) > 0`` and pushes
@@ -261,7 +251,7 @@ def dsir_weights(
     # relation — NOT a separate stats.agg() + cross join, which would
     # make Catalyst re-execute the (corpus-sized) gram aggregation
     # subtree a second time; the window is a single-partition pass over
-    # n_buckets rows, so the grams are scanned exactly once per side.
+    # B rows, so the grams are scanned exactly once per side.
     w = Window.partitionBy()
     tr = F.sum("_cr").over(w)
     tt = F.sum("_ct").over(w)
@@ -287,17 +277,11 @@ def dsir_weights(
     )
 
 
-def sequence_pack(
-    docs: DataFrame,
-    chunk_tokens: int = 512,
-    strata: tuple = ("lang", "source"),
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def sequence_pack(docs: DataFrame, chunk_tokens: int = 512) -> DataFrame:
     """GPT-style sequence packing (concat-then-chunk): within each
-    stratum, concatenate documents in ``doc_id`` order and cut the
-    token stream into fixed ``chunk_tokens`` windows; report where each
-    document lands — (doc_id, <strata>, n_tokens, start_pack,
+    (lang, source) stratum, concatenate documents in ``doc_id`` order
+    and cut the token stream into fixed ``chunk_tokens`` windows; report
+    where each document lands — (doc_id, lang, source, n_tokens, start_pack,
     start_offset, n_chunks).  ``n_chunks`` is how many training windows
     the document spans (0 for empty documents); documents DO straddle
     chunk boundaries, which is exactly the GPT-2/3 packing semantics
@@ -317,25 +301,25 @@ def sequence_pack(
     shard, and offset each shard's packs by the previous shards' total
     token count (a 2-phase scan; the per-shard totals relation is tiny).
     """
-    docs = spread_small_scan(docs, id_col)
+    docs = spread_small_scan(docs, "doc_id")
     L = chunk_tokens
     toks = F.split(
-        F.trim(F.regexp_replace(F.coalesce(F.col(text_col), F.lit("")),
+        F.trim(F.regexp_replace(F.coalesce(F.col("text"), F.lit("")),
                                 r"[ \t\n\r\f\x0b]+", " ")),
         " ",
     )
     n_tokens = F.size(F.filter(toks, lambda x: F.length(x) > 0))
     w = (
-        Window.partitionBy(*strata)
-        .orderBy(id_col)
+        Window.partitionBy("lang", "source")
+        .orderBy("doc_id")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
     base = docs.select(
-        F.col(id_col).alias("doc_id"), *strata,
+        "doc_id", "lang", "source",
         n_tokens.cast("long").alias("n_tokens"),
     ).withColumn("_cum_end", F.sum("n_tokens").over(w))
     return base.select(
-        "doc_id", *strata, "n_tokens",
+        "doc_id", "lang", "source", "n_tokens",
         F.expr(f"(_cum_end - n_tokens) DIV {L}").alias("start_pack"),
         F.expr(f"(_cum_end - n_tokens) % {L}").alias("start_offset"),
         F.when(F.col("n_tokens") == 0, F.lit(0).cast("long"))
@@ -347,12 +331,7 @@ def sequence_pack(
     )
 
 
-def temperature_mixture(
-    docs: DataFrame,
-    alpha: float = 0.3,
-    group_col: str = "lang",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def temperature_mixture(docs: DataFrame, alpha: float = 0.3) -> DataFrame:
     """XLM-style temperature-sampling mixture (Conneau & Lample 2019):
     re-weight each group's corpus share p_g to q_g ∝ p_g^alpha
     (alpha < 1 flattens the distribution toward low-resource groups —
@@ -374,7 +353,7 @@ def temperature_mixture(
     the group relation is bounded by the number of groups (languages:
     dozens), so the whole-frame window over it is a single tiny
     partition — the corpus is scanned exactly once."""
-    counts = docs.groupBy(F.col(group_col).alias("grp")).agg(
+    counts = docs.groupBy(F.col("lang").alias("grp")).agg(
         F.count(F.lit(1)).alias("n_docs")
     )
     w = Window.partitionBy()
@@ -393,7 +372,7 @@ def temperature_mixture(
         F.sum("_w_e9").over(w).alias("_w_sum"),
     )
     return staged.select(
-        F.col("grp").alias(group_col),
+        F.col("grp").alias("lang"),
         "n_docs",
         "share_ppm",
         F.expr("(_w_e9 * 1000000L) div _w_sum").alias("temp_share_ppm"),
@@ -401,13 +380,7 @@ def temperature_mixture(
 
 
 @scoped
-def budget_select(
-    docs: DataFrame,
-    budget_ppm: int = 250_000,
-    bucket_width_e6: int = 10_000,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def budget_select(docs: DataFrame, budget_ppm: int = 250_000) -> DataFrame:
     """Token-budget corpus selection: admit the highest-quality prefix
     of the corpus whose cumulative token count fits a budget of
     ``budget_ppm`` parts-per-million of the TOTAL corpus tokens — the
@@ -427,9 +400,9 @@ def budget_select(
     job.  Instead we run the classic two-pass histogram threshold:
 
     1. one narrow pass computes per-doc (n_tokens, score_e6) and
-       hash-aggregates token mass into score BUCKETS of width
-       ``bucket_width_e6`` — the histogram is ≤ 2e6/width + 1 rows
-       (default 201) BY CONSTRUCTION, independent of corpus size;
+       hash-aggregates token mass into score BUCKETS of width 10⁴ e6
+       units — the histogram is ≤ 2e6/10⁴ + 1 = 201 rows BY
+       CONSTRUCTION, independent of corpus size;
     2. a whole-frame window over that tiny relation (one partition of
        ≤201 rows — deliberately fine) finds the cut: buckets strictly
        above the threshold are admitted outright, exactly ONE boundary
@@ -450,20 +423,20 @@ def budget_select(
 
     Output: (doc_id, n_tokens, score_e6) of admitted documents.
     """
-    docs = spread_small_scan(docs, id_col)
+    docs = spread_small_scan(docs, "doc_id")
     tk = F.filter(
         F.split(
             F.trim(F.regexp_replace(
-                F.coalesce(F.col(text_col), F.lit("")),
+                F.coalesce(F.col("text"), F.lit("")),
                 r"[ \t\n\r\f\x0b]+", " ")),
             " ",
         ),
         lambda w: F.length(w) > 0,
     )
     per_doc = docs.select(
-        F.col(id_col).alias("doc_id"),
+        "doc_id",
         tk.alias("_tk"),
-        F.coalesce(F.col(text_col), F.lit("")).alias("_txt"),
+        F.coalesce(F.col("text"), F.lit("")).alias("_txt"),
     ).select(
         "doc_id",
         F.size("_tk").cast("long").alias("n_tokens"),
@@ -484,7 +457,7 @@ def budget_select(
             )
         ).cast("long").alias("score_e6"),
     ).withColumn(
-        "_bucket", F.expr(f"score_e6 div {int(bucket_width_e6)}L")
+        "_bucket", F.expr("score_e6 div 10000L")
     )
     # The per-doc stats relation feeds three branches (histogram, full
     # buckets, boundary bucket); persist the narrow (doc_id, n_tokens,

@@ -12,9 +12,6 @@ per-line Python runs before the frame is built. A 260k-line (10.7M-char)
 mega-document segments in ~0.13 s on one Xeon core, and its whole
 ``batch_to_columns`` frame takes ~0.23 s (the per-line Python segmenter
 this replaced: ~0.4 s for segmentation alone).
-
-A generic window/agg path for pre-sharded line tables lives in
-``doc_stats.py``; both are parity-tested against the oracle.
 """
 
 from __future__ import annotations
@@ -146,7 +143,7 @@ def rows_for_freki_doc(url: str, doc: FrekiDoc) -> Iterable[dict]:
         }
 
 
-def render_freki_df(lines: DataFrame, tag_col: str = "tag") -> DataFrame:
+def render_freki_df(lines: DataFrame) -> DataFrame:
     """Classified-doc sink: re-serialize lines to freki text per url
     (reference str(fd) write, igtdetect.py:1281) — grouped-map UDF, one
     group per document, byte-parity with the oracle renderer (it IS the
@@ -175,7 +172,7 @@ def render_freki_df(lines: DataFrame, tag_col: str = "tag") -> DataFrame:
             ]
             ln = FrekiLine(
                 lineno=int(r.line_no), text=r.text or "",
-                tag=getattr(r, tag_col) or "O",
+                tag=r.tag or "O",
                 span_id=r.span_id, lang_name=r.lang_name,
                 lang_code=r.lang_code, fonts=fonts,
             )
@@ -187,10 +184,8 @@ def render_freki_df(lines: DataFrame, tag_col: str = "tag") -> DataFrame:
 
     cols = [
         "url", "line_no", "page", "block_id", "llx", "text", "fonts",
-        "span_id", "lang_name", "lang_code",
+        "span_id", "lang_name", "lang_code", "tag",
     ]
-    if tag_col not in cols:
-        cols.append(tag_col)
     return lines.select(*cols).groupBy("url").applyInPandas(
         render, schema="url string, freki_text string"
     )

@@ -22,6 +22,10 @@ from .dedup import materialize, scoped
 from .scale import spread_small_scan
 
 
+# width of the vectors in the ``embeddings`` table
+DIM = 64
+
+
 def _dot(a, b):
     return F.aggregate(
         F.zip_with(a, b, lambda x, y: x * y),
@@ -40,16 +44,14 @@ def cosine_topk(
     embeddings: DataFrame,
     query_ids: list[int],
     k: int = 3,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """(query_id, neighbor_id, rank, cos_sim_e6): exact top-k cosine
     neighbors for each query id (self excluded). Similarity is emitted as
     floor(sim·1e6) so cross-engine float comparison is stable."""
-    embeddings = spread_small_scan(embeddings, id_col)
+    embeddings = spread_small_scan(embeddings, "vec_id")
     emb = embeddings.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).cast("array<double>").alias("_v"),
+        F.col("vec_id").alias("neighbor_id"),
+        F.col("embedding").cast("array<double>").alias("_v"),
     )
     queries = emb.filter(F.col("neighbor_id").isin(query_ids)).select(
         F.col("neighbor_id").alias("query_id"), F.col("_v").alias("_q")
@@ -79,9 +81,6 @@ def hard_negatives(
     embeddings: DataFrame,
     query_ids: list[int],
     k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    label_col: str = "label",
 ) -> DataFrame:
     """Hard-negative mining for contrastive/retrieval training: for
     each query vector, the top-k most-similar vectors whose LABEL
@@ -100,10 +99,10 @@ def hard_negatives(
     Output: (query_id, query_label, neighbor_id, neighbor_label,
     rank, cos_sim_e6).
     """
-    emb = spread_small_scan(embeddings, id_col).select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(label_col).cast("long").alias("neighbor_label"),
-        F.col(vec_col).cast("array<double>").alias("_v"),
+    emb = spread_small_scan(embeddings, "vec_id").select(
+        F.col("vec_id").alias("neighbor_id"),
+        F.col("label").cast("long").alias("neighbor_label"),
+        F.col("embedding").cast("array<double>").alias("_v"),
     )
     queries = emb.filter(F.col("neighbor_id").isin(query_ids)).select(
         F.col("neighbor_id").alias("query_id"),
@@ -136,25 +135,18 @@ def hard_negatives(
     )
 
 
-def hyperplane_buckets(
-    embeddings: DataFrame,
-    n_planes: int = 8,
-    seed: int = 42,
-    dim: int = 64,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def hyperplane_buckets(embeddings: DataFrame, n_planes: int = 8) -> DataFrame:
     """(vec_id, bucket): sign-bit bucket of seeded random hyperplanes."""
-    rng = np.random.RandomState(seed)
-    planes = rng.standard_normal((n_planes, dim)).tolist()
-    v = F.col(vec_col).cast("array<double>")
+    rng = np.random.RandomState(42)
+    planes = rng.standard_normal((n_planes, DIM)).tolist()
+    v = F.col("embedding").cast("array<double>")
     bucket = F.lit(0)
     for i, p in enumerate(planes):
         plane = F.array([F.lit(float(x)) for x in p])
         bit = (_dot(v, plane) > 0).cast("int")
         bucket = bucket + F.shiftleft(bit, i)
     return embeddings.select(
-        F.col(id_col).alias("vec_id"), bucket.alias("bucket")
+        "vec_id", bucket.alias("bucket")
     )
 
 
@@ -163,22 +155,16 @@ def lsh_bucketed_ann(
     query_ids: list[int],
     k: int = 3,
     n_planes: int = 6,
-    seed: int = 42,
-    dim: int = 64,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Approximate top-k: candidates restricted to the query's hyperplane
     bucket, then exact cosine rescoring. Same output shape as
     ``cosine_topk`` (ranks may differ where the bucket pruned a true
     neighbor — that's the approximation)."""
-    embeddings = spread_small_scan(embeddings, id_col)
-    buckets = hyperplane_buckets(
-        embeddings, n_planes, seed, dim, id_col, vec_col
-    )
+    embeddings = spread_small_scan(embeddings, "vec_id")
+    buckets = hyperplane_buckets(embeddings, n_planes)
     emb = embeddings.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).cast("array<double>").alias("_v"),
+        F.col("vec_id").alias("neighbor_id"),
+        F.col("embedding").cast("array<double>").alias("_v"),
     ).join(buckets.withColumnRenamed("vec_id", "neighbor_id"), "neighbor_id")
     queries = emb.filter(F.col("neighbor_id").isin(query_ids)).select(
         F.col("neighbor_id").alias("query_id"),
@@ -212,10 +198,7 @@ def banded_hyperplane_buckets(
     embeddings: DataFrame,
     n_bands: int = 8,
     band_planes: int = 16,
-    seed: int = 42,
-    dim: int = 64,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
+    dim: int = DIM,
 ) -> DataFrame:
     """(vec_id, band, bucket): per-band sign-bit bucket over ``n_bands``
     independent groups of ``band_planes`` seeded hyperplanes (band b uses
@@ -229,9 +212,9 @@ def banded_hyperplane_buckets(
     comes from the union over bands (a near-dup pair collides in a band
     with prob ≈ (1−θ/π)^r, missed by all bands with prob
     (1−(1−θ/π)^r)^b — the standard LSH amplification)."""
-    rng = np.random.RandomState(seed)
+    rng = np.random.RandomState(42)
     planes = rng.standard_normal((n_bands * band_planes, dim))
-    v = F.col(vec_col).cast("array<double>")
+    v = F.col("embedding").cast("array<double>")
     band_buckets = []
     for b in range(n_bands):
         bucket = F.lit(0)
@@ -247,7 +230,7 @@ def banded_hyperplane_buckets(
     # dot product a second time per row (see word_shingles). The array
     # is a fixed-size literal construction — never null/empty.
     return embeddings.select(
-        F.col(id_col).alias("vec_id"),
+        "vec_id",
         F.posexplode_outer(F.array(*band_buckets)).alias("band", "bucket"),
     )
 
@@ -257,10 +240,6 @@ def embedding_neardup_pairs(
     threshold: float = 0.9,
     n_bands: int = 8,
     band_planes: int = 16,
-    seed: int = 42,
-    dim: int = 64,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs: (vec_a, vec_b, cos_sim_e6)
     with cosine ≥ threshold and vec_a < vec_b.
@@ -276,11 +255,11 @@ def embedding_neardup_pairs(
     buckets stay populated (the graded query uses 4×4). The threshold
     compares floor(sim·1e6) so the cut is bit-stable across engines."""
     embeddings = spread_small_scan(
-        embeddings.filter(F.col(vec_col).isNotNull()), id_col
+        embeddings.filter(F.col("embedding").isNotNull()), "vec_id"
     )
     thr_e6 = int(threshold * 1e6)
-    rng = np.random.RandomState(seed)
-    planes = rng.standard_normal((n_bands * band_planes, dim))
+    rng = np.random.RandomState(42)
+    planes = rng.standard_normal((n_bands * band_planes, DIM))
 
     # Round 6: the whole band → candidate → rescore chain runs as two
     # vectorized numpy kernels instead of interpreted higher-order
@@ -301,16 +280,16 @@ def embedding_neardup_pairs(
             if not len(pdf):
                 continue
             V = np.stack([
-                np.asarray(x, dtype=np.float64) for x in pdf[vec_col]
+                np.asarray(x, dtype=np.float64) for x in pdf["embedding"]
             ])
             n = len(V)
             D = np.zeros((n, len(planes)))
             nrm = np.zeros(n)
-            for i in range(dim):  # fold order == Catalyst aggregate
+            for i in range(DIM):  # fold order == Catalyst aggregate
                 D += V[:, i][:, None] * planes[None, :, i]
                 nrm += V[:, i] * V[:, i]
             signs = D > 0
-            ids = pdf[id_col].to_numpy(dtype=np.int64)
+            ids = pdf["vec_id"].to_numpy(dtype=np.int64)
             norms = np.sqrt(nrm)
             for b in range(n_bands):
                 bucket = np.zeros(n, dtype=np.int64)
@@ -322,7 +301,7 @@ def embedding_neardup_pairs(
                     "bucket": bucket.astype(np.int32),
                 })
 
-    sigs = embeddings.select(F.col(id_col), F.col(vec_col)).mapInPandas(
+    sigs = embeddings.select("vec_id", "embedding").mapInPandas(
         _band_rows,
         "vec_id long, _v array<double>, _n double, band int, bucket int",
     )
@@ -380,40 +359,22 @@ def kmeans_centroids(
     embeddings: DataFrame,
     k: int = 8,
     iters: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    sample: int = 2000,
-    use_spark_ml: bool = False,
 ) -> np.ndarray:
     """Deterministic k-means coarse quantizer for IVF.
 
-    Default path: Lloyd iterations on the driver over a bounded
-    hash-filtered sample (numpy). The sample is taken with a hash-range
+    Lloyd iterations on the driver over a bounded hash-filtered sample
+    of 2,000 vectors (numpy). The sample is taken with a hash-range
     FILTER (``xxhash64(id) % 2^20 < threshold``) — a narrow scan-shaped
-    predicate — then only the ~2·sample surviving rows are hash-sorted for
-    determinism. (The previous ``orderBy(md5).limit`` was a full-corpus
-    global sort: a scale killer at 10^9 vectors.)
-
-    ``use_spark_ml=True`` trains Spark ML KMeans on the FULL table instead
-    — the right quantizer when n_lists is large (hundreds+) and a sample
-    sketch underfits; seeded, but k-means|| init is partitioning-sensitive,
-    so the numpy path stays the default for bit-reproducible tests."""
+    predicate — then only the ~4,000 surviving rows are hash-sorted
+    for determinism. (The previous ``orderBy(md5).limit`` was a full-corpus
+    global sort: a scale killer at 10^9 vectors.)"""
     sel = embeddings.select(
-        F.col(id_col).alias("i"),
-        F.col(vec_col).cast("array<double>").alias("v"),
+        F.col("vec_id").alias("i"),
+        F.col("embedding").cast("array<double>").alias("v"),
     )
-    if use_spark_ml:
-        try:
-            from pyspark.ml.clustering import KMeans
-            from pyspark.ml.functions import array_to_vector
-        except ImportError as exc:  # pragma: no cover
-            raise RuntimeError("pyspark.ml unavailable") from exc
-        km = KMeans(k=k, maxIter=iters, seed=42, featuresCol="features")
-        model = km.fit(sel.select(array_to_vector("v").alias("features")))
-        return np.asarray(model.clusterCenters(), dtype=np.float64)
-
     n = embeddings.count()
     space = 1 << 20
+    sample = 2000
     frac = min(1.0, (2.0 * sample) / max(n, 1))
     h = F.pmod(F.xxhash64(F.col("i").cast("string")), F.lit(space))
     rows = (
@@ -436,7 +397,7 @@ def kmeans_centroids(
     return C
 
 
-def seeded_centroids(n_lists: int = 8, dim: int = 64,
+def seeded_centroids(n_lists: int = 8, dim: int = DIM,
                      seed: int = 7) -> np.ndarray:
     """Deterministic random coarse-quantizer centroids (no data-dependent
     training): the IVF search path with these is fully SQL-expressible,
@@ -452,8 +413,6 @@ def ivf_ann(
     k: int = 3,
     n_lists: int = 8,
     n_probe: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     centroids: "np.ndarray | None" = None,
 ) -> DataFrame:
     """IVF approximate nearest neighbors: deterministic k-means coarse
@@ -465,17 +424,15 @@ def ivf_ann(
     The scale shape: list assignment is a narrow map; the search join
     fans each query to n_probe list-partitions instead of the full
     corpus — candidate volume drops ~n_lists/n_probe-fold."""
-    embeddings = spread_small_scan(embeddings, id_col)
+    embeddings = spread_small_scan(embeddings, "vec_id")
     spark = embeddings.sparkSession
     C = (
         centroids
         if centroids is not None
-        else kmeans_centroids(
-            embeddings, k=n_lists, id_col=id_col, vec_col=vec_col
-        )
+        else kmeans_centroids(embeddings, k=n_lists)
     )
 
-    v = F.col(vec_col).cast("array<double>")
+    v = F.col("embedding").cast("array<double>")
 
     # Assignment as ONE transform over an array-of-centroids literal +
     # array_position argmin: codegen size is constant in n_lists (the old
@@ -495,7 +452,7 @@ def ivf_ann(
     list_id = (F.array_position(d2s, F.array_min(d2s)) - 1).cast("int")
 
     assigned = embeddings.select(
-        F.col(id_col).alias("neighbor_id"), v.alias("_v"), list_id.alias("list_id")
+        F.col("vec_id").alias("neighbor_id"), v.alias("_v"), list_id.alias("list_id")
     )
 
     # queries probe their n_probe nearest centroid lists
@@ -534,10 +491,9 @@ def ivf_ann(
     )
 
 
-def embedding_stats(embeddings: DataFrame, id_col: str = "vec_id",
-                    vec_col: str = "embedding") -> DataFrame:
+def embedding_stats(embeddings: DataFrame) -> DataFrame:
     """Per-label embedding statistics: count + mean L2 norm (stable e6)."""
-    v = F.col(vec_col).cast("array<double>")
+    v = F.col("embedding").cast("array<double>")
     return (
         embeddings.select(F.col("label"), _norm(v).alias("_n"))
         .groupBy("label")
@@ -554,8 +510,6 @@ def semdedup(
     threshold: float = 0.35,
     n_lists: int = 8,
     centroids: "np.ndarray | None" = None,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """SemDeDup (Abbas et al. 2023): semantic deduplication in embedding
     space — cluster with a coarse quantizer, then inside each cluster
@@ -590,12 +544,10 @@ def semdedup(
     C = (
         centroids
         if centroids is not None
-        else kmeans_centroids(
-            embeddings, k=n_lists, id_col=id_col, vec_col=vec_col
-        )
+        else kmeans_centroids(embeddings, k=n_lists)
     )
     Cd = np.asarray(C, dtype=np.float64)
-    embeddings = spread_small_scan(embeddings, id_col)
+    embeddings = spread_small_scan(embeddings, "vec_id")
 
     # Assignment as one vectorized numpy kernel per batch instead of a
     # transform-over-centroids of interpreted aggregate/zip_with folds
@@ -615,7 +567,7 @@ def semdedup(
         for pdf in batches:
             V = (
                 np.stack([
-                    np.asarray(x, dtype=np.float64) for x in pdf[vec_col]
+                    np.asarray(x, dtype=np.float64) for x in pdf["embedding"]
                 ])
                 if len(pdf)
                 else np.zeros((0, Cd.shape[1]))
@@ -628,7 +580,7 @@ def semdedup(
                 D += diff * diff
                 nrm += V[:, i] * V[:, i]
             yield _pd.DataFrame({
-                "vec_id": pdf[id_col].to_numpy(dtype=np.int64),
+                "vec_id": pdf["vec_id"].to_numpy(dtype=np.int64),
                 "_v": list(V),
                 "_n": np.sqrt(nrm),
                 "cluster_id": (
@@ -640,7 +592,7 @@ def semdedup(
             })
 
     assigned = embeddings.select(
-        F.col(id_col), F.col(vec_col)
+        F.col("vec_id"), F.col("embedding")
     ).mapInPandas(
         _assign,
         "vec_id long, _v array<double>, _n double, "

@@ -20,11 +20,7 @@ from .schema import SPANS_SCHEMA
 from .vectorized import spans_from_labels
 
 
-def assign_spans_df(
-    scored: DataFrame,
-    tag_col: str = "pred",
-    out_col: str = "span_id",
-) -> DataFrame:
+def assign_spans_df(scored: DataFrame, tag_col: str = "pred") -> DataFrame:
     """Add dense per-url span ids over contiguous non-O runs."""
     w = Window.partitionBy("url").orderBy("line_no")
     wrun = w.rowsBetween(Window.unboundedPreceding, 0)
@@ -34,20 +30,19 @@ def assign_spans_df(
     new_span = is_igt & (prev_tag.contains("O") | tag.startswith("B-"))
     span_no = F.sum(new_span.cast("int")).over(wrun)
     return scored.withColumn(
-        out_col,
+        "span_id",
         F.when(is_igt, F.concat(F.lit("s"), span_no.cast("string"))),
     )
 
 
 def materialize_spans(
     with_span_ids: DataFrame,
-    span_col: str = "span_id",
     tag_col: str = "pred",
 ) -> DataFrame:
     """span rows: url, span_id, start_line, end_line, n_lines, tags."""
     return (
-        with_span_ids.filter(F.col(span_col).isNotNull())
-        .groupBy("url", span_col)
+        with_span_ids.filter(F.col("span_id").isNotNull())
+        .groupBy("url", "span_id")
         .agg(
             F.min("line_no").alias("start_line"),
             F.max("line_no").alias("end_line"),

@@ -35,8 +35,7 @@ def _tokens(text_col):
     return F.split(F.trim(F.regexp_replace(text_col, WS_CLASS, " ")), " ")
 
 
-def token_stats(docs: DataFrame, id_col: str = "doc_id",
-                text_col: str = "text") -> DataFrame:
+def token_stats(docs: DataFrame) -> DataFrame:
     """(doc_id, n_tokens, n_distinct, n_chars, sum_token_len,
     avg_token_len).  ``sum_token_len`` is the EXACT integer character
     sum — consumers needing a cross-engine-stable fixed-point average
@@ -44,21 +43,20 @@ def token_stats(docs: DataFrame, id_col: str = "doc_id",
     their oracle (``floor(sum·1e6/n)`` ≠ ``floor((sum/n)·1e6)`` in
     IEEE doubles: 41/10 → 4099999 vs 4100000 — the round-6 sf0.1
     token_stats hash miss)."""
-    docs = spread_small_scan(docs, id_col)
-    toks = _tokens(F.col(text_col))
+    docs = spread_small_scan(docs, "doc_id")
+    toks = _tokens(F.col("text"))
     sum_len = F.aggregate(toks, F.lit(0), lambda acc, x: acc + F.length(x))
     return docs.select(
-        F.col(id_col).alias("doc_id"),
+        "doc_id",
         F.size(toks).alias("n_tokens"),
         F.size(F.array_distinct(toks)).alias("n_distinct"),
-        F.length(text_col).alias("n_chars"),
+        F.length("text").alias("n_chars"),
         sum_len.alias("sum_token_len"),
         (sum_len / F.size(toks)).alias("avg_token_len"),
     )
 
 
-def quality_scores(docs: DataFrame, id_col: str = "doc_id",
-                   text_col: str = "text") -> DataFrame:
+def quality_scores(docs: DataFrame) -> DataFrame:
     """(doc_id, n_tokens, distinct_ratio, stopword_hits, alnum_ratio,
     quality): deterministic quality heuristics — length, vocabulary
     diversity, stopword coverage, punctuation density.
@@ -77,7 +75,7 @@ def quality_scores(docs: DataFrame, id_col: str = "doc_id",
     import math
     import re as _re
 
-    docs = spread_small_scan(docs, id_col)
+    docs = spread_small_scan(docs, "doc_id")
     sw_set = frozenset(EN_STOPWORDS)
 
     @pandas_udf(
@@ -123,23 +121,22 @@ def quality_scores(docs: DataFrame, id_col: str = "doc_id",
             ap["quality"](q)
         return pd.DataFrame(rows)
 
-    t = F.col(text_col)
+    t = F.col("text")
     q = _quality(t, F.lower(t))
     return docs.select(
-        F.col(id_col).alias("doc_id"), q.alias("_q")
+        "doc_id", q.alias("_q")
     ).select(
         "doc_id", "_q.n_tokens", "_q.distinct_ratio_e6",
         "_q.stopword_hits", "_q.alnum_ratio_e6", "_q.quality",
     )
 
 
-def lang_id(docs: DataFrame, id_col: str = "doc_id",
-            text_col: str = "text") -> DataFrame:
+def lang_id(docs: DataFrame) -> DataFrame:
     """(doc_id, sw_hits, pred_lang): heuristic language-ID — English
     stopword coverage + script detection (the n-gram-scoring shape of the
     reference's wordlist features, over web text)."""
-    docs = spread_small_scan(docs, id_col)
-    t = F.col(text_col)
+    docs = spread_small_scan(docs, "doc_id")
+    t = F.col("text")
     lower_toks = _tokens(F.lower(t))
     sw = F.array([F.lit(w) for w in EN_STOPWORDS])
     hits = F.size(F.array_intersect(F.array_distinct(lower_toks), sw))
@@ -154,7 +151,7 @@ def lang_id(docs: DataFrame, id_col: str = "doc_id",
         .otherwise(F.lit("und"))
     )
     return docs.select(
-        F.col(id_col).alias("doc_id"),
+        "doc_id",
         hits.alias("sw_hits"),
         pred.alias("pred_lang"),
     )
@@ -170,22 +167,21 @@ BPE_SPLIT_RE = (
 )
 
 
-def subword_token_stats(docs: DataFrame, id_col: str = "doc_id",
-                        text_col: str = "text") -> DataFrame:
+def subword_token_stats(docs: DataFrame) -> DataFrame:
     """(doc_id, n_subwords, n_distinct_subwords, n_ws_tokens,
     subwords_per_ws_token_e6): BPE-ish subword counting — the
     pre-tokenizer split every byte-pair encoder starts from, as a native
     ``regexp_extract_all`` (JVM, codegen) over lowercased text. The
     subwords-per-whitespace-token ratio is the standard "fertility" cost
     signal for training-data budgeting. NULL text behaves as empty."""
-    docs = spread_small_scan(docs, id_col)
-    t = F.lower(F.coalesce(F.col(text_col), F.lit("")))
+    docs = spread_small_scan(docs, "doc_id")
+    t = F.lower(F.coalesce(F.col("text"), F.lit("")))
     pieces = F.regexp_extract_all(t, F.lit(BPE_SPLIT_RE), F.lit(0))
     ws = _tokens(t)
     n_sub = F.size(pieces)
     n_ws = F.size(ws)
     return docs.select(
-        F.col(id_col).alias("doc_id"),
+        "doc_id",
         n_sub.alias("n_subwords"),
         F.size(F.array_distinct(pieces)).alias("n_distinct_subwords"),
         n_ws.alias("n_ws_tokens"),
@@ -194,13 +190,12 @@ def subword_token_stats(docs: DataFrame, id_col: str = "doc_id",
     )
 
 
-def doc_fingerprints(docs: DataFrame, id_col: str = "doc_id",
-                     text_col: str = "text") -> DataFrame:
+def doc_fingerprints(docs: DataFrame) -> DataFrame:
     """(doc_id, fingerprint): md5 over normalized text — the document-
     fingerprinting primitive (also the exact-dedup key)."""
     return docs.select(
-        F.col(id_col).alias("doc_id"),
-        F.md5(normalized_text(F.col(text_col))).alias("fingerprint"),
+        "doc_id",
+        F.md5(normalized_text(F.col("text"))).alias("fingerprint"),
     )
 
 
@@ -212,8 +207,7 @@ WINNOW_BASE = 257
 WINNOW_MOD = 1_000_000_007
 
 
-def winnow_batch(texts: pd.Series, k: int = 5, window: int = 4
-                 ) -> pd.DataFrame:
+def winnow_batch(texts: pd.Series) -> pd.DataFrame:
     """The winnowing kernel over one Arrow batch of (already normalized)
     texts. Fully vectorized per doc: codepoints come from one
     ``np.frombuffer`` over the utf-32-le encoding (no per-char Python
@@ -222,6 +216,7 @@ def winnow_batch(texts: pd.Series, k: int = 5, window: int = 4
     callable on a pandas Series and pinnable in tests."""
     import hashlib
 
+    k, window = 5, 4  # chars per gram, hashes per window
     n_grams_out, n_sel_out, sig_out = [], [], []
     powers = np.array(
         [pow(WINNOW_BASE, k - 1 - j, WINNOW_MOD) for j in range(k)],
@@ -266,34 +261,28 @@ def winnow_batch(texts: pd.Series, k: int = 5, window: int = 4
     )
 
 
-def winnowing_fingerprints(
-    docs: DataFrame,
-    k: int = 5,
-    window: int = 4,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def winnowing_fingerprints(docs: DataFrame) -> DataFrame:
     """(doc_id, n_grams, n_selected, winnow_sig): winnowing document
     fingerprints over a character rolling hash (the MOSS scheme:
     Schleimer/Wilkerson/Aiken 2003, SIGMOD — public algorithm).
 
-    Per doc: polynomial rolling hash of every char k-gram of the
-    normalized text, minimum per sliding window of ``window`` hashes
-    (guarantees a shared fingerprint for any match ≥ k+window-1 chars),
+    Per doc: polynomial rolling hash of every char 5-gram of the
+    normalized text, minimum per sliding window of 4 hashes (guarantees
+    a shared fingerprint for any match ≥ 8 chars),
     signature = md5 of the sorted distinct selected hashes. Pure integer
     math → the DuckDB oracle reproduces it bit-for-bit. One narrow Arrow
     kernel per doc (``winnow_batch``) after the spread."""
-    docs = spread_small_scan(docs, id_col)
+    docs = spread_small_scan(docs, "doc_id")
 
     @pandas_udf(
         "struct<n_grams: long, n_selected: long, winnow_sig: string>"
     )
     def _winnow(texts: pd.Series) -> pd.DataFrame:
-        return winnow_batch(texts, k, window)
+        return winnow_batch(texts)
 
-    w = _winnow(normalized_text(F.col(text_col)))
+    w = _winnow(normalized_text(F.col("text")))
     return docs.select(
-        F.col(id_col).alias("doc_id"), w.alias("_w")
+        "doc_id", w.alias("_w")
     ).select("doc_id", "_w.n_grams", "_w.n_selected", "_w.winnow_sig")
 
 
@@ -301,13 +290,7 @@ def winnowing_fingerprints(
 # Gopher-style repetition / structure filters
 # ---------------------------------------------------------------------------
 
-def gopher_filters(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    min_words: int = 20,
-    max_words: int = 100_000,
-) -> DataFrame:
+def gopher_filters(docs: DataFrame) -> DataFrame:
     """(doc_id, n_words, mean_word_len_e6, frac_alpha_e6, symbol_ratio_e6,
     top_bigram_frac_e6, gopher_pass): Gopher-style document quality
     gates — word-count bounds, mean word length in [3, 10], ≥80% words
@@ -335,8 +318,8 @@ def gopher_filters(
     import math
     import re as _re
 
-    docs = spread_small_scan(docs, id_col)
-    mw, xw = int(min_words), int(max_words)
+    docs = spread_small_scan(docs, "doc_id")
+    mw, xw = 20, 100_000
 
     @pandas_udf(
         "struct<n_words:int,mean_word_len_e6:bigint,frac_alpha_e6:bigint,"
@@ -398,7 +381,7 @@ def gopher_filters(
         })
 
     return docs.select(
-        F.col(id_col).alias("doc_id"), _gopher(F.col(text_col)).alias("_g")
+        "doc_id", _gopher(F.col("text")).alias("_g")
     ).select(
         "doc_id",
         F.col("_g.n_words").alias("n_words"),
@@ -410,11 +393,7 @@ def gopher_filters(
     )
 
 
-def repetition_ratios(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def repetition_ratios(docs: DataFrame) -> DataFrame:
     """(doc_id, n_lines, dup_line_frac_e6, dup_line_char_frac_e6,
     top_bigram_char_frac_e6, top_trigram_char_frac_e6): the Gopher
     repetition-signal family (Rae et al. 2021 §A1.1) beyond the
@@ -447,7 +426,7 @@ def repetition_ratios(
     import math
     import re as _re
 
-    docs = spread_small_scan(docs, id_col)
+    docs = spread_small_scan(docs, "doc_id")
 
     @pandas_udf(
         "struct<n_lines:int,dup_line_frac_e6:bigint,"
@@ -521,7 +500,7 @@ def repetition_ratios(
         })
 
     return docs.select(
-        F.col(id_col).alias("doc_id"), _rep(F.col(text_col)).alias("_r")
+        "doc_id", _rep(F.col("text")).alias("_r")
     ).select(
         "doc_id",
         F.col("_r.n_lines").alias("n_lines"),
@@ -533,14 +512,7 @@ def repetition_ratios(
     )
 
 
-def bigram_lm_scores(
-    docs: DataFrame,
-    corpus_bound_bytes: int | None = None,
-    head_below_e6: int = 3_390_000,
-    tail_from_e6: int = 3_420_000,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def bigram_lm_scores(docs: DataFrame) -> DataFrame:
     """CCNet/KenLM-style perplexity filtering without an external LM:
     score every document's negative log-likelihood under a Laplace-
     smoothed BIGRAM language model estimated from the corpus itself,
@@ -560,34 +532,34 @@ def bigram_lm_scores(
 
     Scale shape: both count relations are VOCABULARY-sized (unigrams by
     Heaps' law, bigrams worse), so every join here is size-aware via
-    ``operators/scale.py`` — broadcast only while ``corpus_bound_bytes``
-    (a sound upper bound: every gram's characters occur in the text, so
-    gram-type bytes ≤ 2× corpus text bytes) fits the configured bound,
+    ``operators/scale.py`` — broadcast only while twice the corpus's
+    plan size (a sound upper bound: every gram's characters occur in the
+    text, so gram-type bytes ≤ 2× corpus text bytes) fits the configured
+    bound,
     else shuffle-hash on the gram key, which both sides already
     exchange on for their aggregates. The V scalar is a genuine 1-row
     broadcast. Documents with < 2 tokens have no bigrams and are not
     emitted (nothing to score).
 
     Output: (doc_id, n_bigrams, nll_e6, avg_nll_e6, ppl_bucket).
-    Bucket thresholds are FIXED integer parameters (defaults bracket
-    the bench corpus's quartiles) so the output is deterministic; a
+    Bucket thresholds are FIXED integers (they bracket the bench
+    corpus's quartiles) so the output is deterministic; a
     production run would set them from measured NLL terciles the same
     way CCNet does with its Wikipedia LM.
     """
     from .scale import maybe_broadcast, plan_size_bytes
 
-    if corpus_bound_bytes is None:
-        corpus_bound_bytes = 2 * plan_size_bytes(docs)
-    docs = spread_small_scan(docs, id_col)
+    corpus_bound_bytes = 2 * plan_size_bytes(docs)
+    docs = spread_small_scan(docs, "doc_id")
     tk = F.filter(
-        _tokens(F.lower(F.coalesce(F.col(text_col), F.lit("")))),
+        _tokens(F.lower(F.coalesce(F.col("text"), F.lit("")))),
         lambda w: F.length(w) > 0,
     )
     # Tokenize once into a NAMED column; bigrams via zip_with over two
     # slices of that attribute (per-element lambda-trap discipline —
     # see PLANS.md).
     tokenized = docs.select(
-        F.col(id_col).alias("doc_id"), tk.alias("_tk")
+        "doc_id", tk.alias("_tk")
     )
     col = F.col("_tk")
     uni = tokenized.select(F.explode(col).alias("term"))
@@ -649,25 +621,19 @@ def bigram_lm_scores(
     # so the materialized relation is as big as the raw stream.
     return per_doc.select(
         "doc_id", "n_bigrams", "nll_e6", "avg_nll_e6",
-        F.when(F.col("avg_nll_e6") < F.lit(int(head_below_e6)),
+        F.when(F.col("avg_nll_e6") < F.lit(3_390_000),
                F.lit("head"))
-        .when(F.col("avg_nll_e6") < F.lit(int(tail_from_e6)),
+        .when(F.col("avg_nll_e6") < F.lit(3_420_000),
               F.lit("middle"))
         .otherwise(F.lit("tail")).alias("ppl_bucket"),
     )
 
 
 @scoped
-def nb_domain_scores(
-    docs: DataFrame,
-    label_col: str = "source",
-    corpus_bound_bytes: int | None = None,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def nb_domain_scores(docs: DataFrame) -> DataFrame:
     """Weakly-supervised domain classification, DCLM/CCNet-style: train
     a multinomial Naive Bayes classifier on the corpus's OWN labels
-    (default ``source``) and score every document — the standard trick
+    (``source``) and score every document — the standard trick
     for routing a mixed crawl into domain shards or flagging documents
     whose text disagrees with their provenance label.
 
@@ -699,16 +665,15 @@ def nb_domain_scores(
 
     from .scale import maybe_broadcast, plan_size_bytes
 
-    if corpus_bound_bytes is None:
-        corpus_bound_bytes = plan_size_bytes(docs)
-    docs = spread_small_scan(docs, id_col)
+    corpus_bound_bytes = plan_size_bytes(docs)
+    docs = spread_small_scan(docs, "doc_id")
     tk = F.filter(
-        _tokens(F.lower(F.coalesce(F.col(text_col), F.lit("")))),
+        _tokens(F.lower(F.coalesce(F.col("text"), F.lit("")))),
         lambda w: F.length(w) > 0,
     )
     tokenized = docs.select(
-        F.col(id_col).alias("doc_id"),
-        F.col(label_col).alias("_lab"),
+        "doc_id",
+        F.col("source").alias("_lab"),
         tk.alias("_tk"),
     )
     stream = tokenized.select(
@@ -816,12 +781,7 @@ def nb_domain_scores(
 BLOCKLIST = ("dup", "lorem", "spam")
 
 
-def blocklist_filter(
-    docs: DataFrame,
-    blocklist: tuple[str, ...] = BLOCKLIST,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def blocklist_filter(docs: DataFrame) -> DataFrame:
     """C4-style bad-words page gate: a page is dropped when ANY token
     (lowercased, explicit-whitespace split — the Java∩RE2 class) is on
     the blocklist. Emits the evidence, not just the verdict: occurrence
@@ -837,17 +797,17 @@ def blocklist_filter(
 
     Output: (doc_id, n_bad, bad_words, kept).
     """
-    docs = spread_small_scan(docs, id_col)
-    bl = F.array(*[F.lit(w) for w in blocklist])
+    docs = spread_small_scan(docs, "doc_id")
+    bl = F.array(*[F.lit(w) for w in BLOCKLIST])
     toks = docs.select(
-        F.col(id_col).alias("doc_id"),
-        _tokens(F.lower(F.coalesce(F.col(text_col), F.lit(""))))
+        "doc_id",
+        _tokens(F.lower(F.coalesce(F.col("text"), F.lit(""))))
         .alias("_toks"),
     )
     return toks.select(
         "doc_id",
         F.size(
-            F.filter(F.col("_toks"), lambda t: t.isin(*blocklist))
+            F.filter(F.col("_toks"), lambda t: t.isin(*BLOCKLIST))
         ).cast("long").alias("n_bad"),
         F.array_sort(
             F.array_intersect(F.col("_toks"), bl)

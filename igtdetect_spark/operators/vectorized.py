@@ -153,13 +153,6 @@ class TokenBatch:
         return [words[a:b] for a, b in zip(bounds[:-1], bounds[1:])]
 
 
-def tokenize_series(texts: pd.Series) -> pd.Series:
-    """split_words over a batch: lists of lowercased \\w+ tokens, one per
-    row (reference igtdetect.py:1428-1433; the ':'/'#' strip is a no-op
-    on \\w+ tokens).  Null text yields ``[]`` (see ``TokenBatch``)."""
-    return pd.Series(TokenBatch(texts).lists(), index=texts.index, dtype=object)
-
-
 def _matches(text: pa.Array, spelling: str) -> np.ndarray:
     return pc.match_substring_regex(text, spelling).to_numpy(zero_copy_only=False)
 
@@ -376,7 +369,7 @@ def static_feature_columns(
 
 def overlap_feature_columns(
     pdf: pd.DataFrame,
-    tokens: pd.Series,
+    tokens: list[list[str]],
     cfg: PipelineConfig,
 ) -> dict[str, np.ndarray]:
     """Word-overlap-with-previous-line features (igtdetect.py:453-470),
@@ -389,14 +382,13 @@ def overlap_feature_columns(
         "no_overlap": np.zeros(n, dtype=bool),
     }
     urls = pdf["url"].to_numpy(dtype=object)
-    tk = tokens.to_numpy(dtype=object)
     prev_words: set | None = None
     prev_url = None
     for i in range(n):
         if urls[i] != prev_url:
             prev_words = None
             prev_url = urls[i]
-        words = tk[i]
+        words = tokens[i]
         if prev_words is not None and words:
             overlapping = sum(1 for w in words if w in prev_words)
             ratio = overlapping / len(words)
@@ -426,7 +418,7 @@ def base_feature_matrix(
     tokens = TokenBatch(pdf["text"])
     cols = static_feature_columns(pdf, tokens, lex, cfg)
     if cfg.word_overlap and cfg.text_feats_enabled:
-        cols.update(_overlap_columns(pdf, tokens, cfg))
+        cols.update(overlap_feature_columns(pdf, tokens.lists(), cfg))
     idx = model.base_index
     for name, arr in cols.items():
         j = idx.get(name)
@@ -450,12 +442,6 @@ def base_feature_matrix(
     return X
 
 
-def _overlap_columns(pdf, tokens: TokenBatch, cfg) -> dict[str, np.ndarray]:
-    return overlap_feature_columns(
-        pdf, pd.Series(tokens.lists(), index=pdf.index, dtype=object), cfg
-    )
-
-
 def fired_name_lists(
     pdf: pd.DataFrame,
     lex: Lexicons,
@@ -467,7 +453,7 @@ def fired_name_lists(
     tokens = TokenBatch(pdf["text"])
     cols = static_feature_columns(pdf, tokens, lex, cfg)
     if cfg.word_overlap and cfg.text_feats_enabled:
-        cols.update(_overlap_columns(pdf, tokens, cfg))
+        cols.update(overlap_feature_columns(pdf, tokens.lists(), cfg))
     names = list(cols.keys())
     mat = np.column_stack([cols[c] for c in names]) if names else np.zeros((n, 0), bool)
     use_words = cfg.text_feats_enabled and T_BASIC in cfg.enabled_text_feats
@@ -488,9 +474,9 @@ def score_matrix(
     X: np.ndarray,
     model: ModelWeights,
     cfg: PipelineConfig,
-    want_probs: bool = False,
 ):
-    """Score one document's base matrix → (labels, probs|None).
+    """Score one document's base matrix → (labels, None); callers take
+    item [0].
 
     Batch path unless the model carries prev_tag features and cfg.prev_tag
     is on (then the strict left-to-right greedy decode runs — reference
@@ -501,12 +487,11 @@ def score_matrix(
     if not (cfg.prev_tag and has_prev_tag):
         d = model.decision_doc(X)
         labels = [model.classes[i] for i in d.argmax(axis=1)]
-        return labels, (model.probabilities(d) if want_probs else None)
+        return labels, None
 
     d_static = model.decision_doc(X)
     L = X.shape[0]
     labels: list[str] = []
-    probs = np.zeros_like(d_static) if want_probs else None
     prev = "O"
     for i in range(L):
         di = d_static[i]
@@ -514,11 +499,9 @@ def score_matrix(
         if j is not None:
             di = di + model.w_cur[:, j]
         k = int(di.argmax())
-        if want_probs:
-            probs[i] = model.probabilities(di[None, :])[0]
         prev = model.classes[k]
         labels.append(prev)
-    return labels, probs
+    return labels, None
 
 
 def label_documents(

@@ -48,9 +48,7 @@ def _nib(h, i: int):
     return F.conv(F.substring(h, i, 1), 16, 10).cast("int")
 
 
-def synthetic_page_urls(
-    docs: DataFrame, id_col: str = "doc_id", carry: tuple = ()
-) -> DataFrame:
+def synthetic_page_urls(docs: DataFrame, carry: tuple = ()) -> DataFrame:
     """(doc_id, url, fetch_ts_sec): a deterministic Common-Crawl-ish
     page-URL table derived from ``md5(doc_id)`` nibbles, engineered so
     every canonicalization rule has both firing and non-firing
@@ -66,8 +64,8 @@ def synthetic_page_urls(
     * ``fetch_ts_sec`` strictly distinct per doc (7919 is coprime to
       the modulus span), so "latest fetch" is well-defined.
     """
-    docs = spread_small_scan(docs, id_col)
-    h = F.md5(F.col(id_col).cast("string"))
+    docs = spread_small_scan(docs, "doc_id")
+    h = F.md5(F.col("doc_id").cast("string"))
     path_id = (_nib(h, 5) * 16 + _nib(h, 6)) % 40
     scheme = F.when(_nib(h, 3) % 2 == 0, F.lit("http")).otherwise(
         F.lit("https")
@@ -99,9 +97,9 @@ def synthetic_page_urls(
         F.when(_nib(h, 9) % 2 == 0, F.lit("#frag")).otherwise(F.lit("")),
     )
     return docs.select(
-        F.col(id_col).alias("doc_id"),
+        "doc_id",
         url.alias("url"),
-        (F.lit(1735689600) + (F.col(id_col) * 7919) % 8640000)
+        (F.lit(1735689600) + (F.col("doc_id") * 7919) % 8640000)
         .cast("long").alias("fetch_ts_sec"),
         *[F.col(c) for c in carry],
     )
@@ -265,11 +263,7 @@ def dust_rules(pages: DataFrame) -> DataFrame:
     )
 
 
-def crawl_trap_hosts(
-    pages: DataFrame,
-    min_urls: int = 20,
-    trap_ppm_threshold: int = 300_000,
-) -> DataFrame:
+def crawl_trap_hosts(pages: DataFrame, min_urls: int = 20) -> DataFrame:
     """Crawl-trap detection (the Heritrix/Nutch operational screen):
     a host whose URL space explodes while its CONTENT does not —
     calendars, session-id mazes, faceted-search grids — shows many
@@ -303,18 +297,13 @@ def crawl_trap_hosts(
         F.col("n_content").cast("long").alias("n_content"),
         ratio.alias("dup_ratio_ppm"),
         (
-            (ratio >= trap_ppm_threshold)
+            (ratio >= 300_000)
             & (F.col("n_urls") >= min_urls)
         ).alias("trap"),
     )
 
 
-def url_dedup(
-    pages: DataFrame,
-    id_col: str = "doc_id",
-    url_col: str = "url",
-    ts_col: str = "fetch_ts_sec",
-) -> DataFrame:
+def url_dedup(pages: DataFrame) -> DataFrame:
     """One row per canonical URL: how many raw fetches collapsed onto
     it and which single page survives (latest ``ts``, smallest id on a
     timestamp tie).
@@ -326,9 +315,9 @@ def url_dedup(
     Output: (canonical_url, n_variants, kept_doc_id, latest_ts_sec).
     """
     canon = pages.select(
-        F.col(id_col).alias("_id"),
-        F.col(ts_col).cast("long").alias("_ts"),
-        canonical_url(F.col(url_col)).alias("canonical_url"),
+        F.col("doc_id").alias("_id"),
+        F.col("fetch_ts_sec").cast("long").alias("_ts"),
+        canonical_url(F.col("url")).alias("canonical_url"),
     )
     best = F.max(
         F.struct(F.col("_ts").alias("ts"), (-F.col("_id")).alias("neg"))
@@ -380,9 +369,7 @@ ARTICLE_TRAILER = (
 )
 
 
-def synthetic_html_pages(
-    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
+def synthetic_html_pages(docs: DataFrame) -> DataFrame:
     """The ``input_hint`` CC page table ``(doc_id, url, warc_ts, html,
     text, lang)`` derived deterministically from ``documents``: each
     page's ``html`` wraps the document's text in boilerplate — a
@@ -398,9 +385,9 @@ def synthetic_html_pages(
     directly; this builder's job is a *provable* expected value on both
     engines). One projection over the (spread) scan.
     """
-    docs = spread_small_scan(docs, id_col)
-    h = F.md5(F.col(id_col).cast("string"))
-    esc = F.coalesce(F.col(text_col), F.lit(""))
+    docs = spread_small_scan(docs, "doc_id")
+    h = F.md5(F.col("doc_id").cast("string"))
+    esc = F.coalesce(F.col("text"), F.lit(""))
     for bad, good in (
         ("&", "&amp;"), ("<", "&lt;"), (">", "&gt;"),
         ("\n", " "), ("\x02", " "), ("\x03", " "),
@@ -420,17 +407,17 @@ def synthetic_html_pages(
         F.lit("</body></html>"),
     )
     return docs.select(
-        F.col(id_col).alias("doc_id"),
+        "doc_id",
         F.concat(
             F.lit("https://site"), (_nib(h, 1) % 4).cast("string"),
-            F.lit(".example.org/p/"), F.col(id_col).cast("string"),
+            F.lit(".example.org/p/"), F.col("doc_id").cast("string"),
         ).alias("url"),
         F.timestamp_seconds(
-            F.lit(1735689600) + (F.col(id_col) * 7919) % 8640000
+            F.lit(1735689600) + (F.col("doc_id") * 7919) % 8640000
         ).alias("warc_ts"),
         F.encode(page, "utf-8").alias("html"),
-        F.col(text_col).alias("text"),
-        F.col("lang").alias("lang"),
+        "text",
+        "lang",
     )
 
 
@@ -554,7 +541,7 @@ ANCHOR_WORDS = ("click", "read", "more", "info", "here")
 
 
 def synthetic_linked_pages(
-    docs: DataFrame, id_col: str = "doc_id", targets_mod: int = 256
+    docs: DataFrame, targets_mod: int = 256
 ) -> DataFrame:
     """(doc_id, url, html): pages whose HTML carries 1-3 deterministic
     outlinks — target ids ``(doc_id·31 + j·97) mod targets_mod`` — so
@@ -570,7 +557,7 @@ def synthetic_linked_pages(
     The three output columns are Spark SQL text applied in ONE
     ``selectExpr``: building the same expressions as ``Column`` objects
     costs one py4j round trip per node, ~150 per call."""
-    i = f"`{id_col}`"
+    i = "`doc_id`"
     k = (
         f"(1 + CAST(conv(substring(md5(CAST({i} AS STRING)), 2, 1), 16, 10)"
         " AS INT) % 3)"
@@ -716,9 +703,13 @@ def anchor_text_profile(pages: DataFrame) -> DataFrame:
     )
 
 
+# PageRank damping factor d = 0.85, in micro-units
+DAMPING_PPM = 850_000
+
+
 @scoped
 def pagerank(
-    pages: DataFrame, iterations: int = 3, damping_ppm: int = 850_000,
+    pages: DataFrame,
     graph: tuple[DataFrame, DataFrame] | None = None,
 ) -> DataFrame:
     """Integer-exact PageRank power iteration over the crawl's INTERNAL
@@ -726,9 +717,9 @@ def pagerank(
     dangling/external mass leaks, the standard simplification).
 
     Cross-engine exactness: ranks live in integer micro-units (e6).
-    ``r₀ = 1_000_000``; each iteration every node sends
-    ``(r·d) div (10⁶·out_deg)`` micro-units along each out-edge
-    (``div`` = integral division, identical in Spark and DuckDB for the
+    ``r₀ = 1_000_000``; each of three iterations every node sends
+    ``(r·d) div (10⁶·out_deg)`` micro-units along each out-edge,
+    d = ``DAMPING_PPM`` (``div`` = integral division, identical in Spark and DuckDB for the
     non-negative values here) and every node restarts from
     ``10⁶ - d`` teleport micro-units. No floating point anywhere, so
     the oracle can unroll the same iterations in SQL and hash-match
@@ -752,14 +743,14 @@ def pagerank(
     ids, edges = graph if graph is not None else _resolve_edges(pages)
     er, deg = _degree_join(edges)
     nodes = ids.select(F.col("_nid").alias("id"))
-    teleport = F.lit(1_000_000 - damping_ppm)
+    teleport = F.lit(1_000_000 - DAMPING_PPM)
     ranks = nodes.select("id", F.lit(1_000_000).cast("long").alias("rank_e6"))
-    for _ in range(iterations):
+    for _ in range(3):
         # eager localCheckpoint per round (round 6): the rank chain's
         # PLAN otherwise inlines every prior iteration (persist caches
         # data, not lineage) and Catalyst optimization cost compounds
         ranks = materialize(
-            _pagerank_iter(er, nodes, ranks, damping_ppm, teleport), "local"
+            _pagerank_iter(er, nodes, ranks, teleport), "local"
         )
     return (
         ranks.join(ids, ranks.id == ids._nid)
@@ -987,7 +978,7 @@ def bowtie_classes(
 
 
 @scoped
-def hits_scores(pages: DataFrame, iterations: int = 2) -> DataFrame:
+def hits_scores(pages: DataFrame) -> DataFrame:
     """Integer-exact HITS (hubs & authorities) over the crawl's
     internal link graph — the complement of :func:`pagerank` for
     search-tier ranking: authorities are pages many good hubs point
@@ -996,8 +987,8 @@ def hits_scores(pages: DataFrame, iterations: int = 2) -> DataFrame:
 
     Cross-engine exactness (same discipline as :func:`pagerank`):
     scores live in BIGINT micro-units.  ``hub₀ = auth₀ = 10⁶``; each
-    iteration computes ``auth'(p) = Σ_{q→p} hub(q)`` then L1-normalizes
-    back to micro-units with integral division
+    of two iterations computes ``auth'(p) = Σ_{q→p} hub(q)`` then
+    L1-normalizes back to micro-units with integral division
     (``auth = auth'·10⁶ div Σauth'``), then symmetrically
     ``hub'(p) = Σ_{p→q} auth(q)`` with its own normalization.  Sums of
     integers are order-independent and ``div`` is integral on
@@ -1021,7 +1012,7 @@ def hits_scores(pages: DataFrame, iterations: int = 2) -> DataFrame:
     nodes = ids.select(F.col("_nid").alias("id"))
     hub = nodes.select("id", F.lit(1_000_000).cast("long").alias("s"))
     auth = None
-    for _ in range(iterations):
+    for _ in range(2):
         raw_a = (
             er.join(hub.withColumnRenamed("id", "src_id"), "src_id")
             .groupBy(F.col("dst_id").alias("id"))
@@ -1214,8 +1205,7 @@ def landmark_closeness(
 
 
 def _pagerank_iter(
-    er: DataFrame, nodes: DataFrame, ranks: DataFrame,
-    damping_ppm: int, restart,
+    er: DataFrame, nodes: DataFrame, ranks: DataFrame, restart,
 ) -> DataFrame:
     """One power iteration over the (id, rank_e6) state: shuffle join of
     the (src, dst, out_deg) relation against the rank state, hash
@@ -1227,7 +1217,7 @@ def _pagerank_iter(
         .select(
             F.col("dst_id"),
             F.expr(
-                f"(rank_e6 * {damping_ppm}L) div (1000000L * out_deg)"
+                f"(rank_e6 * {DAMPING_PPM}L) div (1000000L * out_deg)"
             ).alias("_c"),
         )
         .groupBy("dst_id")
@@ -1248,12 +1238,10 @@ def pagerank_checkpointed(
     pages: DataFrame,
     out_dir: str,
     iterations: int = 3,
-    damping_ppm: int = 850_000,
-    every: int = 1,
 ) -> DataFrame:
     """Resumable PageRank: :func:`pagerank` with ITERATION-level
-    checkpoints — the rank state is written to parquet every
-    ``every`` iterations and the manifest entry is the single commit
+    checkpoints — the rank state is written to parquet after every
+    iteration and the manifest entry is the single commit
     point, the same crash discipline as the bucket-checkpointed
     extraction runner (``plans/checkpoint.py``): a state directory
     without a manifest row (crash between write and commit) is purged
@@ -1263,7 +1251,7 @@ def pagerank_checkpointed(
 
     The read-back from parquet also CUTS LINEAGE — for deep iteration
     chains (hundreds of rounds at web scale) this bounds both plan
-    depth and recovery cost at ``every`` iterations of recompute,
+    depth and recovery cost at one iteration of recompute,
     which is the reason production graph jobs checkpoint even when
     they never crash.
 
@@ -1293,7 +1281,7 @@ def pagerank_checkpointed(
     ids, edges = _resolve_edges(pages)
     er, deg = _degree_join(edges)
     nodes = ids.select(F.col("_nid").alias("id"))
-    teleport = F.lit(1_000_000 - damping_ppm)
+    teleport = F.lit(1_000_000 - DAMPING_PPM)
     spark = pages.sparkSession
 
     start = max((i for i in committed if i <= iterations), default=0)
@@ -1307,23 +1295,22 @@ def pagerank_checkpointed(
         )
     for i in range(start + 1, iterations + 1):
         t0 = _time.time()
-        ranks = _pagerank_iter(er, nodes, ranks, damping_ppm, teleport)
-        if i % every == 0 or i == iterations:
-            state_dir = os.path.join(out_dir, f"iter={i}")
-            ranks.write.mode("overwrite").parquet(state_dir)
-            stats = spark.read.parquet(state_dir).agg(
-                F.count(F.lit(1)).alias("n"),
-                F.sum("rank_e6").alias("mass"),
-            ).collect()[0]
-            manifest[str(i)] = {
-                "n_nodes": stats["n"],
-                "total_rank_e6": stats["mass"],
-                "wall_sec": round(_time.time() - t0, 3),
-            }
-            tmp = mpath + ".tmp"
-            json.dump(manifest, open(tmp, "w"), indent=1)
-            os.replace(tmp, mpath)  # atomic commit point
-            ranks = spark.read.parquet(state_dir)  # lineage cut
+        ranks = _pagerank_iter(er, nodes, ranks, teleport)
+        state_dir = os.path.join(out_dir, f"iter={i}")
+        ranks.write.mode("overwrite").parquet(state_dir)
+        stats = spark.read.parquet(state_dir).agg(
+            F.count(F.lit(1)).alias("n"),
+            F.sum("rank_e6").alias("mass"),
+        ).collect()[0]
+        manifest[str(i)] = {
+            "n_nodes": stats["n"],
+            "total_rank_e6": stats["mass"],
+            "wall_sec": round(_time.time() - t0, 3),
+        }
+        tmp = mpath + ".tmp"
+        json.dump(manifest, open(tmp, "w"), indent=1)
+        os.replace(tmp, mpath)  # atomic commit point
+        ranks = spark.read.parquet(state_dir)  # lineage cut
 
     return (
         ranks.join(ids, ranks.id == ids._nid)
@@ -1340,8 +1327,6 @@ def pagerank_checkpointed(
 def trustrank(
     pages: DataFrame,
     seeds_mod: int = 64,
-    iterations: int = 3,
-    damping_ppm: int = 850_000,
     graph: tuple[DataFrame, DataFrame] | None = None,
 ) -> DataFrame:
     """Integer-exact TrustRank (Gyöngyi, Garcia-Molina & Pedersen,
@@ -1375,13 +1360,13 @@ def trustrank(
     er, _ = _degree_join(edges)
     nodes = ids.select(F.col("_nid").alias("id"))
     seed_mass = F.when(
-        (F.col("id") % seeds_mod) == 0, F.lit(1_000_000 - damping_ppm)
+        (F.col("id") % seeds_mod) == 0, F.lit(1_000_000 - DAMPING_PPM)
     ).otherwise(F.lit(0)).cast("long")
     trust = nodes.select("id", seed_mass.alias("rank_e6"))
-    for _ in range(iterations):
+    for _ in range(3):
         # per-round lineage truncation — see pagerank
         trust = materialize(
-            _pagerank_iter(er, nodes, trust, damping_ppm, seed_mass),
+            _pagerank_iter(er, nodes, trust, seed_mass),
             "local",
         )
     return (
@@ -1421,12 +1406,7 @@ def _l1_normalize_e6(nodes: DataFrame, raw: DataFrame) -> DataFrame:
     )
 
 
-def crawl_cadence(
-    pages: DataFrame,
-    id_col: str = "doc_id",
-    url_col: str = "url",
-    ts_col: str = "fetch_ts_sec",
-) -> DataFrame:
+def crawl_cadence(pages: DataFrame) -> DataFrame:
     """Recrawl-cadence profile per canonical URL — the crawl-scheduling
     signal (how often a resource is refetched drives politeness budgets
     and freshness ranking). Per canonical URL: fetch count, first/last
@@ -1442,8 +1422,8 @@ def crawl_cadence(
     mean_gap_sec).
     """
     canon = pages.select(
-        F.col(ts_col).cast("long").alias("_ts"),
-        canonical_url(F.col(url_col)).alias("canonical_url"),
+        F.col("fetch_ts_sec").cast("long").alias("_ts"),
+        canonical_url(F.col("url")).alias("canonical_url"),
     )
     agg = canon.groupBy("canonical_url").agg(
         F.count(F.lit(1)).cast("long").alias("n_fetches"),
@@ -1464,16 +1444,14 @@ def crawl_cadence(
 # ---------------------------------------------------------------------------
 
 
-def synthetic_meta_pages(
-    docs: DataFrame, id_col: str = "doc_id"
-) -> DataFrame:
+def synthetic_meta_pages(docs: DataFrame) -> DataFrame:
     """(doc_id, url, html): pages with a deterministic ``<head>`` —
     title always present; a robots meta directive on 3/4 of pages
     (``index,follow`` / ``noindex,follow`` / ``noindex,nofollow`` by
     md5 nibble 4); a ``rel=canonical`` link on 2/3 (self or a pointer
     at page ``(id·7+13) mod 256`` by nibble 5) — so every extraction
     branch has firing and non-firing population."""
-    h = F.md5(F.col(id_col).cast("string"))
+    h = F.md5(F.col("doc_id").cast("string"))
     meta = (
         F.when(_nib(h, 4) % 4 == 0,
                F.lit('<meta name="robots" content="index,follow">'))
@@ -1483,11 +1461,11 @@ def synthetic_meta_pages(
               F.lit('<meta name="robots" content="noindex,nofollow">'))
         .otherwise(F.lit(""))
     )
-    canon_tgt = _page_url((F.col(id_col) * 7 + 13) % 256)
+    canon_tgt = _page_url((F.col("doc_id") * 7 + 13) % 256)
     canon = (
         F.when(_nib(h, 5) % 3 == 0,
                F.concat(F.lit('<link rel="canonical" href="'),
-                        _page_url(F.col(id_col)), F.lit('">')))
+                        _page_url(F.col("doc_id")), F.lit('">')))
         .when(_nib(h, 5) % 3 == 1,
               F.concat(F.lit('<link rel="canonical" href="'),
                        canon_tgt, F.lit('">')))
@@ -1495,15 +1473,15 @@ def synthetic_meta_pages(
     )
     html = F.concat(
         F.lit("<html><head><title>Doc "),
-        F.col(id_col).cast("string"),
+        F.col("doc_id").cast("string"),
         F.lit("</title>"), meta, canon,
         F.lit("</head><body><p>Body of "),
-        F.col(id_col).cast("string"),
+        F.col("doc_id").cast("string"),
         F.lit(".</p></body></html>"),
     )
     return docs.select(
-        F.col(id_col).alias("doc_id"),
-        _page_url(F.col(id_col)).alias("url"),
+        "doc_id",
+        _page_url(F.col("doc_id")).alias("url"),
         F.encode(html, "utf-8").alias("html"),
     )
 
@@ -1892,41 +1870,34 @@ def adaptive_revisit(deltas: DataFrame) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def synthetic_host_pages(
-    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
+def synthetic_host_pages(docs: DataFrame) -> DataFrame:
     """(doc_id, url, host, text): pages spread over 256 synthetic hosts
     (md5 nibbles 12-13) so host-level statistics have real variance at
     any corpus size — the 4-host table the other builders share is too
     coarse to ever fail a per-host gate."""
-    h = F.md5(F.col(id_col).cast("string"))
+    h = F.md5(F.col("doc_id").cast("string"))
     hid = (_nib(h, 12) * 16 + _nib(h, 13)).cast("string")
     host = F.concat(F.lit("h"), hid, F.lit(".example.org"))
     return docs.select(
-        F.col(id_col).alias("doc_id"),
+        "doc_id",
         F.concat(
             F.lit("https://"), host, F.lit("/p/"),
-            F.col(id_col).cast("string"),
+            F.col("doc_id").cast("string"),
         ).alias("url"),
         host.alias("host"),
-        F.col(text_col).alias("text"),
+        "text",
     )
 
 
 @scoped
-def host_quality_gate(
-    pages: DataFrame,
-    min_pages: int = 2,
-    min_avg_score_ppm: int = 500_000,
-) -> DataFrame:
+def host_quality_gate(pages: DataFrame) -> DataFrame:
     """Domain-level filtering (the FineWeb/UT1 curation step): score
     each page, aggregate per HOST, and gate every page by its host's
     verdict — spam farms get dropped wholesale, not page by page.
 
     Page score: alphanumeric-character fraction in integer ppm
-    (floored — engine-exact, no doubles). Host verdict: at least
-    ``min_pages`` pages AND integral mean score ≥
-    ``min_avg_score_ppm``.
+    (floored — engine-exact, no doubles). Host verdict: at least 2
+    pages AND integral mean score ≥ 500,000 ppm.
 
     Scale shape: one hash aggregate on host (map-side combinable
     sums), then the verdict relation joins back on host through the
@@ -1966,8 +1937,8 @@ def host_quality_gate(
         F.expr("_sum div host_pages").alias("host_avg_ppm"),
     ).withColumn(
         "host_kept",
-        (F.col("host_pages") >= min_pages)
-        & (F.col("host_avg_ppm") >= min_avg_score_ppm),
+        (F.col("host_pages") >= 2)
+        & (F.col("host_avg_ppm") >= 500_000),
     )
     small = maybe_broadcast(verdict, bound_bytes=plan_size_bytes(pages))
     return scored.join(small, "host").select(
@@ -2026,7 +1997,7 @@ def surt_key(url) -> "F.Column":
     )
 
 
-def cdx_index(pages: DataFrame, text_col: str = "text") -> DataFrame:
+def cdx_index(pages: DataFrame) -> DataFrame:
     """CDX-style capture index over a page table: one row per fetch
     with the SURT urlkey, capture timestamp, original URL, content
     digest and octet length — the lookup structure every CC consumer
@@ -2047,8 +2018,8 @@ def cdx_index(pages: DataFrame, text_col: str = "text") -> DataFrame:
         surt_key(F.col("url")).alias("urlkey"),
         F.col("fetch_ts_sec").cast("long").alias("fetch_ts_sec"),
         "url",
-        F.md5(F.coalesce(F.col(text_col), F.lit(""))).alias("digest"),
-        F.octet_length(F.coalesce(F.col(text_col), F.lit("")))
+        F.md5(F.coalesce(F.col("text"), F.lit(""))).alias("digest"),
+        F.octet_length(F.coalesce(F.col("text"), F.lit("")))
         .cast("long").alias("length"),
     )
     return idx.repartitionByRange(
@@ -2064,21 +2035,19 @@ def cdx_index(pages: DataFrame, text_col: str = "text") -> DataFrame:
 CHANGEFREQS = ("daily", "weekly", "monthly")
 
 
-def synthetic_sitemaps(
-    docs: DataFrame, id_col: str = "doc_id"
-) -> DataFrame:
+def synthetic_sitemaps(docs: DataFrame) -> DataFrame:
     """(sitemap_url, xml): one deterministic sitemaps.org ``<urlset>``
     document per doc with 1-3 ``<url>`` entries; ``<lastmod>`` /
     ``<changefreq>`` / ``<priority>`` are each OPTIONAL per entry
     (independent md5 nibbles), so every parser branch has firing and
     non-firing population — the real-web raggedness the parser must
     survive. Entry locs reuse the 4-host page-URL scheme."""
-    docs = spread_small_scan(docs, id_col)
-    h = F.md5(F.col(id_col).cast("string"))
+    docs = spread_small_scan(docs, "doc_id")
+    h = F.md5(F.col("doc_id").cast("string"))
     k = 1 + _nib(h, 10) % 3
 
     def entry(j: int) -> "F.Column":
-        tgt = (F.col(id_col) * 17 + j * 59) % 512
+        tgt = (F.col("doc_id") * 17 + j * 59) % 512
         nib = _nib(h, 10 + j)
         day = (nib % 28 + 1).cast("string")
         lastmod = F.when(
@@ -2120,7 +2089,7 @@ def synthetic_sitemaps(
             F.lit("https://site"),
             (_nib(h, 1) % 4).cast("string"),
             F.lit(".example.org/sitemap-"),
-            F.col(id_col).cast("string"),
+            F.col("doc_id").cast("string"),
             F.lit(".xml"),
         ).alias("sitemap_url"),
         xml.alias("xml"),
@@ -2173,7 +2142,7 @@ def sitemap_entries(sitemaps: DataFrame) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def fetch_schedule(pages: DataFrame, url_col: str = "url") -> DataFrame:
+def fetch_schedule(pages: DataFrame) -> DataFrame:
     """Assign every frontier URL a per-host fetch slot under a per-host
     crawl delay — the politeness constraint every crawler schedules
     around (one connection per host, ``Crawl-delay`` seconds apart):
@@ -2196,14 +2165,14 @@ def fetch_schedule(pages: DataFrame, url_col: str = "url") -> DataFrame:
     """
     from pyspark.sql import Window
 
-    host = F.regexp_extract(F.col(url_col), r"^[a-z]+://([^/?:]+)", 1)
+    host = F.regexp_extract(F.col("url"), r"^[a-z]+://([^/?:]+)", 1)
     w = (
         Window.partitionBy("host")
-        .orderBy(F.col(url_col).asc(), F.col("doc_id").asc())
+        .orderBy(F.col("url").asc(), F.col("doc_id").asc())
     )
     delay = (_nib(F.md5(F.col("host")), 1) % 4 + 1).cast("long")
     return (
-        pages.select("doc_id", url_col, host.alias("host"))
+        pages.select("doc_id", "url", host.alias("host"))
         .withColumn("delay_sec", delay)
         .withColumn(
             "slot", (F.row_number().over(w) - 1).cast("long")
@@ -2249,30 +2218,28 @@ def frontier_gap(
 # ---------------------------------------------------------------------------
 
 
-def synthetic_redirects(
-    docs: DataFrame, id_col: str = "doc_id", targets_mod: int = 512
-) -> DataFrame:
+def synthetic_redirects(docs: DataFrame) -> DataFrame:
     """(src_url, location): a deterministic redirect-edge table with
     every chain shape the resolver must survive — straight chains into
     a final page, chains into URLs with no edge (a terminus), direct
     self-loops, and md5-scrambled cross-links that produce longer
     chains and multi-node cycles. Docs whose nibble 11 is ≥ 12 emit no
     edge (their URLs are plain pages)."""
-    h = F.md5(F.col(id_col).cast("string"))
+    h = F.md5(F.col("doc_id").cast("string"))
     m = _nib(h, 11) % 4
     t = _nib(h, 12) % 4
     r = lambda e: F.concat(  # noqa: E731 — local url shorthand
         F.lit("https://r.example.org/"), e.cast("string")
     )
     dst = (
-        F.when(t == 0, r((F.col(id_col) * 7 + 3) % targets_mod))
+        F.when(t == 0, r((F.col("doc_id") * 7 + 3) % 512))
         .when(t == 1, F.concat(F.lit("https://f.example.org/"),
-                               F.col(id_col).cast("string")))
-        .when(t == 2, r(F.col(id_col)))
-        .otherwise(r((F.col(id_col) * 3 + 1) % targets_mod))
+                               F.col("doc_id").cast("string")))
+        .when(t == 2, r(F.col("doc_id")))
+        .otherwise(r((F.col("doc_id") * 3 + 1) % 512))
     )
     return docs.filter(m <= 2).select(
-        r(F.col(id_col)).alias("src_url"),
+        r(F.col("doc_id")).alias("src_url"),
         dst.alias("location"),
     )
 
@@ -2338,9 +2305,7 @@ def resolve_redirects(
 # ---------------------------------------------------------------------------
 
 
-def synthetic_host_lined_pages(
-    docs: DataFrame, n_hosts: int = 8
-) -> DataFrame:
+def synthetic_host_lined_pages(docs: DataFrame) -> DataFrame:
     """(doc_id, host, url, text) — a multi-line page table where every
     host stamps shared chrome around per-document body lines: a nav
     line and a copyright footer on EVERY page of the host (true
@@ -2352,7 +2317,7 @@ def synthetic_host_lined_pages(
     docs = spread_small_scan(docs, "doc_id")
     d = F.col("doc_id")
     host = F.concat(
-        F.lit("h"), (d % n_hosts).cast("string"), F.lit(".example.org")
+        F.lit("h"), (d % 8).cast("string"), F.lit(".example.org")
     )
     body = F.replace(
         F.coalesce(F.col("text"), F.lit("")), F.lit("\n"), F.lit(" ")
@@ -2531,11 +2496,7 @@ def attribute_aliases(
 # ---------------------------------------------------------------------------
 
 
-def link_spam_scores(
-    host_edges: DataFrame,
-    recip_ppm_threshold: int = 500_000,
-    min_out_hosts: int = 2,
-) -> DataFrame:
+def link_spam_scores(host_edges: DataFrame) -> DataFrame:
     """Host-level link-spam signals over the HOST graph (the
     :func:`host_graph` rollup): link farms interlink reciprocally and
     push far more distinct outgoing host-edges than organic sites, so
@@ -2543,8 +2504,8 @@ def link_spam_scores(
     distinct external out-neighbours that link straight back — plus
     the raw in/out/self link masses for downstream weighting.
 
-    ``is_farm`` fires when reciprocity ≥ ``recip_ppm_threshold`` ppm
-    over ≥ ``min_out_hosts`` distinct out-neighbours (one mutual link
+    ``is_farm`` fires when reciprocity ≥ 500,000 ppm over ≥ 2
+    distinct out-neighbours (one mutual link
     between two blogs is friendship, not a farm).
 
     Scale shape: everything runs at HOST-PAIR grain (the rollup's key
@@ -2612,8 +2573,8 @@ def link_spam_scores(
         recip_ppm.alias("recip_ppm"),
     ).withColumn(
         "is_farm",
-        (F.col("recip_ppm") >= recip_ppm_threshold)
-        & (F.col("out_hosts") >= min_out_hosts),
+        (F.col("recip_ppm") >= 500_000)
+        & (F.col("out_hosts") >= 2),
     )
 
 
@@ -2684,9 +2645,7 @@ SOFT404_PHRASE_RE = (
 )
 
 
-def synthetic_soft404_pages(
-    docs: DataFrame, n_hosts: int = 8
-) -> DataFrame:
+def synthetic_soft404_pages(docs: DataFrame) -> DataFrame:
     """(doc_id, host, url, title, text): a page table where md5 nibble
     14 routes each document to one of three shapes — a normal content
     page (body = the document text), an error-PHRASE page (thin text
@@ -2697,7 +2656,7 @@ def synthetic_soft404_pages(
     docs = spread_small_scan(docs, "doc_id")
     d = F.col("doc_id")
     host = F.concat(
-        F.lit("h"), (d % n_hosts).cast("string"), F.lit(".example.org")
+        F.lit("h"), (d % 8).cast("string"), F.lit(".example.org")
     )
     body = F.replace(
         F.coalesce(F.col("text"), F.lit("")), F.lit("\n"), F.lit(" ")
@@ -3258,8 +3217,7 @@ def domain_rollup(pages: DataFrame, psl: DataFrame) -> DataFrame:
 SEO_KEYWORD_MOD = 17
 
 
-def synthetic_seo_pages(docs: DataFrame, id_col: str = "doc_id"
-                        ) -> DataFrame:
+def synthetic_seo_pages(docs: DataFrame) -> DataFrame:
     """(doc_id, url, html): pages with a title keyword, a meta-keywords
     declaration (3 terms — the title term plus two rotated others, so
     declared-but-absent terms exist on every page), and a body that is
@@ -3269,20 +3227,20 @@ def synthetic_seo_pages(docs: DataFrame, id_col: str = "doc_id"
     once (nibble₃ ≡ 1 mod 4) or never (otherwise), so the density
     screen has firing and non-firing population at every corpus size.
     """
-    docs = spread_small_scan(docs, id_col)
-    h = F.md5(F.col(id_col).cast("string"))
-    kw = F.concat(F.lit("kw"), (F.col(id_col) % SEO_KEYWORD_MOD)
+    docs = spread_small_scan(docs, "doc_id")
+    h = F.md5(F.col("doc_id").cast("string"))
+    kw = F.concat(F.lit("kw"), (F.col("doc_id") % SEO_KEYWORD_MOD)
                   .cast("string"))
-    kw2 = F.concat(F.lit("kw"), ((F.col(id_col) * 3 + 1)
+    kw2 = F.concat(F.lit("kw"), ((F.col("doc_id") * 3 + 1)
                                  % SEO_KEYWORD_MOD).cast("string"))
-    kw3 = F.concat(F.lit("kw"), ((F.col(id_col) * 5 + 2)
+    kw3 = F.concat(F.lit("kw"), ((F.col("doc_id") * 5 + 2)
                                  % SEO_KEYWORD_MOD).cast("string"))
     reps = F.when(_nib(h, 3) % 4 == 0, 8 + _nib(h, 4) % 8).otherwise(
         F.when(_nib(h, 3) % 4 == 1, F.lit(1)).otherwise(F.lit(0))
     )
     body = F.concat(
         F.lit("plain prose about topic "),
-        (F.col(id_col) % 7).cast("string"),
+        (F.col("doc_id") % 7).cast("string"),
         F.repeat(F.concat(F.lit(" "), kw), reps),
     )
     html = F.concat(
@@ -3293,15 +3251,13 @@ def synthetic_seo_pages(docs: DataFrame, id_col: str = "doc_id"
         F.lit("</p></body></html>"),
     )
     return docs.select(
-        F.col(id_col).alias("doc_id"),
-        _page_url(F.col(id_col)).alias("url"),
+        "doc_id",
+        _page_url(F.col("doc_id")).alias("url"),
         F.encode(html, "utf-8").alias("html"),
     )
 
 
-def keyword_stuffing(
-    pages: DataFrame, density_threshold_ppm: int = 300_000
-) -> DataFrame:
+def keyword_stuffing(pages: DataFrame) -> DataFrame:
     """On-page keyword-stuffing screen — the SEO-spam complement of the
     link-graph (:func:`link_spam`) and soft-404 screens: parse the
     declared meta keywords, tokenize the visible body, and measure how
@@ -3311,8 +3267,8 @@ def keyword_stuffing(
     the integer-ppm keyword density ``hits·10⁶ div n_tokens``, the
     fraction of declared keywords that actually appear
     (declared-but-absent terms are the inverse spam signal — keyword
-    dumping), and the verdict at ``density_threshold_ppm`` (default:
-    ≥30%% of body tokens being declared keywords marks the page).
+    dumping), and the verdict at 300,000 ppm (≥30%% of body tokens
+    being declared keywords marks the page).
 
     Pure native projection — decode + regexp extracts + higher-order
     array functions (``filter``/``array_contains``), whole-stage
@@ -3356,7 +3312,7 @@ def keyword_stuffing(
     return scored.withColumn(
         "stuffed",
         F.coalesce(
-            F.col("kw_density_ppm") >= density_threshold_ppm,
+            F.col("kw_density_ppm") >= 300_000,
             F.lit(False),
         ),
     )
@@ -3367,8 +3323,7 @@ def keyword_stuffing(
 # ---------------------------------------------------------------------------
 
 
-def synthetic_paginated_pages(docs: DataFrame, id_col: str = "doc_id"
-                              ) -> DataFrame:
+def synthetic_paginated_pages(docs: DataFrame) -> DataFrame:
     """(doc_id, url, html): multi-part articles. Consecutive doc_ids
     group into articles of up to 4 parts — article ``a = id div 4``
     has true length ``L(a) = 1 + nib₅(md5(a)) % 4``; the member with
@@ -3377,21 +3332,21 @@ def synthetic_paginated_pages(docs: DataFrame, id_col: str = "doc_id"
     Members with ``k ≥ L`` are standalone single-page articles (no
     pagination links at all) — the majority case on the real web, so
     the assembler must not fabricate chains for them."""
-    docs = spread_small_scan(docs, id_col)
-    a = F.floor(F.col(id_col) / 4).cast("long")
-    k = (F.col(id_col) % 4).cast("long")
+    docs = spread_small_scan(docs, "doc_id")
+    a = F.floor(F.col("doc_id") / 4).cast("long")
+    k = (F.col("doc_id") % 4).cast("long")
     ha = F.md5(a.cast("string"))
     L = (1 + _nib(ha, 5) % 4).cast("long")
     in_chain = k < L
     nxt = F.when(
         in_chain & (k < L - 1),
         F.concat(F.lit('<link rel="next" href="'),
-                 _page_url(F.col(id_col) + 1), F.lit('">')),
+                 _page_url(F.col("doc_id") + 1), F.lit('">')),
     ).otherwise(F.lit(""))
     prv = F.when(
         in_chain & (k > 0),
         F.concat(F.lit('<link rel="prev" href="'),
-                 _page_url(F.col(id_col) - 1), F.lit('">')),
+                 _page_url(F.col("doc_id") - 1), F.lit('">')),
     ).otherwise(F.lit(""))
     html = F.concat(
         F.lit("<html><head><title>Part "), (k + 1).cast("string"),
@@ -3401,8 +3356,8 @@ def synthetic_paginated_pages(docs: DataFrame, id_col: str = "doc_id"
         F.lit(".</p></body></html>"),
     )
     return docs.select(
-        F.col(id_col).alias("doc_id"),
-        _page_url(F.col(id_col)).alias("url"),
+        "doc_id",
+        _page_url(F.col("doc_id")).alias("url"),
         F.encode(html, "utf-8").alias("html"),
     )
 
@@ -3569,8 +3524,7 @@ def crawl_budget(
 # ---------------------------------------------------------------------------
 
 
-def synthetic_mirror_pages(docs: DataFrame, id_col: str = "doc_id"
-                           ) -> DataFrame:
+def synthetic_mirror_pages(docs: DataFrame) -> DataFrame:
     """(host, url, text): pages over 64 base hosts (``host =
     doc_id % 64``) with deterministic 3-line bodies, PLUS mirror
     copies: every host ``h`` with ``h % 8 == 0`` is re-served as
@@ -3580,12 +3534,12 @@ def synthetic_mirror_pages(docs: DataFrame, id_col: str = "doc_id"
     alias shape Bharat & Broder's mirror detection targets.  Base
     hosts that are not mirrored give the screen its non-firing
     population."""
-    hid = (F.col(id_col) % 64).cast("long")
+    hid = (F.col("doc_id") % 64).cast("long")
     base_text = F.concat(
-        F.lit("alpha line "), F.col(id_col).cast("string"),
-        F.lit("\nbeta line "), ((F.col(id_col) * 7) % 1000)
+        F.lit("alpha line "), F.col("doc_id").cast("string"),
+        F.lit("\nbeta line "), ((F.col("doc_id") * 7) % 1000)
         .cast("string"),
-        F.lit("\ngamma line "), ((F.col(id_col) * 13) % 1000)
+        F.lit("\ngamma line "), ((F.col("doc_id") * 13) % 1000)
         .cast("string"),
     )
     base = docs.select(
@@ -3593,10 +3547,10 @@ def synthetic_mirror_pages(docs: DataFrame, id_col: str = "doc_id"
                  F.lit(".example.org")).alias("host"),
         F.concat(F.lit("https://h"), hid.cast("string"),
                  F.lit(".example.org/p/"),
-                 F.col(id_col).cast("string")).alias("url"),
+                 F.col("doc_id").cast("string")).alias("url"),
         base_text.alias("text"),
         hid.alias("_hid"),
-        F.col(id_col).alias("_id"),
+        F.col("doc_id").alias("_id"),
     )
     mirrored = base.filter((F.col("_hid") % 8) == 0).select(
         F.concat(F.lit("m"), F.col("_hid").cast("string"),
@@ -3620,7 +3574,6 @@ def mirror_hosts(
     pages: DataFrame,
     sketch_k: int = 16,
     band_size: int = 4,
-    threshold_e6: int = 500_000,
 ) -> DataFrame:
     """Mirror-host detection (Bharat & Broder, WWW '99): find host
     pairs serving (nearly) the same content — www2/CDN/alias mirrors
@@ -3647,7 +3600,7 @@ def mirror_hosts(
     (``common·10⁶ div (n_a + n_b − common)``).
 
     Output: (host_a, host_b, n_common, n_a, n_b, jaccard_e6), pairs
-    with ``jaccard_e6 ≥ threshold_e6`` only, host_a < host_b.
+    with ``jaccard_e6 ≥ 500,000`` only, host_a < host_b.
     """
     lines = (
         pages.select(
@@ -3718,5 +3671,5 @@ def mirror_hosts(
             F.expr("(n_common * 1000000L) div (n_a + n_b - n_common)")
             .cast("long").alias("jaccard_e6"),
         )
-        .filter(F.col("jaccard_e6") >= threshold_e6)
+        .filter(F.col("jaccard_e6") >= 500_000)
     )

@@ -512,7 +512,6 @@ def detect_spans_auto(
     pages: DataFrame,
     ctx: DetectContext,
     cores: int | None = None,
-    chunk_lines: int | None = None,
     overhead_chars: int = AUTO_OVERHEAD_CHARS,
     stats: "tuple[int, int] | None" = None,
 ) -> DataFrame:
@@ -524,10 +523,10 @@ def detect_spans_auto(
     metrics are free), else from one narrow ``corpus_char_stats`` pass.
     The decision feeds ``choose_detect_path``; models the chunk frame
     cannot reproduce (sequential decode, word_overlap) always take the
-    fused path. When chunking wins, ``chunk_lines`` defaults to spreading
-    the biggest document over ~2 chunks per core (floor 2,500 so
-    per-chunk overhead stays amortized), and only docs beyond twice their
-    fair share are chunked.
+    fused path. When chunking wins, the chunk size spreads the biggest
+    document over ~2 chunks per core (floor 2,500 lines so per-chunk
+    overhead stays amortized), and only docs beyond twice their fair
+    share are chunked.
 
     A straggler-first rearrangement (round-robin the big docs into the
     stage's first partitions so they start at t=0 — LPT via partition
@@ -548,7 +547,7 @@ def detect_spans_auto(
         and choose_detect_path(mx, tot, cores, overhead_chars) == "chunked"
     ):
         est_mx_lines = max(mx // 40, 1)  # ~40 chars/line of web text
-        chunk_lines = chunk_lines or max(2_500, est_mx_lines // (2 * cores))
+        chunk_lines = max(2_500, est_mx_lines // (2 * cores))
         mega_doc_chars = max(int(2 * tot / cores), 200_000)
         return detect_spans_chunked(
             pages, ctx, chunk_lines=chunk_lines,

@@ -21,12 +21,11 @@ from ..refmodel import ModelWeights
 def feature_label_df(
     lines_with_features: DataFrame,
     feature_col: str = "features_ctx",
-    label_col: str = "norm_label",
 ) -> DataFrame:
     """(label, features array<string>) training rows; noisy rows dropped
     (reference igtdetect.py:1479-1486)."""
     return lines_with_features.select(
-        F.col(label_col).alias("label"), F.col(feature_col).alias("features")
+        F.col("norm_label").alias("label"), F.col(feature_col).alias("features")
     ).filter(~F.col("label").startswith("*"))
 
 
@@ -80,8 +79,6 @@ def train_spark_ml(
     spark: SparkSession,
     train_df: DataFrame,
     max_features: int = 10000,
-    reg_param: float = 1e-6,
-    max_iter: int = 100,
 ) -> ModelWeights:
     """chi² top-k → sparse vector assembly → Spark ML one-vs-rest-style
     multinomial LogisticRegression → ModelWeights."""
@@ -118,7 +115,7 @@ def train_spark_ml(
         to_vec(F.col("features")).alias("features"),
     )
     lr = LogisticRegression(
-        regParam=reg_param, maxIter=max_iter, family="multinomial",
+        regParam=1e-6, maxIter=100, family="multinomial",
         standardization=False,
     )
     model = lr.fit(ml_df)

@@ -207,18 +207,16 @@ _SETUP_SPARK_FILES_SHA256 = (
 _SIGNATURE_OK: bool | None = None
 
 
-def _stock_setup_spark_files_matches(fn=None) -> bool:
-    """True iff ``fn`` (default: the CURRENT stock function — call this
-    before patching) hashes to the pinned signature."""
+def _stock_setup_spark_files_matches() -> bool:
+    """True iff the CURRENT stock ``setup_spark_files`` (call this before
+    patching) hashes to the pinned signature."""
     import hashlib
     import inspect
 
-    if fn is None:
-        import pyspark.worker_util as _wu
+    import pyspark.worker_util as _wu
 
-        fn = _wu.setup_spark_files
     try:
-        src = inspect.getsource(fn)
+        src = inspect.getsource(_wu.setup_spark_files)
     except (OSError, TypeError):
         return False
     return hashlib.sha256(src.encode()).hexdigest() == _SETUP_SPARK_FILES_SHA256

@@ -329,12 +329,7 @@ def _mark_anchors(s: str) -> str:
     return _RE_ANCHOR.sub(lambda m: _A_OPEN + m.group(1) + _A_CLOSE, s)
 
 
-def main_content_text(
-    html_bytes: bytes | str,
-    min_block_chars: int = 25,
-    max_link_frac: float = 0.4,
-    min_stopword_hits: int = 1,
-) -> str:
+def main_content_text(html_bytes: bytes | str) -> str:
     """Main-content extraction: boilerplate blocks (navigation, footers,
     link farms) are dropped by deterministic density heuristics —
     per-block link-character fraction (chars inside <a> tags), block text
@@ -342,8 +337,7 @@ def main_content_text(
     sentinels before tag stripping, so the link mass survives into the
     block segmentation. A block is kept iff
 
-        chars ≥ min_block_chars ∧ link_frac ≤ max_link_frac
-        ∧ stopword_hits ≥ min_stopword_hits
+        chars ≥ 25 ∧ link_frac ≤ 0.4 ∧ stopword_hits ≥ 1
 
     (the standard text-density/link-density boilerplate signal, computed
     per block instead of per DOM node)."""
@@ -383,9 +377,9 @@ def main_content_text(
         toks = [t.lower() for t in _WORD_SPLIT.findall(visible)]
         sw_hits = sum(1 for t in toks if t in _EN_STOP_SMALL)
         if (
-            len(stripped) >= min_block_chars
-            and link_frac <= max_link_frac
-            and sw_hits >= min_stopword_hits
+            len(stripped) >= 25
+            and link_frac <= 0.4
+            and sw_hits >= 1
         ):
             kept_blocks.append(visible)
     return "\n\n".join(kept_blocks)

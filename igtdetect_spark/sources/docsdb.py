@@ -37,20 +37,14 @@ def read_docs_db(
     return spark.createDataFrame(rows, "doc_id string, posprob double")
 
 
-def pages_matching_docs_db(
-    pages: DataFrame,
-    docs: DataFrame,
-    url_to_doc_id=None,
-) -> DataFrame:
+def pages_matching_docs_db(pages: DataFrame, docs: DataFrame) -> DataFrame:
     """Inner equi-join pages × broadcast(docs) on doc_id (reference regex
     match of doc_ids to ``*.freki(.gz)`` files, igtdetect.py:1534-1544).
-    ``url_to_doc_id``: Column expression extracting the doc id from the
-    url (default: basename up to the first dot — the reference's
-    ``_path_rename`` regex ``(^.*?)\\.``)."""
-    if url_to_doc_id is None:
-        url_to_doc_id = F.regexp_extract(
-            F.element_at(F.split(F.col("url"), "/"), -1), r"(^.*?)\.", 1
-        )
+    A page's doc id is its url's basename up to the first dot — the
+    reference's ``_path_rename`` regex ``(^.*?)\\.``."""
+    url_to_doc_id = F.regexp_extract(
+        F.element_at(F.split(F.col("url"), "/"), -1), r"(^.*?)\.", 1
+    )
     with_id = pages.withColumn("doc_id", url_to_doc_id)
     return with_id.join(
         F.broadcast(docs.select("doc_id")), "doc_id", "inner"

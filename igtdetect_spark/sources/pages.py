@@ -63,7 +63,6 @@ def glob_paths(pattern: str) -> list[str]:
 def synthetic_pages(
     spark: SparkSession,
     n_docs: int,
-    seed: int = 42,
     html_every: int = 5,
     mega_doc_every: int = 0,
     mega_doc_lines: int = 100_000,
@@ -85,7 +84,6 @@ def synthetic_pages(
             mega = mega_doc_every and i > 0 and i % mega_doc_every == 0
             d = make_doc(
                 i,
-                seed=seed,
                 as_html=bool(html_every and i % html_every == 1) and not mega,
                 lines_target=mega_doc_lines if mega else None,
             )

@@ -50,7 +50,7 @@ def _warc_date(ts_sec) -> "F.Column":
 
 @scoped
 def synthetic_warc_records(
-    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
+    docs: DataFrame, text_col: str = "text"
 ) -> DataFrame:
     """(doc_id, record): one WARC/1.0 response record per document —
     Target-URI from the shared synthetic url scheme, Date from the
@@ -75,18 +75,18 @@ def synthetic_warc_records(
     header = F.concat(
         F.lit("WARC/1.0" + CRLF),
         F.lit("WARC-Type: response" + CRLF),
-        F.lit("WARC-Target-URI: "), _page_url(F.col(id_col)), F.lit(CRLF),
+        F.lit("WARC-Target-URI: "), _page_url(F.col("doc_id")), F.lit(CRLF),
         F.lit("WARC-Date: "),
-        _warc_date(F.lit(1735689600) + (F.col(id_col) * 7919) % 8640000),
+        _warc_date(F.lit(1735689600) + (F.col("doc_id") * 7919) % 8640000),
         F.lit(CRLF),
         F.lit("WARC-Record-ID: <urn:md5:"),
-        F.md5(F.col(id_col).cast("string")), F.lit(">" + CRLF),
+        F.md5(F.col("doc_id").cast("string")), F.lit(">" + CRLF),
         F.lit("Content-Type: application/http; msgtype=response" + CRLF),
         F.lit("Content-Length: "),
         F.octet_length(payload).cast("string"), F.lit(CRLF),
     )
     out = docs.select(
-        F.col(id_col).alias("doc_id"),
+        "doc_id",
         F.encode(F.concat(header, F.lit(CRLF), payload), "utf-8")
         .alias("record"),
     )
@@ -157,9 +157,7 @@ def parse_warc(
 HTTP_ERROR_PAGE = "<html><body><p>Not Found</p></body></html>"
 
 
-def synthetic_http_responses(
-    docs: DataFrame, id_col: str = "doc_id"
-) -> DataFrame:
+def synthetic_http_responses(docs: DataFrame) -> DataFrame:
     """(doc_id, http): one full HTTP/1.1 response message STRING per
     document — what a real WARC response record's payload is.
 
@@ -172,7 +170,7 @@ def synthetic_http_responses(
     the integrity check honest). Zero shuffles — one projection."""
     from ..operators.webpages import _nib, synthetic_html_pages
 
-    pages = synthetic_html_pages(docs, id_col=id_col)
+    pages = synthetic_html_pages(docs)
     h = F.md5(F.col("doc_id").cast("string"))
     m = _nib(h, 7) % 8
     status = (
@@ -206,21 +204,18 @@ def synthetic_http_responses(
     return pages.select(F.col("doc_id"), msg.alias("http"))
 
 
-def synthetic_warc_http_records(
-    docs: DataFrame, id_col: str = "doc_id"
-) -> DataFrame:
+def synthetic_warc_http_records(docs: DataFrame) -> DataFrame:
     """(doc_id, record): WARC response records whose payload is a full
     HTTP response message — the real CC layering (WARC ⊃ HTTP ⊃ HTML).
     Composes :func:`synthetic_http_responses` through
     :func:`synthetic_warc_records`, which already takes any payload
     column."""
     return synthetic_warc_records(
-        synthetic_http_responses(docs, id_col=id_col),
-        id_col="doc_id", text_col="http",
+        synthetic_http_responses(docs), text_col="http"
     )
 
 
-def parse_http(responses: DataFrame, msg_col: str = "http") -> DataFrame:
+def parse_http(responses: DataFrame) -> DataFrame:
     """Split HTTP/1.1 response messages into typed columns + body
     integrity evidence, preserving every other input column.
 
@@ -235,7 +230,7 @@ def parse_http(responses: DataFrame, msg_col: str = "http") -> DataFrame:
     ``charset``/``location`` are NULL when absent (the protocol's
     optional fields). ZERO shuffles, whole-stage codegen except the
     md5."""
-    s = F.col(msg_col)
+    s = F.col("http")
     cut = F.instr(s, CRLF + CRLF)
     head = F.substring(s, F.lit(1), cut - 1)
     body = F.substr(s, cut + 4)
@@ -243,7 +238,7 @@ def parse_http(responses: DataFrame, msg_col: str = "http") -> DataFrame:
     def hdr(name: str) -> "F.Column":
         return F.regexp_extract(head, rf"{name}: ([^\r]+)", 1)
 
-    keep = [c for c in responses.columns if c != msg_col]
+    keep = [c for c in responses.columns if c != "http"]
     out = responses.select(
         *keep,
         F.regexp_extract(head, r"^HTTP/1\.[01] (\d{3})", 1)
@@ -299,12 +294,7 @@ def extract_main_from_warc(records: DataFrame) -> DataFrame:
     return main_content_pages(pages)
 
 
-def wet_records(
-    extracted: DataFrame,
-    id_col: str = "doc_id",
-    url_col: str = "url",
-    text_col: str = "main_text",
-) -> DataFrame:
+def wet_records(extracted: DataFrame) -> DataFrame:
     """(doc_id, record): WET-style ``WARC-Type: conversion`` records —
     the derived text format Common Crawl publishes next to its WARCs —
     rendered from extracted main content: Target-URI, the deterministic
@@ -317,22 +307,22 @@ def wet_records(
     (length_ok, payload_md5) — the graded ``wet_export`` query does
     exactly that, making the sink format verifiable, not just emitted.
     """
-    payload = F.coalesce(F.col(text_col), F.lit(""))
+    payload = F.coalesce(F.col("main_text"), F.lit(""))
     header = F.concat(
         F.lit("WARC/1.0" + CRLF),
         F.lit("WARC-Type: conversion" + CRLF),
-        F.lit("WARC-Target-URI: "), F.col(url_col), F.lit(CRLF),
+        F.lit("WARC-Target-URI: "), F.col("url"), F.lit(CRLF),
         F.lit("WARC-Date: "),
-        _warc_date(F.lit(1735689600) + (F.col(id_col) * 7919) % 8640000),
+        _warc_date(F.lit(1735689600) + (F.col("doc_id") * 7919) % 8640000),
         F.lit(CRLF),
         F.lit("WARC-Refers-To: <urn:md5:"),
-        F.md5(F.col(id_col).cast("string")), F.lit(">" + CRLF),
+        F.md5(F.col("doc_id").cast("string")), F.lit(">" + CRLF),
         F.lit("Content-Type: text/plain" + CRLF),
         F.lit("Content-Length: "),
         F.octet_length(payload).cast("string"), F.lit(CRLF),
     )
     return extracted.select(
-        F.col(id_col).alias("doc_id"),
+        "doc_id",
         F.encode(F.concat(header, F.lit(CRLF), payload), "utf-8")
         .alias("record"),
     )

@@ -83,7 +83,6 @@ def train_logreg_ovr(
     n_classes: int,
     l2: float = 1e-3,
     iters: int = 300,
-    lr: float = 0.05,
 ) -> tuple[np.ndarray, np.ndarray]:
     """Deterministic OvR L2 logistic regression, full-batch Adam (plain GD
     underfits rare classes on imbalanced data; Adam reaches ~0.999 train
@@ -92,7 +91,7 @@ def train_logreg_ovr(
     n, f = X.shape
     coef = np.zeros((n_classes, f))
     intercept = np.zeros(n_classes)
-    b1, b2, eps = 0.9, 0.999, 1e-8
+    lr, b1, b2, eps = 0.05, 0.9, 0.999, 1e-8
     for c in range(n_classes):
         t = (y_idx == c).astype(np.float64)
         w = np.zeros(f)
@@ -120,18 +119,13 @@ def train_model(
     feature_dicts: Sequence[dict[str, bool]],
     labels: Sequence[str],
     max_features: int = 10000,
-    skip_noisy: bool = True,
-    l2: float = 1.0,
     iters: int = 300,
 ) -> ModelWeights:
     """Full local training pipeline → ModelWeights.
 
     ``labels`` are the normalized training labels (handle_label applied);
-    ``*``-noisy rows are dropped when skip_noisy (reference
-    igtdetect.py:1479-1486)."""
-    keep = [
-        i for i, lab in enumerate(labels) if not (skip_noisy and lab.startswith("*"))
-    ]
+    ``*``-noisy rows are dropped (reference igtdetect.py:1479-1486)."""
+    keep = [i for i, lab in enumerate(labels) if not lab.startswith("*")]
     fds = [feature_dicts[i] for i in keep]
     labs = [labels[i] for i in keep]
 
@@ -147,7 +141,7 @@ def train_model(
         vocab = [v for v, m in zip(vocab, mask) if m]
         X = X[:, mask]
 
-    coef, intercept = train_logreg_ovr(X, y, len(classes), l2=l2, iters=iters)
+    coef, intercept = train_logreg_ovr(X, y, len(classes), l2=1.0, iters=iters)
     return ModelWeights.from_arrays(classes, vocab, coef, intercept)
 
 

@@ -127,10 +127,10 @@ def test_final_sigma_is_decided_per_token():
     """split_words lowercases each token alone, so a token-final 'Σ' is
     'ς' even when a letter follows after a case-ignorable separator;
     lowercasing the whole line first would give 'σ'."""
-    from igtdetect_spark.operators.vectorized import tokenize_series
+    from igtdetect_spark.operators.vectorized import TokenBatch
 
     texts = ["ΑΣ'Α", "ΟΔΥΣΣΕΥΣ.Α", "ΣΑ Σ", "İSTANBUL'Σ"]
-    got = tokenize_series(pd.Series(texts, dtype=object)).tolist()
+    got = TokenBatch(pd.Series(texts, dtype=object)).lists()
     assert got == [fs.split_words(t) for t in texts]
     assert got[0] == ["ας", "α"]
 

@@ -28,7 +28,7 @@ CHECKED = [
     "substring_dedup_clean", "mixture_resample", "curation_funnel",
     "unigram_familiarity", "mixture_resample_recipe", "repetition_ratios",
     "substring_dup_spans_i64", "semdedup", "url_dedup",
-    "hll_cardinality",
+    "hll_cardinality", "minhash_bands", "minhash_lsh_pairs",
 ]
 
 

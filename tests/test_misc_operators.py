@@ -78,26 +78,26 @@ class TestWordOverlap:
     def test_tokenize_matches_split_words_on_non_ascii(self):
         """Regression: lowercasing BEFORE tokenizing moves \\w boundaries
         for codepoints whose lowercase expands (U+0130 'İ' → 'i'+U+0307) —
-        tokenize_series must match the reference split_words order
+        TokenBatch.lists() must match the reference split_words order
         (findall first, lowercase per token)."""
         import pandas as pd
 
         from igtdetect_spark.featurespec import split_words
-        from igtdetect_spark.operators.vectorized import tokenize_series
+        from igtdetect_spark.operators.vectorized import TokenBatch
 
         cases = [
             "İstanbul is big", "Hello World", "ẞß Straße",
             "ΣΙΓΜΑ τέλος", "mixed İİ ascii", "", "a:b#c",
             "ТЕКСТ Проверка", "İ", "i̇stanbul",
         ]
-        got = tokenize_series(pd.Series(cases))
+        got = TokenBatch(pd.Series(cases)).lists()
         for c, g in zip(cases, got):
             assert g == split_words(c), c
         # the buggy path would split 'İstanbul' at the combining dot
         assert got[0] == ["i̇stanbul", "is", "big"]
 
     def test_u0130_is_the_only_risky_lowercase_codepoint(self):
-        """The tokenize_series fast path assumes U+0130 is the ONLY
+        """The TokenBatch fast path assumes U+0130 is the ONLY
         codepoint whose str.lower() changes \\w-token structure —
         exhaustively re-verify over all of Unicode (cheap: only ~1.4k
         codepoints have case mappings at all)."""
@@ -253,26 +253,6 @@ class TestWordOverlap:
         got = winnow_batch(texts)
         want = ord_loop_batch(texts)
         pd.testing.assert_frame_equal(got, want)
-
-    def test_minhash_schemes_recover_same_pairs(self, spark):
-        """The affine-rehash scheme (1 md5/shingle) and the md5-permutation
-        scheme (16 md5/shingle) find the same near-duplicate candidate
-        pairs on the duplicate-group corpus — the 16× cheaper signature
-        loses no recall here."""
-        from igtdetect_spark.operators.dedup import minhash_lsh_pairs
-
-        docs = spark.read.parquet(
-            "/root/testdata/sf0.001/documents.parquet"
-        )
-        pairs = {
-            scheme: {
-                (r["doc_a"], r["doc_b"])
-                for r in minhash_lsh_pairs(docs, scheme=scheme).collect()
-            }
-            for scheme in ("affine", "md5")
-        }
-        assert pairs["affine"] == pairs["md5"]
-        assert pairs["affine"]  # non-trivial: the corpus plants near-dups
 
     def test_pretokenized_hook_is_equivalent(self, spark):
         """The ``tokens=`` hook (round 6: one persisted tokenize pass
@@ -445,15 +425,15 @@ class TestWordOverlap:
         import pandas as pd
 
         from igtdetect_spark.operators.vectorized import (
+            TokenBatch,
             overlap_feature_columns,
-            tokenize_series,
         )
 
         cfg = DEFAULT_CONFIG.with_(word_overlap=True)
         pdf = pd.DataFrame(
             {"url": ["a", "a", "b"], "text": ["x y z", "x y z", "x y z"]}
         )
-        toks = tokenize_series(pdf["text"])
+        toks = TokenBatch(pdf["text"]).lists()
         cols = overlap_feature_columns(pdf, toks, cfg)
         # line 2 of doc a overlaps fully; line 1 of doc b has no context
         assert list(cols["high_overlap"]) == [False, True, False]
@@ -507,33 +487,6 @@ class TestNfold:
         b = seeded_doc_order(list(reversed(urls)), 232)
         assert a == b
         assert a != sorted(urls)
-
-
-class TestDocStatsDistributed:
-    @needs_reference(REF_SAMPLE_TEST)
-    def test_matches_denormalized(self, spark):
-        """attach_doc_stats on a stripped lines table reproduces the
-        segmentation-denormalized stats + adjacency."""
-        from igtdetect_spark.operators.doc_stats import attach_doc_stats
-        from igtdetect_spark.operators.segment import segment_freki_files
-
-        lines = segment_freki_files(spark, [REF_SAMPLE_TEST]).cache()
-        redone = attach_doc_stats(lines)
-        want = {
-            r["line_no"]: (
-                r["prev_block_id"], r["next_block_id"], r["doc_llx_mode"],
-                r["def_font_id"], r["def_font_size"],
-            )
-            for r in lines.collect()
-        }
-        got = {
-            r["line_no"]: (
-                r["prev_block_id"], r["next_block_id"], r["doc_llx_mode"],
-                r["def_font_id"], r["def_font_size"],
-            )
-            for r in redone.collect()
-        }
-        assert got == want
 
 
 class TestFrekiRender:

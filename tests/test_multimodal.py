@@ -34,13 +34,6 @@ def test_extract_features_deterministic(spark, media):
     assert dims == {16}
 
 
-def test_decode_stub_raises_without_fake():
-    from igtdetect_spark.operators.multimodal import decode_stub
-
-    with pytest.raises(NotImplementedError):
-        decode_stub(b"abc", "image", deterministic_fake=False)
-
-
 def test_frame_sample(media):
     from igtdetect_spark.operators.multimodal import frame_sample
 

@@ -90,17 +90,6 @@ def test_minhash_signature_plan_has_zero_exchanges(spark):
     assert "rangepartitioning" not in plan.lower(), plan
 
 
-def test_minhash_md5_scheme_plan_is_also_native(spark):
-    from igtdetect_spark.operators.dedup import minhash_band_hashes
-
-    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
-    with _no_spread(spark):
-        plan = _plan(minhash_band_hashes(docs, scheme="md5"))
-    assert "Exchange" not in plan
-    assert "ArrowEvalPython" not in plan
-    assert "BatchEvalPython" not in plan
-
-
 def test_simhash_plan_has_zero_exchanges(spark):
     from igtdetect_spark.operators.dedup import simhash_docs
 

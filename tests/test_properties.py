@@ -244,16 +244,16 @@ def test_svmlight_line_round_trip(label, names):
 
 @settings(max_examples=150, deadline=None)
 @given(st.lists(text_lines, max_size=12))
-def test_tokenize_series_matches_split_words(lines):
-    """tokenize_series ≡ split_words on arbitrary unicode text (the
+def test_token_batch_lists_match_split_words(lines):
+    """TokenBatch.lists() ≡ split_words on arbitrary unicode text (the
     findall-then-lowercase order, incl. codepoints whose lowercase
     expansion crosses \\w boundaries)."""
     import pandas as pd
 
     from igtdetect_spark.featurespec import split_words
-    from igtdetect_spark.operators.vectorized import tokenize_series
+    from igtdetect_spark.operators.vectorized import TokenBatch
 
-    got = tokenize_series(pd.Series(lines, dtype=object))
+    got = TokenBatch(pd.Series(lines, dtype=object)).lists()
     for raw, toks in zip(lines, got):
         assert toks == split_words(raw), repr(raw)
 

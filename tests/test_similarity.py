@@ -97,18 +97,6 @@ def test_ivf_many_lists_codegen(spark, emb, exact):
     assert got == exact
 
 
-def test_kmeans_spark_ml_path(spark, emb):
-    """The distributed quantizer option trains on the full table and
-    yields k valid centroids."""
-    import numpy as np
-
-    from igtdetect_spark.operators.similarity import kmeans_centroids
-
-    C = kmeans_centroids(emb, k=6, iters=5, use_spark_ml=True)
-    assert C.shape == (6, 64)
-    assert np.isfinite(C).all()
-
-
 def test_banded_neardup_recall_superset_of_single_band(spark, emb):
     """Banding exists to buy recall: the union-over-bands candidate set
     must recover at least the pairs a single band of the same planes

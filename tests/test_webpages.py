@@ -2570,10 +2570,16 @@ class TestBfsCheckpointRelease:
                        .toArray())
 
         pages = _planted_pages(spark, [(0, 1), (1, 2), (2, 0), (3, 0)], 4)
-        kw = {"landmarks": (0,)} if kernel == "landmark_closeness" else {
-            "seeds_mod": 2}
+        run = {
+            "crawl_depth": lambda: webpages.crawl_depth(
+                pages, max_hops=3, seeds_mod=2),
+            "bowtie_classes": lambda: webpages.bowtie_classes(
+                pages, max_hops=3, seeds_mod=2),
+            "landmark_closeness": lambda: webpages.landmark_closeness(
+                pages, max_hops=3, landmarks=(0,)),
+        }[kernel]
         before = persistent()
-        out = getattr(webpages, kernel)(pages, max_hops=3, **kw)
+        out = run()
         out.collect()
         assert persistent() - before, "the edge relation was not persisted"
         release_plan_caches(out)
