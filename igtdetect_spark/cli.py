@@ -52,7 +52,7 @@ def _cfg(args):
 
 def _lex(args):
     """Lexicons from the --config ini's [files] section when it names any
-    wordlist/gram/langname path; the reference data files otherwise."""
+    gram-list or langname path; the reference data files otherwise."""
     from .flagship import get_lexicons
 
     inis = getattr(args, "config", None)
@@ -61,11 +61,7 @@ def _lex(args):
         from .lexicons import load_lexicons_from_ini_paths
 
         _, paths = load_ini(*inis)
-        lex_keys = {
-            "en_wordlist", "gls_wordlist", "met_wordlist",
-            "lng_names", "gram_list", "gram_list_cased",
-        }
-        if lex_keys & set(paths):
+        if {"lng_names", "gram_list", "gram_list_cased"} & set(paths):
             return load_lexicons_from_ini_paths(paths)
     return get_lexicons()
 

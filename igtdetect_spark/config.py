@@ -14,7 +14,7 @@ from __future__ import annotations
 
 import os
 from configparser import ConfigParser
-from dataclasses import dataclass, field, replace
+from dataclasses import dataclass, replace
 
 # ---------------------------------------------------------------------------
 # Feature-name constants (reference: igtdetect/env.py:183-227)
@@ -67,8 +67,7 @@ T_HAS_YEAR = "has_year"
 # features are enabled there but are dead code in the reference (SURVEY.md
 # §2.2): `get_textfeats` passes no wordlist, so they always evaluate False
 # and — since only true features are serialized — never fire. We keep them in
-# the enabled set and replicate the always-False behavior unless
-# ``real_oov_features`` is set.
+# the enabled set and replicate the always-False behavior.
 DEFAULT_TEXT_FEATS = frozenset([
     T_BASIC, T_HAS_LANGNAME, T_HAS_GRAMS, T_HAS_PARENTHETICAL,
     T_HAS_CITATION, T_HAS_ASTERISK, T_HAS_UNDERSCORE, T_HAS_BRACKETING,
@@ -114,9 +113,7 @@ class PipelineConfig:
     # -- training (defaults.ini.sample:83, reference README.md:312-314) --
     max_features: int = 10000
 
-    # -- parity quirks (SURVEY.md §2.2/§2.1; all default to reference) --
-    real_oov_features: bool = False   # reference OOV feats never fire
-    buggy_diacritic_class: bool = True  # en-dash in has_dia char class
+    # -- parity quirk (SURVEY.md §2.1) --
     flush_eof_span: bool = False      # reference never flushes span open at EOF
 
     # -- ingestion --
@@ -242,9 +239,6 @@ def load_ini(*paths: str) -> tuple[PipelineConfig, dict[str, str]]:
 REFERENCE_DIR = "/root/reference"
 REF_MODEL_PATH = f"{REFERENCE_DIR}/data/igt-classifier-nobio.model"
 REF_SAMPLE_MODEL_PATH = f"{REFERENCE_DIR}/sample/sample_classifier.model"
-REF_EN_WORDLIST = f"{REFERENCE_DIR}/data/wordlists/english_words.txt"
-REF_GLS_WORDLIST = f"{REFERENCE_DIR}/data/wordlists/gloss.txt"
-REF_MET_WORDLIST = f"{REFERENCE_DIR}/data/wordlists/meta.txt"
 REF_GRAMS = f"{REFERENCE_DIR}/data/wordlists/grams.txt"
 REF_GRAMS_CASED = f"{REFERENCE_DIR}/data/wordlists/grams_case_sensitive.txt"
 REF_LANGS = f"{REFERENCE_DIR}/data/langs.txt"

@@ -1677,10 +1677,11 @@ def q_embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _sql_banded_bucket_exprs(n_bands: int, band_planes: int,
                              seed: int = 42, dim: int = 64) -> list[str]:
-    """Per-band sign-buckets (similarity.py banded_hyperplane_buckets) as
-    DuckDB expressions over a list column ``v`` — band b uses planes
-    [b·r, (b+1)·r) of one seeded standard-normal draw, inlined as repr'd
-    double literals (shortest round-trip → bit-identical doubles)."""
+    """Per-band sign-buckets (``_band_rows`` in similarity.py
+    embedding_neardup_pairs) as DuckDB expressions over a list column
+    ``v`` — band b uses planes [b·r, (b+1)·r) of one seeded
+    standard-normal draw, inlined as repr'd double literals (shortest
+    round-trip → bit-identical doubles)."""
     import numpy as np
 
     rng = np.random.RandomState(seed)

@@ -12,11 +12,9 @@ Parity quirks deliberately replicated (SURVEY.md §2.2):
 
 - ``has_dia``'s first character class contains a literal U+2013 EN DASH
   (``igtdetect.py:693`` — verified byte-level), so it matches {U+0300,
-  U+2013, U+036F} instead of the full combining range; gate
-  ``buggy_diacritic_class``.
+  U+2013, U+036F} instead of the full combining range.
 - the four OOV-rate features are dead code in the reference (no wordlist is
-  ever passed, ``igtdetect.py:174-185`` vs ``:780-781``) → always False;
-  gate ``real_oov_features`` enables a working implementation.
+  ever passed, ``igtdetect.py:174-185`` vs ``:780-781``) → always False.
 - ``med_gls_oov`` is declared but never computed (env.py:214) → absent.
 - tokens drop ``:`` and ``#`` (svmlight-reserved, ``igtdetect.py:1428-1433``).
 """
@@ -108,11 +106,6 @@ _RE_DIA_BUGGY = re.compile(
     re.UNICODE,
 )
 RE2_DIA_BUGGY = _RE_DIA_BUGGY.pattern
-_RE_DIA_FIXED = re.compile(
-    "[̀-ͯ]|[᪰-᫿]|[᷀-᷿]|[⃐-⃿]|[︠-︯]",
-    re.UNICODE,
-)
-RE2_DIA_FIXED = _RE_DIA_FIXED.pattern
 _RE_GRK = re.compile("[Ͱ-Ͽ]|[ἀ-῿]", re.UNICODE)
 RE2_GRK = _RE_GRK.pattern
 _RE_KANJI = re.compile("[一-龿]", re.UNICODE)
@@ -178,16 +171,10 @@ class Lexicons:
         langnames: frozenset[str] = frozenset(),
         gram_list: Sequence[str] = (),
         gram_list_cased: Sequence[str] = (),
-        en_words: frozenset[str] = frozenset(),
-        gls_words: frozenset[str] = frozenset(),
-        met_words: frozenset[str] = frozenset(),
     ):
         self.langnames = langnames
         self.gram_list = list(gram_list)
         self.gram_list_cased = list(gram_list_cased)
-        self.en_words = en_words
-        self.gls_words = gls_words
-        self.met_words = met_words
         self.gram_re = compile_gram_re(gram_list, case_insensitive=True)
         self.gram_cased_re = compile_gram_re(gram_list_cased, case_insensitive=False)
 
@@ -216,13 +203,6 @@ class Lexicons:
 
 
 EMPTY_LEXICONS = Lexicons()
-
-
-def _oov_rate(wordset: frozenset[str], words: Sequence[str]) -> float:
-    if not words:
-        return 0.0
-    oov = sum(1 for w in words if w not in wordset)
-    return oov / len(words)
 
 
 def text_features(
@@ -269,27 +249,14 @@ def text_features(
         feats[T_HAS_LEADING_WHITESPACE] = bool(_RE_LEADING_WS.search(text))
 
     # OOV features: dead code in the reference — always False (SURVEY §2.2)
-    if cfg.real_oov_features:
-        en_rate = _oov_rate(lex.en_words, words)
-        gls_rate = _oov_rate(lex.gls_words, words)
-        met_rate = _oov_rate(lex.met_words, words)
-        if T_HIGH_OOV_RATE in enabled:
-            feats[T_HIGH_OOV_RATE] = en_rate >= cfg.high_oov
-        if T_MED_OOV_RATE in enabled:
-            feats[T_MED_OOV_RATE] = cfg.high_oov > en_rate > cfg.med_oov
-        if T_HIGH_GLS_OOV_RATE in enabled:
-            feats[T_HIGH_GLS_OOV_RATE] = gls_rate > cfg.high_oov
-        if T_HIGH_MET_OOV_RATE in enabled:
-            feats[T_HIGH_MET_OOV_RATE] = met_rate > cfg.high_oov
-    else:
-        if T_HIGH_OOV_RATE in enabled:
-            feats[T_HIGH_OOV_RATE] = False
-        if T_MED_OOV_RATE in enabled:
-            feats[T_MED_OOV_RATE] = False
-        if T_HIGH_GLS_OOV_RATE in enabled:
-            feats[T_HIGH_GLS_OOV_RATE] = False
-        if T_HIGH_MET_OOV_RATE in enabled:
-            feats[T_HIGH_MET_OOV_RATE] = False
+    if T_HIGH_OOV_RATE in enabled:
+        feats[T_HIGH_OOV_RATE] = False
+    if T_MED_OOV_RATE in enabled:
+        feats[T_MED_OOV_RATE] = False
+    if T_HIGH_GLS_OOV_RATE in enabled:
+        feats[T_HIGH_GLS_OOV_RATE] = False
+    if T_HIGH_MET_OOV_RATE in enabled:
+        feats[T_HIGH_MET_OOV_RATE] = False
 
     hj = hg = hk = hc = ha = hd = False
     if T_HAS_JPN in enabled or T_HAS_UNI in enabled:
@@ -307,8 +274,7 @@ def text_features(
     if T_HAS_ACC in enabled or T_HAS_UNI in enabled:
         ha = bool(_RE_ACC_LAT.search(text))
     if T_HAS_DIA in enabled or T_HAS_UNI in enabled:
-        dia_re = _RE_DIA_BUGGY if cfg.buggy_diacritic_class else _RE_DIA_FIXED
-        hd = bool(dia_re.search(text))
+        hd = bool(_RE_DIA_BUGGY.search(text))
 
     if T_HAS_JPN in enabled:
         feats[T_HAS_JPN] = hj

@@ -1,35 +1,20 @@
-"""Lookup-dimension loaders (wordlists, gram lists, language names).
+"""Lookup-dimension loaders (gram lists, language names).
 
-Reference semantics: WordlistFile = set of first whitespace token per line
-(env.py:109-115); read_wl = set of stripped lines (igtdetect.py:1919-1926);
-parse_langnames = lowercased comma-split names ≥5 chars from cols 4+ of
-langs.txt with ``[`` stripped (igtdetect.py:798-813).
+Reference semantics: read_wl = set of stripped lines
+(igtdetect.py:1919-1926); parse_langnames = lowercased comma-split names
+≥5 chars from cols 4+ of langs.txt with ``[`` stripped
+(igtdetect.py:798-813). The reference's English / gloss / meta wordlists
+(env.py:109-115) feed only its OOV features, which never fire
+(featurespec.py), so they are not loaded.
 
-These are ~1-2 MB total → driver-side load + ``sc.broadcast`` into Arrow
-UDF closures (SURVEY.md §2.3 joins table).
+Driver-side load + ``sc.broadcast`` into Arrow UDF closures (SURVEY.md
+§2.3 joins table).
 """
 
 from __future__ import annotations
 
-from .config import (
-    REF_EN_WORDLIST,
-    REF_GLS_WORDLIST,
-    REF_GRAMS,
-    REF_GRAMS_CASED,
-    REF_LANGS,
-    REF_MET_WORDLIST,
-)
+from .config import REF_GRAMS, REF_GRAMS_CASED, REF_LANGS
 from .featurespec import Lexicons
-
-
-def load_wordlist(path: str) -> frozenset[str]:
-    """Set of first whitespace-delimited token per non-blank line."""
-    out = set()
-    with open(path, "r", encoding="utf-8") as f:
-        for line in f:
-            if line.strip():
-                out.add(line.split()[0])
-    return frozenset(out)
 
 
 def load_gram_list(path: str) -> list[str]:
@@ -63,16 +48,13 @@ def load_reference_lexicons() -> Lexicons:
         langnames=load_langnames(REF_LANGS),
         gram_list=load_gram_list(REF_GRAMS),
         gram_list_cased=load_gram_list(REF_GRAMS_CASED),
-        en_words=load_wordlist(REF_EN_WORDLIST),
-        gls_words=load_wordlist(REF_GLS_WORDLIST),
-        met_words=load_wordlist(REF_MET_WORDLIST),
     )
 
 
 def load_lexicons_from_ini_paths(paths: dict[str, str]) -> Lexicons:
-    """Lexicons from a reference ini [files] section (keys en_wordlist /
-    gls_wordlist / met_wordlist / lng_names / gram_list / gram_list_cased,
-    already path-resolved by ``config.load_ini``). Keys absent from the
+    """Lexicons from a reference ini [files] section (keys lng_names /
+    gram_list / gram_list_cased, already path-resolved by
+    ``config.load_ini``; its wordlist keys are not read). Keys absent from the
     ini fall back to the reference data files; a path that does not EXIST
     loads as an empty set with a warning — exactly the reference's
     ``read_wl`` behavior (igtdetect.py:1919-1926 guards os.path.exists;
@@ -95,7 +77,4 @@ def load_lexicons_from_ini_paths(paths: dict[str, str]) -> Lexicons:
         gram_list_cased=_opt(
             "gram_list_cased", REF_GRAMS_CASED, load_gram_list
         ),
-        en_words=_opt("en_wordlist", REF_EN_WORDLIST, load_wordlist),
-        gls_words=_opt("gls_wordlist", REF_GLS_WORDLIST, load_wordlist),
-        met_words=_opt("met_wordlist", REF_MET_WORDLIST, load_wordlist),
     )

@@ -22,8 +22,8 @@ def align_eval_gold(
     """Positional (url, line_no) alignment with label normalization and
     the eval-side TB/V→O remap (igtdetect.py:1372-1375). Documents with
     differing line counts are excluded entirely (reference hard-errors,
-    :1359-1362 — here: anti-join drop, surfaced via ``line_count_mismatches``).
-    Returns (url, line_no, gold, pred)."""
+    :1359-1362 — here: anti-join drop). Returns (url, line_no, gold,
+    pred)."""
     e = eval_lines.select(
         "url", "line_no",
         F.regexp_replace(
@@ -47,18 +47,6 @@ def align_eval_gold(
         e.join(F.broadcast(ok_urls), "url")
         .join(g, ["url", "line_no"])
         .select("url", "line_no", "gold", "pred")
-    )
-
-
-def line_count_mismatches(
-    eval_lines: DataFrame, gold_lines: DataFrame
-) -> DataFrame:
-    """urls the eval loop would reject (different line counts)."""
-    e = eval_lines.groupBy("url").agg(F.count("*").alias("n_eval"))
-    g = gold_lines.groupBy("url").agg(F.count("*").alias("n_gold"))
-    return e.join(g, "url", "full").filter(
-        F.coalesce(F.col("n_eval"), F.lit(-1))
-        != F.coalesce(F.col("n_gold"), F.lit(-2))
     )
 
 

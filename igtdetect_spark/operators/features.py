@@ -22,7 +22,6 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..config import PipelineConfig, DEFAULT_CONFIG
-from ..featurespec import Lexicons
 from .vectorized import fired_name_lists
 
 _FEATURE_INPUT_COLS = [

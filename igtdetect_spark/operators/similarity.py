@@ -194,47 +194,6 @@ def lsh_bucketed_ann(
     )
 
 
-def banded_hyperplane_buckets(
-    embeddings: DataFrame,
-    n_bands: int = 8,
-    band_planes: int = 16,
-    dim: int = DIM,
-) -> DataFrame:
-    """(vec_id, band, bucket): per-band sign-bit bucket over ``n_bands``
-    independent groups of ``band_planes`` seeded hyperplanes (band b uses
-    planes [b·r, (b+1)·r) of one deterministic standard-normal draw).
-
-    The banding is what keeps the downstream self-join sub-quadratic:
-    each band's ``2^band_planes`` keys make expected bucket size
-    n/2^band_planes, so within-bucket pair volume is Σ nᵦ² ≈ n²/2^r per
-    band — r=16 at 10⁹ vectors ⇒ ~1.2·10⁵ expected pairs per band
-    instead of the ~10¹⁶ a single coarse signature produces. Recall
-    comes from the union over bands (a near-dup pair collides in a band
-    with prob ≈ (1−θ/π)^r, missed by all bands with prob
-    (1−(1−θ/π)^r)^b — the standard LSH amplification)."""
-    rng = np.random.RandomState(42)
-    planes = rng.standard_normal((n_bands * band_planes, dim))
-    v = F.col("embedding").cast("array<double>")
-    band_buckets = []
-    for b in range(n_bands):
-        bucket = F.lit(0)
-        for j in range(band_planes):
-            p = planes[b * band_planes + j]
-            plane = F.array([F.lit(float(x)) for x in p])
-            bucket = bucket + F.shiftleft(
-                (_dot(v, plane) > 0).cast("int"), j
-            )
-        band_buckets.append(bucket)
-    # posexplode_outer, deliberately: plain (pos)explode triggers
-    # InferFiltersFromGenerate, whose pushed filter re-evaluates every
-    # dot product a second time per row (see word_shingles). The array
-    # is a fixed-size literal construction — never null/empty.
-    return embeddings.select(
-        "vec_id",
-        F.posexplode_outer(F.array(*band_buckets)).alias("band", "bucket"),
-    )
-
-
 def embedding_neardup_pairs(
     embeddings: DataFrame,
     threshold: float = 0.9,

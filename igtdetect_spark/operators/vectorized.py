@@ -57,10 +57,6 @@ from ..config import (
     T_HAS_UNDERSCORE,
     T_HAS_UNI,
     T_HAS_YEAR,
-    T_HIGH_GLS_OOV_RATE,
-    T_HIGH_MET_OOV_RATE,
-    T_HIGH_OOV_RATE,
-    T_MED_OOV_RATE,
 )
 from ..featurespec import (
     RE2_ACC_LAT,
@@ -68,7 +64,6 @@ from ..featurespec import (
     RE2_CITATION,
     RE2_CYR,
     RE2_DIA_BUGGY,
-    RE2_DIA_FIXED,
     RE2_GRK,
     RE2_HIRAGANA,
     RE2_KANJI,
@@ -157,12 +152,12 @@ def _matches(text: pa.Array, spelling: str) -> np.ndarray:
     return pc.match_substring_regex(text, spelling).to_numpy(zero_copy_only=False)
 
 
-def _value_set(lex: Lexicons, name: str) -> pa.Array:
-    """One of the Lexicons' word sets as an Arrow value set (built once
-    per Lexicons object)."""
+def _langnames(lex: Lexicons) -> pa.Array:
+    """The language names as an Arrow value set (built once per Lexicons
+    object)."""
     return lex.cached(
-        "arrow_" + name,
-        lambda: pa.array(sorted(getattr(lex, name)), type=pa.string()),
+        "arrow_langnames",
+        lambda: pa.array(sorted(lex.langnames), type=pa.string()),
     )
 
 
@@ -190,7 +185,7 @@ def static_feature_columns(
     if cfg.text_feats_enabled:
         if T_HAS_LANGNAME in te:
             out[T_HAS_LANGNAME] = tokens.rows_where(
-                pc.is_in(tokens.words, value_set=_value_set(lex, "langnames"))
+                pc.is_in(tokens.words, value_set=_langnames(lex))
             )
         if T_HAS_GRAMS in te:
             v = np.zeros(n, dtype=bool)
@@ -229,32 +224,9 @@ def static_feature_columns(
         if T_HAS_LEADING_WHITESPACE in te:
             out[T_HAS_LEADING_WHITESPACE] = contains(RE2_LEADING_WS)
 
-        if cfg.real_oov_features:
-            # tokens per row, and tokens absent from each wordlist per row:
-            # rate = absent / count (0.0 for a row without tokens), the
-            # same int / int division as the per-line spec.
-            count = np.bincount(tokens.rows, minlength=n)
-            rates = {}
-            for key in ("en_words", "gls_words", "met_words"):
-                absent = pc.invert(
-                    pc.is_in(tokens.words, value_set=_value_set(lex, key))
-                ).to_numpy(zero_copy_only=False)
-                oov = np.bincount(tokens.rows[absent], minlength=n)
-                rates[key] = np.divide(
-                    oov, count, out=np.zeros(n, dtype=np.float64),
-                    where=count > 0,
-                )
-            en = rates["en_words"]
-            if T_HIGH_OOV_RATE in te:
-                out[T_HIGH_OOV_RATE] = en >= cfg.high_oov
-            if T_MED_OOV_RATE in te:
-                out[T_MED_OOV_RATE] = (en > cfg.med_oov) & (en < cfg.high_oov)
-            if T_HIGH_GLS_OOV_RATE in te:
-                out[T_HIGH_GLS_OOV_RATE] = rates["gls_words"] > cfg.high_oov
-            if T_HIGH_MET_OOV_RATE in te:
-                out[T_HIGH_MET_OOV_RATE] = rates["met_words"] > cfg.high_oov
-        # dead-by-default OOV features are always False → never fire →
-        # contribute nothing to X nor to fired-name lists; omit entirely.
+        # the OOV features are always False (dead code in the reference) →
+        # never fire → contribute nothing to X nor to fired-name lists;
+        # omit entirely.
 
         # The script classes match only non-ASCII code points, and most
         # web lines are pure ASCII: search just the non-ASCII rows.
@@ -284,9 +256,7 @@ def static_feature_columns(
         if T_HAS_ACC in te or need_uni:
             ha = contains_non_ascii(RE2_ACC_LAT)
         if T_HAS_DIA in te or need_uni:
-            hd = contains_non_ascii(
-                RE2_DIA_BUGGY if cfg.buggy_diacritic_class else RE2_DIA_FIXED
-            )
+            hd = contains_non_ascii(RE2_DIA_BUGGY)
         if T_HAS_JPN in te:
             out[T_HAS_JPN] = hj
         if T_HAS_GRK in te:

@@ -786,8 +786,7 @@ def _resolve_edges(pages: DataFrame) -> tuple[DataFrame, DataFrame]:
 def _degree_join(edges: DataFrame) -> tuple[DataFrame, DataFrame]:
     """(er, deg): the per-source out-degree relation ``deg`` and the
     (src_id, dst_id, out_deg) relation ``er`` every power iteration
-    joins, persisted once (:func:`pagerank`, :func:`trustrank`,
-    :func:`pagerank_checkpointed`)."""
+    joins, persisted once (:func:`pagerank`, :func:`trustrank`)."""
     deg = edges.groupBy("src_id").agg(
         F.count(F.lit(1)).cast("long").alias("out_deg")
     )
@@ -1229,96 +1228,6 @@ def _pagerank_iter(
             "id",
             (restart + F.coalesce(F.col("_in"), F.lit(0)))
             .cast("long").alias("rank_e6"),
-        )
-    )
-
-
-@scoped
-def pagerank_checkpointed(
-    pages: DataFrame,
-    out_dir: str,
-    iterations: int = 3,
-) -> DataFrame:
-    """Resumable PageRank: :func:`pagerank` with ITERATION-level
-    checkpoints — the rank state is written to parquet after every
-    iteration and the manifest entry is the single commit
-    point, the same crash discipline as the bucket-checkpointed
-    extraction runner (``plans/checkpoint.py``): a state directory
-    without a manifest row (crash between write and commit) is purged
-    on resume, so a re-invocation continues from the highest COMMITTED
-    iteration and lands bit-identical ranks to an uninterrupted run
-    (pinned in test_checkpoint).
-
-    The read-back from parquet also CUTS LINEAGE — for deep iteration
-    chains (hundreds of rounds at web scale) this bounds both plan
-    depth and recovery cost at one iteration of recompute,
-    which is the reason production graph jobs checkpoint even when
-    they never crash.
-
-    Manifest lineage per committed iteration: node count, total rank
-    mass (the conservation diagnostic — teleport·N plus damped inflow,
-    so drift means a broken edge relation), and wall seconds.
-
-    Returns the same (url, rank_e6, out_deg) relation as
-    :func:`pagerank`.
-    """
-    import glob
-    import json
-    import os
-    import shutil
-    import time as _time
-
-    os.makedirs(out_dir, exist_ok=True)
-    mpath = os.path.join(out_dir, "MANIFEST.json")
-    manifest: dict[str, dict] = (
-        json.load(open(mpath)) if os.path.exists(mpath) else {}
-    )
-    committed = {int(k) for k in manifest}
-    for d in glob.glob(os.path.join(out_dir, "iter=*")):
-        if int(d.rsplit("=", 1)[1]) not in committed:
-            shutil.rmtree(d)  # orphan of a crash: never committed
-
-    ids, edges = _resolve_edges(pages)
-    er, deg = _degree_join(edges)
-    nodes = ids.select(F.col("_nid").alias("id"))
-    teleport = F.lit(1_000_000 - DAMPING_PPM)
-    spark = pages.sparkSession
-
-    start = max((i for i in committed if i <= iterations), default=0)
-    if start:
-        ranks = spark.read.parquet(
-            os.path.join(out_dir, f"iter={start}")
-        )
-    else:
-        ranks = nodes.select(
-            "id", F.lit(1_000_000).cast("long").alias("rank_e6")
-        )
-    for i in range(start + 1, iterations + 1):
-        t0 = _time.time()
-        ranks = _pagerank_iter(er, nodes, ranks, teleport)
-        state_dir = os.path.join(out_dir, f"iter={i}")
-        ranks.write.mode("overwrite").parquet(state_dir)
-        stats = spark.read.parquet(state_dir).agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum("rank_e6").alias("mass"),
-        ).collect()[0]
-        manifest[str(i)] = {
-            "n_nodes": stats["n"],
-            "total_rank_e6": stats["mass"],
-            "wall_sec": round(_time.time() - t0, 3),
-        }
-        tmp = mpath + ".tmp"
-        json.dump(manifest, open(tmp, "w"), indent=1)
-        os.replace(tmp, mpath)  # atomic commit point
-        ranks = spark.read.parquet(state_dir)  # lineage cut
-
-    return (
-        ranks.join(ids, ranks.id == ids._nid)
-        .join(deg, ranks.id == deg.src_id, "left")
-        .select(
-            "url", "rank_e6",
-            F.coalesce(F.col("out_deg"), F.lit(0)).cast("long")
-            .alias("out_deg"),
         )
     )
 

@@ -7,7 +7,7 @@ precision/recall overlap semantics and first-match ``break``.
 from __future__ import annotations
 
 from collections import defaultdict
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from ..labels import label_sort_key
 

@@ -5,13 +5,10 @@ igtdetect.py:122-132).
 
 Unit of work = url-hash bucket: ``bucket = pmod(xxhash64(url), n_buckets)``.
 The output parquet is partitioned by bucket; a JSON manifest records, per
-committed bucket, the lineage counters (pages/lines/spans in/out), wall
-clock and input fingerprint. Resuming skips committed buckets — the filter
-is a deterministic hash predicate on the input, so completed work is never
-recomputed, and a re-run of a partially-failed job converges.
-
-Counters are collected with ``pyspark.sql.Observation`` (map-side, no extra
-job) plus per-bucket output aggregation.
+committed bucket, the lineage counters (pages in, spans and span lines
+out), wall clock and run ordinal. Resuming skips committed buckets — the
+filter is a deterministic hash predicate on the input, so completed work is
+never recomputed, and a re-run of a partially-failed job converges.
 """
 
 from __future__ import annotations
@@ -20,7 +17,6 @@ import json
 import os
 import shutil
 import time
-from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -28,16 +24,6 @@ from pyspark.sql import functions as F
 from .pipeline import DetectContext, detect_spans_fused
 
 MANIFEST = "_manifest.json"
-
-
-@dataclass
-class BucketLineage:
-    bucket: int
-    n_pages: int
-    n_spans: int
-    n_lines_in_spans: int
-    wall_sec: float
-    committed_at: float  # monotonic-ish run ordinal
 
 
 def _manifest_path(out_dir: str) -> str:
@@ -87,30 +73,26 @@ def _clean_uncommitted(out_dir: str, manifest: dict[int, dict]) -> list[int]:
     return purged
 
 
-def run_checkpointed_transform(
+def run_checkpointed_detect(
     spark: SparkSession,
     pages: DataFrame,
-    transform,
+    ctx: DetectContext,
     out_dir: str,
     n_buckets: int = 32,
     buckets_per_commit: int = 8,
-    out_metrics: dict | None = None,
-    primary_name: str = "n_out",
 ) -> dict[int, dict]:
-    """Generic bucket-checkpointed runner: apply ``transform`` (any
-    DataFrame → DataFrame whose output keeps a ``url`` column) to
-    ``pages``, committing results bucket-group by bucket-group. Safe to
-    interrupt and re-invoke: committed buckets are skipped (their rows
-    are filtered out by the hash predicate, so no page is reprocessed),
-    and partition directories of buckets absent from the manifest —
-    rows committed to parquet by a run that crashed before its manifest
-    write — are purged before reprocessing, so resume never duplicates
-    rows.
+    """Detect spans over ``pages``, committing results bucket-group by
+    bucket-group. Safe to interrupt and re-invoke: committed buckets are
+    skipped (their rows are filtered out by the hash predicate, so no
+    page is reprocessed), and partition directories of buckets absent
+    from the manifest — rows committed to parquet by a run that crashed
+    before its manifest write — are purged before reprocessing, so
+    resume never duplicates rows.
 
-    Lineage per committed bucket: input pages, the primary output
-    count (named ``primary_name``), any extra ``out_metrics`` (name →
-    aggregate Column evaluated on the COMMITTED files — ground truth,
-    not in-flight numbers), wall clock, and the run ordinal.
+    Lineage per committed bucket (manifest keys): ``bucket``, input
+    ``n_pages``, ``n_spans`` and ``n_lines_in_spans`` read back from the
+    COMMITTED files (ground truth, not in-flight numbers), ``wall_sec``
+    and the run ordinal ``committed_at``.
 
     Returns the final manifest (bucket → lineage counters).
     """
@@ -119,7 +101,6 @@ def run_checkpointed_transform(
     _clean_uncommitted(out_dir, manifest)  # purge orphan rows from a crash
     todo = [b for b in range(n_buckets) if b not in manifest]
     run_ord = time.time()
-    out_metrics = out_metrics or {}
 
     pages_b = pages.withColumn("_bucket", bucket_col(n_buckets))
 
@@ -131,7 +112,7 @@ def run_checkpointed_transform(
             r["_bucket"]: r["n"]
             for r in part.groupBy("_bucket").agg(F.count("*").alias("n")).collect()
         }
-        out = transform(part.drop("_bucket")).withColumn(
+        out = detect_spans_fused(part.drop("_bucket"), ctx).withColumn(
             "bucket", bucket_col(n_buckets)
         )
         (
@@ -141,92 +122,28 @@ def run_checkpointed_transform(
             .parquet(out_dir)
         )
         wall = time.time() - t0
-        # lineage: per-bucket output counters read back from the committed
-        # files (ground truth, not in-flight numbers)
-        aggs = [F.count("*").alias(primary_name)] + [
-            expr.alias(name) for name, expr in out_metrics.items()
-        ]
         out_rows = {
             r["bucket"]: r
             for r in spark.read.parquet(out_dir)
             .filter(F.col("bucket").isin(group))
             .groupBy("bucket")
-            .agg(*aggs)
+            .agg(
+                F.count("*").alias("n_spans"),
+                F.sum(F.size("tags")).alias("n_lines_in_spans"),
+            )
             .collect()
         }
         for b in group:
             r = out_rows.get(b)
-            counters = {primary_name: int(r[primary_name]) if r else 0}
-            for name in out_metrics:
-                counters[name] = int(r[name] or 0) if r else 0
             manifest[b] = {
                 "bucket": b,
                 "n_pages": int(n_pages_by_bucket.get(b, 0)),
-                **counters,
+                "n_spans": int(r["n_spans"]) if r else 0,
+                "n_lines_in_spans": (
+                    int(r["n_lines_in_spans"] or 0) if r else 0
+                ),
                 "wall_sec": round(wall / max(len(group), 1), 3),
                 "committed_at": run_ord,
             }
         _write_manifest(out_dir, manifest)
     return manifest
-
-
-def run_checkpointed_detect(
-    spark: SparkSession,
-    pages: DataFrame,
-    ctx: DetectContext,
-    out_dir: str,
-    n_buckets: int = 32,
-    buckets_per_commit: int = 8,
-) -> dict[int, dict]:
-    """Detect spans over ``pages`` through the generic checkpointed
-    runner (manifest keys: ``n_spans`` primary + ``n_lines_in_spans``,
-    the :class:`BucketLineage` layout)."""
-    return run_checkpointed_transform(
-        spark,
-        pages,
-        lambda part: detect_spans_fused(part, ctx),
-        out_dir,
-        n_buckets=n_buckets,
-        buckets_per_commit=buckets_per_commit,
-        primary_name="n_spans",
-        out_metrics={"n_lines_in_spans": F.sum(F.size("tags"))},
-    )
-
-
-def run_checkpointed_extraction(
-    spark: SparkSession,
-    pages: DataFrame,
-    out_dir: str,
-    n_buckets: int = 32,
-    buckets_per_commit: int = 8,
-) -> dict[int, dict]:
-    """The north-rule EXTRACTION pipeline, checkpointed: density-based
-    main-content extraction over ``(doc_id, url, html)`` pages with
-    per-url-hash-bucket commits and lineage (pages in, extracted rows,
-    pages with surviving content, extracted characters). Resume
-    semantics are the generic runner's: committed buckets are never
-    reprocessed, orphan partition rows from a crash before the manifest
-    write are purged, so a re-run converges to the exact direct-run
-    output."""
-    from ..operators.webpages import main_content_pages
-
-    return run_checkpointed_transform(
-        spark,
-        pages,
-        main_content_pages,
-        out_dir,
-        n_buckets=n_buckets,
-        buckets_per_commit=buckets_per_commit,
-        primary_name="n_rows",
-        out_metrics={
-            "n_kept_pages": F.sum(
-                (F.col("kept_blocks") > 0).cast("long")
-            ),
-            "n_chars": F.sum(F.length("main_text")),
-        },
-    )
-
-
-def verify_complete(out_dir: str, n_buckets: int = 32) -> bool:
-    manifest = read_manifest(out_dir)
-    return all(b in manifest for b in range(n_buckets))

@@ -22,7 +22,6 @@ from typing import Iterator
 import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql.types import IntegerType, StringType, StructField, StructType
 
 from ..config import DEFAULT_CONFIG, PipelineConfig
@@ -102,35 +101,6 @@ def classify_lines_fused(pages: DataFrame, ctx: DetectContext) -> DataFrame:
     """pages → per-line predictions (url, line_no, page, block_id, text,
     pred) in one narrow stage — the flagship classified-lines sink."""
     return _fused_map(pages, ctx, spans=False)
-
-
-def detect_with_metrics(pages: DataFrame, ctx: DetectContext):
-    """Fused detection instrumented with ``Observation`` counters — the
-    map-side lineage metrics (no extra job): pages/bytes in, spans/lines
-    out. Returns (spans_df, metrics_fn); call ``metrics_fn()`` after an
-    action on the returned DataFrame."""
-    from pyspark.sql import Observation
-
-    obs_in = Observation("pages_in")
-    obs_out = Observation("spans_out")
-    observed_pages = pages.observe(
-        obs_in,
-        F.count(F.lit(1)).alias("n_pages"),
-        F.sum(
-            F.length(F.coalesce(F.col("text"), F.lit("")))
-            + F.length(F.coalesce(F.col("html"), F.lit(b"")))
-        ).alias("n_content_bytes"),
-    )
-    spans = detect_spans_fused(observed_pages, ctx).observe(
-        obs_out,
-        F.count(F.lit(1)).alias("n_spans"),
-        F.sum(F.size("tags")).alias("n_span_lines"),
-    )
-
-    def metrics() -> dict:
-        return {**obs_in.get, **obs_out.get}
-
-    return spans, metrics
 
 
 def detected_text_df(spans: DataFrame) -> DataFrame:

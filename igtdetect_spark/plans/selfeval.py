@@ -25,9 +25,7 @@ from ..operators.eval import (
     render_report,
     span_metrics,
 )
-from ..operators.score import score_lines
 from ..operators.spans import assign_spans_df, materialize_spans
-from .pipeline import DetectContext
 
 
 @dataclass
@@ -36,13 +34,6 @@ class SelfEvalResult:
     spans: SpanMetrics
     report: str
     auto_spans: "SpanMetrics | None" = None
-
-
-def selfeval_lines(lines: DataFrame, ctx: DetectContext) -> SelfEvalResult:
-    """Score ``lines`` with ``ctx`` and evaluate the predictions against
-    the lines' own gold ``tag`` (and ``span_id``) — ``evaluate_lines``."""
-    scored = score_lines(lines, ctx.model_bc, ctx.lex_bc, ctx.cfg)
-    return evaluate_lines(scored, lines, ctx.cfg)
 
 
 def evaluate_lines(
@@ -62,7 +53,7 @@ def evaluate_lines(
 
     ``pred`` is cached for the call: the label counts and both span
     sections each run several actions over it, and an uncached ``pred``
-    (``selfeval_lines``' scoring) would be recomputed by every one."""
+    (a ``score_lines`` result) would be recomputed by every one."""
     pred = pred.cache()
     aligned = align_eval_gold(pred, gold, cfg)
     counts = confusion_counts(aligned).cache()

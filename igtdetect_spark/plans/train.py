@@ -10,7 +10,6 @@ Both produce ``ModelWeights``.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -83,9 +82,7 @@ def train_spark_ml(
     """chi² top-k → sparse vector assembly → Spark ML one-vs-rest-style
     multinomial LogisticRegression → ModelWeights."""
     from pyspark.ml.classification import LogisticRegression
-    from pyspark.ml.functions import array_to_vector
     from pyspark.ml.linalg import Vectors, VectorUDT
-    from pyspark.sql.types import StructType
 
     vocab_rows = chi2_topk_features(train_df, max_features).collect()
     vocab = [r["feature"] for r in sorted(vocab_rows, key=lambda r: r["rank"])]

@@ -16,7 +16,6 @@ extracted reference model, so scoring/decoding is identical downstream.
 
 from __future__ import annotations
 
-from collections import Counter
 from typing import Iterable, Sequence
 
 import numpy as np

@@ -2,20 +2,10 @@ import os
 
 import pytest
 
-from igtdetect_spark.config import (
-    REF_EN_WORDLIST,
-    REF_GLS_WORDLIST,
-    REF_GRAMS,
-    REF_GRAMS_CASED,
-    REF_LANGS,
-    REF_MET_WORDLIST,
-)
+from igtdetect_spark.config import REF_GRAMS, REF_GRAMS_CASED, REF_LANGS
 
 # every file load_reference_lexicons() (so flagship.get_lexicons()) reads
-REF_LEXICON_FILES = (
-    REF_LANGS, REF_GRAMS, REF_GRAMS_CASED,
-    REF_EN_WORDLIST, REF_GLS_WORDLIST, REF_MET_WORDLIST,
-)
+REF_LEXICON_FILES = (REF_LANGS, REF_GRAMS, REF_GRAMS_CASED)
 
 
 def needs_reference(*paths):

@@ -150,9 +150,6 @@ def _write_bio_workflow_inputs(root):
         "lng_names": "\n".join(f"x\tx\tx\t{n}" for n in sorted(lex.langnames)),
         "gram_list": "\n".join(lex.gram_list),
         "gram_list_cased": "\n".join(lex.gram_list_cased),
-        "en_wordlist": "\n".join(sorted(lex.en_words)),
-        "gls_wordlist": "\n".join(sorted(lex.gls_words)),
-        "met_wordlist": "\n".join(sorted(lex.met_words)),
     }
     for key, text in files.items():
         (root / f"{key}.txt").write_text(text + "\n", encoding="utf-8")

@@ -16,8 +16,6 @@ from igtdetect_spark.oracle.pipeline import (
 from igtdetect_spark.segmentation import extract_page_text
 
 VARIANTS = {
-    "fixed_diacritics": DEFAULT_CONFIG.with_(buggy_diacritic_class=False),
-    "real_oov": DEFAULT_CONFIG.with_(real_oov_features=True),
     "word_overlap": DEFAULT_CONFIG.with_(word_overlap=True),
     "flush_eof": DEFAULT_CONFIG.with_(flush_eof_span=True),
     "reduced_feats": DEFAULT_CONFIG.with_(

@@ -97,10 +97,7 @@ class TestLabelEval:
         assert lm.non_o_f1 == pytest.approx(f, abs=1e-12)
 
     def test_length_mismatch_excluded(self, spark):
-        from igtdetect_spark.operators.eval import (
-            align_eval_gold,
-            line_count_mismatches,
-        )
+        from igtdetect_spark.operators.eval import align_eval_gold
 
         gold = spark.createDataFrame(
             [("u1", 1, "O"), ("u1", 2, "L"), ("u2", 1, "O")],
@@ -112,7 +109,6 @@ class TestLabelEval:
         )
         aligned = align_eval_gold(pred, gold)
         assert aligned.count() == 0  # both urls mismatch
-        assert line_count_mismatches(pred, gold).count() == 2
 
     def test_tb_v_remap(self, spark):
         from igtdetect_spark.operators.eval import align_eval_gold

@@ -40,7 +40,6 @@ def test_defaults_sample_maps_onto_config():
         0.66, 0.5, 0.25,
     )
     # unknown-to-ini knobs keep their dataclass defaults
-    assert cfg.buggy_diacritic_class is True
     assert cfg.word_overlap is False
     # [paths]/[files] resolve relative to the ini's own directory
     assert paths["en_wordlist"] == (
@@ -101,15 +100,15 @@ def test_word_overlap_gate_reaches_config(tmp_path):
 
 @needs_reference(REF_LANGS)
 def test_ini_files_section_loads_lexicons(tmp_path):
-    """[files] wordlist paths from the ini drive the lexicon load
-    (reference load_wordlist over config paths); a dangling path loads as
-    an empty set like the reference's read_wl existence guard."""
-    wl = tmp_path / "tiny_words.txt"
-    wl.write_text("alpha x\nbeta\n\ngamma y z\n")
+    """[files] gram-list paths from the ini drive the lexicon load
+    (reference read_wl over config paths); a dangling path loads as an
+    empty set like the reference's read_wl existence guard."""
+    gl = tmp_path / "tiny_grams.txt"
+    gl.write_text("alpha x\nbeta\n\n gamma \n")
     ini = tmp_path / "lex.ini"
     ini.write_text(
         "[files]\n"
-        f"en_wordlist = {wl.name}\n"
+        f"gram_list = {gl.name}\n"
         "gram_list_cased = ./does_not_exist.txt\n"
     )
     from igtdetect_spark.config import load_ini
@@ -117,7 +116,7 @@ def test_ini_files_section_loads_lexicons(tmp_path):
 
     _, paths = load_ini(str(ini))
     lex = load_lexicons_from_ini_paths(paths)
-    assert lex.en_words == frozenset({"alpha", "beta", "gamma"})
+    assert lex.gram_list == ["alpha x", "beta", "gamma"]
     assert list(lex.gram_list_cased) == []          # dangling → empty
     assert lex.langnames                             # default ref langs
 

@@ -205,22 +205,10 @@ class TestTextFeatures:
         assert self.feats("à")["has_dia"]
         assert self.feats("aͯ")["has_dia"]
 
-    def test_dia_fixed_mode(self):
-        cfg = DEFAULT_CONFIG.with_(buggy_diacritic_class=False)
-        assert self.feats("á", cfg=cfg)["has_dia"]
-        assert not self.feats("pages 12–14", cfg=cfg)["has_dia"]
-
     def test_oov_dead_by_default(self):
-        lex = Lexicons(en_words=frozenset(["the"]))
-        f = self.feats("zzz qqq www", lex)
+        f = self.feats("zzz qqq www")
         assert not f["high_oov_rate"] and not f["med_oov_rate"]
         assert "med_gls_oov" not in f  # declared but never computed
-
-    def test_oov_real_mode(self):
-        lex = Lexicons(en_words=frozenset(["the", "cat"]))
-        cfg = DEFAULT_CONFIG.with_(real_oov_features=True)
-        f = text_features("zzz qqq the", lex, cfg)
-        assert f["high_oov_rate"]  # 2/3 ≥ 0.5
 
     def test_grams_substring_no_boundary(self, lexicons):
         # 'ACC' cased gram matches as substring (no word boundary)

@@ -15,15 +15,17 @@ from conftest import REF_LEXICON_FILES, needs_reference
     REF_MODEL_PATH, REF_SAMPLE_TEST, REF_SAMPLE_TRAIN, *REF_LEXICON_FILES
 )
 def test_selfeval_sample_docs_pinned(spark):
+    from igtdetect_spark.operators.score import score_lines
     from igtdetect_spark.operators.segment import segment_freki_files
     from igtdetect_spark.plans.pipeline import DetectContext
-    from igtdetect_spark.plans.selfeval import selfeval_lines
+    from igtdetect_spark.plans.selfeval import evaluate_lines
 
     ctx = DetectContext(
         spark, load_reference_model(REF_MODEL_PATH), get_lexicons()
     )
     lines = segment_freki_files(spark, [REF_SAMPLE_TEST, REF_SAMPLE_TRAIN])
-    res = selfeval_lines(lines, ctx)
+    scored = score_lines(lines, ctx.model_bc, ctx.lex_bc, ctx.cfg)
+    res = evaluate_lines(scored, lines, ctx.cfg)
 
     # pinned from the verified oracle-parity build (2026-08-16)
     assert res.labels.accuracy == pytest.approx(0.890417, abs=1e-5)
@@ -42,18 +44,17 @@ def test_selfeval_sample_docs_pinned(spark):
     assert "--- Auto-Spans ---" in res.report
 
 
-def test_selfeval_lines_scores_each_line_once(
-    spark, lexicons, tmp_path, monkeypatch
-):
+def test_evaluate_lines_scores_each_line_once(spark, lexicons, tmp_path):
     """``evaluate_lines`` runs about ten Spark actions over its ``pred``
-    input; ``selfeval_lines`` must still score every line exactly once.
-    Hermetic: 12 synthetic gold-tagged freki docs, the synthetic model
-    and the benchmark's seeded lexicons."""
+    input; a ``score_lines`` result passed in must still score every line
+    exactly once. Hermetic: 12 synthetic gold-tagged freki docs, the
+    synthetic model and the benchmark's seeded lexicons."""
     from igtdetect_spark.flagship import get_synthetic_model
+    from igtdetect_spark.operators.score import score_lines
     from igtdetect_spark.operators.segment import segment_freki_files
     from igtdetect_spark.oracle.corpus import doc_from_text, make_corpus
-    from igtdetect_spark.plans import selfeval
     from igtdetect_spark.plans.pipeline import DetectContext
+    from igtdetect_spark.plans.selfeval import evaluate_lines
 
     paths = []
     for d in make_corpus(12, html_every=0):
@@ -67,20 +68,17 @@ def test_selfeval_lines_scores_each_line_once(
     n_lines = lines.count()
 
     scored_rows = spark.sparkContext.accumulator(0)
-    score_lines = selfeval.score_lines
 
-    def counted_score_lines(*args, **kwargs):
-        def count(batches):
-            for b in batches:
-                scored_rows.add(len(b))
-                yield b
+    def count(batches):
+        for b in batches:
+            scored_rows.add(len(b))
+            yield b
 
-        out = score_lines(*args, **kwargs)
-        return out.mapInPandas(count, out.schema)
-
-    monkeypatch.setattr(selfeval, "score_lines", counted_score_lines)
     ctx = DetectContext(spark, get_synthetic_model(), lexicons)
-    res = selfeval.selfeval_lines(lines, ctx)
+    scored = score_lines(lines, ctx.model_bc, ctx.lex_bc, ctx.cfg)
+    res = evaluate_lines(
+        scored.mapInPandas(count, scored.schema), lines, ctx.cfg
+    )
     lines.unpersist()
 
     assert res.labels is not None and "--- Auto-Spans ---" in res.report

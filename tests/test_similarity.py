@@ -118,44 +118,6 @@ def test_banded_neardup_recall_superset_of_single_band(spark, emb):
     assert all(r["cos_sim_e6"] >= 350_000 for r in banded)
 
 
-def test_banded_neardup_candidate_volume_is_subquadratic(spark):
-    """The 100-TB guarantee: with r planes per band, expected bucket size
-    is n/2^r, so the self-join's candidate volume Σ_bands Σ_buckets C(n_b,2)
-    must be a small fraction of C(n,2) — the single-coarse-signature
-    formulation this replaced was ~n²/2^planes with planes fixed at 6.
-    10k deterministic vectors, 8 bands × 12 planes (measured: ~0.7% of
-    quadratic; 10 planes ⇒ ~2%, each +2 planes ⇒ ~4× fewer candidates)."""
-    import numpy as np
-    from pyspark.sql import functions as F
-
-    from igtdetect_spark.operators.similarity import banded_hyperplane_buckets
-
-    n, dim = 10_000, 16
-    rng = np.random.RandomState(3)
-    X = rng.standard_normal((n, dim))
-    vecs = spark.createDataFrame(
-        [(i, [float(x) for x in X[i]]) for i in range(n)],
-        "vec_id long, embedding array<float>",
-    ).repartition(8)
-
-    sizes = (
-        banded_hyperplane_buckets(
-            vecs, n_bands=8, band_planes=12, dim=dim
-        )
-        .groupBy("band", "bucket")
-        .agg(F.count("*").alias("n_b"))
-    )
-    stats = sizes.agg(
-        F.max("n_b").alias("max_bucket"),
-        F.sum(F.col("n_b") * (F.col("n_b") - 1) / 2).alias("cand_pairs"),
-    ).collect()[0]
-    all_pairs = n * (n - 1) / 2
-    # expected bucket ≈ n/2^10 ≈ 10; allow generous correlation slack
-    assert stats["max_bucket"] < n / 20
-    # candidate volume across ALL 8 bands under 2% of the quadratic
-    assert stats["cand_pairs"] < 0.02 * all_pairs
-
-
 class TestSemDedup:
     """SemDeDup: cluster, gate pairs on cosine, keep the outlier."""
 
